@@ -18,6 +18,13 @@ Semantics carried over from the reference CLI:
   * --overwrite re-seeds from scratch (the `purge` + seed flow)
   * per-(z,x,y,layer) lineage metrics land in the sink's _metrics table
 
+One evaluation per batch: each zoom batch's (metrics, tiles) frames go
+to ``sinks.write_batch``, which persists the encoded metrics frame
+before any action. The resume emptiness test, the tile write and the
+metrics write all read that one encode — the reference likewise renders
+a tile once and then stores it (cache.go:118-234). The frame is
+unpersisted when the batch ends, whether written, skipped or failed.
+
 Scale knobs: --hierarchical (single anchor shuffle for deep zooms),
 --max-features (per-tile-layer budget; default 'auto'), --anchor-z.
 """
@@ -107,14 +114,9 @@ def cmd_seed(args, spark=None) -> int:
                 and args.anchor_z is not None:
             kwargs["anchor_z"] = args.anchor_z
         metrics, tiles = build(spark, args.input, zooms=batch, **kwargs)
-        from pyspark.sql import functions as F
-        done = sinks.existing_keys(spark, args.out)
-        if done is not None:
-            tiles = tiles.join(F.broadcast(done), ["z", "x", "y"], "left_anti")
-            metrics = metrics.join(F.broadcast(done), ["z", "x", "y"], "left_anti")
-        if tiles.isEmpty():
-            continue
-        recs.append(sinks.write_tiles(tiles, metrics, args.out))
+        rec = sinks.write_batch(spark, tiles, metrics, args.out)
+        if rec is not None:
+            recs.append(rec)
     print(json.dumps({"batches_written": len(recs), "records": recs}))
     if own_session:
         spark.stop()

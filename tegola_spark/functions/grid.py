@@ -361,24 +361,6 @@ def col_lat2num(lat: "Column", z: "Column | int") -> "Column":
     )
 
 
-def col_deg2num_x(lon: "Column", z: "Column | int") -> "Column":
-    """Column form of tegola's own Deg2Num x (tile.go:111)."""
-    zc = F.lit(z) if isinstance(z, int) else z
-    n = F.pow(F.lit(2.0), zc.cast("double"))
-    return F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n).cast("long")
-
-
-def col_deg2num_y(lat: "Column", z: "Column | int") -> "Column":
-    """Column form of tegola's own Deg2Num y (tile.go:112)."""
-    zc = F.lit(z) if isinstance(z, int) else z
-    n = F.pow(F.lit(2.0), zc.cast("double"))
-    rad = lat * F.lit(math.pi / 180.0)
-    return F.floor(
-        (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad)) / F.lit(math.pi))
-        / F.lit(2.0) * n
-    ).cast("long")
-
-
 def col_tile_extent(z: "Column", x: "Column", y: "Column"):
     """Column form of :func:`tile_extent` -> (minx, miny, maxx, maxy)."""
     res = (F.lit(WEBMERCATOR_MAX) * F.lit(2.0)) / F.pow(F.lit(2.0), z.cast("double"))

@@ -95,18 +95,6 @@ def encode(geom) -> bytes:
     raise ValueError(f"unsupported geometry type {gtype!r}")
 
 
-def encode_points_vectorized(lon: np.ndarray, lat: np.ndarray) -> list:
-    """Vectorized WKB Point encoding: builds all n 21-byte records in
-    one NumPy pass (the corpus hot path — no per-row struct.pack)."""
-    n = len(lon)
-    buf = np.empty((n, 21), dtype=np.uint8)
-    buf[:, 0] = 1
-    buf[:, 1:5] = np.frombuffer(struct.pack("<I", WKB_POINT), dtype=np.uint8)
-    buf[:, 5:13] = np.asarray(lon, dtype="<f8").reshape(n, 1).view(np.uint8)
-    buf[:, 13:21] = np.asarray(lat, dtype="<f8").reshape(n, 1).view(np.uint8)
-    return [r.tobytes() for r in buf]
-
-
 class _Reader:
     __slots__ = ("buf", "pos")
 

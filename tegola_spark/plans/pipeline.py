@@ -85,20 +85,6 @@ _METRIC_COLS = ["z", "x", "y", "layer", "layer_bytes", "n_features",
 _POINT_WKB_HEAD = b"\x01\x01\x00\x00\x00"
 
 
-def encode_layer_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped-map kernel: all features of one (z, x, y, layer) ->
-    one MVT layer blob (already wrapped as a Tile.layers field so tile
-    assembly is pure byte concatenation, mirroring the reference's
-    ST_AsMVT `||` concat — provider/postgis/postgis.go:398-400)."""
-    t0 = time.perf_counter()
-    z = int(pdf["z"].iloc[0])
-    x = int(pdf["x"].iloc[0])
-    y = int(pdf["y"].iloc[0])
-    layer = pdf["layer"].iloc[0]
-    return pd.DataFrame([_encode_one(pdf, t0, z, x, y, layer)],
-                        columns=_METRIC_COLS)
-
-
 def encode_bucket(pdf: pd.DataFrame, simplify: bool = False,
                   repair: bool = True,
                   const_layer: str | None = None) -> pd.DataFrame:

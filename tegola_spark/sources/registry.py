@@ -56,12 +56,6 @@ def register_sink(name: str, factory: Callable[..., object],
     _SINKS[name] = factory
 
 
-def sink_for(name: str) -> Callable[..., object]:
-    if name not in _SINKS:
-        raise UnknownName(f"no sink {name!r}; registered: {sorted(_SINKS)}")
-    return _SINKS[name]
-
-
 def registered_providers() -> list[str]:
     return sorted(_PROVIDERS)
 

@@ -18,6 +18,11 @@ cmd/tegola/cmd/cache/worker.go:50-77). The Spark-native form:
   * lineage: the per-(z,x,y,layer) metrics table rides along in a
     ``_metrics`` subdirectory (north rule: per-partition lineage +
     metrics).
+  * one evaluation per batch: a batch's tiles and metrics come from
+    one encode; ``write_batch`` persists the metrics frame so the
+    emptiness test and both writes read it instead of re-running the
+    encode once per action (tegola renders a tile once, then stores
+    it — cmd/tegola/cmd/cache/cache.go:118-234).
 """
 
 from __future__ import annotations
@@ -25,8 +30,16 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+TILE_KEYS = ["z", "x", "y"]
+# the sink's key columns as written by write_tiles (z is the partition
+# column); declared so a sink directory holding no data files yet (a
+# first batch killed before its commit) reads as an empty key set
+_KEY_SCHEMA = "x long, y long, z int"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -52,11 +65,14 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
 
     Returns the manifest record (the Iceberg-snapshot stand-in). The
     manifest counts THIS batch via ``observe()``: the counters are
-    collected by the SAME job that writes the files (zero extra passes,
-    zero caching — previously this cached the batch and ran a separate
-    aggregate), and cumulative totals come from summing manifest
-    records — re-scanning the whole sink per batch is a full read of
-    all historical output (reviewed round 1)."""
+    collected by the same job that writes the tile files, so counting
+    adds no pass of its own, and cumulative totals come from summing
+    manifest records — re-scanning the whole sink per batch is a full
+    read of all historical output (reviewed round 1).
+
+    The two writes are two Spark actions. Over an un-persisted build
+    each one re-runs the encode; ``write_batch`` is the caller that
+    makes them (and its emptiness test) share one evaluation."""
     from pyspark.sql import Observation
 
     exprs = [F.count(F.lit(1)).alias("n"), F.collect_set("z").alias("zs")]
@@ -97,12 +113,51 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
 
 
 def existing_keys(spark: SparkSession, path: str) -> DataFrame | None:
-    """(z, x, y) keys already in the sink, or None if the sink is empty."""
+    """(z, x, y) keys already in the sink, or None if the sink has no
+    tile table yet. A tile table that exists but cannot be read raises
+    (when the keys are scanned) instead of reading as empty: an empty
+    key set would make resume append every tile again and duplicate
+    (z, x, y) keys."""
     tiles_path = os.path.join(path, "tiles")
-    try:
-        return spark.read.parquet(tiles_path).select("z", "x", "y")
-    except Exception:
+    if not os.path.exists(tiles_path):
         return None
+    return spark.read.schema(_KEY_SCHEMA).parquet(tiles_path) \
+        .select(*TILE_KEYS)
+
+
+@contextmanager
+def persisted(metrics: DataFrame):
+    """Persist a build's metrics frame for the duration of a batch and
+    unpersist it however the batch ends. A tile frame assembled from
+    these metrics (``assemble_tiles``) picks the persisted data up
+    through Spark's cache manager, so every action inside the block
+    shares one encode."""
+    metrics.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield
+    finally:
+        metrics.unpersist()
+
+
+def write_batch(spark: SparkSession, tiles: DataFrame, metrics: DataFrame,
+                path: str) -> dict | None:
+    """Write one seed batch of a build's (metrics, tiles) frames,
+    skipping tiles the sink already holds (R6 resume). Returns the
+    manifest record, or None when nothing is left to write.
+
+    The metrics frame is persisted before any action, so the emptiness
+    test, the tile write and the metrics write evaluate the encode once.
+    Tiles and metrics share their (z, x, y) keys, so the batch is empty
+    exactly when the remaining metrics are."""
+    with persisted(metrics):
+        done = existing_keys(spark, path)
+        if done is not None:
+            done = F.broadcast(done)
+            tiles = tiles.join(done, TILE_KEYS, "left_anti")
+            metrics = metrics.join(done, TILE_KEYS, "left_anti")
+        if metrics.isEmpty():
+            return None
+        return write_tiles(tiles, metrics, path)
 
 
 def remaining_work(work_list: DataFrame, spark: SparkSession, path: str,
@@ -113,7 +168,7 @@ def remaining_work(work_list: DataFrame, spark: SparkSession, path: str,
         return work_list
     if broadcast_done:
         done = F.broadcast(done)
-    return work_list.join(done, ["z", "x", "y"], "left_anti")
+    return work_list.join(done, TILE_KEYS, "left_anti")
 
 
 def write_bucketed(df: DataFrame, table: str, keys: list[str],

@@ -14,7 +14,7 @@ Mirrors `tegola cache seed` + its skip-if-cached worker
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from ..plans import pipeline
 from ..sources import sinks
@@ -29,11 +29,7 @@ def seed_tiles(spark: SparkSession, sf_dir: str, out_path: str, zooms,
     for i in range(0, len(zooms), batch_zooms):
         batch = zooms[i:i + batch_zooms]
         metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=batch, docs=docs)
-        done = sinks.existing_keys(spark, out_path)
-        if done is not None:
-            tiles = tiles.join(F.broadcast(done), ["z", "x", "y"], "left_anti")
-            metrics = metrics.join(F.broadcast(done), ["z", "x", "y"], "left_anti")
-        if tiles.isEmpty():
-            continue
-        recs.append(sinks.write_tiles(tiles, metrics, out_path))
+        rec = sinks.write_batch(spark, tiles, metrics, out_path)
+        if rec is not None:
+            recs.append(rec)
     return recs

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import tiling
 from ..plans import pipeline
+from ..sources import sinks
 
 
 def affected_tiles(spark: SparkSession, new_docs: DataFrame, sf_dir: str,
@@ -50,11 +51,14 @@ def affected_tiles(spark: SparkSession, new_docs: DataFrame, sf_dir: str,
 
 def _write_versioned(tiles: DataFrame, metrics: DataFrame, out_path: str,
                      batch_id: int) -> None:
-    (tiles.withColumn("_batch", F.lit(int(batch_id)))
-     .repartition("z").sortWithinPartitions("x", "y")
-     .write.mode("append").partitionBy("z").parquet(f"{out_path}/tiles"))
-    (metrics.withColumn("_batch", F.lit(int(batch_id)))
-     .write.mode("append").partitionBy("z").parquet(f"{out_path}/_metrics"))
+    """Append one micro-batch's tiles and metrics, tagged ``_batch``.
+    Both writes read the one persisted encode (``sinks.persisted``)."""
+    with sinks.persisted(metrics):
+        (tiles.withColumn("_batch", F.lit(int(batch_id)))
+         .repartition("z").sortWithinPartitions("x", "y")
+         .write.mode("append").partitionBy("z").parquet(f"{out_path}/tiles"))
+        (metrics.withColumn("_batch", F.lit(int(batch_id)))
+         .write.mode("append").partitionBy("z").parquet(f"{out_path}/_metrics"))
 
 
 def read_current(spark: SparkSession, out_path: str) -> DataFrame:

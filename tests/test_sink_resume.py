@@ -94,3 +94,116 @@ def test_manifest_observed_bytes(spark, tmp_path):
     assert rec["n_tiles"] == 2
     assert rec["n_bytes"] == 8
     assert rec["zooms"] == [0, 1]
+
+
+# --- the batch writer: one encode per seed batch --------------------------
+
+# sink digest of `seed --min-zoom 0 --max-zoom 2` over the sf0.01 corpus,
+# recorded from the writer before it persisted the encode (three Spark
+# actions per batch); the standard and hierarchical plans agree
+SF001_Z2_GOLDEN = {"tiles": 21, "bytes": 92079,
+                   "md5": "a0fb830398cf9ab7c458a7c7b1be35c7"}
+
+
+def _sink_digest(path):
+    """Count, total bytes and md5 over (z, x, y, tile_bytes) in key
+    order, read without Spark."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(path, "tiles"),
+                      columns=["z", "x", "y", "tile_bytes"]).to_pydict()
+    rows = sorted(zip(t["z"], t["x"], t["y"], t["tile_bytes"]),
+                  key=lambda r: r[:3])
+    h = hashlib.md5()
+    for z, x, y, b in rows:
+        h.update(b"%d/%d/%d:" % (z, x, y))
+        h.update(b)
+    return {"tiles": len(rows), "bytes": sum(len(r[3]) for r in rows),
+            "md5": h.hexdigest()}
+
+
+def _n_persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("plan_args", [
+    [], ["--hierarchical", "--anchor-z", "1"]], ids=["standard", "hierarchical"])
+def test_write_batch_writes_from_persisted_encode(spark, sf_dir, tmp_path,
+                                                  monkeypatch, plan_args):
+    """Both written frames read the persisted metrics (the encode runs
+    once per batch) and the sink bytes equal the golden."""
+    from tegola_spark import cli
+
+    plans = []
+    real_write = sinks.write_tiles
+
+    def spying_write(tiles, metrics, path, **kw):
+        plans.append([df._jdf.queryExecution().executedPlan().toString()
+                      for df in (tiles, metrics)])
+        return real_write(tiles, metrics, path, **kw)
+
+    monkeypatch.setattr(sinks, "write_tiles", spying_write)
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    out = str(tmp_path / "sink")
+    assert cli.main(["seed", "--input", sf001, "--out", out,
+                     "--min-zoom", "0", "--max-zoom", "2"] + plan_args,
+                    spark=spark) == 0
+    assert len(plans) == 2            # zoom batches [0, 1] and [2]
+    for tiles_plan, metrics_plan in plans:
+        assert "InMemoryTableScan" in tiles_plan
+        assert "InMemoryTableScan" in metrics_plan
+    assert _sink_digest(out) == SF001_Z2_GOLDEN
+
+
+def test_write_batch_unpersists_on_every_exit(spark, sf_dir, tmp_path,
+                                              monkeypatch):
+    """The persisted encode is released after a write, after a batch
+    skipped as already done, and after a write that raises."""
+    from tegola_spark.plans import pipeline
+
+    out = str(tmp_path / "sink")
+
+    metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1])
+    n0 = _n_persisted(spark)
+    assert sinks.write_batch(spark, tiles, metrics, out)["n_tiles"] == 5
+    assert _n_persisted(spark) == n0
+
+    # resume no-op: every tile is in the sink, nothing is written
+    metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1])
+    n0 = _n_persisted(spark)
+    assert sinks.write_batch(spark, tiles, metrics, out) is None
+    assert _n_persisted(spark) == n0
+
+    def failing_write(tiles, metrics, path, **kw):
+        tiles.count()
+        raise RuntimeError("sink unavailable")
+
+    monkeypatch.setattr(sinks, "write_tiles", failing_write)
+    metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[2])
+    n0 = _n_persisted(spark)
+    with pytest.raises(RuntimeError, match="sink unavailable"):
+        sinks.write_batch(spark, tiles, metrics, out)
+    assert _n_persisted(spark) == n0
+    assert sinks.existing_keys(spark, out).count() == 5
+
+
+def test_existing_keys_missing_empty_and_corrupt(spark, sf_dir, tmp_path):
+    """Only a missing tile table reads as None. A tile table with no
+    data files yet is an empty key set, and an unreadable one raises
+    instead of letting resume re-append every tile."""
+    out = tmp_path / "sink"
+    assert sinks.existing_keys(spark, str(out)) is None
+
+    (out / "tiles" / "_temporary").mkdir(parents=True)
+    assert sinks.existing_keys(spark, str(out)).count() == 0
+
+    checkpoint.seed_tiles(spark, sf_dir, str(out), zooms=[0])
+    assert sinks.existing_keys(spark, str(out)).count() == 1
+    (out / "tiles" / "z=0" / "part-corrupt.parquet").write_bytes(
+        b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        sinks.existing_keys(spark, str(out)).count()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        checkpoint.seed_tiles(spark, sf_dir, str(out), zooms=[0])

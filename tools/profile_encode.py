@@ -1,6 +1,9 @@
-"""Round-6: cProfile the MVT encode kernels on real sf1.0 fan-out data
+"""Round-6: cProfile the MVT encode kernels on real fan-out data
 (driver-side, single-threaded) to find python hotspots inside the
-mapInPandas/applyInPandas stages. Not part of the bench."""
+mapInPandas/applyInPandas stages. Not part of the bench.
+
+Reads the sf0.1 test corpus from the ``testdata`` directory beside the
+checkout (TESTDATA.md); ``SPARK_GRAFT_SF_DIR`` points it elsewhere."""
 
 from __future__ import annotations
 
@@ -10,7 +13,8 @@ import pstats
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -21,7 +25,9 @@ from tegola_spark.sources import corpus
 
 
 def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR",
+        os.path.join(os.path.dirname(REPO), "testdata", "sf0.1"))
     spark = get_spark("profile_encode", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
