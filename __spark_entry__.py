@@ -258,8 +258,8 @@ def q_mvt_point_counts(spark, sf_dir):
     """The FLAGSHIP tile pipeline under the HARD oracle (round-4
     VERDICT item 1): per-(z, x, y) kept/dropped feature counts of the
     pages point layer from the REAL distributed build — hierarchical
-    anchor path (fused in-kernel assembly, deep span 3 levels) for
-    z >= 2, standard per-zoom fan-out below. DuckDB recomputes every
+    points-only anchor kernel (deep span 3 levels) for z >= 2,
+    standard per-zoom fan-out below. DuckDB recomputes every
     count from first principles: spherical world-coord fan-out with the
     3x3 buffered-duplication predicate (tile.go buffered extents),
     ellipsoidal WGS84->3857 projection of each point
@@ -297,12 +297,12 @@ def q_mvt_line_counts(spark, sf_dir):
 def q_mvt_polygon_counts(spark, sf_dir):
     """Polygon family (G3 make-valid + clip) under the HARD oracle:
     per-(z, x, y, layer) kept/dropped counts of the nations/regions
-    rect layers from the REAL hierarchical build — the fused anchor
-    kernel derives deep-tile polygon membership from the broadcast
-    layer frame (pipeline.py:1220-1270) and every candidate runs
-    reproject -> prepare (quantize/dedup/de-close/rectify,
-    prepare.go:114-150) -> CleanGeometry's always-on make-valid sweep
-    (validate.go:101-146). DuckDB replays the keep-decision from first
+    rect layers from the REAL hierarchical build — the polygon layers
+    take build_tiles' bbox fan-out (tiling.assign_bbox_tiles) at every
+    zoom and every candidate runs reproject -> prepare
+    (quantize/dedup/de-close/rectify, prepare.go:114-150) ->
+    CleanGeometry's always-on make-valid sweep (validate.go:101-146).
+    DuckDB replays the keep-decision from first
     principles: a rect survives iff its quantized pixel spans exceed
     the 1e-9 dedup comparator (cmp/default_compare.go:10-13) AND the
     x10 fixed-point effective clipbox — clip INTERSECT geometry bbox,
@@ -2197,11 +2197,11 @@ def _mvt_line_counts_oracle(zooms) -> str:
 
 def _mvt_polygon_counts_oracle(zooms) -> str:
     """Replays the nations/regions polygon layers at counts level:
-    bbox fan-out (assign_bbox_tiles / the fused kernel's identical
-    span arithmetic), ellipsoidal corner projection, spherical tile
-    extents, pixel quantization — then the polygon keep-decision in
-    its reduced form for axis-aligned rects (differentially proven
-    against prepare_geo + clean_geometry, see q_mvt_polygon_counts):
+    bbox fan-out (tiling.assign_bbox_tiles' span arithmetic),
+    ellipsoidal corner projection, spherical tile extents, pixel
+    quantization — then the polygon keep-decision in its reduced form
+    for axis-aligned rects (differentially proven against prepare_geo
+    + clean_geometry, see q_mvt_polygon_counts):
 
       kept iff |qx1-qx0| > 1e-9 AND |qyb-qyt| > 1e-9     (dedup tol)
            AND max(-640, 10*qxmin) < min(41600, 10*qxmax) (x10 clipbox

@@ -87,10 +87,8 @@ def run_bench(sf_dir: str, cpus: int, zooms=range(0, 6), scale_mult: int = 1) ->
         spreads[name] = samples
         return out
 
-    # warm the JVM + parquet footers outside the timed sections; the
-    # count feeds the builds' volume gates so no gate launches its own
-    # count job inside the timed loop
-    n_docs = corpus.documents(spark, sf_dir).count() * scale_mult
+    # warm the JVM + parquet footers outside the timed sections
+    corpus.documents(spark, sf_dir).count()
 
     docs = _expand_documents(corpus.documents(spark, sf_dir), scale_mult)
     if scale_mult > 1:
@@ -123,7 +121,7 @@ def run_bench(sf_dir: str, cpus: int, zooms=range(0, 6), scale_mult: int = 1) ->
         if hierarchical and anchor_env:
             kw["anchor_z"] = int(anchor_env)
         metrics, tiles = build(spark, sf_dir, zooms=list(zooms), docs=docs,
-                               n_docs=n_docs, **kw)
+                               **kw)
         row = tiles.agg(F.count("*"), F.sum("tile_len"), F.sum("n_features")).first()
         n_tiles["tiles"] = row[0]
         n_tiles["bytes"] = row[1]

@@ -92,7 +92,6 @@ def profile_mvt(spark, sf_dir, reps=1):
     from tegola_spark.sources import corpus
 
     sc = spark.sparkContext
-    n_docs = corpus.documents(spark, sf_dir).count()
     docs = corpus.documents(spark, sf_dir)
 
     # warmup identical to bench.py
@@ -106,7 +105,7 @@ def profile_mvt(spark, sf_dir, reps=1):
         sc.setJobDescription(f"mvt rep{i}")
         t0 = time.perf_counter()
         metrics, tiles = pipeline.build_tiles_hierarchical(
-            spark, sf_dir, zooms=list(range(0, 6)), docs=docs, n_docs=n_docs)
+            spark, sf_dir, zooms=list(range(0, 6)), docs=docs)
         row = tiles.agg(F.count("*"), F.sum("tile_len"), F.sum("n_features")).first()
         print(f"rep{i}: {time.perf_counter()-t0:.3f}s tiles={row[0]} bytes={row[1]}",
               file=sys.stderr)

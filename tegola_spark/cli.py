@@ -24,6 +24,8 @@ before any action. The resume emptiness test, the tile write and the
 metrics write all read that one encode — the reference likewise renders
 a tile once and then stores it (cache.go:118-234). The frame is
 unpersisted when the batch ends, whether written, skipped or failed.
+A --tile-list work set is cached once for the whole batch loop and
+unpersisted when the loop ends, also when it raises.
 
 Scale knobs: --hierarchical (single anchor shuffle for deep zooms),
 --max-features (per-tile-layer budget; default 'auto'), --anchor-z.
@@ -99,24 +101,30 @@ def cmd_seed(args, spark=None) -> int:
             explicit=args.tile_list_explicit).cache()
 
     recs = []
-    for i in range(0, len(zooms), args.batch_zooms):
-        batch = zooms[i:i + args.batch_zooms]
-        # tile-list mode pins the standard build: the hierarchical
-        # anchor kernel derives every descendant, which wastes work
-        # when only a listed subset is wanted
-        build = (pipeline.build_tiles_hierarchical
-                 if args.hierarchical and tile_filter is None
-                 else pipeline.build_tiles)
-        kwargs = {"max_features_per_tile": cap}
+    try:
+        for i in range(0, len(zooms), args.batch_zooms):
+            batch = zooms[i:i + args.batch_zooms]
+            # tile-list mode pins the standard build: the hierarchical
+            # anchor kernel derives every descendant, which wastes work
+            # when only a listed subset is wanted
+            build = (pipeline.build_tiles_hierarchical
+                     if args.hierarchical and tile_filter is None
+                     else pipeline.build_tiles)
+            kwargs = {"max_features_per_tile": cap}
+            if tile_filter is not None:
+                kwargs["tile_filter"] = tile_filter
+            if build is pipeline.build_tiles_hierarchical \
+                    and args.anchor_z is not None:
+                kwargs["anchor_z"] = args.anchor_z
+            metrics, tiles = build(spark, args.input, zooms=batch, **kwargs)
+            rec = sinks.write_batch(spark, tiles, metrics, args.out)
+            if rec is not None:
+                recs.append(rec)
+    finally:
+        # the cached --tile-list work set lives exactly as long as the
+        # batch loop, whether it finished or raised
         if tile_filter is not None:
-            kwargs["tile_filter"] = tile_filter
-        if build is pipeline.build_tiles_hierarchical \
-                and args.anchor_z is not None:
-            kwargs["anchor_z"] = args.anchor_z
-        metrics, tiles = build(spark, args.input, zooms=batch, **kwargs)
-        rec = sinks.write_batch(spark, tiles, metrics, args.out)
-        if rec is not None:
-            recs.append(rec)
+            tile_filter.unpersist()
     print(json.dumps({"batches_written": len(recs), "records": recs}))
     if own_session:
         spark.stop()

@@ -1,14 +1,28 @@
 """End-to-end tile pipeline (the Spark form of atlas.Map.Encode +
 `tegola cache seed` — SURVEY.md §3.1-3.2).
 
-Plan shape (one wide exchange; everything else map-side):
+Each builder has ONE physical plan; no core count, corpus size or env
+knob picks between alternatives.
+
+build_tiles, per feature stream (corpus points / polygon layers /
+roads / debug), each stream shuffling only its own columns:
 
   pages --geocode(UDF)--> points --tile fan-out (column exprs)-->
-                                        \\
-  polygon layers --bbox fan-out-------- union --repartition(z,x,y,layer)
-        --> applyInPandas(encode layer: reproject -> [simplify] ->
+        [per-(tile, layer) window cap, skipped when it cannot bind]
+        --> repartition(bucket of (z,x,y[,layer]))
+        --> applyInPandas(encode_bucket: reproject -> [simplify] ->
             quantize -> clip -> MVT encode)  [one Arrow round-trip]
-        --> groupBy(z,x,y) assemble tile (binary concat, layer order)
+  polygon layers --bbox fan-out--> (same cap + bucketed encode)
+  union of the streams' metric rows
+        --> assemble_tiles: groupBy(z,x,y) binary concat, layer order
+
+build_tiles_hierarchical: the geocoded points are checkpointed once
+and shuffle ONCE on their anchor tile; a points-only anchor kernel
+derives and encodes every deeper zoom inside the anchor group. The low
+zooms' points and the polygon layers at every zoom go through
+build_tiles, and the tiles come from assemble_tiles over the union of
+both metric frames — so every tile build ends in
+assemble_tiles(metrics).
 
 Stage-fusion decision (SURVEY.md §4 R5): the entire per-feature
 geometry chain runs inside ONE grouped-map UDF — Catalyst cannot fuse
@@ -20,8 +34,9 @@ delta cursor are tile-layer-scoped.
 Skew: the grouped encode shuffles on (z, x, y, layer). Hot tiles
 (continent polygons + dense page cells) are bounded by
 ``max_features_per_tile`` — a deterministic per-(tile, layer) cap
-(rank by feature_id) applied BEFORE the shuffle with the same window
-the encode would use; the drop count is carried in the metrics output.
+(rank by feature_id) applied BEFORE the shuffle by a JVM window (the
+anchor kernel applies the same budget in NumPy; both derive it from
+``_cap_rule``); the drop count is carried in the metrics output.
 The reference only warns at 500 KB (server/handle_map_layer_zxy.go:229-238);
 we meter + optionally cap.
 
@@ -33,7 +48,6 @@ histograms (provider/postgis/postgis.go:110-138).
 
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
@@ -516,37 +530,6 @@ def merge_default_tags(feats: DataFrame, default_tags: dict) -> DataFrame:
 CAP_LOW_ZOOM = 65536     # z <= 4
 CAP_HIGH_ZOOM = 1048576  # z >= 5 safety net (skewed hot tiles)
 
-# fused-assembly polygon budget: above this many polygon features the
-# broadcast + in-kernel membership stops being a small-dim move and the
-# hierarchical build falls back to the unfused (distributed fan-out)
-# plan. Env override for deployments with bigger executors.
-FUSED_MAX_POLYS = 100_000
-
-# expected point-fan-out rows (n_docs x |zooms|) above which the
-# single-exchange streaming encode beats the legacy two-exchange plan's
-# lower fixed overhead (A/B: driver config 5k docs -> legacy 7.1s vs
-# stream 10.0s; mult=600 deep config -> stream 180s vs legacy 210s and
-# 258 vs 418 B/tile)
-STREAM_ENCODE_MIN_ROWS = 1_000_000
-
-# minimum parallelism for fused LOW-zoom assembly to pay off. The
-# fused-low kernel's task grain is the low-zoom tile-group count
-# (~85 at z0..3), so its win (no assemble exchange, fewer bytes) only
-# shows where the host is bandwidth-bound; at mid core counts the
-# legacy plan's finer salted-bucket tasks schedule better. Measured
-# mult=600 z0..10 alternated pairs: 32 cores fused 149.6/174.6 vs
-# legacy 169.3/197.9 (fused wins ~12%); 16 cores fused 301.1/307.0 vs
-# legacy 259.7/293.5 (fused LOSES ~14%). On a multi-executor cluster
-# total cores are large and shuffle bytes are the scarce resource, so
-# high-parallelism defaults to fused.
-FUSED_LOW_MIN_CORES = 24
-
-
-def fused_max_polys() -> int:
-    env = os.environ.get("SPARK_GRAFT_FUSED_MAX_POLYS")
-    return int(env) if env else FUSED_MAX_POLYS
-
-
 # Target rows per encode bucket (round-6): the python-kernel bucket fan
 # must adapt to VOLUME, not be a fixed multiple of shuffle partitions.
 # A fixed 4x multiple cost ~115 s of per-task worker overhead at bench
@@ -555,20 +538,20 @@ def fused_max_polys() -> int:
 # cores: the 16-core leg regressed 250 -> 308 s). rows/25k buckets,
 # clamped to [shuffle_partitions, 8x shuffle_partitions], reproduces
 # the measured best grain at BOTH scales (64 buckets at sf1.0, 128+ at
-# mult=600); unknown volume falls back to the legacy 4x.
+# mult=600).
 ENCODE_TARGET_ROWS_PER_BUCKET = 25_000
 
 
-def _encode_buckets(sp: int, rows: int | None) -> int:
-    if not rows:
-        return sp * 4
+def _encode_buckets(sp: int, rows: int) -> int:
     return min(sp * 8, max(sp, -(-rows // ENCODE_TARGET_ROWS_PER_BUCKET)))
 
 
 def _cap_rule(max_features_per_tile):
     """Per-zoom feature budget as a python callable (picklable into
     kernels): 'auto' -> zoom-scaled defaults, int -> fixed, falsy ->
-    None (no capping)."""
+    None (no capping). The only statement of the budget policy: the
+    window cap's column (_cap_col) and the anchor kernel's per-zoom
+    caps are both derived from it."""
     if max_features_per_tile == "auto":
         return lambda z: CAP_LOW_ZOOM if z <= 4 else CAP_HIGH_ZOOM
     if max_features_per_tile:
@@ -577,120 +560,17 @@ def _cap_rule(max_features_per_tile):
     return None
 
 
-def _cap_first_filter(feats: DataFrame, group_keys: list, cap) -> DataFrame:
-    """Round-5 cap-first thresholds: compute each tile's cap-th-lowest
-    feature_id on a THIN (group key, feature_id) projection — Catalyst
-    prunes the payload columns out of that window's exchange — then
-    broadcast the tiny per-tile threshold table and filter the payload
-    MAP-SIDE, so only winner rows ever cross the encode exchange.
-    Exact: feature_ids are unique per group, so fid <= threshold keeps
-    precisely the window cap's winner set; the per-group dropped count
-    rides the _pre_dropped channel on the (always-surviving) min-fid
-    row."""
-    thin = feats.select(*group_keys, "feature_id")
-    w = Window.partitionBy(*group_keys).orderBy("feature_id")
-    wc = Window.partitionBy(*group_keys)
-    marked = (
-        thin.withColumn("_rk", F.row_number().over(w))
-        .withColumn("_tot", F.count("*").over(wc))
-        .where((F.col("_rk") == cap) | (F.col("_rk") == 1))
-    )
-    thr = marked.groupBy(*group_keys).agg(
-        F.max(F.when(F.col("_rk") == cap,
-                     F.col("feature_id"))).alias("_thr"),
-        F.max(F.when(F.col("_rk") == 1,
-                     F.col("feature_id"))).alias("_minfid"),
-        F.max("_tot").alias("_tot"))
-    return (
-        feats.join(F.broadcast(thr), group_keys, "inner")
-        .where(F.col("_thr").isNull()
-               | (F.col("feature_id") <= F.col("_thr")))
-        .withColumn(
-            "_pre_dropped",
-            F.when(F.col("feature_id") == F.col("_minfid"),
-                   F.greatest(F.lit(0), F.col("_tot") - cap))
-            .otherwise(F.lit(0)).cast("long"))
-        .drop("_thr", "_minfid", "_tot")
-    )
-
-
-def _make_stream_encode(cap_rule, simplify, repair, const_layer):
-    """Streaming encode kernel (round-5 single-exchange plan): input is
-    hash-partitioned by the (tile[, layer]) group key and sorted within
-    partitions by (group key, feature_id), so groups arrive contiguous
-    and pre-sorted across Arrow batches. The kernel applies the
-    per-(tile, layer) budget with a running counter (bounded memory:
-    at most cap(z) rows buffered per open group — the JVM sort is the
-    spillable stage, exactly the property the old window-cap provided)
-    and encodes each completed group with the standard kernel. This
-    replaces [window-cap exchange -> bucket exchange] with ONE
-    exchange; outputs are byte-identical (differential test)."""
-    gcols = ["z", "x", "y"] + ([] if const_layer else ["layer"])
-
-    def gen(batches):
-        cur = None
-        buf: list = []
-        buf_rows = 0
-        n_seen = 0
-        pre_dropped = 0
-        out: list = []
-
-        def flush():
-            nonlocal cur, buf, buf_rows, n_seen, pre_dropped
-            if cur is None:
-                return
-            g = pd.concat(buf, ignore_index=True) if len(buf) > 1 \
-                else buf[0].reset_index(drop=True)
-            if "_pre_dropped" in g.columns:
-                g = g.drop(columns=["_pre_dropped"])
-            layer = const_layer if const_layer else cur[3]
-            g = g.assign(_cap_dropped=(n_seen - len(g)) + pre_dropped)
-            out.append(_encode_one(
-                g, time.perf_counter(), int(cur[0]), int(cur[1]),
-                int(cur[2]), layer, simplify=simplify, repair=repair,
-                presorted=True))
-            cur = None
-            buf = []
-            buf_rows = 0
-            n_seen = 0
-            pre_dropped = 0
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            has_pre = "_pre_dropped" in pdf.columns
-            keyarr = [pdf[c].to_numpy() for c in gcols]
-            chg = np.zeros(len(pdf), dtype=bool)
-            chg[0] = True
-            for a in keyarr:
-                chg[1:] |= a[1:] != a[:-1]
-            idx = np.nonzero(chg)[0].tolist() + [len(pdf)]
-            for s, e in zip(idx[:-1], idx[1:]):
-                key = tuple(a[s] for a in keyarr)
-                if cur is not None and key != cur:
-                    flush()
-                if cur is None:
-                    cur = key
-                seg = pdf.iloc[s:e]
-                if has_pre:
-                    pre_dropped += int(seg["_pre_dropped"].sum())
-                n_seen += e - s
-                cap = cap_rule(int(key[0])) if cap_rule else None
-                if cap is not None and buf_rows + (e - s) > cap:
-                    take = cap - buf_rows
-                    if take > 0:
-                        buf.append(seg.iloc[:take])
-                        buf_rows += take
-                else:
-                    buf.append(seg)
-                    buf_rows += e - s
-                if len(out) >= 64:
-                    yield pd.DataFrame(out, columns=_METRIC_COLS)
-                    out = []
-        flush()
-        if out:
-            yield pd.DataFrame(out, columns=_METRIC_COLS)
-    return gen
+def _cap_col(rule, zooms):
+    """``rule`` as a Spark column over ``z``, exact for every zoom in
+    ``zooms``: one literal per distinct budget."""
+    by_cap: dict = {}
+    for z in sorted(set(zooms)):
+        by_cap.setdefault(rule(z), []).append(z)
+    *rest, (last, _) = by_cap.items()
+    col = F.lit(last)
+    for c, zs in reversed(rest):
+        col = F.when(F.col("z").isin(zs), F.lit(c)).otherwise(col)
+    return col
 
 
 def assemble_tiles(metrics: DataFrame) -> DataFrame:
@@ -718,7 +598,6 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
                 default_tags: dict | None = None,
                 simplify: bool = False,
                 repair_polygons: bool = True,
-                n_docs: int | None = None,
                 point_zooms=None,
                 tile_filter: DataFrame | None = None,
                 points_df: DataFrame | None = None
@@ -737,6 +616,13 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     as ``zooms``); build_tiles_hierarchical passes the low zooms here
     and derives the deep zooms from one anchor shuffle.
 
+    ``points_df``: a geocoded point frame (point_features' columns) to
+    use instead of geocoding ``docs``; build_tiles_hierarchical passes
+    its checkpointed frame so both of its consumers share one geocode.
+    The point-row count that sizes the buckets and decides the exact
+    cap-skip is counted here, from ``points_df`` or else from the
+    documents.
+
     ``tile_filter``: optional DataFrame of (z, x, y) keys — only those
     tiles are built (semi-join on the fanned-out features BEFORE the
     cap window and the encode shuffle, so encode work is proportional
@@ -754,9 +640,6 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     pzooms = list(zooms) if point_zooms is None else list(point_zooms)
     streams: list[tuple[DataFrame, str | None]] = []  # (feats, const_layer)
     if pzooms:
-        # ``points_df``: the hierarchical build passes its own geocoded
-        # point frame (post-reuse-exchange) so BOTH its consumers share
-        # one geocode evaluation — see build_tiles_hierarchical
         pts = tiling.assign_point_tiles(
             point_features(spark, sf_dir, docs=docs)
             if points_df is None else points_df, pzooms)
@@ -800,59 +683,20 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     else:
         filter_keys = None
 
-    if max_features_per_tile == "auto":
-        cap = F.when(F.col("z") <= 4, F.lit(CAP_LOW_ZOOM)) \
-               .otherwise(F.lit(CAP_HIGH_ZOOM))
-    elif max_features_per_tile:
-        cap = F.lit(int(max_features_per_tile))
-    else:
-        cap = None
-
+    rule = _cap_rule(max_features_per_tile)
+    cap = None if rule is None else _cap_col(rule, set(zooms) | set(pzooms))
     sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    # single-exchange streaming encode (round-5): hash-partition by the
-    # group key, sort spillably in the JVM, then ONE pass that caps +
-    # encodes — removes the legacy plan's second (bucket) exchange.
-    # Its extra python stage boundaries cost ~3s of fixed overhead at
-    # toy scale where the exchange it saves is tiny, so the default is
-    # VOLUME-ADAPTIVE (the round-4 depth-adaptive-fusion precedent):
-    # stream-encode when the expected point fan-out is large, legacy
-    # two-exchange otherwise. SPARK_GRAFT_STREAM_ENCODE=1/0 forces.
-    rule = _cap_rule(max_features_per_tile)
-    # n_docs: caller-supplied corpus count so the volume gates don't
-    # launch an extra count job per build (round-5 cost audit: two
-    # gate counts per build cost ~1s/run at bench scale)
-    n_pts = n_docs
-    se_env = os.environ.get("SPARK_GRAFT_STREAM_ENCODE")
-    if se_env is not None:
-        stream_encode = se_env == "1"
-    else:
-        if pzooms and n_pts is None:
-            n_pts = (docs.count() if docs is not None
-                     else corpus.documents(spark, sf_dir).count())
-        stream_encode = bool(pzooms) and \
-            n_pts * len(pzooms) >= STREAM_ENCODE_MIN_ROWS
-
-    # cap-first (round-5, the dominant-exchange byte cut): when the
-    # per-tile budgets are expected to BIND (corpus rows per low-zoom
-    # tile >> cap), first compute each tile's cap-th-lowest feature_id
-    # on a THIN (z, x, y, feature_id) projection — Catalyst prunes the
-    # payload columns out of that window's exchange — broadcast the
-    # tiny per-tile threshold table, and filter the payload map-side so
-    # only winner rows ever cross the encode exchange. Exact: fids are
-    # unique per group, so fid <= threshold keeps precisely the window
-    # cap's winner set; the per-group dropped count rides the
-    # _pre_dropped channel on the (always-surviving) min-fid row.
-    cap_first_env = os.environ.get("SPARK_GRAFT_CAP_FIRST")
-    cap_first = False
-    if stream_encode and rule is not None and pzooms:
-        if cap_first_env is not None:
-            cap_first = cap_first_env == "1"
-        else:
-            if n_pts is None:
-                n_pts = (docs.count() if docs is not None
-                         else corpus.documents(spark, sf_dir).count())
-            cap_first = any(n_pts > rule(z) * (4 ** z) * 2 for z in pzooms)
+    # point-row count, derived here so no caller-supplied count can
+    # change output: the exact row count of ``points_df`` when the
+    # hierarchical build hands in its checkpointed frame, else the
+    # documents count (one geocoded point per document, so an upper
+    # bound on the rows of any point-stream group)
+    n_pts = None
+    if pzooms:
+        n_pts = (points_df if points_df is not None
+                 else docs if docs is not None
+                 else corpus.documents(spark, sf_dir)).count()
 
     metrics = None
     for feats, const_layer in streams:
@@ -863,8 +707,7 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         # measurement); give them a quarter of the width. The point
         # stream gets the volume-adaptive grain (_encode_buckets).
         if const_layer is not None:
-            nb = _encode_buckets(
-                sp, n_pts * len(pzooms) if n_pts and pzooms else None)
+            nb = _encode_buckets(sp, n_pts * len(pzooms))
         else:
             nb = max(8, sp // 4)
         if default_tags:
@@ -873,36 +716,17 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
             feats = feats.join(F.broadcast(filter_keys),
                                ["z", "x", "y"], "left_semi")
 
-        if stream_encode:
-            # cap-first only for the corpus-scale point stream; the
-            # bbox streams are catalog-sized
-            if cap_first and const_layer is not None:
-                feats = _cap_first_filter(feats, group_keys, cap)
-            m = (
-                feats.repartition(nb, *group_keys)
-                .sortWithinPartitions(*group_keys, "feature_id")
-                .mapInPandas(
-                    _make_stream_encode(rule, simplify, repair_polygons,
-                                        const_layer), ENCODE_SCHEMA)
-            )
-            metrics = m if metrics is None else metrics.unionByName(m)
-            continue
-
         # exact cap-skip (round-6): assign_point_tiles emits a point to
         # a tile AT MOST ONCE (the 3x3 neighbor offsets are distinct),
         # so a (z,x,y) group of the single-layer point stream can never
         # exceed n_pts rows — when n_pts <= the smallest zoom budget the
         # cap window is provably the identity and its sort + exchange
         # are pure cost. Exact, not heuristic: the moment the corpus
-        # outgrows the budget the window returns. (n_pts None = caller
-        # gave no count and no gate computed one -> conservative keep.)
+        # outgrows the budget the window returns.
         cap_cannot_bind = (
             const_layer is not None and rule is not None
-            and n_pts is not None and pzooms
             and n_pts <= min(rule(z) for z in pzooms))
-        if cap is not None and cap_cannot_bind:
-            pass  # no group can reach the budget; n_dropped stays 0
-        elif cap is not None:
+        if cap is not None and not cap_cannot_bind:
             # rank + group count share one window spec (single sort);
             # cap-dropped rows never reach the encode shuffle, but their
             # count rides along on the kept rows for n_dropped lineage
@@ -941,311 +765,23 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     return metrics, assemble_tiles(metrics)
 
 
-# URL-prefix dictionary cap: above this many distinct prefixes the
-# transport optimization is off (ships raw strings) — the dictionary
-# must stay model-sized for the broadcast + driver collect to be sane.
-URL_DICT_MAX = 65536
-
-# Volume gate for the URL dictionary (same philosophy as the stream-
-# encode and fused-low gates): the prefix distinct+collect is an extra
-# driver job and the broadcast join an extra stage on EVERY build — a
-# measured ~1.4s fixed cost — while the saving (~9 B/tile, ~3.5% of
-# the anchor exchange) scales with row count. Below this many corpus
-# rows the fixed cost dominates; above it the exchange is the binding
-# resource and the dictionary pays for itself.
-URL_DICT_MIN_ROWS = 1_000_000
-
-
-def _dict_encode_url(spark: SparkSession, pts: DataFrame,
-                     n_pts: int | None = None):
-    """Dictionary-encode ``tag_url`` for the anchor exchange (round-5
-    shuffle-byte cut): URLs share a small set of scheme/host/path
-    prefixes, so the dominant shuffle ships a small int (``_upid``) plus
-    the short final path segment (``_usfx``) instead of the full string;
-    the anchor kernel reconstructs the exact bytes from the broadcast
-    prefix table. Returns (pts', broadcast[list[str]]) or (pts, None)
-    when disabled / prefix cardinality exceeds URL_DICT_MAX / any url
-    is NULL (nulls would need a sentinel; the corpus never has them).
-
-    Volume-adaptive (round-5 cost audit): on when ``n_pts`` >=
-    URL_DICT_MIN_ROWS, off below it (the ~1.4s fixed setup cost beats
-    the shuffle saving at small scale because zstd already crushes
-    shared prefixes inside the exchange). SPARK_GRAFT_URL_DICT=1/0
-    forces either way; the byte-identity test pins both legs equal."""
-    if "tag_url" not in pts.columns:
-        return pts, None
-    env = os.environ.get("SPARK_GRAFT_URL_DICT")
-    if env is not None:
-        if env != "1":
-            return pts, None
-    elif n_pts is None or n_pts < URL_DICT_MIN_ROWS:
-        return pts, None
-    pfx = F.expr("substring(tag_url, 1, length(tag_url) - "
-                 "length(substring_index(tag_url, '/', -1)))")
-    distinct = [r[0] for r in
-                pts.select(pfx.alias("_p")).distinct()
-                   .limit(URL_DICT_MAX + 1).collect()]
-    if len(distinct) > URL_DICT_MAX or any(p is None for p in distinct):
-        return pts, None
-    distinct.sort()
-    dim = spark.createDataFrame(
-        [(p, i) for i, p in enumerate(distinct)], "_p string, _upid int")
-    out = (
-        pts.withColumn("_p", pfx)
-        .withColumn("_usfx", F.expr("substring_index(tag_url, '/', -1)"))
-        .join(F.broadcast(dim), "_p", "left")
-        .drop("_p", "tag_url")
-    )
-    return out, spark.sparkContext.broadcast(distinct)
-
-
-# fused anchor-kernel output: metric rows (layer set) + assembled tile
-# rows (layer NULL) in one schema, split by filter afterwards
-_FUSED_COLS = _METRIC_COLS + ["tile_bytes", "n_layers", "tile_len"]
-FUSED_SCHEMA = ENCODE_SCHEMA + (
-    ", tile_bytes binary, n_layers long, tile_len long")
-
-
-def _world_y(lat, nz):
-    """Spherical-mercator world y (tiles grow downward) — the NumPy
-    twin of grid.col_world_y, shared by the fused kernels so their
-    membership arithmetic is bit-identical to the fan-out predicate."""
-    return (0.5 - np.log(np.tan(np.pi / 4.0 + lat * (np.pi / 180.0)
-                                / 2.0)) / (2.0 * np.pi)) * float(nz)
-
-
-def _decode_url_pdf(pdf: pd.DataFrame, url_prefixes) -> pd.DataFrame:
-    """Undo the URL-prefix dictionary transport: rebuild the exact
-    tag_url strings from the broadcast prefix table, re-inserting the
-    column at its original position so MVT tag-key first-appearance
-    order (column order) is byte-identical to the raw-string path."""
-    if url_prefixes is None or "_upid" not in pdf.columns:
-        return pdf
-    arr = np.asarray(url_prefixes, dtype=object)
-    pid = pdf["_upid"].to_numpy()
-    sfx = pdf["_usfx"].to_numpy(dtype=object)
-    mask = pd.notna(pid)
-    url = np.full(len(pdf), None, dtype=object)
-    if mask.any():
-        url[mask] = arr[pid[mask].astype(np.int64)] + sfx[mask]
-    pdf = pdf.drop(columns=["_upid", "_usfx"])
-    pos = pdf.columns.get_loc("tag_lang") if "tag_lang" in pdf.columns \
-        else len(pdf.columns)
-    pdf.insert(pos, "tag_url", url)
-    return pdf
-
-
-def _split_poly_layers(polys: pd.DataFrame | None, layer_zoom: dict | None):
-    """Broadcast polygon frame -> per-layer closure list in layer-name
-    order (assembly sorts by layer name; list order preserves it)."""
-    out = []
-    if polys is not None and len(polys):
-        for name, lgdf in polys.groupby("layer", sort=True):
-            lgdf = lgdf.reset_index(drop=True)
-            lo, hi = (layer_zoom or {}).get(name, (0, grid.MAX_Z))
-            out.append((
-                name, lo, hi,
-                lgdf["minx"].to_numpy(np.float64),
-                lgdf["miny"].to_numpy(np.float64),
-                lgdf["maxx"].to_numpy(np.float64),
-                lgdf["maxy"].to_numpy(np.float64),
-                lgdf))
-    return out
-
-
-def _emit_assembled(rows: list, tile_metrics: list, z: int, x: int,
-                    y: int) -> None:
-    """In-place tile assembly: byte concat in layer-name order
-    (identical to assemble_tiles' array_sort concat). Appends the
-    metric rows (blobs stripped) plus one assembled tile row."""
-    tile_metrics.sort(key=lambda m: m["layer"])
-    tb = b"".join(m["layer_bytes"] for m in tile_metrics)
-    for m in tile_metrics:
-        rows.append(dict(m, layer_bytes=None, tile_bytes=None,
-                         n_layers=None, tile_len=None))
-    rows.append({
-        "z": z, "x": x, "y": y, "layer": None,
-        "layer_bytes": None,
-        "n_features": sum(m["n_features"] for m in tile_metrics),
-        "n_dropped": None, "bytes": None, "encode_ms": None,
-        "tile_bytes": tb, "n_layers": len(tile_metrics),
-        "tile_len": len(tb),
-    })
-
-
-def _make_fused_low_encode(cap_rule, simplify, repair, polys_bc,
-                           layer_zoom, upfx_bc):
-    """Fused low-zoom kernel (round-5 follow-on: kills the low-zoom
-    assemble exchange, the last blob-weight exchange in the plan).
-
-    Input: the corpus point stream fanned out to the low zooms
-    (cap-first winners plus skeleton (z, x, y) keys for page-less
-    polygon tiles), hash-partitioned by (z, x, y) and sorted within
-    partitions by (z, x, y, feature_id) — the same single-exchange
-    contract as _make_stream_encode. Per completed tile group: encode
-    the pages layer under the standard running budget, derive the
-    catalog-sized polygon layers' membership from the BROADCAST frame
-    with the identical buffered-bbox arithmetic as
-    tiling.assign_bbox_tiles, encode each member layer, and assemble
-    the tile IN PLACE — blobs are born in their final partition
-    exactly like the deep-zoom anchor kernel, so neither the polygon
-    fan-out nor the assemble groupBy exchange exists at low zooms.
-    Byte-identical to the standard path by differential test."""
-
-    def gen(batches):
-        polys = polys_bc.value if polys_bc is not None else None
-        upfx = upfx_bc.value if upfx_bc is not None else None
-        poly_layers = _split_poly_layers(polys, layer_zoom)
-        bounds_cache: dict = {}
-        buf = tiling.BUFFER_FRAC
-        cur = None
-        pbuf: list = []
-        pbuf_rows = 0
-        n_seen = 0
-        pre_dropped = 0
-        out_rows: list = []
-        n_tiles_out = 0
-
-        def flush():
-            nonlocal cur, pbuf, pbuf_rows, n_seen, pre_dropped, n_tiles_out
-            if cur is None:
-                return
-            z, x, y = int(cur[0]), int(cur[1]), int(cur[2])
-            tile_metrics = []
-            if n_seen:
-                g = pd.concat(pbuf, ignore_index=True) if len(pbuf) > 1 \
-                    else pbuf[0].reset_index(drop=True)
-                if "_pre_dropped" in g.columns:
-                    g = g.drop(columns=["_pre_dropped"])
-                g = _decode_url_pdf(g, upfx)
-                g = g.assign(_cap_dropped=(n_seen - len(g)) + pre_dropped)
-                tile_metrics.append(_encode_one(
-                    g, time.perf_counter(), z, x, y, "pages",
-                    simplify=simplify, repair=repair, presorted=True))
-            n = 1 << z
-            for li, (name, lo, hi, pminx, pminy, pmaxx, pmaxy, lgdf) \
-                    in enumerate(poly_layers):
-                if z < lo or z > hi:
-                    continue
-                b = bounds_cache.get((li, z))
-                if b is None:
-                    x0 = np.floor((pminx + 180.0) / 360.0 * float(n)
-                                  - buf).astype(np.int64)
-                    x1 = np.floor((pmaxx + 180.0) / 360.0 * float(n)
-                                  + buf).astype(np.int64)
-                    y0 = np.floor(_world_y(pmaxy, n) - buf).astype(np.int64)
-                    y1 = np.floor(_world_y(pminy, n) + buf).astype(np.int64)
-                    b = (np.maximum(x0, 0), np.minimum(x1, n - 1),
-                         np.maximum(y0, 0), np.minimum(y1, n - 1))
-                    bounds_cache[(li, z)] = b
-                x0, x1, y0, y1 = b
-                idxs = np.nonzero((x0 <= x) & (x <= x1)
-                                  & (y0 <= y) & (y <= y1))[0]
-                if not len(idxs):
-                    continue
-                sub = lgdf.iloc[idxs][["feature_id", *POLY_SOA_COLS,
-                                       "tag_name"]]
-                cap = cap_rule(z) if cap_rule else None
-                if cap is not None and len(sub) > cap:
-                    n_over = len(sub) - cap
-                    sub = sub.nsmallest(cap, "feature_id").assign(
-                        _cap_dropped=n_over)
-                tile_metrics.append(_encode_one(
-                    sub, time.perf_counter(), z, x, y, name,
-                    simplify=simplify, repair=repair))
-            if tile_metrics:
-                _emit_assembled(out_rows, tile_metrics, z, x, y)
-                n_tiles_out += 1
-            cur = None
-            pbuf = []
-            pbuf_rows = 0
-            n_seen = 0
-            pre_dropped = 0
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            has_pre = "_pre_dropped" in pdf.columns
-            keyarr = [pdf[c].to_numpy() for c in ("z", "x", "y")]
-            real = pdf["lon"].notna().to_numpy()
-            chg = np.zeros(len(pdf), dtype=bool)
-            chg[0] = True
-            for a in keyarr:
-                chg[1:] |= a[1:] != a[:-1]
-            idx = np.nonzero(chg)[0].tolist() + [len(pdf)]
-            for s, e in zip(idx[:-1], idx[1:]):
-                key = tuple(a[s] for a in keyarr)
-                if cur is not None and key != cur:
-                    flush()
-                if cur is None:
-                    cur = key
-                rm = real[s:e]
-                if not rm.any():
-                    continue  # skeleton-only segment: key registered
-                seg = pdf.iloc[s:e]
-                if not rm.all():
-                    seg = seg[rm]
-                if has_pre:
-                    pre_dropped += int(seg["_pre_dropped"].sum())
-                n_seen += len(seg)
-                cap = cap_rule(int(key[0])) if cap_rule else None
-                if cap is not None and pbuf_rows + len(seg) > cap:
-                    take = cap - pbuf_rows
-                    if take > 0:
-                        pbuf.append(seg.iloc[:take])
-                        pbuf_rows += take
-                else:
-                    pbuf.append(seg)
-                    pbuf_rows += len(seg)
-                if n_tiles_out >= 64:
-                    yield pd.DataFrame(out_rows, columns=_FUSED_COLS)
-                    out_rows = []
-                    n_tiles_out = 0
-        flush()
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=_FUSED_COLS)
-    return gen
-
-
 def _encode_anchor_bucket(pdf: pd.DataFrame, anchor_z: int, zooms_hi,
                           simplify: bool, repair: bool,
-                          caps: dict | None = None,
-                          polys: pd.DataFrame | None = None,
-                          layer_zoom: dict | None = None,
-                          emit_tiles: bool = True,
-                          url_prefixes=None) -> pd.DataFrame:
-    """Grouped-map kernel over anchor-tile buckets: derive every
-    descendant (z, x, y) membership for z in ``zooms_hi`` locally (pure
-    NumPy — the same spherical world-coord + 3x3 buffered-duplication
-    predicate as tiling.assign_point_tiles), filter to tiles whose
-    z-``anchor_z`` ancestor IS this anchor (each deep tile is produced
-    by exactly one anchor; the anchor-level buffered duplication
-    guarantees the full buffered feature set is present, because buffer
-    distance in meters shrinks with zoom), then encode each
-    (z, x, y, layer) with the standard kernel.
-
-    Round-4 fusion: the catalog-sized polygon layers arrive via the
-    ``polys`` closure (the Spark-idiomatic broadcast of a small dim), so
-    every deep tile's FULL layer set — pages + polygon layers, with the
-    same bbox fan-out predicate and zoom pruning as the distributed
-    path — is encoded here and ASSEMBLED in place. Tile blobs are born
-    in their final partition and never cross an exchange (the assemble
-    groupBy previously re-shuffled ~1x the output bytes — the dominant
-    exchange at depth). Output rows are metric rows (layer set,
-    layer_bytes omitted) plus one assembled tile row per (z, x, y)
-    (layer NULL, tile_bytes set), byte-identical to
-    assemble_tiles(build_tiles(...)) by differential test."""
-    pdf = _decode_url_pdf(pdf, url_prefixes)
-
+                          caps: dict | None = None) -> pd.DataFrame:
+    """Grouped-map kernel over anchor-tile buckets of the point stream:
+    derive every descendant (z, x, y) membership for z in ``zooms_hi``
+    locally (pure NumPy — the same spherical world-coord + 3x3
+    buffered-duplication predicate as tiling.assign_point_tiles), filter
+    to tiles whose z-``anchor_z`` ancestor IS this anchor (each deep
+    tile is produced by exactly one anchor; the anchor-level buffered
+    duplication guarantees the full buffered feature set is present,
+    because buffer distance in meters shrinks with zoom), then encode
+    each tile's pages layer with the standard kernel under the per-zoom
+    budget ``caps``. Output: metric rows (blobs included), assembled
+    downstream by assemble_tiles."""
     rows = []
     buf = tiling.BUFFER_FRAC
-    # polygon closure split per layer in name order (assembly sorts by
-    # layer name; dict insertion below preserves this order)
-    poly_layers = _split_poly_layers(polys, layer_zoom)
-    world_y = _world_y
-
     for (ax, ay), g in pdf.groupby(["x", "y"], sort=True):
-        g = g[g["lon"].notna()]  # skeleton rows mark polygon-only anchors
         lon = g["lon"].to_numpy(dtype=np.float64)
         lat = g["lat"].to_numpy(dtype=np.float64)
         phi = lat * (np.pi / 180.0)
@@ -1254,132 +790,48 @@ def _encode_anchor_bucket(pdf: pd.DataFrame, anchor_z: int, zooms_hi,
             n = 1 << z
             dz = z - anchor_z
             cap = caps.get(z) if caps else None
-            pt_groups = {}
-            if len(g):
-                wx = (lon + 180.0) / 360.0 * float(n)
-                wy = (0.5 - ymerc / (2.0 * np.pi)) * float(n)
-                fx = np.floor(wx)
-                fy = np.floor(wy)
-                idx_all = []
-                tx_all = []
-                ty_all = []
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        tx = (fx + dx).astype(np.int64)
-                        ty = (fy + dy).astype(np.int64)
-                        keep = (
-                            (tx >= 0) & (tx < n) & (ty >= 0) & (ty < n)
-                            & (wx >= tx - buf) & (wx <= tx + 1 + buf)
-                            & (wy >= ty - buf) & (wy <= ty + 1 + buf)
-                            & ((tx >> dz) == ax) & ((ty >> dz) == ay)
-                        )
-                        k = np.nonzero(keep)[0]
-                        if len(k):
-                            idx_all.append(k)
-                            tx_all.append(tx[k])
-                            ty_all.append(ty[k])
-                if idx_all:
-                    idx = np.concatenate(idx_all)
-                    txs = np.concatenate(tx_all)
-                    tys = np.concatenate(ty_all)
-                    # ONE take + ONE C-speed groupby per (anchor, zoom)
-                    # — a per-tile .iloc loop cost more than the shuffle
-                    # it saved (measured 457s vs 421s at 1.28M tiles)
-                    exploded = g.take(idx)
-                    exploded["_tx"] = txs
-                    exploded["_ty"] = tys
-                    pt_groups = {(int(tx), int(ty)): lg for (tx, ty), lg
-                                 in exploded.groupby(["_tx", "_ty"],
-                                                     sort=True)}
-
-            # polygon membership: the same buffered bbox range as
-            # tiling.assign_bbox_tiles, intersected with this anchor's
-            # descendant window (each deep tile owned by ONE anchor)
-            poly_tiles: dict = {}
-            if poly_layers:
-                ax0, ax1 = ax << dz, ((ax + 1) << dz) - 1
-                ay0, ay1 = ay << dz, ((ay + 1) << dz) - 1
-                for name, lo, hi, pminx, pminy, pmaxx, pmaxy, lgdf \
-                        in poly_layers:
-                    if z < lo or z > hi:
-                        continue
-                    x0 = np.floor((pminx + 180.0) / 360.0 * float(n)
-                                  - buf).astype(np.int64)
-                    x1 = np.floor((pmaxx + 180.0) / 360.0 * float(n)
-                                  + buf).astype(np.int64)
-                    y0 = np.floor(world_y(pmaxy, n) - buf).astype(np.int64)
-                    y1 = np.floor(world_y(pminy, n) + buf).astype(np.int64)
-                    x0 = np.maximum(np.maximum(x0, 0), ax0)
-                    x1 = np.minimum(np.minimum(x1, n - 1), ax1)
-                    y0 = np.maximum(np.maximum(y0, 0), ay0)
-                    y1 = np.minimum(np.minimum(y1, n - 1), ay1)
-                    # (feature, tile) expansion fully in NumPy (round-4
-                    # review: the nested setdefault loop was the kernel's
-                    # serial term as layer catalogs grow): repeat each
-                    # feature index over its span, enumerate tx-major /
-                    # ty-minor offsets arithmetically, then one stable
-                    # sort groups by tile while preserving ascending
-                    # feature order within each tile — identical lists
-                    # to the old triple loop.
-                    ok = np.nonzero((x0 <= x1) & (y0 <= y1))[0]
-                    if not len(ok):
-                        continue
-                    w = x1[ok] - x0[ok] + 1
-                    h = y1[ok] - y0[ok] + 1
-                    cnt = w * h
-                    fidx = np.repeat(ok, cnt)
-                    off = np.arange(int(cnt.sum()), dtype=np.int64) \
-                        - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                    hrep = np.repeat(h, cnt)
-                    txs = np.repeat(x0[ok], cnt) + off // hrep
-                    tys = np.repeat(y0[ok], cnt) + off % hrep
-                    key = txs * (2 * n) + tys
-                    order = np.argsort(key, kind="stable")
-                    uk, starts = np.unique(key[order], return_index=True)
-                    fo = fidx[order]
-                    for j, k0 in enumerate(uk):
-                        s = starts[j]
-                        e = starts[j + 1] if j + 1 < len(uk) else len(fo)
-                        tkey = (int(k0 // (2 * n)), int(k0 % (2 * n)))
-                        poly_tiles.setdefault(tkey, {})[name] = \
-                            fo[s:e].tolist()
-
-            for key in sorted(set(pt_groups) | set(poly_tiles)):
-                tx, ty = key
-                tile_metrics = []
-                lg = pt_groups.get(key)
-                if lg is not None:
-                    if cap is not None and len(lg) > cap:
-                        # deterministic per-(tile, layer) budget matching
-                        # the standard path's window cap: lowest
-                        # feature_ids kept; drops ride _cap_dropped
-                        n_over = len(lg) - cap
-                        lg = lg.nsmallest(cap, "feature_id").assign(
-                            _cap_dropped=n_over)
-                    tile_metrics.append(_encode_one(
-                        lg, time.perf_counter(), z, tx, ty,
-                        "pages", simplify=simplify, repair=repair))
-                for name, idxs in poly_tiles.get(key, {}).items():
-                    _, _, _, _, _, _, _, lgdf = next(
-                        pl for pl in poly_layers if pl[0] == name)
-                    sub = lgdf.iloc[idxs][["feature_id", *POLY_SOA_COLS,
-                                           "tag_name"]]
-                    if cap is not None and len(sub) > cap:
-                        n_over = len(sub) - cap
-                        sub = sub.nsmallest(cap, "feature_id").assign(
-                            _cap_dropped=n_over)
-                    tile_metrics.append(_encode_one(
-                        sub, time.perf_counter(), z, tx, ty, name,
-                        simplify=simplify, repair=repair))
-                if not emit_tiles:
-                    # unfused mode: metric rows only (blobs included —
-                    # the assemble exchange groups them downstream)
-                    rows.extend(tile_metrics)
-                    continue
-                _emit_assembled(rows, tile_metrics, z, tx, ty)
-    if not emit_tiles:
-        return pd.DataFrame(rows, columns=_METRIC_COLS)
-    return pd.DataFrame(rows, columns=_FUSED_COLS)
+            wx = (lon + 180.0) / 360.0 * float(n)
+            wy = (0.5 - ymerc / (2.0 * np.pi)) * float(n)
+            fx = np.floor(wx)
+            fy = np.floor(wy)
+            idx_all = []
+            tx_all = []
+            ty_all = []
+            for dx in (-1, 0, 1):
+                for dy in (-1, 0, 1):
+                    tx = (fx + dx).astype(np.int64)
+                    ty = (fy + dy).astype(np.int64)
+                    keep = (
+                        (tx >= 0) & (tx < n) & (ty >= 0) & (ty < n)
+                        & (wx >= tx - buf) & (wx <= tx + 1 + buf)
+                        & (wy >= ty - buf) & (wy <= ty + 1 + buf)
+                        & ((tx >> dz) == ax) & ((ty >> dz) == ay)
+                    )
+                    k = np.nonzero(keep)[0]
+                    if len(k):
+                        idx_all.append(k)
+                        tx_all.append(tx[k])
+                        ty_all.append(ty[k])
+            if not idx_all:
+                continue
+            # ONE take + ONE C-speed groupby per (anchor, zoom) — a
+            # per-tile .iloc loop cost more than the shuffle it saved
+            # (measured 457s vs 421s at 1.28M tiles)
+            exploded = g.take(np.concatenate(idx_all))
+            exploded["_tx"] = np.concatenate(tx_all)
+            exploded["_ty"] = np.concatenate(ty_all)
+            for (tx, ty), lg in exploded.groupby(["_tx", "_ty"], sort=True):
+                if cap is not None and len(lg) > cap:
+                    # deterministic per-(tile, layer) budget matching the
+                    # standard path's window cap: lowest feature_ids
+                    # kept; drops ride _cap_dropped
+                    n_over = len(lg) - cap
+                    lg = lg.nsmallest(cap, "feature_id").assign(
+                        _cap_dropped=n_over)
+                rows.append(_encode_one(
+                    lg, time.perf_counter(), z, int(tx), int(ty), "pages",
+                    simplify=simplify, repair=repair))
+    return pd.DataFrame(rows, columns=_METRIC_COLS)
 
 
 def build_tiles_hierarchical(spark: SparkSession, sf_dir: str, zooms,
@@ -1387,18 +839,19 @@ def build_tiles_hierarchical(spark: SparkSession, sf_dir: str, zooms,
                              docs=None, with_polygons: bool = True,
                              simplify: bool = False,
                              repair_polygons: bool = True,
-                             max_features_per_tile="auto",
-                             n_docs: int | None = None,
-                             fused: bool | None = None
+                             max_features_per_tile="auto"
                              ) -> tuple[DataFrame, DataFrame]:
     """Single-shuffle tile build for deep zooms: the standard
     build_tiles fans the POINT corpus out once per zoom (|zooms| full
     corpus shuffles — the bottleneck at 100 TB); here points shuffle
     ONCE on their ``anchor_z`` tile (plus ~30% buffered duplication) and
-    every deeper zoom's membership + encode happens inside the anchor
-    group. Low zooms (< anchor_z, bounded by the feature caps) and the
-    small polygon layers keep the standard path; outputs are
-    byte-identical to build_tiles (differentially tested).
+    every deeper zoom's membership + encode happens inside the
+    points-only anchor kernel (_encode_anchor_bucket). The low zooms'
+    points (< anchor_z, bounded by the feature caps) and the polygon
+    layers at every zoom go through build_tiles; tiles are
+    assemble_tiles over the union of both metric frames, byte-identical
+    to build_tiles (differentially tested). Zooms all below
+    ``anchor_z`` are build_tiles outright.
 
     ``anchor_z`` trades shuffle volume against anchor-group memory:
     group rows ~= corpus / 4^anchor_z. Default max(4, max(zooms) - 6);
@@ -1413,229 +866,50 @@ def build_tiles_hierarchical(spark: SparkSession, sf_dir: str, zooms,
         return build_tiles(spark, sf_dir, zooms, docs=docs,
                            with_polygons=with_polygons, simplify=simplify,
                            repair_polygons=repair_polygons,
-                           max_features_per_tile=max_features_per_tile,
-                           n_docs=n_docs)
+                           max_features_per_tile=max_features_per_tile)
 
-    # Fused in-kernel assembly pays a fixed python cost (polygon
-    # membership + per-tile assembly) that is repaid only when the
-    # descendant fan-out is deep enough for the assemble exchange to
-    # dominate: measured at mult=600, dz=6 the fused plan wins (163-171s
-    # vs 184-198s at 32 cores, 490 vs 795 shuffle B/tile), while at the
-    # shallow driver config (dz=1) it LOSES ~5s of fixed overhead on a
-    # ~9s pipeline. Auto default: fuse when the deep fan-out spans >= 3
-    # levels (>= 64 descendants per anchor). SPARK_GRAFT_FUSED_ASSEMBLY
-    # overrides.
-    if fused is None:
-        env = os.environ.get("SPARK_GRAFT_FUSED_ASSEMBLY")
-        if env is not None:
-            fused = env == "1"
-        else:
-            fused = (max(zooms_hi) - anchor_z) >= 3
-
-    # Fused assembly ships the polygon layers to every anchor kernel as
-    # a Spark BROADCAST (torrent-distributed once per executor). That is
-    # the broadcast-small-dim move and is only sane while the layer set
-    # is dim-sized: above the guard the kernel-side membership work and
-    # broadcast memory would scale with polygon count, so fall back to
-    # the unfused plan where polygons take the distributed bbox fan-out
-    # (byte-identical output, differentially tested).
-    if fused and with_polygons:
-        n_polys = polygon_features(spark, sf_dir).count()
-        if n_polys > fused_max_polys():
-            fused = False
-
-    # hierarchical path inputs: ONE anchor shuffle for all deep point
-    # zooms, carrying only the point stream's live columns (z is the
-    # constant anchor level, so it does not ship either). At volume,
-    # tag_url crosses the exchange dictionary-encoded (int prefix id +
-    # short suffix). Built before the low-zoom decision because the
-    # fused low-zoom path reuses pts and the polygon broadcast.
-    # One corpus count per build feeds every volume gate (url-dict
-    # here, fused-low below, stream-encode inside build_tiles); the
-    # bench/driver passes n_docs so no count job runs at all there.
-    if n_docs is None and os.environ.get("SPARK_GRAFT_URL_DICT") is None:
-        n_docs = (docs.count() if docs is not None
-                  else corpus.documents(spark, sf_dir).count())
     # Geocode-once materialization (round-6, guide §8 "move small rows
-    # once"): the hierarchical build consumes the geocoded points from
-    # SEVERAL plan branches (anchor fan-out, low-zoom stream, cap-first
-    # thin window, url-dict distinct) and each branch re-executes the
-    # subtree — profiled as the render+geocode python stage running 2-3
-    # times per run. A shared reuse-exchange was tried first but
-    # per-branch column pruning changes the exchange's canonical form
-    # (the thin cap-first branch prunes tag columns), so ReuseExchange
-    # does not fire in the fused configs and the exchange itself added
-    # shuffle bytes. localCheckpoint (eager) materializes the THIN
-    # geocoded projection (~40-70 B/row) exactly once; every branch
-    # reads the blocks — no extra exchange, no recompute. This is the
-    # §8 "fingerprints table" move with cache instead of a write;
-    # executor-loss on a real cluster fails the build and retries it
-    # (same documented caveat as the iterative graph operators).
-    pts0 = point_features(spark, sf_dir, docs=docs).localCheckpoint()
-    pts, upfx_bc = _dict_encode_url(spark, pts0, n_pts=n_docs)
-    point_cols = ["feature_id", "lon", "lat"] + \
-        (["_upid", "_usfx"] if upfx_bc is not None else ["tag_url"]) + \
-        ["tag_lang"]
+    # once"): the geocoded points feed two plan branches (the anchor
+    # fan-out and build_tiles' low-zoom stream), and each branch would
+    # re-execute the render+geocode subtree. localCheckpoint (eager)
+    # materializes the THIN geocoded projection (~40-70 B/row) exactly
+    # once; both branches read the blocks — no extra exchange, no
+    # recompute. Executor loss on a real cluster fails the build and
+    # retries it (same documented caveat as the iterative graph
+    # operators). Its row count sizes the anchor buckets.
+    pts = point_features(spark, sf_dir, docs=docs).localCheckpoint()
+    n_pts = pts.count()
+    # ONE anchor shuffle for all deep point zooms, carrying only the
+    # point stream's live columns (z is the constant anchor level, so it
+    # does not ship either)
     anchored = tiling.assign_point_tiles(pts, [anchor_z]).select(
-        "x", "y", *point_cols)
+        *POINT_STREAM_COLS[1:])
 
-    # fused: polygon layers are layer-catalog-sized — collect once and
-    # ship via sparkContext.broadcast (torrent-distributed, NOT pickled
-    # into every task closure — round-4 review item; the fused_max_polys
-    # guard above bounds its size), plus skeleton anchor keys so
-    # polygon-only anchors (a nation with no pages in range) still
-    # produce their deep tiles
-    polys_bc = layer_zoom = pf = None
-    if with_polygons and fused:
-        pf = polygon_features(spark, sf_dir)
-        polys_bc = spark.sparkContext.broadcast(pf.toPandas())
-        layer_zoom = layers.layer_zoom_ranges()
-        _null_types = {"feature_id": "long", "lon": "double",
-                       "lat": "double", "_upid": "int", "_usfx": "string",
-                       "tag_url": "string", "tag_lang": "string"}
-        nulls = [F.lit(None).cast(_null_types[c]).alias(c)
-                 for c in point_cols]
-        skel = (tiling.assign_bbox_tiles(pf, [anchor_z])
-                .select("x", "y").distinct().select("x", "y", *nulls))
-        anchored = anchored.unionByName(skel)
-
-    # fused low-zoom assembly decision (round-5 follow-on): when the
-    # deep path is fused (polygons broadcastable) and the low-zoom
-    # point fan-out is large enough for the streaming plan (the same
-    # volume rule as build_tiles), the low zooms run in-kernel
-    # assembly too and the assemble exchange disappears entirely.
-    # SPARK_GRAFT_FUSED_LOW=1/0 forces.
-    fused_low = False
-    n_low_docs = n_docs   # one corpus count per build, shared by gates
-    if fused and zooms_lo:
-        fl_env = os.environ.get("SPARK_GRAFT_FUSED_LOW")
-        if fl_env is not None:
-            fused_low = fl_env == "1"
-        elif spark.sparkContext.defaultParallelism >= FUSED_LOW_MIN_CORES:
-            if n_low_docs is None:
-                n_low_docs = (docs.count() if docs is not None
-                              else corpus.documents(spark, sf_dir).count())
-            fused_low = n_low_docs * len(zooms_lo) >= STREAM_ENCODE_MIN_ROWS
-
-    # standard path: with fusion it covers the low zooms COMPLETELY
-    # (points + polygons + assemble) and every deep zoom runs in the
-    # anchor kernel; without fusion it additionally carries the polygon
-    # layers at ALL zooms (the anchor kernel is then points-only and
-    # tiles assemble via the grouped concat). With fused_low the low
-    # zooms skip this path entirely (built below with in-kernel
-    # assembly instead).
-    std_metrics = std_tiles = None
-    if (zooms_lo and not fused_low) or (with_polygons and not fused):
-        std_zooms = zooms_lo if fused else zooms
-        std_metrics, std_tiles = build_tiles(
-            spark, sf_dir, std_zooms, docs=docs,
-            with_polygons=with_polygons,
+    metrics = None
+    if zooms_lo or with_polygons:
+        metrics, _ = build_tiles(
+            spark, sf_dir, zooms, docs=docs, with_polygons=with_polygons,
             simplify=simplify, repair_polygons=repair_polygons,
             max_features_per_tile=max_features_per_tile,
-            n_docs=n_low_docs, point_zooms=zooms_lo,
-            points_df=pts0)
+            point_zooms=zooms_lo, points_df=pts)
 
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # anchor groups carry the whole corpus once (plus ~10% buffer dup);
-    # fused-low carries it once per low zoom — volume-adaptive grain
-    n_buckets = _encode_buckets(sp, n_docs)
-    n_buckets_low = _encode_buckets(
-        sp, n_docs * len(zooms_lo) if n_docs and zooms_lo else None)
+    rule = _cap_rule(max_features_per_tile)
+    caps = None if rule is None else {z: rule(z) for z in zooms_hi}
 
-    if fused_low:
-        rule = _cap_rule(max_features_per_tile)
-        low = tiling.assign_point_tiles(pts, zooms_lo).select(
-            "z", "x", "y", *point_cols)
-        if max_features_per_tile == "auto":
-            cap_col = F.when(F.col("z") <= 4, F.lit(CAP_LOW_ZOOM)) \
-                       .otherwise(F.lit(CAP_HIGH_ZOOM))
-        elif max_features_per_tile:
-            cap_col = F.lit(int(max_features_per_tile))
-        else:
-            cap_col = None
-        if cap_col is not None:
-            cf_env = os.environ.get("SPARK_GRAFT_CAP_FIRST")
-            if cf_env is not None:
-                cap_first = cf_env == "1"
-            else:
-                if n_low_docs is None:
-                    n_low_docs = (docs.count() if docs is not None
-                                  else corpus.documents(spark,
-                                                        sf_dir).count())
-                cap_first = any(n_low_docs > rule(z) * (4 ** z) * 2
-                                for z in zooms_lo)
-            if cap_first:
-                low = _cap_first_filter(low, ["z", "x", "y"], cap_col)
-        if polys_bc is not None:
-            # skeleton (z, x, y) keys so polygon-only low-zoom tiles
-            # (zoom-pruned per layer, same predicate as the standard
-            # fan-out) are still produced by the kernel
-            cond = None
-            for name, (lo, hi) in layer_zoom.items():
-                c = ((F.col("layer") == name) & (F.col("z") >= lo)
-                     & (F.col("z") <= hi))
-                cond = c if cond is None else (cond | c)
-            keys = (tiling.assign_bbox_tiles(pf, zooms_lo).where(cond)
-                    .select("z", "x", "y").distinct())
-            low_nulls = [F.lit(None).cast(fld.dataType).alias(fld.name)
-                         for fld in low.schema.fields
-                         if fld.name not in ("z", "x", "y")]
-            low = low.unionByName(keys.select("z", "x", "y", *low_nulls))
-        low_out = (
-            low.repartition(n_buckets_low, "z", "x", "y")
-            .sortWithinPartitions("z", "x", "y", "feature_id")
-            .mapInPandas(
-                _make_fused_low_encode(rule, simplify, repair_polygons,
-                                       polys_bc, layer_zoom, upfx_bc),
-                FUSED_SCHEMA))
-        std_metrics = low_out.where(F.col("layer").isNotNull()) \
-            .select(*_METRIC_COLS)
-        std_tiles = low_out.where(F.col("layer").isNull()).select(
-            "z", "x", "y", "tile_bytes", "n_features", "n_layers",
-            "tile_len")
-
-    # same per-(tile, layer) budget policy as the standard path, applied
-    # inside the anchor kernel (drops ride _cap_dropped into n_dropped)
-    if max_features_per_tile == "auto":
-        caps = {z: (CAP_LOW_ZOOM if z <= 4 else CAP_HIGH_ZOOM)
-                for z in zooms_hi}
-    elif max_features_per_tile:
-        caps = {z: int(max_features_per_tile) for z in zooms_hi}
-    else:
-        caps = None
-
-    def _make_encode(emit_tiles):
-        bc = polys_bc    # broadcast handles in the closure,
-        ubc = upfx_bc    # data lives on the executors
-
-        def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _encode_anchor_bucket(
-                pdf, anchor_z, zooms_hi, simplify, repair_polygons,
-                caps=caps, polys=None if bc is None else bc.value,
-                layer_zoom=layer_zoom, emit_tiles=emit_tiles,
-                url_prefixes=None if ubc is None else ubc.value)
-        return _encode
+    def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _encode_anchor_bucket(pdf, anchor_z, zooms_hi, simplify,
+                                     repair_polygons, caps=caps)
 
     # explicit repartition before the grouped-map: AQE-coalescing-exempt
-    # (see build_tiles) so the anchor encode keeps its parallelism
-    bucketed = anchored.withColumn(
-        "_bucket", F.pmod(F.hash("x", "y"), F.lit(n_buckets))) \
-        .repartition(n_buckets, "_bucket") \
+    # (see build_tiles) so the anchor encode keeps its parallelism; the
+    # anchor groups carry the corpus once (plus the buffer duplication)
+    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    nb = _encode_buckets(sp, n_pts)
+    hier = (
+        anchored.withColumn("_bucket", F.pmod(F.hash("x", "y"), F.lit(nb)))
+        .repartition(nb, "_bucket")
         .groupBy("_bucket")
-    if not fused:
-        hier_metrics = bucketed.applyInPandas(
-            _make_encode(False), ENCODE_SCHEMA)
-        metrics = hier_metrics if std_metrics is None \
-            else std_metrics.unionByName(hier_metrics)
-        return metrics, assemble_tiles(metrics)
-
-    out = bucketed.applyInPandas(_make_encode(True), FUSED_SCHEMA)
-    hier_metrics = out.where(F.col("layer").isNotNull()) \
-        .select(*_METRIC_COLS)
-    hier_tiles = out.where(F.col("layer").isNull()).select(
-        "z", "x", "y", "tile_bytes", "n_features", "n_layers", "tile_len")
-    metrics = hier_metrics if std_metrics is None \
-        else std_metrics.unionByName(hier_metrics)
-    tiles = hier_tiles if std_tiles is None \
-        else std_tiles.unionByName(hier_tiles)
-    return metrics, tiles
+        .applyInPandas(_encode, ENCODE_SCHEMA)
+    )
+    metrics = hier if metrics is None else metrics.unionByName(hier)
+    return metrics, assemble_tiles(metrics)

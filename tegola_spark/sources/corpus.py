@@ -223,8 +223,10 @@ def _render_and_geocode(text: pd.Series, url: pd.Series,
 def geocoded_points(doc: DataFrame) -> DataFrame:
     """documents -> (doc_id, url, lang, lat, lon) through the fused
     render+geocode kernel — same values as
-    ``geocoded_pages(pages(...))`` (pinned by test), one python stage
-    instead of three and no html bytes on the return path."""
+    ``geocoded_pages(pages(...))`` (pinned by
+    tests/test_corpus_spark.py::test_geocoded_points_equal_geocoded_pages),
+    one python stage instead of three and no html bytes on the return
+    path."""
     doc = spread_scan(doc, "doc_id")
     base = doc.select(
         "doc_id",

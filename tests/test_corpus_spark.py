@@ -1,6 +1,8 @@
 """Corpus invariants (BASELINE.json input_hint): schema, byte-identical
 text extraction per url, exact geocode round-trip."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -83,3 +85,18 @@ def test_geocode_exact_roundtrip(pages_df, spark, sf_dir):
     mm = j.agg(F.min("lat"), F.max("lat"), F.min("lon"), F.max("lon")).first()
     assert -85.05 < mm[0] and mm[1] < 85.05
     assert -180.0 < mm[2] and mm[3] < 180.0
+
+
+def test_geocoded_points_equal_geocoded_pages(spark, sf_dir):
+    """The fused render+geocode kernel (geocoded_points, what the tile
+    builds read) yields exactly the rows of the honest path, geocoding
+    the rendered pages, on the sf0.01 corpus."""
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    docs = corpus.documents(spark, sf001)
+    fused = corpus.geocoded_points(docs)
+    honest = corpus.geocoded_pages(corpus.pages(spark, sf001, docs=docs)) \
+        .select(*fused.columns)
+    n = fused.count()
+    assert n == honest.count() == docs.count() > 0
+    assert fused.exceptAll(honest).count() == 0
+    assert honest.exceptAll(fused).count() == 0

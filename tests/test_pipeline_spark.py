@@ -176,22 +176,17 @@ def test_feature_cap_auto_default_no_effect_at_test_scale(spark, sf_dir):
 
 def test_hierarchical_build_byte_identical(spark, sf_dir):
     """build_tiles_hierarchical (one anchor shuffle for deep point
-    zooms) must produce byte-identical tiles to the per-zoom fan-out —
-    in BOTH assembly modes (auto picks unfused at this shallow depth;
-    fused=True forces the in-kernel assembly path)."""
+    zooms) must produce byte-identical tiles to the per-zoom fan-out."""
     zooms = [0, 1, 2, 3, 4, 5]
     _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
     a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
          for r in std.collect()}
-    for fused in (None, True):
-        _, hier = pipeline.build_tiles_hierarchical(
-            spark, sf_dir, zooms=zooms, fused=fused)
-        b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in hier.collect()}
-        assert set(a) == set(b), f"fused={fused}"
-        diff = [k for k in a if a[k] != b[k]]
-        assert diff == [], \
-            f"fused={fused}: {len(diff)} tiles differ, e.g. {diff[:5]}"
+    _, hier = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms)
+    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
+         for r in hier.collect()}
+    assert set(a) == set(b)
+    diff = [k for k in a if a[k] != b[k]]
+    assert diff == [], f"{len(diff)} tiles differ, e.g. {diff[:5]}"
 
 
 def test_hierarchical_cap_enforced(spark, sf_dir):
@@ -222,108 +217,14 @@ def test_hierarchical_deep_only_zooms_byte_identical(spark, sf_dir):
     assert all(a[k] == b[k] for k in a)
 
 
-def test_fused_guard_falls_back(spark, sf_dir, monkeypatch):
-    """Round-5 size guard: when the polygon layer exceeds the fused
-    budget (forced tiny here), the hierarchical build must abandon the
-    broadcast-fused plan — the polygon count (30) is over the forced
-    budget, so the unfused path runs — and still produce byte-identical
-    tiles."""
-    zooms = [0, 1, 2, 3, 4]
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_MAX_POLYS", "3")
-    assert pipeline.fused_max_polys() == 3
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
-    # anchor_z=1 makes the deep span 3 levels -> auto decision WANTS
-    # fused; the guard must veto it
-    _, hier = pipeline.build_tiles_hierarchical(
-        spark, sf_dir, zooms=zooms, anchor_z=1)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in std.collect()}
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in hier.collect()}
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
-
-
-def test_url_dict_transport_off_byte_identical(spark, sf_dir, monkeypatch):
-    """The URL-prefix dictionary transport is a pure encoding of the
-    anchor exchange: toggling it must not change a byte of any tile.
-    (Default is volume-adaptive since the round-5 cost audit — on at
-    >= URL_DICT_MIN_ROWS corpus rows; both legs are forced here.)"""
-    zooms = [2, 3, 4]
-    monkeypatch.setenv("SPARK_GRAFT_URL_DICT", "1")
-    _, on = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms,
-                                              anchor_z=2)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in on.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_URL_DICT", "0")
-    _, off = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms,
-                                               anchor_z=2)
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in off.collect()}
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
-
-
-def test_url_dict_volume_gate(spark, sf_dir, monkeypatch):
-    """Unforced, the dictionary engages only at volume: below
-    URL_DICT_MIN_ROWS the points pass through untouched (no extra
-    distinct+collect job), above it tag_url is replaced by the
-    (_upid, _usfx) pair."""
-    monkeypatch.delenv("SPARK_GRAFT_URL_DICT", raising=False)
-    pts = pipeline.point_features(spark, sf_dir)
-    small, bc = pipeline._dict_encode_url(spark, pts, n_pts=10)
-    assert bc is None and "tag_url" in small.columns
-    none_given, bc = pipeline._dict_encode_url(spark, pts, n_pts=None)
-    assert bc is None and "tag_url" in none_given.columns
-    big, bc = pipeline._dict_encode_url(
-        spark, pts, n_pts=pipeline.URL_DICT_MIN_ROWS)
-    assert bc is not None
-    assert "_upid" in big.columns and "tag_url" not in big.columns
-
-
-def test_stream_encode_matches_legacy(spark, sf_dir, monkeypatch):
-    """Round-5 single-exchange streaming encode (repartition -> sorted
-    mapInPandas cap+encode, with the cap-first threshold broadcast)
-    must be byte-identical to the legacy window-cap + bucket plan —
-    both with the default budgets and with a tiny cap that forces
-    drops on every path (cap-first filter, stream cap, window cap).
-    The volume-adaptive default picks legacy at this scale, so the new
-    path is forced via env."""
-    zooms = [0, 1, 2, 3]
-    for cap in ("auto", 7):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_ENCODE", "1")
-        _, new = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                      max_features_per_tile=cap)
-        nm, _ = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                     max_features_per_tile=cap)
-        a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in new.collect()}
-        da = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in nm.collect()}
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_ENCODE", "0")
-        om, old = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                       max_features_per_tile=cap)
-        b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in old.collect()}
-        db = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in om.collect()}
-        monkeypatch.delenv("SPARK_GRAFT_STREAM_ENCODE")
-        assert set(a) == set(b), f"cap={cap}"
-        assert all(a[k] == b[k] for k in a), f"cap={cap}"
-        assert da == db, f"cap={cap}"
-
-
-def test_fused_low_zoom_assembly_byte_identical(spark, sf_dir, monkeypatch):
-    """Round-5 follow-on: the fused LOW-zoom path (cap-first winners +
-    skeleton keys -> one (z,x,y) exchange -> in-kernel pages + polygon
-    encode + assembly) must be byte-identical to the standard
-    window/assemble plan — tiles AND per-layer lineage — with the
-    default budgets and with a tiny cap forcing drops, under cap-first
-    both on and off."""
+def test_fused_low_zoom_assembly_byte_identical(spark, sf_dir):
+    """The hierarchical build's low zooms (build_tiles on the
+    checkpointed points plus the polygon layers) and deep zooms (anchor
+    kernel) must equal the standard plan — tiles AND per-layer lineage
+    — with the default budgets and with a tiny cap forcing drops on
+    both the window cap and the anchor kernel's cap."""
     zooms = [0, 1, 2, 3, 4, 5]
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_ASSEMBLY", "1")
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_LOW", "1")
-    for cap, cf in (("auto", None), (7, "1"), (7, "0")):
-        if cf is not None:
-            monkeypatch.setenv("SPARK_GRAFT_CAP_FIRST", cf)
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_CAP_FIRST", raising=False)
+    for cap in ("auto", 7):
         sm, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
                                        max_features_per_tile=cap)
         a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
@@ -337,34 +238,30 @@ def test_fused_low_zoom_assembly_byte_identical(spark, sf_dir, monkeypatch):
              for r in hier.collect()}
         db = {(r["z"], r["x"], r["y"], r["layer"]):
               (r["n_features"], r["n_dropped"]) for r in fm.collect()}
-        assert set(a) == set(b), f"cap={cap} cf={cf}"
+        assert set(a) == set(b), f"cap={cap}"
         diff = [k for k in a if a[k] != b[k]]
         assert diff == [], \
-            f"cap={cap} cf={cf}: {len(diff)} tiles differ, e.g. {diff[:5]}"
-        assert da == db, f"cap={cap} cf={cf}"
+            f"cap={cap}: {len(diff)} tiles differ, e.g. {diff[:5]}"
+        assert da == db, f"cap={cap}"
 
 
-def test_fused_low_polygon_only_tiles(spark, sf_dir, monkeypatch):
-    """Skeleton keys: low-zoom tiles covered ONLY by polygon layers
-    (no pages in range — forced by a 5-doc corpus) must still be
-    produced by the fused low-zoom kernel, byte-identical to the
-    standard path."""
+def test_fused_low_polygon_only_tiles(spark, sf_dir):
+    """Low-zoom tiles covered ONLY by polygon layers (no pages in range
+    — forced by a 5-doc corpus) must still be produced by the
+    hierarchical build, byte-identical to the standard path."""
     from tegola_spark.sources import corpus
     docs = corpus.documents(spark, sf_dir).where("doc_id < 5")
     zooms = [0, 1, 2, 3, 4]
     _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms, docs=docs)
     a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
          for r in std.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_ASSEMBLY", "1")
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_LOW", "1")
     fm, hier = pipeline.build_tiles_hierarchical(
         spark, sf_dir, zooms=zooms, anchor_z=4, docs=docs)
     b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
          for r in hier.collect()}
     assert set(a) == set(b)
     assert all(a[k] == b[k] for k in a)
-    # the skeleton path actually ran: some low-zoom tile has polygon
-    # layers but no pages layer
+    # some low-zoom tile has polygon layers but no pages layer
     low = fm.where("z < 4").collect()
     by_tile = {}
     for r in low:

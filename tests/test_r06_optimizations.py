@@ -78,11 +78,14 @@ def test_cap_skip_identity_when_budget_cannot_bind(spark, sf_dir):
     # 40 docs <= cap 100: the skip gate fires; output must equal no-cap
     _, capped = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1], docs=docs, with_polygons=False,
-        max_features_per_tile=100, n_docs=40)
+        max_features_per_tile=100)
     _, uncapped = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1], docs=docs, with_polygons=False,
-        max_features_per_tile=None, n_docs=40)
+        max_features_per_tile=None)
     assert _tile_bytes(capped) == _tile_bytes(uncapped)
+    # the builder counted the 40 documents itself and dropped the window
+    assert "Window" not in capped._jdf.queryExecution().executedPlan() \
+        .toString()
 
 
 def test_cap_still_binds_above_budget(spark, sf_dir):
@@ -90,11 +93,12 @@ def test_cap_still_binds_above_budget(spark, sf_dir):
     # 40 docs > cap 5: the gate must NOT skip; z0 keeps exactly 5 features
     metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[0], docs=docs, with_polygons=False,
-        max_features_per_tile=5, n_docs=40)
+        max_features_per_tile=5)
     row = metrics.where((F.col("z") == 0)).select(
         "n_features", "n_dropped").collect()[0]
     assert row["n_features"] == 5
     assert row["n_dropped"] == 35
+    assert "Window" in metrics._jdf.queryExecution().executedPlan().toString()
 
 
 # ---------------------------------------------------------------------------

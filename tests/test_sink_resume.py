@@ -98,11 +98,14 @@ def test_manifest_observed_bytes(spark, tmp_path):
 
 # --- the batch writer: one encode per seed batch --------------------------
 
-# sink digest of `seed --min-zoom 0 --max-zoom 2` over the sf0.01 corpus,
-# recorded from the writer before it persisted the encode (three Spark
-# actions per batch); the standard and hierarchical plans agree
+# sink digests of `seed --min-zoom 0 --max-zoom <z>` over the sf0.01
+# corpus. z0..2 was recorded from the writer before it persisted the
+# encode (three Spark actions per batch); z0..4 from the standard plan.
+# Every plan agrees with them.
 SF001_Z2_GOLDEN = {"tiles": 21, "bytes": 92079,
                    "md5": "a0fb830398cf9ab7c458a7c7b1be35c7"}
+SF001_Z4_GOLDEN = {"tiles": 303, "bytes": 175426,
+                   "md5": "fc4a6dd1e2832f42ba9ad3cd7df06be4"}
 
 
 def _sink_digest(path):
@@ -124,14 +127,25 @@ def _sink_digest(path):
             "md5": h.hexdigest()}
 
 
-def _n_persisted(spark):
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted(spark):
+    """Ids of the persisted RDDs. Compared as sets: a leftover from an
+    earlier test (e.g. a hierarchical build's localCheckpoint) may be
+    released by Spark's ContextCleaner at any moment, so a count can
+    drop for reasons unrelated to the call under test."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+               .toArray())
 
 
-@pytest.mark.parametrize("plan_args", [
-    [], ["--hierarchical", "--anchor-z", "1"]], ids=["standard", "hierarchical"])
+@pytest.mark.parametrize("plan_args, max_zoom, n_batches, golden", [
+    ([], 2, 2, SF001_Z2_GOLDEN),
+    (["--hierarchical", "--anchor-z", "1"], 2, 2, SF001_Z2_GOLDEN),
+    # batch [4] spans 3 levels below its anchor
+    (["--hierarchical", "--anchor-z", "1"], 4, 3, SF001_Z4_GOLDEN),
+], ids=["standard", "hierarchical", "hierarchical_deep"])
 def test_write_batch_writes_from_persisted_encode(spark, sf_dir, tmp_path,
-                                                  monkeypatch, plan_args):
+                                                  monkeypatch, plan_args,
+                                                  max_zoom, n_batches,
+                                                  golden):
     """Both written frames read the persisted metrics (the encode runs
     once per batch) and the sink bytes equal the golden."""
     from tegola_spark import cli
@@ -148,13 +162,13 @@ def test_write_batch_writes_from_persisted_encode(spark, sf_dir, tmp_path,
     sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     out = str(tmp_path / "sink")
     assert cli.main(["seed", "--input", sf001, "--out", out,
-                     "--min-zoom", "0", "--max-zoom", "2"] + plan_args,
-                    spark=spark) == 0
-    assert len(plans) == 2            # zoom batches [0, 1] and [2]
+                     "--min-zoom", "0", "--max-zoom", str(max_zoom)]
+                    + plan_args, spark=spark) == 0
+    assert len(plans) == n_batches    # zoom batches of two
     for tiles_plan, metrics_plan in plans:
         assert "InMemoryTableScan" in tiles_plan
         assert "InMemoryTableScan" in metrics_plan
-    assert _sink_digest(out) == SF001_Z2_GOLDEN
+    assert _sink_digest(out) == golden
 
 
 def test_write_batch_unpersists_on_every_exit(spark, sf_dir, tmp_path,
@@ -166,15 +180,15 @@ def test_write_batch_unpersists_on_every_exit(spark, sf_dir, tmp_path,
     out = str(tmp_path / "sink")
 
     metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1])
-    n0 = _n_persisted(spark)
+    before = _persisted(spark)
     assert sinks.write_batch(spark, tiles, metrics, out)["n_tiles"] == 5
-    assert _n_persisted(spark) == n0
+    assert _persisted(spark) <= before
 
     # resume no-op: every tile is in the sink, nothing is written
     metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1])
-    n0 = _n_persisted(spark)
+    before = _persisted(spark)
     assert sinks.write_batch(spark, tiles, metrics, out) is None
-    assert _n_persisted(spark) == n0
+    assert _persisted(spark) <= before
 
     def failing_write(tiles, metrics, path, **kw):
         tiles.count()
@@ -182,11 +196,37 @@ def test_write_batch_unpersists_on_every_exit(spark, sf_dir, tmp_path,
 
     monkeypatch.setattr(sinks, "write_tiles", failing_write)
     metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[2])
-    n0 = _n_persisted(spark)
+    before = _persisted(spark)
     with pytest.raises(RuntimeError, match="sink unavailable"):
         sinks.write_batch(spark, tiles, metrics, out)
-    assert _n_persisted(spark) == n0
+    assert _persisted(spark) <= before
     assert sinks.existing_keys(spark, out).count() == 5
+
+
+def test_seed_tile_list_unpersists_work_set(spark, sf_dir, tmp_path,
+                                            monkeypatch):
+    """The cached --tile-list work set is released when the seed ends,
+    after a successful run and after a batch write that raises."""
+    from tegola_spark import cli
+
+    listing = tmp_path / "tiles.txt"
+    listing.write_text("1/0/0\n")
+    argv = ["seed", "--input", sf_dir, "--min-zoom", "0", "--max-zoom",
+            "2", "--tile-list", str(listing)]
+
+    before = _persisted(spark)
+    assert cli.main(argv + ["--out", str(tmp_path / "ok")],
+                    spark=spark) == 0
+    assert _persisted(spark) <= before
+
+    def failing_batch(spark, tiles, metrics, path):
+        tiles.count()            # materializes the cached work set
+        raise RuntimeError("sink unavailable")
+
+    monkeypatch.setattr(sinks, "write_batch", failing_batch)
+    with pytest.raises(RuntimeError, match="sink unavailable"):
+        cli.main(argv + ["--out", str(tmp_path / "bad")], spark=spark)
+    assert _persisted(spark) <= before
 
 
 def test_existing_keys_missing_empty_and_corrupt(spark, sf_dir, tmp_path):

@@ -32,7 +32,6 @@ def main():
     os.makedirs(outdir, exist_ok=True)
 
     docs = corpus.documents(spark, sf_dir)
-    n_docs = docs.count()
     points = docs.select(
         "doc_id",
         corpus.col_lon(F.col("doc_id")).alias("lon"),
@@ -40,7 +39,7 @@ def main():
 
     def build_mvt():
         _m, tiles = pipeline.build_tiles_hierarchical(
-            spark, sf_dir, zooms=list(range(0, 6)), docs=docs, n_docs=n_docs)
+            spark, sf_dir, zooms=list(range(0, 6)), docs=docs)
         return tiles.agg(F.count("*"), F.sum("tile_len"), F.sum("n_features"))
 
     targets = {

@@ -59,16 +59,14 @@ def main():
     caps = {4: pipeline.CAP_LOW_ZOOM, 5: pipeline.CAP_HIGH_ZOOM}
     t0 = time.perf_counter()
     out2 = pipeline._encode_anchor_bucket(
-        apdf.copy(), 4, [4, 5], False, True, caps=caps, polys=None,
-        layer_zoom=None, emit_tiles=False, url_prefixes=None)
+        apdf.copy(), 4, [4, 5], False, True, caps=caps)
     t1 = time.perf_counter()
     print(f"anchor encode ({len(out2)} rows): {t1-t0:.2f}s", file=sys.stderr)
 
     prof = cProfile.Profile()
     prof.enable()
     pipeline._encode_anchor_bucket(
-        apdf.copy(), 4, [4, 5], False, True, caps=caps, polys=None,
-        layer_zoom=None, emit_tiles=False, url_prefixes=None)
+        apdf.copy(), 4, [4, 5], False, True, caps=caps)
     prof.disable()
     st = pstats.Stats(prof)
     st.sort_stats("cumulative").print_stats(30)

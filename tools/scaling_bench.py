@@ -31,11 +31,6 @@ def run_level(sf_dir: str, cpus: int) -> dict:
     # _auto_vector_emit would turn vectorized ON at local[8] only) can't
     # change the plan between levels. Explicit env still overrides.
     env.setdefault("SPARK_GRAFT_VECTOR_EMIT", "0")
-    # same reasoning for fused low-zoom assembly: its default flips at
-    # FUSED_LOW_MIN_CORES, which would compare different physical
-    # plans across levels; pin to the legacy-low plan (the measured
-    # winner at the protocol's 8/16-core levels)
-    env.setdefault("SPARK_GRAFT_FUSED_LOW", "0")
     out = subprocess.run(
         [sys.executable, "bench.py"], env=env, capture_output=True, text=True,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
