@@ -198,7 +198,8 @@ def q_tile_fanout_buffered(spark, sf_dir):
 def q_knn_cellring(spark, sf_dir):
     from tegola_spark.operators import spatial_join as sj
 
-    return sj.knn_cell_ring(_points(spark, sf_dir), KNN_QUERIES, k=5)
+    qdf = spark.createDataFrame(KNN_QUERIES, "query_id long, qlon double, qlat double")
+    return sj.knn_cell_ring_df(_points(spark, sf_dir), qdf, k=5)
 
 
 def q_knn_brute(spark, sf_dir):
@@ -209,9 +210,9 @@ def q_knn_brute(spark, sf_dir):
 
 def q_knn_pages(spark, sf_dir):
     """Large-query-set kNN: every page plus a shifted twin as queries
-    (|Q| = 2 x n_docs, >= 1000 at sf0.01), fully DataFrame-native —
-    per-query radius/kth-distance state lives in columns, nothing
-    per-query reaches the driver."""
+    (|Q| = 2 x n_docs, >= 1000 at sf0.01). Per-query state (cell,
+    kth-distance bound) lives in columns; only the per-cell point
+    histogram reaches the driver."""
     from tegola_spark.operators import spatial_join as sj
 
     pts = _points(spark, sf_dir)
@@ -2917,8 +2918,9 @@ _MESSY_URLS_CTE = r"""
                  regexp_replace(regexp_replace(regexp_replace(
                  regexp_replace(regexp_replace(regexp_replace(url,
                    '#.*$', '', 'g'),
-                   '(utm_[A-Za-z0-9_]+|fbclid|gclid|ref)=[^&]*&', '', 'g'),
-                   '[?&](utm_[A-Za-z0-9_]+|fbclid|gclid|ref)=[^&]*$', '', 'g'),
+                   '([?&])(?:(?:utm_[A-Za-z0-9_]+|fbclid|gclid|ref)=[^&]*&)+',
+                   '\1', 'g'),
+                   '[?&](?:utm_[A-Za-z0-9_]+|fbclid|gclid|ref)=[^&]*$', '', 'g'),
                    '\?&', '?', 'g'),
                    '^([A-Za-z]+://[^/:]*):(?:80|443)(/|$)', '\1\2', 'g'),
                    '([^/])/$', '\1', 'g') AS c

@@ -138,8 +138,10 @@ def run_bench(sf_dir: str, cpus: int, zooms=range(0, 6), scale_mult: int = 1) ->
         points, layers.nation_layer(spark, sf_dir), res=6).count())
     timed("spatial_join_regions", lambda: sj.spatial_join(
         points, layers.region_layer(spark, sf_dir), res=2).count())
-    timed("knn_cellring", lambda: sj.knn_cell_ring(
-        points, [(0, 12.5, 48.1), (1, -73.9, 40.7), (2, 139.7, 35.6)], k=10).count())
+    knn_queries = spark.createDataFrame(
+        [(0, 12.5, 48.1), (1, -73.9, 40.7), (2, 139.7, 35.6)],
+        "query_id long, qlon double, qlat double")
+    timed("knn_cellring", lambda: sj.knn_cell_ring_df(points, knn_queries, k=10).count())
     timed("tile_fanout_z8", lambda: __import__(
         "tegola_spark.operators.tiling", fromlist=["tiling"]
     ).assign_point_tiles(points, [8]).count())

@@ -103,7 +103,7 @@ def mixture_sample(df: DataFrame, weights: dict[str, float],
     """
     parts = {k: (int(w), int(round((w - int(w)) * RESOLUTION)))
              for k, w in weights.items()}
-    if min(w for w in weights.values()) < 0:
+    if any(w < 0 for w in weights.values()):
         raise ValueError("weights must be >= 0")
     d_base, d_frac = (int(default_weight),
                       int(round((default_weight - int(default_weight))

@@ -23,24 +23,25 @@ Cell-ring kNN (north-star requirement; no tegola precedent —
 SURVEY.md §7.4(7)): exact k-nearest-neighbors in (lon, lat) euclidean
 space over a UNIFORM degree grid (ring math on mercator cells is not
 distance-uniform; a fixed-degree grid gives exact ring bounds).
-Algorithm (all heavy work stays distributed; only per-query aggregates
-reach the driver):
+One pass, bounded from point statistics (the partition-statistics
+radius bound of Distributed Stream KNN Join, SIGMOD 2021):
 
-  A. candidate pass: points within chebyshev cell-disk r of each query
-     (broadcast query-cell list, equi-join) -> per-query kth distance
-     d_k; r doubles for under-filled queries.
-  B. exactness pass: re-join with r_safe = ceil(sqrt(d_k))/s + 1 cells
-     — every point that could beat the kth candidate is inside that
-     disk — then window top-k (rank by (dist_sq, id)).
+  1. one aggregate counts points per 4-degree cell (<= 91 x 46 cells)
+     and reaches the driver;
+  2. a summed-area table over those counts gives each cell the
+     smallest r whose clipped (2r+1)^2 block holds min(k, |P|) points;
+  3. that table broadcast-joins to the queries (a query's cell clipped
+     into the grid); the distance D to the block's far corner bounds
+     the query's kth distance;
+  4. the cells within D of each query explode, equi-join the points
+     once, keep dist_sq <= D^2, then window top-k by (dist_sq, id).
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..functions import cells, wkb
 from . import geometry as geo
@@ -125,197 +126,91 @@ def spatial_join(points: DataFrame, polys: DataFrame, res: int,
 # cell-ring kNN (uniform degree grid)
 # ---------------------------------------------------------------------------
 
-def _grid_cols(df: DataFrame, step_deg: float) -> DataFrame:
-    return (
-        df.withColumn("_cx", F.floor((F.col("lon") + 180.0) / F.lit(step_deg)).cast("long"))
-          .withColumn("_cy", F.floor((F.col("lat") + 90.0) / F.lit(step_deg)).cast("long"))
-    )
+_KNN_STEP_DEG = 4.0
 
 
-def _disk_cells(qx: int, qy: int, r: int):
-    return [(qx + dx, qy + dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)]
-
-
-def knn_cell_ring(points: DataFrame, queries, k: int, step_deg: float = 4.0,
-                  id_col: str = "doc_id") -> DataFrame:
-    """Exact kNN of each query against ``points`` (lon/lat) by squared
-    euclidean degree distance; ties broken by ``id_col``.
-
-    ``queries``: list of (query_id, qlon, qlat). Returns DataFrame
-    (query_id, rank, <id_col>, dist_sq).
-    """
-    from ..sources.corpus import spread_scan
-
-    spark = points.sparkSession
-    points = spread_scan(points, "lon")  # core-wide distance passes
-    pts = _grid_cols(points, step_deg).select(id_col, "lon", "lat", "_cx", "_cy")
-    pts.cache()
-    try:
-        total = pts.count()  # also materializes the cache
-        qinfo = {
-            qid: (
-                float(qlon), float(qlat),
-                int(math.floor((qlon + 180.0) / step_deg)),
-                int(math.floor((qlat + 90.0) / step_deg)),
-            )
-            for qid, qlon, qlat in queries
-        }
-
-        def run_pass(radii: dict) -> DataFrame:
-            rows = []
-            for qid, r in radii.items():
-                qlon, qlat, cx, cy = qinfo[qid]
-                for (gx, gy) in _disk_cells(cx, cy, r):
-                    rows.append((qid, qlon, qlat, gx, gy))
-            qdf = spark.createDataFrame(
-                rows, "query_id long, qlon double, qlat double, _cx long, _cy long")
-            cand = pts.join(F.broadcast(qdf), ["_cx", "_cy"], "inner")
-            dlon = F.col("lon") - F.col("qlon")
-            dlat = F.col("lat") - F.col("qlat")
-            dist = (dlon * dlon + dlat * dlat).alias("dist_sq")
-            w = Window.partitionBy("query_id").orderBy("dist_sq", id_col)
-            return (
-                cand.select("query_id", id_col, dist)
-                .withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-            )
-
-        # pass A: grow radii until every query has k candidates
-        radii = {qid: 1 for qid in qinfo}
-        kth: dict = {}
-        for _ in range(32):
-            topk = run_pass(radii)
-            counts = {
-                row["query_id"]: (row["n"], row["dk"])
-                for row in topk.groupBy("query_id")
-                .agg(F.count("*").alias("n"), F.max("dist_sq").alias("dk"))
-                .collect()
-            }
-            under = {qid for qid in qinfo
-                     if counts.get(qid, (0, None))[0] < min(k, total)}
-            if not under:
-                kth = {qid: counts[qid][1] for qid in qinfo}
-                break
-            for qid in under:
-                radii[qid] *= 2
-        else:  # pragma: no cover
-            raise RuntimeError("knn radius growth did not converge")
-
-        # pass B: exact — every point within sqrt(d_k) is inside the disk
-        safe = {
-            qid: max(radii[qid], int(math.ceil(math.sqrt(kth[qid]) / step_deg)) + 1)
-            for qid in qinfo
-        }
-        return run_pass(safe).select("query_id", "rank", id_col, "dist_sq")
-    finally:
-        pts.unpersist()
+def _knn_cell(deg: Column, offset: float) -> Column:
+    return F.floor((deg + F.lit(offset)) / F.lit(_KNN_STEP_DEG)).cast("long")
 
 
 def knn_cell_ring_df(points: DataFrame, queries: DataFrame, k: int,
-                     step_deg: float = 4.0, id_col: str = "doc_id",
-                     broadcast_queries: bool = True,
-                     max_rounds: int = 8) -> DataFrame:
-    """Fully-distributed exact kNN for LARGE query sets: ``queries`` is
-    a DataFrame (query_id, qlon, qlat) and per-query state (radius, kth
-    distance) lives in DataFrame columns — never on the driver. The
-    only driver-side values per round are two scalars (total count,
-    number of under-filled queries).
+                     id_col: str = "doc_id") -> DataFrame:
+    """Exact kNN of each query (``queries``: query_id, qlon, qlat)
+    against ``points`` (lon/lat) by squared euclidean degree distance,
+    ties broken by ``id_col``. Returns (query_id, rank, <id_col>,
+    dist_sq), the same rows as :func:`knn_bruteforce`.
 
-    Plan per round: disk cells explode as column expressions
-    (sequence(-r, r) x sequence(-r, r)), equi-join against the gridded
-    point table (broadcast when the query side is small; shuffled hash
-    join + AQE otherwise), window top-k. The initial radius comes from
-    a global density estimate so typical inputs converge in one round;
-    under-filled queries double their radius. The exactness pass grows
-    each radius to ceil(sqrt(d_k))/step + 1 — every point that could
-    beat the kth candidate lies inside that disk.
+    One histogram job reaches the driver (one count per occupied grid
+    cell); per-query state stays in columns, so the query set may be
+    as large as the point set."""
+    hist = (points.groupBy(_knn_cell(F.col("lon"), 180.0).alias("_cx"),
+                           _knn_cell(F.col("lat"), 90.0).alias("_cy"))
+            .count().collect()) or [(0, 0, 0)]  # no points: any grid joins nothing
+    cx, cy, n = (np.array(c, dtype=np.int64) for c in zip(*hist))
+    x0, y0 = int(cx.min()), int(cy.min())
+    w, h = int(cx.max()) - x0 + 1, int(cy.max()) - y0 + 1
+    sat = np.zeros((w + 1, h + 1), dtype=np.int64)  # summed-area table
+    sat[cx - x0 + 1, cy - y0 + 1] = n
+    sat = sat.cumsum(0).cumsum(1)
+    need = min(k, int(n.sum()))
 
-    At 100 TB: the point table is scanned once per round (bounded by
-    ``max_rounds``, usually 2); no per-query driver loops, no O(|Q|*r^2)
-    driver lists — the scale-killer in knn_cell_ring's contract-sized
-    twin (reviewed round 1)."""
-    spark = points.sparkSession
-    pts = _grid_cols(points, step_deg).select(id_col, "lon", "lat", "_cx", "_cy")
-    pts.cache()
-    try:
-        total = pts.count()
-        k_eff = min(k, total)
-        n_cells = pts.select("_cx", "_cy").distinct().count()
-        density = total / max(n_cells, 1)
-        # (2r+1)^2 cells * density >= k  =>  r0
-        r0 = max(1, int(math.ceil((math.sqrt(k_eff / max(density, 1e-9)) - 1) / 2)))
+    # smallest r whose clipped (2r+1)^2 block around each cell holds
+    # `need` points; at r = max(w, h) the block is the whole grid
+    ix, iy = np.meshgrid(np.arange(w), np.arange(h), indexing="ij")
+    r = np.full((w, h), -1)
+    for rr in range(max(w, h)):
+        xa, xb = np.maximum(ix - rr, 0), np.minimum(ix + rr + 1, w)
+        ya, yb = np.maximum(iy - rr, 0), np.minimum(iy + rr + 1, h)
+        held = sat[xb, yb] - sat[xa, yb] - sat[xb, ya] + sat[xa, ya]
+        r[(r < 0) & (held >= need)] = rr
+    s = _KNN_STEP_DEG
+    blocks = pd.DataFrame({
+        "_cx": (ix + x0).ravel(), "_cy": (iy + y0).ravel(),
+        "_x_lo": ((np.maximum(ix - r, 0) + x0) * s - 180.0).ravel(),
+        "_x_hi": ((np.minimum(ix + r, w - 1) + x0 + 1) * s - 180.0).ravel(),
+        "_y_lo": ((np.maximum(iy - r, 0) + y0) * s - 90.0).ravel(),
+        "_y_hi": ((np.minimum(iy + r, h - 1) + y0 + 1) * s - 90.0).ravel(),
+    })
+    blocks = points.sparkSession.createDataFrame(blocks)
 
-        q = (
-            queries.select("query_id", "qlon", "qlat")
-            .withColumn("_qcx", F.floor((F.col("qlon") + 180.0) / F.lit(step_deg)).cast("long"))
-            .withColumn("_qcy", F.floor((F.col("qlat") + 90.0) / F.lit(step_deg)).cast("long"))
-            .withColumn("r", F.lit(r0))
-        )
+    # no block point is farther from the query than the block's far
+    # corner, so that corner's distance D bounds the kth distance
+    # wherever the query lies; the slack keeps D conservative under
+    # floating point (a point's cell comes from a rounded lon + 180)
+    qlon, qlat = F.col("qlon"), F.col("qlat")
+    far_x = F.greatest(F.abs(qlon - F.col("_x_lo")), F.abs(qlon - F.col("_x_hi")))
+    far_y = F.greatest(F.abs(qlat - F.col("_y_lo")), F.abs(qlat - F.col("_y_hi")))
+    d2 = (far_x * far_x + far_y * far_y) * F.lit(1.0 + 1e-9) + F.lit(1e-9)
+    q = (queries.select(
+            "query_id", "qlon", "qlat",
+            F.least(F.greatest(_knn_cell(qlon, 180.0), F.lit(x0)), F.lit(x0 + w - 1)).alias("_cx"),
+            F.least(F.greatest(_knn_cell(qlat, 90.0), F.lit(y0)), F.lit(y0 + h - 1)).alias("_cy"))
+         .join(F.broadcast(blocks), ["_cx", "_cy"])
+         .select("query_id", "qlon", "qlat", d2.alias("_d2")))
 
-        def pass_topk(qdf: DataFrame) -> DataFrame:
-            cand_cells = (
-                qdf.withColumn("_dx", F.explode(F.sequence(-F.col("r"), F.col("r"))))
-                .withColumn("_dy", F.explode(F.sequence(-F.col("r"), F.col("r"))))
-                .select(
-                    "query_id", "qlon", "qlat",
-                    (F.col("_qcx") + F.col("_dx")).alias("_cx"),
-                    (F.col("_qcy") + F.col("_dy")).alias("_cy"),
-                )
-            )
-            if broadcast_queries:
-                cand_cells = F.broadcast(cand_cells)
-            cand = pts.join(cand_cells, ["_cx", "_cy"], "inner")
-            dlon = F.col("lon") - F.col("qlon")
-            dlat = F.col("lat") - F.col("qlat")
-            dist = (dlon * dlon + dlat * dlat).alias("dist_sq")
-            w = Window.partitionBy("query_id").orderBy("dist_sq", id_col)
-            return (
-                cand.select("query_id", id_col, dist)
-                .withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k_eff)
-            )
+    def span(c: Column, offset: float, lo: int, hi: int) -> Column:
+        d = F.sqrt(F.col("_d2"))
+        return F.explode(F.sequence(
+            F.greatest(_knn_cell(c - d, offset), F.lit(lo)),
+            F.least(_knn_cell(c + d, offset), F.lit(hi))))
 
-        # per-round caches are |Q|-sized; the superseded round's cache is
-        # unpersisted as soon as the new one materializes (the count()),
-        # so at most ONE query-state cache is live at any time
-        prev_cache = None
-        for _ in range(max_rounds):
-            stats = (
-                pass_topk(q).groupBy("query_id")
-                .agg(F.count("*").alias("_n"), F.max("dist_sq").alias("_dk"))
-            )
-            q = (
-                q.drop("_n", "_dk")
-                .join(stats, "query_id", "left")
-                .withColumn("_n", F.coalesce(F.col("_n"), F.lit(0)))
-            ).cache()
-            n_under = q.where(F.col("_n") < k_eff).count()
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = q
-            if n_under == 0:
-                break
-            q = q.withColumn(
-                "r", F.when(F.col("_n") < k_eff, F.col("r") * 2).otherwise(F.col("r")))
-        else:  # pragma: no cover
-            raise RuntimeError("knn radius growth did not converge")
-
-        # exactness pass: the kth-candidate distance bounds the true disk.
-        # localCheckpoint (eager, |Q| rows) truncates the per-round join
-        # lineage so the last round cache can be released NOW; the blocks
-        # live exactly as long as the returned plan references them.
-        q_safe = q.withColumn(
-            "r",
-            F.greatest(
-                F.col("r"),
-                (F.ceil(F.sqrt(F.col("_dk")) / F.lit(step_deg)) + 1).cast("long"),
-            ),
-        ).localCheckpoint()
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        return pass_topk(q_safe).select("query_id", "rank", id_col, "dist_sq")
-    finally:
-        pts.unpersist()
+    qcells = (q.withColumn("_cx", span(qlon, 180.0, x0, x0 + w - 1))
+               .withColumn("_cy", span(qlat, 90.0, y0, y0 + h - 1)))
+    pts = points.select(id_col, "lon", "lat",
+                        _knn_cell(F.col("lon"), 180.0).alias("_cx"),
+                        _knn_cell(F.col("lat"), 90.0).alias("_cy"))
+    dlon = F.col("lon") - F.col("qlon")
+    dlat = F.col("lat") - F.col("qlat")
+    dist = (dlon * dlon + dlat * dlat).alias("dist_sq")
+    w_rank = Window.partitionBy("query_id").orderBy("dist_sq", id_col)
+    return (
+        pts.join(F.broadcast(qcells), ["_cx", "_cy"])
+        .select("query_id", id_col, dist, "_d2")
+        .where(F.col("dist_sq") <= F.col("_d2"))
+        .withColumn("rank", F.row_number().over(w_rank))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", id_col, "dist_sq")
+    )
 
 
 def knn_bruteforce(points: DataFrame, queries, k: int,

@@ -8,12 +8,14 @@ source-level filtering (spam/SEO domains).
 
 Canonicalization contract (applied in order, each a single
 ``regexp_replace`` — all portable RE2/Java patterns, no lookarounds;
-the two backreference steps note their dialect):
+the backreference steps note their dialect):
 
 1. drop the fragment (``#...``)
-2. drop tracking params (``utm_*``/``fbclid``/``gclid``/``ref``) —
-   two passes (param-followed-by-``&``, then param-at-end) so no
-   backreference is needed
+2. drop tracking params (``utm_*``/``fbclid``/``gclid``/``ref``),
+   matched as whole names right after ``?``/``&`` (so ``xref`` stays) —
+   two passes: a run of params each followed by ``&`` (the leading
+   separator is captured and put back: RE2 has no lookbehind), then a
+   param at the end
 3. collapse the leftover ``?&`` to ``?``
 4. drop default ports ``:80``/``:443`` on the authority
 5. drop a trailing slash on non-root paths
@@ -30,15 +32,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_TRACK = r"(utm_[A-Za-z0-9_]+|fbclid|gclid|ref)"
+_TRACK = r"(?:utm_[A-Za-z0-9_]+|fbclid|gclid|ref)"
 
 
 def canonicalize_url_col(c: Column) -> Column:
     c = F.regexp_replace(c, r"#.*$", "")
-    c = F.regexp_replace(c, _TRACK + r"=[^&]*&", "")
+    # Java-dialect backrefs ($1); the DuckDB oracle states \1
+    c = F.regexp_replace(c, r"([?&])(?:" + _TRACK + r"=[^&]*&)+", r"$1")
     c = F.regexp_replace(c, r"[?&]" + _TRACK + r"=[^&]*$", "")
     c = F.regexp_replace(c, r"\?&", "?")
-    # Java-dialect backrefs ($1); the DuckDB oracle states \1
     c = F.regexp_replace(c, r"^([A-Za-z]+://[^/:]*):(?:80|443)(/|$)", r"$1$2")
     c = F.regexp_replace(c, r"([^/])/$", r"$1")
     head = F.regexp_extract(c, r"^[A-Za-z]+://[^/]*", 0)

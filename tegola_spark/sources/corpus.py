@@ -62,16 +62,15 @@ def spread_scan(df: DataFrame, key_col: str) -> DataFrame:
     if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "1") != "1":
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_splits = df.rdd.getNumPartitions()
-        if n_splits * 2 >= par:
-            return df
-        n_bytes = 0
-        for f in df.inputFiles():
-            p = f[len("file:"):] if f.startswith("file:") else f
-            n_bytes += os.path.getsize(p)
-    except Exception:
+    if df.rdd.getNumPartitions() * 2 >= par:
         return df
+    n_bytes = 0
+    for f in df.inputFiles():
+        p = f[len("file:"):] if f.startswith("file:") else f
+        try:
+            n_bytes += os.path.getsize(p)
+        except OSError:  # not a local file (s3a://, hdfs://, ...)
+            return df
     if n_bytes < _SPREAD_MIN_BYTES:
         return df
     return df.repartition(par, F.col(key_col))

@@ -35,10 +35,26 @@ def test_spread_scan_preserves_rows(spark, sf_dir):
 
 
 def test_spread_scan_noop_below_threshold(spark):
-    # in-memory frame: inputFiles() fails -> conservative no-op
+    # in-memory frame (no input files, already spread) -> no-op
     df = _docs(spark)
     out = corpus.spread_scan(df, "doc_id")
     assert out is df
+
+
+@pytest.mark.parametrize("error,propagates", [(OSError, False), (RuntimeError, True)])
+def test_spread_scan_getsize_errors(spark, sf_dir, monkeypatch, error, propagates):
+    # a file size that cannot be read (non-local URI) leaves the frame
+    # as it is; any other error surfaces
+    def getsize(path):
+        raise error(path)
+
+    monkeypatch.setattr(corpus.os.path, "getsize", getsize)
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    if propagates:
+        with pytest.raises(error):
+            corpus.spread_scan(df, "doc_id")
+    else:
+        assert corpus.spread_scan(df, "doc_id") is df
 
 
 # ---------------------------------------------------------------------------

@@ -83,3 +83,12 @@ def test_mixture_sample_deterministic_and_maponly(spark):
     plan = mixture_sample(docs, {"w": 1.75})._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+def test_mixture_sample_empty_weights(spark):
+    # no per-stratum weights: every row takes the default weight
+    from tegola_spark.operators.sampling import mixture_sample
+    docs = spark.createDataFrame(
+        [(i, "w") for i in range(50)], "doc_id long, source string")
+    assert mixture_sample(docs, {}).count() == 50
+    assert mixture_sample(docs, {}, default_weight=2.0).count() == 100

@@ -14,6 +14,14 @@ CASES = [
     ("https://h.io/x?keep=1&ref=tw", "https://h.io/x?keep=1", "h.io"),
     ("https://user@h.io/y", "https://user@h.io/y", "h.io"),
     ("https://h.io/plain", "https://h.io/plain", "h.io"),
+    # only whole parameter names are tracking params
+    ("https://h.io/x?xref=1&b=2", "https://h.io/x?xref=1&b=2", "h.io"),
+    ("https://h.io/x?a=1&xref=3", "https://h.io/x?a=1&xref=3", "h.io"),
+    ("https://h.io/x?refx=1&ref=2", "https://h.io/x?refx=1", "h.io"),
+    # runs of tracking params, leading, inner and trailing
+    ("https://h.io/x?utm_a=1&utm_b=2&id=5", "https://h.io/x?id=5", "h.io"),
+    ("https://h.io/x?a=1&utm_a=1&gclid=2&b=2&ref=3", "https://h.io/x?a=1&b=2", "h.io"),
+    ("https://h.io/x?id=5&utm_a=1&utm_b=2", "https://h.io/x?id=5", "h.io"),
 ]
 
 
