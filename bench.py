@@ -157,7 +157,6 @@ def run_bench(sf_dir: str, cpus: int, zooms=range(0, 6), scale_mult: int = 1) ->
         F.length(corpus.extract_text("html")).alias("n")).agg(F.sum("n")).first())
 
     total = round(sum(timings.values()), 3)
-    tiles_per_sec = round(n_tiles.get("tiles", 0) / timings["mvt_pipeline"], 2)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     result = {
         "metric": "e2e tiles/sec (geocode->join->MVT encode) + operator suite wall time",
@@ -171,11 +170,14 @@ def run_bench(sf_dir: str, cpus: int, zooms=range(0, 6), scale_mult: int = 1) ->
         "queries_median": medians,
         "value_median": round(sum(medians.values()), 3),
         "query_spread": spreads,
-        "tiles_per_sec": tiles_per_sec,
-        "n_tiles": int(n_tiles.get("tiles", 0)),
-        "n_features_encoded": int(n_tiles.get("features", 0)),
-        "tile_bytes": int(n_tiles.get("bytes", 0)),
     }
+    if "mvt_pipeline" in timings:
+        # tile figures exist only when the tile build was benchmarked
+        result["tiles_per_sec"] = round(
+            n_tiles["tiles"] / timings["mvt_pipeline"], 2)
+        result["n_tiles"] = int(n_tiles["tiles"])
+        result["n_features_encoded"] = int(n_tiles["features"])
+        result["tile_bytes"] = int(n_tiles["bytes"])
     if shuffle is not None and n_tiles.get("tiles"):
         # bytes crossing exchanges per produced tile: unlike local-mode
         # wall-clock efficiency (host memcpy-bound, BENCH.md), this IS

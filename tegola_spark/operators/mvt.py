@@ -32,7 +32,6 @@ plans/pipeline.py via applyInPandas (SURVEY.md §2.10).
 from __future__ import annotations
 
 import gzip as _gzip
-import os
 import struct
 
 import numpy as np
@@ -662,59 +661,6 @@ def encode_feature(fid, tags_idx, geom_type: int, geometry: np.ndarray) -> bytes
     return b"".join(parts)
 
 
-# Emission-strategy switch (also the differential-test toggle).
-#
-# The vectorized emitters below are 2.6x faster single-threaded and
-# 1.65x faster at 8-way parallelism, but ~10% SLOWER at 32-way on the
-# bench host (all measured, BENCH.md round 3): NumPy gather/scatter is
-# memory-bandwidth-bound and this host's aggregate memcpy saturates at
-# ~3.8 GB/s, while the per-feature Python path is ALU-bound and keeps
-# scaling. The default therefore follows the DEPLOYMENT SHAPE, chosen
-# automatically: session.get_spark publishes the per-node worker count
-# (local[N] -> N; cluster -> spark.executor.cores) and the measured
-# crossover is ~8 workers per memory bus. SPARK_GRAFT_VECTOR_EMIT=0/1
-# overrides the auto choice. Workers re-read the env on import, so the
-# decision reaches every executor.
-
-
-def _auto_vector_emit() -> bool:
-    env = os.environ.get("SPARK_GRAFT_VECTOR_EMIT")
-    if env is not None:
-        return env == "1"
-    wpn = os.environ.get("SPARK_GRAFT_WORKERS_PER_NODE", "")
-    try:
-        return 0 < int(wpn) <= 8
-    except ValueError:
-        return False
-
-
-_VECTORIZE_POINT_BLOCK = _auto_vector_emit()
-
-# Size-aware hybrid (round-6): even when the deployment-shape decision
-# turns the vectorized emitters OFF (wide hosts contend on memory
-# bandwidth), a very large group is the ENCODE STAGE'S STRAGGLER — the
-# z0/z1 tiles hold the whole corpus, their task runs on after the other
-# workers drain, and the "bandwidth is contended at 32-way" premise
-# inverts: the tail task has the bus to itself, so the 2.6x
-# single-threaded win of the block emitter applies in full. Groups at
-# or above this row count therefore always take the vectorized path
-# (re-measured round 6: hot-tile encode 3.5s -> ~1.4s, stage wall bound
-# by the tail). SPARK_GRAFT_VECTOR_EMIT=0 still forces scalar
-# everywhere (the differential tests rely on it).
-_VECTOR_EMIT_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_VECTOR_EMIT_MIN",
-                                           "8192"))
-_VECTOR_EMIT_FORCED_OFF = os.environ.get("SPARK_GRAFT_VECTOR_EMIT") == "0"
-
-
-def vector_emit(n: int) -> bool:
-    """Per-group emission-strategy decision (see _VECTOR_EMIT_MIN_ROWS)."""
-    if _VECTORIZE_POINT_BLOCK:
-        return True
-    if _VECTOR_EMIT_FORCED_OFF:
-        return False
-    return n >= _VECTOR_EMIT_MIN_ROWS
-
-
 def encode_point_layer_arrays(name: str, fids: np.ndarray, zz: np.ndarray,
                               tag_cols, extent: int = DEFAULT_EXTENT) -> bytes:
     """Array-direct emission of a pure-point layer: equivalent to
@@ -791,53 +737,28 @@ def encode_layer(name: str, features, extent: int = DEFAULT_EXTENT) -> bytes:
     Features whose geometry encodes to nothing are dropped
     (feature.go:83-85). Empty layers are still emitted
     (vendor/.../mvt/tile.go:42-63 encodes whatever layers exist).
+    Features are encoded one at a time; an all-string value dictionary
+    is emitted by encode_str_values_block (byte-identical to the
+    per-value loop). Pure lon/lat point layers with string tags skip
+    this function: encode_point_layer_arrays builds them from arrays.
     """
     keys, kidx, vals, vidx = build_dictionaries(features)
     parts = [_len_delim(1, name.encode("utf-8"))]
-    # all-point layers (the corpus case: every feature pre-encoded as a
-    # 3-command point stream with an integer id) take the vectorized
-    # block emitter — byte-identical, ~10x less Python per feature
-    vectorizable = vector_emit(len(features)) and bool(features) and all(
-        "cmds" in f and f["cmds"][1] == GEOM_POINT
-        and len(f["cmds"][0]) == 3 and f.get("id") is not None
-        for f in features)
-    if vectorizable:
-        fids = np.fromiter((f["id"] for f in features), np.int64,
-                           count=len(features))
-        tag_flat = []
-        tag_counts = np.empty(len(features), np.int64)
-        for i, f in enumerate(features):
-            c = 0
-            for k, v in f.get("tags", {}).items():
-                if v is None:
-                    continue
-                tag_flat.append(kidx[k])
-                tag_flat.append(vidx[_TypedKey(v)])
-                c += 2
-            tag_counts[i] = c
-        cmds = np.vstack([f["cmds"][0] for f in features])
-        parts.append(encode_point_features_block(
-            fids, np.asarray(tag_flat, dtype=np.uint64), tag_counts, cmds))
-    else:
-        for f in features:
-            if "cmds" in f:  # pre-encoded command stream (point path)
-                geom_arr, gtype = f["cmds"]
-            else:
-                geom_arr, gtype = encode_geometry(f["geom"])
-            if len(geom_arr) == 0:
+    for f in features:
+        geom_arr, gtype = encode_geometry(f["geom"])
+        if len(geom_arr) == 0:
+            continue
+        tag_idx = []
+        for k, v in f.get("tags", {}).items():
+            if v is None:
                 continue
-            tag_idx = []
-            for k, v in f.get("tags", {}).items():
-                if v is None:
-                    continue
-                tag_idx.append(kidx[k])
-                tag_idx.append(vidx[_TypedKey(v)])
-            parts.append(_len_delim(2, encode_feature(f.get("id"), tag_idx,
-                                                      gtype, geom_arr)))
+            tag_idx.append(kidx[k])
+            tag_idx.append(vidx[_TypedKey(v)])
+        parts.append(_len_delim(2, encode_feature(f.get("id"), tag_idx,
+                                                  gtype, geom_arr)))
     for k in keys:
         parts.append(_len_delim(3, k.encode("utf-8")))
-    if vector_emit(len(vals)) and vals and all(
-            isinstance(v, str) for v in vals):
+    if vals and all(isinstance(v, str) for v in vals):
         parts.append(encode_str_values_block(vals))
     else:
         for v in vals:

@@ -95,9 +95,6 @@ def _ellipsoidal(arr: np.ndarray) -> np.ndarray:
 _METRIC_COLS = ["z", "x", "y", "layer", "layer_bytes", "n_features",
                 "n_dropped", "bytes", "encode_ms"]
 
-# little-endian 2D WKB Point header — the vectorized fast-path marker
-_POINT_WKB_HEAD = b"\x01\x01\x00\x00\x00"
-
 
 def encode_bucket(pdf: pd.DataFrame, simplify: bool = False,
                   repair: bool = True,
@@ -111,7 +108,9 @@ def encode_bucket(pdf: pd.DataFrame, simplify: bool = False,
     Output rows accumulate as dicts — building a 1-row pd.DataFrame per
     group cost ~1 ms each (29k groups = 29 s, measured). The bucket is
     sorted ONCE by (group key, feature_id) so each group arrives
-    pre-sorted and _encode_one skips its per-group mergesort.
+    pre-sorted and _encode_one skips its per-group mergesort. Each
+    group takes _encode_one's array route (all lon/lat points, string
+    tags) or its generic per-feature route; nothing else picks.
 
     ``const_layer``: single-layer streams (the corpus point stream)
     omit the layer column from the shuffle entirely; the constant name
@@ -200,149 +199,118 @@ def _project_points(lon: np.ndarray, lat: np.ndarray, ext, clip_region,
     return keep, zz.astype(np.uint32)
 
 
-def _vectorized_points(pdf: pd.DataFrame, lon: np.ndarray, lat: np.ndarray,
-                       ext, clip_region, srid_mask) -> list:
-    """Fast path: every point in the group is projected (P8), quantized
-    (P9), clipped and command-encoded in a handful of NumPy passes over
-    the (lon, lat) arrays — SoA transport hands these in as zero-copy
-    Arrow views; the legacy WKB-point caller decodes them in one
-    frombuffer pass."""
-    keep, zz = _project_points(lon, lat, ext, clip_region, srid_mask)
-    move1 = mvt.command(mvt.CMD_MOVETO, 1)
-    feats = []
-    fids = pdf["feature_id"].to_numpy()
-    tags = _tag_dicts(pdf)
-    for i in np.nonzero(keep)[0]:
-        feats.append({
-            "id": int(fids[i]),
-            "tags": tags[i],
-            "cmds": (np.array([move1, zz[i, 0], zz[i, 1]], dtype=np.uint32),
-                     mvt.GEOM_POINT),
-        })
-    return feats
+def _string_tag_cols(pdf: pd.DataFrame):
+    """[(key, values)] over the tag_* columns in column order, or None
+    when any non-null value is not a str (typed tags need the generic
+    route's type-sensitive value identity)."""
+    cols = []
+    for c in pdf.columns:
+        if not c.startswith("tag_"):
+            continue
+        arr = pdf[c].to_numpy()
+        m = pd.notna(arr)
+        if m.any() and not all(type(v) is str for v in arr[m].tolist()):
+            return None
+        cols.append((c[4:], arr))
+    return cols
 
 
 def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
                 layer: str, simplify: bool = False,
                 repair: bool = True, presorted: bool = False) -> dict:
+    """Encode one (z, x, y, layer) group into a metric row with its
+    layer blob. Two routes, chosen by the group's rows alone:
+
+    - array route: every row is a lon/lat point (the SoA transport)
+      and every tag is a string — project, clip, zigzag and emit the
+      whole layer from column arrays (mvt.encode_point_layer_arrays),
+      with no per-feature Python objects. Every corpus point group
+      takes it.
+    - generic route: everything else (WKB geometries, ring-SoA
+      polygons, lines, mixed groups, typed tags) — per feature:
+      reproject, [simplify], quantize, clip, then mvt.encode_layer.
+      Lon/lat rows enter it as Point geometries, and it encodes them to
+      the same bytes as the array route (differentially tested)."""
     ext = tuple(float(v) for v in grid.tile_extent_3857(z, x, y))
     clip_region = grid.buffered_pixel_bounds()
 
     if not presorted:
         pdf = pdf.sort_values("feature_id", kind="mergesort")  # O1 determinism
-    n_in = len(pdf)
     if "srid" not in pdf.columns:
         pdf = pdf.assign(srid=4326)
+    # rows removed by the pre-shuffle feature cap (build_tiles) carry
+    # their count on every surviving row of the group
+    cap_dropped = int(pdf["_cap_dropped"].iloc[0]) \
+        if "_cap_dropped" in pdf.columns and len(pdf) else 0
 
-    # split: SoA points (lon/lat columns, geom NULL) take the zero-copy
-    # fast path; legacy 21-byte WKB points (debug centers, direct
-    # encode_bucket callers) take the frombuffer fast path; everything
-    # else is the generic per-feature path. The per-row WKB sniff only
-    # runs when the group is not pure-SoA (the corpus groups are).
     if "lon" in pdf.columns:
-        soa = pdf["lon"].notna().to_numpy()
+        lonlat = pdf["lon"].notna().to_numpy()
     else:
-        soa = np.zeros(len(pdf), dtype=bool)
+        lonlat = np.zeros(len(pdf), dtype=bool)
+    tag_cols = _string_tag_cols(pdf) if len(pdf) and lonlat.all() else None
+    if tag_cols is not None:
+        keep, zz = _project_points(
+            pdf["lon"].to_numpy(dtype=np.float64),
+            pdf["lat"].to_numpy(dtype=np.float64),
+            ext, clip_region, (pdf["srid"] != 3857).to_numpy())
+        fids = pdf["feature_id"].to_numpy(dtype=np.int64)[keep]
+        body = mvt.encode_point_layer_arrays(
+            layer, fids, zz[keep], [(k, a[keep]) for k, a in tag_cols])
+        n_in, n_feats = len(pdf), int(keep.sum())
+    else:
+        feats, n_in = _generic_features(pdf, lonlat, ext, clip_region, z,
+                                        simplify, repair)
+        body = mvt.encode_layer(layer, feats)
+        n_feats = len(feats)
+    blob = mvt.encode_tile([body])  # wrap as field-3 record
+    return {
+        "z": z, "x": x, "y": y, "layer": layer, "layer_bytes": blob,
+        "n_features": n_feats, "n_dropped": n_in - n_feats + cap_dropped,
+        "bytes": len(blob),
+        "encode_ms": (time.perf_counter() - t0) * 1000.0,
+    }
 
-    # full-bypass for pure-SoA point groups (the corpus case): project,
-    # clip, zigzag and emit the ENTIRE layer from column arrays —
-    # no per-feature dicts anywhere (mvt.encode_point_layer_arrays;
-    # byte-identical to the dict path by differential test). Gated on
-    # the emission-strategy switch (mvt._VECTORIZE_POINT_BLOCK — see
-    # the crossover measurement there); falls back when any tag column
-    # holds non-string values (e.g. numeric default_tags) — the
-    # factorize dictionary can't reproduce type-sensitive value
-    # identity then.
-    if mvt.vector_emit(len(pdf)) and soa.all() and len(pdf):
-        tag_cols = []
-        strings_only = True
-        for c in pdf.columns:
-            if not c.startswith("tag_"):
-                continue
-            arr = pdf[c].to_numpy()
-            m = pd.notna(arr)
-            if m.any() and not all(type(v) is str for v in arr[m].tolist()):
-                strings_only = False
-                break
-            tag_cols.append((c[4:], arr))
-        if strings_only:
-            keep, zz = _project_points(
-                pdf["lon"].to_numpy(dtype=np.float64),
-                pdf["lat"].to_numpy(dtype=np.float64),
-                ext, clip_region, (pdf["srid"] != 3857).to_numpy())
-            fids = pdf["feature_id"].to_numpy(dtype=np.int64)[keep]
-            body = mvt.encode_point_layer_arrays(
-                layer, fids, zz[keep],
-                [(k, a[keep]) for k, a in tag_cols])
-            blob = mvt.encode_tile([body])
-            cap_dropped = int(pdf["_cap_dropped"].iloc[0]) \
-                if "_cap_dropped" in pdf.columns and len(pdf) else 0
-            n_feats = int(keep.sum())
-            return {
-                "z": z, "x": x, "y": y, "layer": layer,
-                "layer_bytes": blob, "n_features": n_feats,
-                "n_dropped": n_in - n_feats + cap_dropped,
-                "bytes": len(blob),
-                "encode_ms": (time.perf_counter() - t0) * 1000.0,
-            }
-    if (soa.all() and len(pdf)) or "geom" not in pdf.columns:
-        wkbpt = np.zeros(len(pdf), dtype=bool)
-    else:
-        wkbpt = np.fromiter(
-            ((not s) and b is not None and len(b) == 21
-             and bytes(b[:5]) == _POINT_WKB_HEAD
-             for s, b in zip(soa, pdf["geom"])),
-            dtype=bool, count=len(pdf))
-    feats = []
-    if soa.all() and len(pdf):
-        pts = pdf  # pure-SoA group (the corpus case): no mask copy
-    else:
-        pts = pdf[soa]
-    if len(pts):
-        feats.extend(_vectorized_points(
-            pts, pts["lon"].to_numpy(dtype=np.float64),
-            pts["lat"].to_numpy(dtype=np.float64),
-            ext, clip_region, (pts["srid"] != 3857).to_numpy()))
-    if len(pts) == len(pdf):
-        rest = pdf.iloc[0:0]
-    else:
-        wpts = pdf[wkbpt]
-        if len(wpts):
-            buf = np.frombuffer(b"".join(wpts["geom"]),
-                                dtype=np.uint8).reshape(-1, 21)
-            feats.extend(_vectorized_points(
-                wpts, buf[:, 5:13].copy().view("<f8").ravel(),
-                buf[:, 13:21].copy().view("<f8").ravel(),
-                ext, clip_region, (wpts["srid"] != 3857).to_numpy()))
-        rest = pdf[~(soa | wkbpt)]
-    # remainder split: ring-SoA rows (coords column, wkb.soa_to_geometry
-    # — no byte parsing) vs WKB rows (generic codec path)
+
+def _decoded_iter(pdf: pd.DataFrame, lonlat: np.ndarray):
+    """(feature_id, geometry, tags, srid) per row: lon/lat rows as
+    Point geometries, ring-SoA rows (coords column) through
+    wkb.soa_to_geometry with no byte parsing, the rest from WKB."""
+    if lonlat.any():
+        pts = pdf[lonlat]
+        for fid, lon, lat, tags, srid in zip(
+                pts["feature_id"], pts["lon"].to_numpy(dtype=np.float64),
+                pts["lat"].to_numpy(dtype=np.float64), _tag_dicts(pts),
+                pts["srid"]):
+            yield fid, ("Point", np.array([lon, lat])), tags, srid
+    rest = pdf[~lonlat] if lonlat.any() else pdf
     if len(rest) and "coords" in rest.columns:
         ring_mask = rest["coords"].notna().to_numpy()
     else:
         ring_mask = np.zeros(len(rest), dtype=bool)
+    wkb_rows = rest[~ring_mask] if ring_mask.any() else rest
+    if len(wkb_rows):
+        for fid, gwkb, tags, srid in zip(
+                wkb_rows["feature_id"], wkb_rows["geom"],
+                _tag_dicts(wkb_rows), wkb_rows["srid"]):
+            yield fid, wkb.decode(bytes(gwkb)), tags, srid
+    if ring_mask.any():
+        ring_rows = rest[ring_mask]
+        plens = ring_rows["poly_lens"] if "poly_lens" in ring_rows.columns \
+            else [None] * len(ring_rows)
+        for fid, code, coords, rl, pl, tags, srid in zip(
+                ring_rows["feature_id"], ring_rows["gkind"],
+                ring_rows["coords"], ring_rows["ring_lens"], plens,
+                _tag_dicts(ring_rows), ring_rows["srid"]):
+            yield fid, wkb.soa_to_geometry(code, coords, rl, pl), tags, srid
 
-    def _decoded_iter():
-        wkb_rows = rest[~ring_mask] if ring_mask.any() else rest
-        if len(wkb_rows):
-            tags_w = _tag_dicts(wkb_rows)
-            for fid, gwkb, tags, srid in zip(
-                    wkb_rows["feature_id"], wkb_rows["geom"], tags_w,
-                    wkb_rows["srid"]):
-                yield fid, wkb.decode(bytes(gwkb)), tags, srid
-        if ring_mask.any():
-            ring_rows = rest[ring_mask]
-            tags_r = _tag_dicts(ring_rows)
-            plens = ring_rows["poly_lens"] if "poly_lens" in ring_rows.columns \
-                else [None] * len(ring_rows)
-            for fid, code, coords, rl, pl, tags, srid in zip(
-                    ring_rows["feature_id"], ring_rows["gkind"],
-                    ring_rows["coords"], ring_rows["ring_lens"], plens,
-                    tags_r, ring_rows["srid"]):
-                yield fid, wkb.soa_to_geometry(code, coords, rl, pl), \
-                    tags, srid
 
-    for fid, decoded, tags, srid in _decoded_iter():
+def _generic_features(pdf, lonlat, ext, clip_region, z, simplify, repair):
+    """The generic route's per-feature chain. Returns the encode-ready
+    feature dicts sorted by id and the input feature count (rows plus
+    the extra members of flattened collections)."""
+    n_in = len(pdf)
+    feats = []
+    for fid, decoded, tags, srid in _decoded_iter(pdf, lonlat):
         # GeometryCollection: empty -> feature skipped (atlas/map.go:232-236);
         # non-empty -> one feature per member geometry, tags shared
         # (mvt.NewFeatures flattening, mvt/feature.go:48-67)
@@ -368,21 +336,9 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
             if g is None:
                 continue
             feats.append({"id": int(fid), "tags": tags, "geom": g})
-
-    # O1 determinism across both paths
+    # O1 determinism: the row kinds were visited one after another
     feats.sort(key=lambda f: f["id"])
-    body = mvt.encode_layer(layer, feats)
-    blob = mvt.encode_tile([body])  # wrap as field-3 record
-    ms = (time.perf_counter() - t0) * 1000.0
-    # rows removed by the pre-shuffle feature cap (build_tiles) carry
-    # their count on every surviving row of the group
-    cap_dropped = int(pdf["_cap_dropped"].iloc[0]) \
-        if "_cap_dropped" in pdf.columns and len(pdf) else 0
-    return {
-        "z": z, "x": x, "y": y, "layer": layer, "layer_bytes": blob,
-        "n_features": len(feats), "n_dropped": n_in - len(feats) + cap_dropped,
-        "bytes": len(blob), "encode_ms": ms,
-    }
+    return feats, n_in
 
 
 def point_features(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:

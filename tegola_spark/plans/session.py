@@ -89,28 +89,6 @@ def get_spark(app_name: str = "tegola_spark", cpus: int | None = None,
         .config("spark.ui.enabled",
                 "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false")
     )
-    # Publish the per-NODE python-worker count so kernels can pick the
-    # memory-bandwidth-appropriate emission strategy (mvt._auto_vector_emit:
-    # the vectorized point encoder wins below ~8 concurrent workers per
-    # memory bus, loses above — BENCH.md round-3 A/B). Local mode: all N
-    # workers share one bus, so it's `cpus`; cluster mode: executors are
-    # per-node JVMs, so it's spark.executor.cores. Set in os.environ
-    # BEFORE the JVM launches (local workers inherit it) and mirrored via
-    # executorEnv for real executors.
     if pin_master:
-        workers_per_node = int(cpus)
         builder = builder.master(f"local[{cpus}]")
-    else:
-        try:
-            from pyspark import SparkConf
-
-            workers_per_node = int(SparkConf().get("spark.executor.cores", "0"))
-        except Exception:
-            workers_per_node = 0
-    if workers_per_node:
-        os.environ.setdefault("SPARK_GRAFT_WORKERS_PER_NODE",
-                              str(workers_per_node))
-        builder = builder.config(
-            "spark.executorEnv.SPARK_GRAFT_WORKERS_PER_NODE",
-            os.environ["SPARK_GRAFT_WORKERS_PER_NODE"])
     return builder.getOrCreate()

@@ -111,21 +111,28 @@ def _unescape(s: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.BinaryType())
-def _render_html(text: pd.Series, url: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-    # repr() is the shortest float round-trip representation — the
-    # geocoder re-parses these EXACT doubles back out.
-    lat_s = lat.map(repr)
-    lon_s = lon.map(repr)
-    body = _escape(text.fillna(""))
-    html = (
+# the geocoder's reads of the page's geo.position meta tag
+_GEO_LAT_RE = r'geo\.position" content="([^;]+);'
+_GEO_LON_RE = r'geo\.position" content="[^;]+;([^"]+)"'
+
+
+def _page_html(text: pd.Series, url: pd.Series, lat: pd.Series,
+               lon: pd.Series) -> pd.Series:
+    """The page template, as str. repr() is the shortest float
+    round-trip representation — the geocoder re-parses these EXACT
+    doubles back out."""
+    return (
         '<html><head><meta name="geo.position" content="'
-        + lat_s + ";" + lon_s
+        + lat.map(repr) + ";" + lon.map(repr)
         + '"/><meta charset="utf-8"/><title>' + url
-        + "</title></head><body><article><p>" + body
+        + "</title></head><body><article><p>" + _escape(text.fillna(""))
         + "</p></article></body></html>"
     )
-    return html.map(lambda s: s.encode("utf-8"))
+
+
+@F.pandas_udf(T.BinaryType())
+def _render_html(text: pd.Series, url: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
+    return _page_html(text, url, lat, lon).map(lambda s: s.encode("utf-8"))
 
 
 @F.pandas_udf(T.StringType())
@@ -143,13 +150,13 @@ def extract_text(html: pd.Series) -> pd.Series:
 @F.pandas_udf(T.DoubleType())
 def geocode_lat(html: pd.Series) -> pd.Series:
     s = html.map(lambda b: b.decode("utf-8") if b is not None else "")
-    return s.str.extract(r'geo\.position" content="([^;]+);', expand=False).astype(float)
+    return s.str.extract(_GEO_LAT_RE, expand=False).astype(float)
 
 
 @F.pandas_udf(T.DoubleType())
 def geocode_lon(html: pd.Series) -> pd.Series:
     s = html.map(lambda b: b.decode("utf-8") if b is not None else "")
-    return s.str.extract(r'geo\.position" content="[^;]+;([^"]+)"', expand=False).astype(float)
+    return s.str.extract(_GEO_LON_RE, expand=False).astype(float)
 
 
 def pages(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
@@ -202,20 +209,9 @@ def _render_and_geocode(text: pd.Series, url: pd.Series,
     still come from regex-parsing the rendered page, exactly the
     geocode_lat/geocode_lon expressions), but only (text, url) cross in
     and 16 bytes/row cross out."""
-    lat_s = lat_in.map(repr)
-    lon_s = lon_in.map(repr)
-    body = _escape(text.fillna(""))
-    html = (
-        '<html><head><meta name="geo.position" content="'
-        + lat_s + ";" + lon_s
-        + '"/><meta charset="utf-8"/><title>' + url
-        + "</title></head><body><article><p>" + body
-        + "</p></article></body></html>"
-    )
-    lat = html.str.extract(r'geo\.position" content="([^;]+);',
-                           expand=False).astype(float)
-    lon = html.str.extract(r'geo\.position" content="[^;]+;([^"]+)"',
-                           expand=False).astype(float)
+    html = _page_html(text, url, lat_in, lon_in)
+    lat = html.str.extract(_GEO_LAT_RE, expand=False).astype(float)
+    lon = html.str.extract(_GEO_LON_RE, expand=False).astype(float)
     return pd.DataFrame({"lat": lat, "lon": lon})
 
 

