@@ -243,12 +243,13 @@ def q_mvt_layer_metrics(spark, sf_dir):
 
 
 def q_mvt_tiles_hier(spark, sf_dir):
-    """Single-shuffle hierarchical build (anchor_z=1 exercises the deep
-    path at these zooms) — tiles are byte-identical to q_mvt_tiles, so
-    the two entries' md5 columns must agree row-for-row."""
+    """The same build as q_mvt_tiles with anchor_z=1, so z0 is a
+    low level and z1..2 derive from the anchor kernel — tiles are
+    byte-identical to q_mvt_tiles, so the two entries' md5 columns must
+    agree row-for-row."""
     from tegola_spark.plans import pipeline
 
-    _, tiles = pipeline.build_tiles_hierarchical(
+    _, tiles = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1, 2], anchor_z=1)
     return tiles.select(
         "z", "x", "y", "n_layers", "n_features", "tile_len",
@@ -258,9 +259,9 @@ def q_mvt_tiles_hier(spark, sf_dir):
 def q_mvt_point_counts(spark, sf_dir):
     """The FLAGSHIP tile pipeline under the HARD oracle (round-4
     VERDICT item 1): per-(z, x, y) kept/dropped feature counts of the
-    pages point layer from the REAL distributed build — hierarchical
-    points-only anchor kernel (deep span 3 levels) for z >= 2,
-    standard per-zoom fan-out below. DuckDB recomputes every
+    pages point layer from the REAL distributed build — the anchor
+    kernel (anchor_z=2, deep span 3 levels) for z >= 2, one level per
+    zoom below. DuckDB recomputes every
     count from first principles: spherical world-coord fan-out with the
     3x3 buffered-duplication predicate (tile.go buffered extents),
     ellipsoidal WGS84->3857 projection of each point
@@ -270,7 +271,7 @@ def q_mvt_point_counts(spark, sf_dir):
     (tile.go:104-107). Semantics anchored to atlas/map_test.go:210-455."""
     from tegola_spark.plans import pipeline
 
-    metrics, _ = pipeline.build_tiles_hierarchical(
+    metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1, 2, 3, 4, 5], anchor_z=2)
     return metrics.where(F.col("layer") == "pages").select(
         "z", "x", "y", "n_features", "n_dropped")
@@ -290,7 +291,7 @@ def q_mvt_line_counts(spark, sf_dir):
 
     metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1, 2, 3, 4, 5], with_polygons=False,
-        with_roads=True, point_zooms=[])
+        with_roads=True, with_points=False)
     return metrics.where(F.col("layer") == "roads").select(
         "z", "x", "y", "n_features", "n_dropped")
 
@@ -298,9 +299,10 @@ def q_mvt_line_counts(spark, sf_dir):
 def q_mvt_polygon_counts(spark, sf_dir):
     """Polygon family (G3 make-valid + clip) under the HARD oracle:
     per-(z, x, y, layer) kept/dropped counts of the nations/regions
-    rect layers from the REAL hierarchical build — the polygon layers
-    take build_tiles' bbox fan-out (tiling.assign_bbox_tiles) at every
-    zoom and every candidate runs reproject -> prepare
+    rect layers from the REAL build (anchor_z=2, as q_mvt_point_counts)
+    — the polygon layers take the bbox fan-out
+    (tiling.assign_bbox_tiles) at every zoom, whatever the point
+    levels, and every candidate runs reproject -> prepare
     (quantize/dedup/de-close/rectify, prepare.go:114-150) ->
     CleanGeometry's always-on make-valid sweep (validate.go:101-146).
     DuckDB replays the keep-decision from first
@@ -315,7 +317,7 @@ def q_mvt_polygon_counts(spark, sf_dir):
     (tests/test_polygon_counts_oracle.py)."""
     from tegola_spark.plans import pipeline
 
-    metrics, _ = pipeline.build_tiles_hierarchical(
+    metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1, 2, 3, 4, 5], anchor_z=2)
     return metrics.where(F.col("layer").isin("nations", "regions")).select(
         "z", "x", "y", "layer", "n_features", "n_dropped")

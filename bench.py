@@ -108,20 +108,12 @@ def run_bench(sf_dir: str, cpus: int, zooms=range(0, 6), scale_mult: int = 1) ->
         corpus.col_lat(F.col("doc_id")).alias("lat"))
 
     n_tiles = {}
-    # hierarchical single-shuffle build is the default: byte-identical
-    # tiles, measured faster at every size (sf0.1/z0..5: 10.8s vs 13.4s;
-    # 3M pages/z0..10: 302s vs 337s) and 6x less shuffle volume at depth
-    hierarchical = os.environ.get("SPARK_GRAFT_HIERARCHICAL", "1") == "1"
+    anchor_env = os.environ.get("SPARK_GRAFT_ANCHOR_Z")
 
     def tile_pipeline():
-        build = (pipeline.build_tiles_hierarchical if hierarchical
-                 else pipeline.build_tiles)
-        kw = {}
-        anchor_env = os.environ.get("SPARK_GRAFT_ANCHOR_Z")
-        if hierarchical and anchor_env:
-            kw["anchor_z"] = int(anchor_env)
-        metrics, tiles = build(spark, sf_dir, zooms=list(zooms), docs=docs,
-                               **kw)
+        metrics, tiles = pipeline.build_tiles(
+            spark, sf_dir, zooms=list(zooms), docs=docs,
+            anchor_z=int(anchor_env) if anchor_env else None)
         row = tiles.agg(F.count("*"), F.sum("tile_len"), F.sum("n_features")).first()
         n_tiles["tiles"] = row[0]
         n_tiles["bytes"] = row[1]
@@ -182,7 +174,7 @@ def run_bench(sf_dir: str, cpus: int, zooms=range(0, 6), scale_mult: int = 1) ->
         # bytes crossing exchanges per produced tile: unlike local-mode
         # wall-clock efficiency (host memcpy-bound, BENCH.md), this IS
         # the quantity that predicts cluster behavior at 100 TB — the
-        # hierarchical build won round 2's scaling gain by cutting it 6x
+        # anchor level won round 2's scaling gain by cutting it 6x
         result["shuffle_write_bytes"] = shuffle["write"]
         result["shuffle_read_bytes"] = shuffle["read"]
         result["shuffle_bytes_per_tile"] = round(

@@ -104,7 +104,7 @@ def profile_mvt(spark, sf_dir, reps=1):
     for i in range(reps):
         sc.setJobDescription(f"mvt rep{i}")
         t0 = time.perf_counter()
-        metrics, tiles = pipeline.build_tiles_hierarchical(
+        metrics, tiles = pipeline.build_tiles(
             spark, sf_dir, zooms=list(range(0, 6)), docs=docs)
         row = tiles.agg(F.count("*"), F.sum("tile_len"), F.sum("n_features")).first()
         print(f"rep{i}: {time.perf_counter()-t0:.3f}s tiles={row[0]} bytes={row[1]}",

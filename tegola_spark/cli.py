@@ -7,7 +7,7 @@ the same job as one spark-submit invocation:
 
     spark-submit --py-files tegola_spark.zip -m tegola_spark.cli \\
         seed --input /data/corpus --out /sinks/tiles \\
-        --min-zoom 0 --max-zoom 10 [--hierarchical] [--cpus N]
+        --min-zoom 0 --max-zoom 10 [--cpus N]
 
 or locally:  python -m tegola_spark.cli seed --input ... --out ...
 
@@ -27,8 +27,9 @@ unpersisted when the batch ends, whether written, skipped or failed.
 A --tile-list work set is cached once for the whole batch loop and
 unpersisted when the loop ends, also when it raises.
 
-Scale knobs: --hierarchical (single anchor shuffle for deep zooms),
---max-features (per-tile-layer budget; default 'auto'), --anchor-z.
+Scale knobs: --max-features (per-tile-layer budget; default 'auto'),
+--anchor-z (the zoom whose tiles group the deep zooms' points; see
+plans/pipeline.build_tiles).
 """
 
 from __future__ import annotations
@@ -53,7 +54,8 @@ def build_parser() -> argparse.ArgumentParser:
     seed.add_argument("--batch-zooms", type=int, default=2,
                       help="zoom levels per write batch (resume granularity)")
     seed.add_argument("--hierarchical", action="store_true",
-                      help="single-anchor-shuffle deep-zoom build")
+                      help="no effect, accepted for old command lines: "
+                           "every build shuffles its points once")
     seed.add_argument("--anchor-z", type=int, default=None)
     seed.add_argument("--max-features", default="auto",
                       help="'auto', an int budget, or 'none'")
@@ -104,19 +106,9 @@ def cmd_seed(args, spark=None) -> int:
     try:
         for i in range(0, len(zooms), args.batch_zooms):
             batch = zooms[i:i + args.batch_zooms]
-            # tile-list mode pins the standard build: the hierarchical
-            # anchor kernel derives every descendant, which wastes work
-            # when only a listed subset is wanted
-            build = (pipeline.build_tiles_hierarchical
-                     if args.hierarchical and tile_filter is None
-                     else pipeline.build_tiles)
-            kwargs = {"max_features_per_tile": cap}
-            if tile_filter is not None:
-                kwargs["tile_filter"] = tile_filter
-            if build is pipeline.build_tiles_hierarchical \
-                    and args.anchor_z is not None:
-                kwargs["anchor_z"] = args.anchor_z
-            metrics, tiles = build(spark, args.input, zooms=batch, **kwargs)
+            metrics, tiles = pipeline.build_tiles(
+                spark, args.input, zooms=batch, max_features_per_tile=cap,
+                tile_filter=tile_filter, anchor_z=args.anchor_z)
             rec = sinks.write_batch(spark, tiles, metrics, args.out)
             if rec is not None:
                 recs.append(rec)

@@ -10,7 +10,7 @@ unicode class semantics differ between regex engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 # language marker words — counted with whitespace padding so they only
 # match whole tokens; deterministic tie-break by this ordering
@@ -425,9 +425,12 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id") -> DataFrame:
     """Bigram LM quality scoring with Stupid Backoff (Brants et al.
     2007) — the n-gram upgrade of :func:`unigram_lm_score`.  The model
-    trains on the even-id half of the corpus and scores EVERY document,
-    so held-out documents genuinely exercise the backoff path (a
-    self-trained bigram model never sees an unknown bigram).
+    trains on half of the corpus and scores EVERY document, so held-out
+    documents genuinely exercise the backoff path (a self-trained
+    bigram model never sees an unknown bigram). The train half is the
+    even ids for an integral id column, and otherwise the ids whose
+    CRC-32 (of their string form, UTF-8) is even — deterministic, and
+    ``zlib.crc32`` in plain Python.
 
     Per-token score, quantized to integer micro-nats (floor(x*1e6+0.5))
     BEFORE the document sum, exactly like the unigram operator:
@@ -448,7 +451,11 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text",
     """
     toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
     base = df.select(F.col(id_col).alias("doc_id"), toks.alias("t"))
-    train = base.where(F.col("doc_id") % 2 == 0)
+    if isinstance(base.schema["doc_id"].dataType, T.IntegralType):
+        parity = F.col("doc_id") % 2
+    else:
+        parity = F.crc32(F.col("doc_id").cast("string")) % 2
+    train = base.where(parity == 0)
 
     words_tr = train.select(F.explode("t").alias("w"))
     c1 = words_tr.groupBy("w").agg(F.count("*").alias("n1"))

@@ -1,28 +1,29 @@
 """End-to-end tile pipeline (the Spark form of atlas.Map.Encode +
 `tegola cache seed` — SURVEY.md §3.1-3.2).
 
-Each builder has ONE physical plan; no core count, corpus size or env
-knob picks between alternatives.
+ONE builder, build_tiles, with one physical plan; no core count, corpus
+size or env knob picks between alternatives. Each feature stream
+(corpus points / polygon layers / roads / debug) shuffles only its own
+columns:
 
-build_tiles, per feature stream (corpus points / polygon layers /
-roads / debug), each stream shuffling only its own columns:
-
-  pages --geocode(UDF)--> points --tile fan-out (column exprs)-->
-        [per-(tile, layer) window cap, skipped when it cannot bind]
-        --> repartition(bucket of (z,x,y[,layer]))
-        --> applyInPandas(encode_bucket: reproject -> [simplify] ->
-            quantize -> clip -> MVT encode)  [one Arrow round-trip]
-  polygon layers --bbox fan-out--> (same cap + bucketed encode)
+  pages --geocode(UDF)--> points --tile fan-out over LEVELS (column
+        exprs)--> repartition(bucket of (z,x,y))
+        --> [window cap on low-level tiles, skipped when it cannot bind]
+        --> applyInPandas(encode_point_bucket)
+  polygon layers / roads / debug --bbox fan-out-->
+        [per-(tile, layer) window cap] --> repartition(bucket of
+        (z,x,y,layer)) --> applyInPandas(encode_bucket: reproject ->
+        [simplify] -> quantize -> clip -> MVT encode)
   union of the streams' metric rows
         --> assemble_tiles: groupBy(z,x,y) binary concat, layer order
 
-build_tiles_hierarchical: the geocoded points are checkpointed once
-and shuffle ONCE on their anchor tile; a points-only anchor kernel
-derives and encodes every deeper zoom inside the anchor group. The low
-zooms' points and the polygon layers at every zoom go through
-build_tiles, and the tiles come from assemble_tiles over the union of
-both metric frames — so every tile build ends in
-assemble_tiles(metrics).
+Point levels: every requested zoom below ``anchor_z`` is its own level,
+whose groups ARE its tiles; the zooms at or above ``anchor_z`` share one
+more level, the anchor, whose groups (one per anchor tile, with its
+buffered neighbours' points) derive and encode every descendant tile
+inside the kernel. So the points fan out, shuffle and encode once
+whatever the depth — the fixed-grid form of SpatialHadoop's
+sample-built partitions (VLDB 2015).
 
 Stage-fusion decision (SURVEY.md §4 R5): the entire per-feature
 geometry chain runs inside ONE grouped-map UDF — Catalyst cannot fuse
@@ -31,14 +32,13 @@ Arrow serialization round-trip per feature. The per-(tile, layer)
 group is the natural unit because the MVT tag dictionaries and the
 delta cursor are tile-layer-scoped.
 
-Skew: the grouped encode shuffles on (z, x, y, layer). Hot tiles
-(continent polygons + dense page cells) are bounded by
+Skew: hot tiles (continent polygons + dense page cells) are bounded by
 ``max_features_per_tile`` — a deterministic per-(tile, layer) cap
-(rank by feature_id) applied BEFORE the shuffle by a JVM window (the
-anchor kernel applies the same budget in NumPy; both derive it from
-``_cap_rule``); the drop count is carried in the metrics output.
-The reference only warns at 500 KB (server/handle_map_layer_zxy.go:229-238);
-we meter + optionally cap.
+(rank by feature_id) applied by a JVM window before any group reaches
+Python (the anchor kernel applies the same budget to its derived tiles
+in NumPy; both derive it from ``_cap_rule``); the drop count is carried
+in the metrics output. The reference only warns at 500 KB
+(server/handle_map_layer_zxy.go:229-238); we meter + optionally cap.
 
 Per-partition lineage/metrics (north rule): each encoded (z,x,y,layer)
 row carries feature count, byte size, dropped-feature count and encode
@@ -97,42 +97,26 @@ _METRIC_COLS = ["z", "x", "y", "layer", "layer_bytes", "n_features",
 
 
 def encode_bucket(pdf: pd.DataFrame, simplify: bool = False,
-                  repair: bool = True,
-                  const_layer: str | None = None) -> pd.DataFrame:
-    """Bucketed grouped-map kernel: MANY (z, x, y, layer) groups per UDF
-    invocation. groupBy on the raw tile-layer key pays one Python/Arrow
-    round-trip per group — at z>=5 groups hold a handful of features
-    and invocation overhead dominates. Salting the shuffle key down to
-    n_buckets amortizes that, while each tile-layer is still encoded
-    whole because the bucket key is a pure function of the group key.
-    Output rows accumulate as dicts — building a 1-row pd.DataFrame per
-    group cost ~1 ms each (29k groups = 29 s, measured). The bucket is
-    sorted ONCE by (group key, feature_id) so each group arrives
-    pre-sorted and _encode_one skips its per-group mergesort. Each
-    group takes _encode_one's array route (all lon/lat points, string
-    tags) or its generic per-feature route; nothing else picks.
-
-    ``const_layer``: single-layer streams (the corpus point stream)
-    omit the layer column from the shuffle entirely; the constant name
-    is re-attached here."""
-    if const_layer is None:
-        pdf = pdf.sort_values(["z", "x", "y", "layer", "feature_id"],
-                              kind="mergesort")
-        rows = [
-            _encode_one(g, time.perf_counter(),
-                        int(k[0]), int(k[1]), int(k[2]), k[3],
-                        simplify=simplify, repair=repair, presorted=True)
-            for k, g in pdf.groupby(["z", "x", "y", "layer"], sort=False)
-        ]
-    else:
-        pdf = pdf.sort_values(["z", "x", "y", "feature_id"],
-                              kind="mergesort")
-        rows = [
-            _encode_one(g, time.perf_counter(),
-                        int(k[0]), int(k[1]), int(k[2]), const_layer,
-                        simplify=simplify, repair=repair, presorted=True)
-            for k, g in pdf.groupby(["z", "x", "y"], sort=False)
-        ]
+                  repair: bool = True) -> pd.DataFrame:
+    """Bucketed grouped-map kernel of the layered streams: MANY
+    (z, x, y, layer) groups per UDF invocation. groupBy on the raw
+    tile-layer key pays one Python/Arrow round-trip per group — at z>=5
+    groups hold a handful of features and invocation overhead
+    dominates. Salting the shuffle key down to n_buckets amortizes
+    that, while each tile-layer is still encoded whole because the
+    bucket key is a pure function of the group key. Output rows
+    accumulate as dicts — building a 1-row pd.DataFrame per group cost
+    ~1 ms each (29k groups = 29 s, measured). The bucket is sorted ONCE
+    by (group key, feature_id) so each group arrives pre-sorted and
+    _encode_one skips its per-group mergesort."""
+    pdf = pdf.sort_values(["z", "x", "y", "layer", "feature_id"],
+                          kind="mergesort")
+    rows = [
+        _encode_one(g, time.perf_counter(),
+                    int(k[0]), int(k[1]), int(k[2]), k[3],
+                    simplify=simplify, repair=repair, presorted=True)
+        for k, g in pdf.groupby(["z", "x", "y", "layer"], sort=False)
+    ]
     return pd.DataFrame(rows, columns=_METRIC_COLS)
 
 
@@ -238,8 +222,8 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
         pdf = pdf.sort_values("feature_id", kind="mergesort")  # O1 determinism
     if "srid" not in pdf.columns:
         pdf = pdf.assign(srid=4326)
-    # rows removed by the pre-shuffle feature cap (build_tiles) carry
-    # their count on every surviving row of the group
+    # rows removed by the window feature cap (build_tiles) carry their
+    # count on every surviving row of the group
     cap_dropped = int(pdf["_cap_dropped"].iloc[0]) \
         if "_cap_dropped" in pdf.columns and len(pdf) else 0
 
@@ -343,7 +327,8 @@ def _generic_features(pdf, lonlat, ext, clip_region, z, simplify, repair):
 
 def point_features(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """pages -> geocoded point features (the single-layer 'pages'
-    stream — the layer name never ships; encode_bucket re-attaches it).
+    stream — the layer name never ships; encode_point_bucket attaches
+    it).
 
     SoA transport: points travel as (lon, lat) double columns with no
     geom/srid/layer columns at all — no WKB codec UDF touches the
@@ -546,6 +531,109 @@ def assemble_tiles(metrics: DataFrame) -> DataFrame:
     )
 
 
+def _window_cap(feats: DataFrame, keys, cap) -> DataFrame:
+    """Keep the ``cap`` lowest feature ids of each window partition
+    over ``keys``; a null cap keeps the partition whole. Rank and group
+    count share one sort; the dropped count rides on the kept rows as
+    ``_cap_dropped`` for the n_dropped lineage."""
+    w = Window.partitionBy(*keys).orderBy("feature_id")
+    wc = Window.partitionBy(*keys)
+    return (
+        feats.withColumn("_rk", F.row_number().over(w))
+        .withColumn("_cap_dropped",
+                    F.greatest(F.lit(0), F.count("*").over(wc) - cap))
+        .where(F.coalesce(F.col("_rk") <= cap, F.lit(True))).drop("_rk")
+    )
+
+
+def encode_point_bucket(pdf: pd.DataFrame, anchor_z: int, deep_zooms,
+                        simplify: bool = False, repair: bool = True,
+                        caps: dict | None = None) -> pd.DataFrame:
+    """Grouped-map kernel of the point stream (the single 'pages'
+    layer, whose name never ships). The bucket is sorted ONCE by
+    (z, x, y, feature_id). A group below ``anchor_z`` is a low-level
+    tile and encodes pre-sorted; a group AT ``anchor_z`` is one anchor
+    tile, from whose points every descendant tile in ``deep_zooms`` is
+    derived and encoded (_encode_anchor_tiles)."""
+    pdf = pdf.sort_values(["z", "x", "y", "feature_id"], kind="mergesort")
+    rows = []
+    for (z, x, y), g in pdf.groupby(["z", "x", "y"], sort=False):
+        if z < anchor_z:
+            rows.append(_encode_one(
+                g, time.perf_counter(), int(z), int(x), int(y), "pages",
+                simplify=simplify, repair=repair, presorted=True))
+        else:
+            rows.extend(_encode_anchor_tiles(
+                g, anchor_z, int(x), int(y), deep_zooms, simplify, repair,
+                caps))
+    return pd.DataFrame(rows, columns=_METRIC_COLS)
+
+
+def _encode_anchor_tiles(g: pd.DataFrame, anchor_z: int, ax: int, ay: int,
+                         deep_zooms, simplify: bool, repair: bool,
+                         caps: dict | None) -> list:
+    """Metric rows of the descendant tiles of anchor tile (ax, ay):
+    derive every (z, x, y) membership for z in ``deep_zooms`` locally
+    (pure NumPy — the same spherical world-coord + 3x3
+    buffered-duplication predicate as tiling.assign_point_tiles), keep
+    the tiles whose z-``anchor_z`` ancestor IS this anchor (each deep
+    tile is produced by exactly one anchor; the anchor-level buffered
+    duplication guarantees the full buffered feature set is present,
+    because buffer distance in meters shrinks with zoom), then encode
+    each tile under the per-zoom budget ``caps``."""
+    rows = []
+    buf = tiling.BUFFER_FRAC
+    lon = g["lon"].to_numpy(dtype=np.float64)
+    lat = g["lat"].to_numpy(dtype=np.float64)
+    phi = lat * (np.pi / 180.0)
+    ymerc = np.log(np.tan(np.pi / 4.0 + phi / 2.0))
+    for z in deep_zooms:
+        n = 1 << z
+        dz = z - anchor_z
+        cap = caps.get(z) if caps else None
+        wx = (lon + 180.0) / 360.0 * float(n)
+        wy = (0.5 - ymerc / (2.0 * np.pi)) * float(n)
+        fx = np.floor(wx)
+        fy = np.floor(wy)
+        idx_all = []
+        tx_all = []
+        ty_all = []
+        for dx in (-1, 0, 1):
+            for dy in (-1, 0, 1):
+                tx = (fx + dx).astype(np.int64)
+                ty = (fy + dy).astype(np.int64)
+                keep = (
+                    (tx >= 0) & (tx < n) & (ty >= 0) & (ty < n)
+                    & (wx >= tx - buf) & (wx <= tx + 1 + buf)
+                    & (wy >= ty - buf) & (wy <= ty + 1 + buf)
+                    & ((tx >> dz) == ax) & ((ty >> dz) == ay)
+                )
+                k = np.nonzero(keep)[0]
+                if len(k):
+                    idx_all.append(k)
+                    tx_all.append(tx[k])
+                    ty_all.append(ty[k])
+        if not idx_all:
+            continue
+        # ONE take + ONE C-speed groupby per (anchor, zoom) — a per-tile
+        # .iloc loop cost more than the shuffle it saved (measured 457s
+        # vs 421s at 1.28M tiles)
+        exploded = g.take(np.concatenate(idx_all))
+        exploded["_tx"] = np.concatenate(tx_all)
+        exploded["_ty"] = np.concatenate(ty_all)
+        for (tx, ty), lg in exploded.groupby(["_tx", "_ty"], sort=True):
+            if cap is not None and len(lg) > cap:
+                # deterministic per-tile budget matching the window cap:
+                # lowest feature_ids kept; drops ride _cap_dropped
+                n_over = len(lg) - cap
+                lg = lg.nsmallest(cap, "feature_id").assign(
+                    _cap_dropped=n_over)
+            rows.append(_encode_one(
+                lg, time.perf_counter(), z, int(tx), int(ty), "pages",
+                simplify=simplify, repair=repair))
+    return rows
+
+
 def build_tiles(spark: SparkSession, sf_dir: str, zooms,
                 max_features_per_tile="auto",
                 with_polygons: bool = True, docs=None,
@@ -554,9 +642,9 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
                 default_tags: dict | None = None,
                 simplify: bool = False,
                 repair_polygons: bool = True,
-                point_zooms=None,
+                with_points: bool = True,
                 tile_filter: DataFrame | None = None,
-                points_df: DataFrame | None = None
+                anchor_z: int | None = None
                 ) -> tuple[DataFrame, DataFrame]:
     """Returns (layer_metrics_df, tiles_df).
 
@@ -568,22 +656,22 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     capping entirely. Drops are deterministic (rank by feature_id) and
     metered in the metrics' ``n_dropped`` lineage column.
 
-    ``point_zooms``: zooms the POINT layer fans out to (default: same
-    as ``zooms``); build_tiles_hierarchical passes the low zooms here
-    and derives the deep zooms from one anchor shuffle.
+    ``anchor_z``: the point stream's anchor level (module docstring).
+    It trades the point fan-out's volume against anchor-group memory:
+    group rows ~= corpus / 4^anchor_z. Default max(4, max(zooms) - 6);
+    at 10^12 docs use 10-12. A value above max(zooms) puts every zoom on
+    its own level.
 
-    ``points_df``: a geocoded point frame (point_features' columns) to
-    use instead of geocoding ``docs``; build_tiles_hierarchical passes
-    its checkpointed frame so both of its consumers share one geocode.
-    The point-row count that sizes the buckets and decides the exact
-    cap-skip is counted here, from ``points_df`` or else from the
-    documents.
+    ``with_points``: False builds only the polygon / road / debug
+    layers (no geocode, no count).
 
     ``tile_filter``: optional DataFrame of (z, x, y) keys — only those
     tiles are built (semi-join on the fanned-out features BEFORE the
     cap window and the encode shuffle, so encode work is proportional
-    to the filtered tile set). Used by streaming incremental
-    maintenance (streaming/live.py) to rebuild only affected tiles.
+    to the filtered tile set). Every zoom is then its own level, since
+    an anchor group would derive descendants nobody asked for. Used by
+    streaming incremental maintenance (streaming/live.py) and `cli
+    seed --tile-list`.
 
     Execution is per-STREAM (round-4): each feature family (corpus
     points / polygon layers / debug) shuffles separately with only its
@@ -593,13 +681,81 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     union happens on the tiny metric side, and per-group encode bytes
     are unchanged.
     """
-    pzooms = list(zooms) if point_zooms is None else list(point_zooms)
-    streams: list[tuple[DataFrame, str | None]] = []  # (feats, const_layer)
-    if pzooms:
-        pts = tiling.assign_point_tiles(
-            point_features(spark, sf_dir, docs=docs)
-            if points_df is None else points_df, pzooms)
-        streams.append((pts.select(*POINT_STREAM_COLS), "pages"))
+    if anchor_z is None:
+        anchor_z = max(4, max(zooms) - 6)
+    if tile_filter is not None:
+        anchor_z = max(zooms) + 1
+    low = sorted(z for z in set(zooms) if z < anchor_z)
+    deep = sorted(z for z in set(zooms) if z >= anchor_z)
+    levels = low + ([anchor_z] if deep else [])
+
+    if tile_filter is not None:
+        filter_keys = tile_filter.select(
+            F.col("z").cast("int"), F.col("x").cast("long"),
+            F.col("y").cast("long")).distinct()
+    else:
+        filter_keys = None
+
+    def _prepare(feats: DataFrame) -> DataFrame:
+        if default_tags:
+            feats = merge_default_tags(feats, default_tags)
+        if filter_keys is not None:
+            feats = feats.join(F.broadcast(filter_keys),
+                               ["z", "x", "y"], "left_semi")
+        return feats
+
+    rule = _cap_rule(max_features_per_tile)
+    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    outs = []
+    if with_points:
+        # point-row count, derived here so no caller-supplied count can
+        # change output: one geocoded point per document, so the
+        # documents count bounds the rows of any point-stream group
+        n_pts = (docs if docs is not None
+                 else corpus.documents(spark, sf_dir)).count()
+        nb = _encode_buckets(sp, n_pts * len(levels))
+        # explicit repartition on the bucket key: groupBy reuses the
+        # exchange (HashPartitioning(_bucket, n) satisfies the grouped-
+        # map's ClusteredDistribution), and a REPARTITION_BY_NUM shuffle
+        # is exempt from AQE byte-based coalescing — which otherwise
+        # shrank this python-heavy stage to bytes/1m tasks (measured 5
+        # tasks on 32 cores, round-6 profile)
+        feats = (
+            _prepare(tiling.assign_point_tiles(
+                point_features(spark, sf_dir, docs=docs), levels)
+                .select(*POINT_STREAM_COLS))
+            .withColumn("_bucket", F.pmod(F.hash("z", "x", "y"), F.lit(nb)))
+            .repartition(nb, "_bucket")
+        )
+        # exact cap-skip (round-6): assign_point_tiles emits a point to
+        # a tile AT MOST ONCE (the 3x3 neighbor offsets are distinct),
+        # so a low-level tile can never exceed n_pts rows — when n_pts
+        # <= the smallest low-level budget the window is provably the
+        # identity and its sort is pure cost. Exact, not heuristic: the
+        # moment the corpus outgrows the budget the window returns.
+        if rule is not None and low and n_pts > min(rule(z) for z in low):
+            # the window runs AFTER the one exchange: its clustering
+            # keys start with _bucket, so the bucket partitioning
+            # satisfies it and it adds only the in-partition sort the
+            # grouped map needs anyway. Anchor rows get a null cap and
+            # each is its own window partition (keyed by feature_id), so
+            # the window neither caps nor buffers them; the kernel caps
+            # their derived tiles.
+            below = F.col("z") < anchor_z
+            feats = _window_cap(
+                feats.withColumn("_solo", F.when(~below, F.col("feature_id"))),
+                ["_bucket", "z", "x", "y", "_solo"],
+                F.when(below, _cap_col(rule, low))).drop("_solo")
+        caps = None if rule is None else {z: rule(z) for z in deep}
+
+        def _encode_points(pdf: pd.DataFrame) -> pd.DataFrame:
+            return encode_point_bucket(pdf, anchor_z, deep, simplify,
+                                       repair_polygons, caps)
+
+        outs.append(feats.groupBy("_bucket")
+                    .applyInPandas(_encode_points, ENCODE_SCHEMA))
+
+    streams = []
     cat = None
     if with_polygons or with_roads:
         # zoom pruning from the layer catalog (P4) — regions capped at z<=6
@@ -611,9 +767,9 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         for name, (lo, hi) in cat.items():
             c = (F.col("layer") == name) & (F.col("z") >= lo) & (F.col("z") <= hi)
             cond = c if cond is None else (cond | c)
-        streams.append((polys.where(cond).select(
+        streams.append(polys.where(cond).select(
             "z", "x", "y", "layer", "feature_id", *POLY_SOA_COLS,
-            "tag_name"), None))
+            "tag_name"))
     if with_roads:
         # LineString stream: same bbox fan-out + SoA transport as the
         # polygon layers; the encode kernel routes gkind=LINESTRING
@@ -621,251 +777,36 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         lo, hi = cat.get("roads", (0, grid.MAX_Z))
         roads = tiling.assign_bbox_tiles(layers.road_layer(spark, sf_dir),
                                          zooms)
-        streams.append((
+        streams.append(
             roads.where((F.col("z") >= lo) & (F.col("z") <= hi)).select(
                 "z", "x", "y", "layer", "feature_id", *POLY_SOA_COLS,
-                F.col("name").alias("tag_name")), None))
-
+                F.col("name").alias("tag_name")))
     if with_debug:
-        streams.append((debug_features(spark, zooms), None))
-    if not streams:
+        streams.append(debug_features(spark, zooms))
+    if not streams and not outs:
         raise ValueError("build_tiles: nothing to build "
-                         "(no point zooms, polygons or debug layers)")
+                         "(no points, polygons or debug layers)")
 
-    if tile_filter is not None:
-        filter_keys = tile_filter.select(
-            F.col("z").cast("int"), F.col("x").cast("long"),
-            F.col("y").cast("long")).distinct()
-    else:
-        filter_keys = None
+    def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        return encode_bucket(pdf, simplify=simplify, repair=repair_polygons)
 
-    rule = _cap_rule(max_features_per_tile)
-    cap = None if rule is None else _cap_col(rule, set(zooms) | set(pzooms))
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    # point-row count, derived here so no caller-supplied count can
-    # change output: the exact row count of ``points_df`` when the
-    # hierarchical build hands in its checkpointed frame, else the
-    # documents count (one geocoded point per document, so an upper
-    # bound on the rows of any point-stream group)
-    n_pts = None
-    if pzooms:
-        n_pts = (points_df if points_df is not None
-                 else docs if docs is not None
-                 else corpus.documents(spark, sf_dir)).count()
-
-    metrics = None
-    for feats, const_layer in streams:
-        group_keys = ["z", "x", "y"] + ([] if const_layer else ["layer"])
-        # bbox streams (polygons/roads) are catalog-sized by contract —
-        # a full-width bucket fan costs ~120 ms of fixed python-task
-        # overhead per bucket for a handful of rows each (round-6
-        # measurement); give them a quarter of the width. The point
-        # stream gets the volume-adaptive grain (_encode_buckets).
-        if const_layer is not None:
-            nb = _encode_buckets(sp, n_pts * len(pzooms))
-        else:
-            nb = max(8, sp // 4)
-        if default_tags:
-            feats = merge_default_tags(feats, default_tags)
-        if filter_keys is not None:
-            feats = feats.join(F.broadcast(filter_keys),
-                               ["z", "x", "y"], "left_semi")
-
-        # exact cap-skip (round-6): assign_point_tiles emits a point to
-        # a tile AT MOST ONCE (the 3x3 neighbor offsets are distinct),
-        # so a (z,x,y) group of the single-layer point stream can never
-        # exceed n_pts rows — when n_pts <= the smallest zoom budget the
-        # cap window is provably the identity and its sort + exchange
-        # are pure cost. Exact, not heuristic: the moment the corpus
-        # outgrows the budget the window returns.
-        cap_cannot_bind = (
-            const_layer is not None and rule is not None
-            and n_pts <= min(rule(z) for z in pzooms))
-        if cap is not None and not cap_cannot_bind:
-            # rank + group count share one window spec (single sort);
-            # cap-dropped rows never reach the encode shuffle, but their
-            # count rides along on the kept rows for n_dropped lineage
-            w = Window.partitionBy(*group_keys).orderBy("feature_id")
-            wc = Window.partitionBy(*group_keys)
-            feats = (
-                feats.withColumn("_rk", F.row_number().over(w))
-                .withColumn("_cap_dropped",
-                            F.greatest(F.lit(0), F.count("*").over(wc) - cap))
-                .where(F.col("_rk") <= cap).drop("_rk")
-            )
-
-        def _make_encode(cl):
-            # single-arg closure: applyInPandas passes the group key to
-            # two-arg functions, so the constant must bind via a factory
-            def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-                return encode_bucket(pdf, simplify=simplify,
-                                     repair=repair_polygons, const_layer=cl)
-            return _encode
-
-        _encode = _make_encode(const_layer)
-        # explicit repartition on the bucket key: groupBy reuses the
-        # exchange (HashPartitioning(_bucket, n) satisfies the grouped-
-        # map's ClusteredDistribution), and a REPARTITION_BY_NUM shuffle
-        # is exempt from AQE byte-based coalescing — which otherwise
-        # shrank this python-heavy stage to bytes/1m tasks (measured 5
-        # tasks on 32 cores, round-6 profile)
-        m = (
+    group_keys = ["z", "x", "y", "layer"]
+    # bbox streams (polygons/roads) are catalog-sized by contract — a
+    # full-width bucket fan costs ~120 ms of fixed python-task overhead
+    # per bucket for a handful of rows each (round-6 measurement); give
+    # them a quarter of the width
+    nb = max(8, sp // 4)
+    for feats in streams:
+        feats = _prepare(feats)
+        if rule is not None:
+            feats = _window_cap(feats, group_keys, _cap_col(rule, zooms))
+        outs.append(
             feats.withColumn(
                 "_bucket", F.pmod(F.hash(*group_keys), F.lit(nb)))
             .repartition(nb, "_bucket")
             .groupBy("_bucket")
-            .applyInPandas(_encode, ENCODE_SCHEMA)
-        )
-        metrics = m if metrics is None else metrics.unionByName(m)
-    return metrics, assemble_tiles(metrics)
-
-
-def _encode_anchor_bucket(pdf: pd.DataFrame, anchor_z: int, zooms_hi,
-                          simplify: bool, repair: bool,
-                          caps: dict | None = None) -> pd.DataFrame:
-    """Grouped-map kernel over anchor-tile buckets of the point stream:
-    derive every descendant (z, x, y) membership for z in ``zooms_hi``
-    locally (pure NumPy — the same spherical world-coord + 3x3
-    buffered-duplication predicate as tiling.assign_point_tiles), filter
-    to tiles whose z-``anchor_z`` ancestor IS this anchor (each deep
-    tile is produced by exactly one anchor; the anchor-level buffered
-    duplication guarantees the full buffered feature set is present,
-    because buffer distance in meters shrinks with zoom), then encode
-    each tile's pages layer with the standard kernel under the per-zoom
-    budget ``caps``. Output: metric rows (blobs included), assembled
-    downstream by assemble_tiles."""
-    rows = []
-    buf = tiling.BUFFER_FRAC
-    for (ax, ay), g in pdf.groupby(["x", "y"], sort=True):
-        lon = g["lon"].to_numpy(dtype=np.float64)
-        lat = g["lat"].to_numpy(dtype=np.float64)
-        phi = lat * (np.pi / 180.0)
-        ymerc = np.log(np.tan(np.pi / 4.0 + phi / 2.0))
-        for z in zooms_hi:
-            n = 1 << z
-            dz = z - anchor_z
-            cap = caps.get(z) if caps else None
-            wx = (lon + 180.0) / 360.0 * float(n)
-            wy = (0.5 - ymerc / (2.0 * np.pi)) * float(n)
-            fx = np.floor(wx)
-            fy = np.floor(wy)
-            idx_all = []
-            tx_all = []
-            ty_all = []
-            for dx in (-1, 0, 1):
-                for dy in (-1, 0, 1):
-                    tx = (fx + dx).astype(np.int64)
-                    ty = (fy + dy).astype(np.int64)
-                    keep = (
-                        (tx >= 0) & (tx < n) & (ty >= 0) & (ty < n)
-                        & (wx >= tx - buf) & (wx <= tx + 1 + buf)
-                        & (wy >= ty - buf) & (wy <= ty + 1 + buf)
-                        & ((tx >> dz) == ax) & ((ty >> dz) == ay)
-                    )
-                    k = np.nonzero(keep)[0]
-                    if len(k):
-                        idx_all.append(k)
-                        tx_all.append(tx[k])
-                        ty_all.append(ty[k])
-            if not idx_all:
-                continue
-            # ONE take + ONE C-speed groupby per (anchor, zoom) — a
-            # per-tile .iloc loop cost more than the shuffle it saved
-            # (measured 457s vs 421s at 1.28M tiles)
-            exploded = g.take(np.concatenate(idx_all))
-            exploded["_tx"] = np.concatenate(tx_all)
-            exploded["_ty"] = np.concatenate(ty_all)
-            for (tx, ty), lg in exploded.groupby(["_tx", "_ty"], sort=True):
-                if cap is not None and len(lg) > cap:
-                    # deterministic per-(tile, layer) budget matching the
-                    # standard path's window cap: lowest feature_ids
-                    # kept; drops ride _cap_dropped
-                    n_over = len(lg) - cap
-                    lg = lg.nsmallest(cap, "feature_id").assign(
-                        _cap_dropped=n_over)
-                rows.append(_encode_one(
-                    lg, time.perf_counter(), z, int(tx), int(ty), "pages",
-                    simplify=simplify, repair=repair))
-    return pd.DataFrame(rows, columns=_METRIC_COLS)
-
-
-def build_tiles_hierarchical(spark: SparkSession, sf_dir: str, zooms,
-                             anchor_z: int | None = None,
-                             docs=None, with_polygons: bool = True,
-                             simplify: bool = False,
-                             repair_polygons: bool = True,
-                             max_features_per_tile="auto"
-                             ) -> tuple[DataFrame, DataFrame]:
-    """Single-shuffle tile build for deep zooms: the standard
-    build_tiles fans the POINT corpus out once per zoom (|zooms| full
-    corpus shuffles — the bottleneck at 100 TB); here points shuffle
-    ONCE on their ``anchor_z`` tile (plus ~30% buffered duplication) and
-    every deeper zoom's membership + encode happens inside the
-    points-only anchor kernel (_encode_anchor_bucket). The low zooms'
-    points (< anchor_z, bounded by the feature caps) and the polygon
-    layers at every zoom go through build_tiles; tiles are
-    assemble_tiles over the union of both metric frames, byte-identical
-    to build_tiles (differentially tested). Zooms all below
-    ``anchor_z`` are build_tiles outright.
-
-    ``anchor_z`` trades shuffle volume against anchor-group memory:
-    group rows ~= corpus / 4^anchor_z. Default max(4, max(zooms) - 6);
-    at 10^12 docs use 10-12.
-    """
-    zooms = sorted(zooms)
-    if anchor_z is None:
-        anchor_z = max(4, max(zooms) - 6)
-    zooms_hi = [z for z in zooms if z >= anchor_z]
-    zooms_lo = [z for z in zooms if z < anchor_z]
-    if not zooms_hi:
-        return build_tiles(spark, sf_dir, zooms, docs=docs,
-                           with_polygons=with_polygons, simplify=simplify,
-                           repair_polygons=repair_polygons,
-                           max_features_per_tile=max_features_per_tile)
-
-    # Geocode-once materialization (round-6, guide §8 "move small rows
-    # once"): the geocoded points feed two plan branches (the anchor
-    # fan-out and build_tiles' low-zoom stream), and each branch would
-    # re-execute the render+geocode subtree. localCheckpoint (eager)
-    # materializes the THIN geocoded projection (~40-70 B/row) exactly
-    # once; both branches read the blocks — no extra exchange, no
-    # recompute. Executor loss on a real cluster fails the build and
-    # retries it (same documented caveat as the iterative graph
-    # operators). Its row count sizes the anchor buckets.
-    pts = point_features(spark, sf_dir, docs=docs).localCheckpoint()
-    n_pts = pts.count()
-    # ONE anchor shuffle for all deep point zooms, carrying only the
-    # point stream's live columns (z is the constant anchor level, so it
-    # does not ship either)
-    anchored = tiling.assign_point_tiles(pts, [anchor_z]).select(
-        *POINT_STREAM_COLS[1:])
-
-    metrics = None
-    if zooms_lo or with_polygons:
-        metrics, _ = build_tiles(
-            spark, sf_dir, zooms, docs=docs, with_polygons=with_polygons,
-            simplify=simplify, repair_polygons=repair_polygons,
-            max_features_per_tile=max_features_per_tile,
-            point_zooms=zooms_lo, points_df=pts)
-
-    rule = _cap_rule(max_features_per_tile)
-    caps = None if rule is None else {z: rule(z) for z in zooms_hi}
-
-    def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _encode_anchor_bucket(pdf, anchor_z, zooms_hi, simplify,
-                                     repair_polygons, caps=caps)
-
-    # explicit repartition before the grouped-map: AQE-coalescing-exempt
-    # (see build_tiles) so the anchor encode keeps its parallelism; the
-    # anchor groups carry the corpus once (plus the buffer duplication)
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    nb = _encode_buckets(sp, n_pts)
-    hier = (
-        anchored.withColumn("_bucket", F.pmod(F.hash("x", "y"), F.lit(nb)))
-        .repartition(nb, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_encode, ENCODE_SCHEMA)
-    )
-    metrics = hier if metrics is None else metrics.unionByName(hier)
+            .applyInPandas(_encode, ENCODE_SCHEMA))
+    metrics = outs[0]
+    for m in outs[1:]:
+        metrics = metrics.unionByName(m)
     return metrics, assemble_tiles(metrics)

@@ -3,14 +3,15 @@
 dsir_select)."""
 
 import math
+import zlib
 
 from tegola_spark.operators import sampling, textstats
 
 
-def _ref_bigram(docs):
+def _ref_bigram(docs, in_train=lambda i: i % 2 == 0):
     """Independent plain-Python replay of the integer recurrence."""
     toks = {i: [w for w in t.split(" ") if w] for i, t in docs}
-    train = {i: t for i, t in toks.items() if i % 2 == 0}
+    train = {i: t for i, t in toks.items() if in_train(i)}
     c1, c2 = {}, {}
     for t in train.values():
         for w in t:
@@ -48,6 +49,20 @@ def test_bigram_lm_matches_reference_and_backoff_fires(spark):
     # held-out doc must score lower per token than an in-train doc
     # (its tail runs entirely on backoff)
     assert got[1][1] / got[1][0] < got[2][1] / got[2][0]
+
+
+def test_bigram_lm_string_ids_train_on_crc32_parity(spark):
+    """String ids split by the parity of their CRC-32: a % 2 split is
+    null for strings and trained the model on nothing."""
+    docs = [("d0", "a b a b c"), ("d1", "a b c"), ("d4", "a b x y"),
+            ("doc-a", "x y z"), ("doc-d", "b c a"), ("d5", "")]
+    df = spark.createDataFrame(docs, "doc_id string, text string")
+    got = {r["doc_id"]: (r["n_tokens"], r["lp_micro_sum"])
+           for r in textstats.bigram_lm_score(df).collect()}
+    assert got == _ref_bigram(
+        docs, in_train=lambda i: zlib.crc32(i.encode("utf-8")) % 2 == 0)
+    # d0, d1 and doc-d train; a model trained on nothing scores else
+    assert got != _ref_bigram(docs, in_train=lambda i: False)
 
 
 def test_bigram_lm_seen_bigram_is_mle(spark):

@@ -60,7 +60,7 @@ def test_roads_distributed_matches_local_kernel(spark, sf_dir):
     must decode back to 25 line features."""
     metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1], with_polygons=False, with_roads=True,
-        point_zooms=[])
+        with_points=False)
     rows = {(r["z"], r["x"], r["y"]): r
             for r in metrics.where("layer = 'roads'").collect()}
 

@@ -174,26 +174,83 @@ def test_feature_cap_auto_default_no_effect_at_test_scale(spark, sf_dir):
     assert row["n_dropped"] == 0
 
 
+# builds compared level by level: (zooms, build_tiles kwargs, which docs)
+_LEVEL_CASES = {
+    # window cap on the low levels, kernel cap on the derived tiles,
+    # both idle ("auto") and both dropping (7)
+    "z0..5 auto": ([0, 1, 2, 3, 4, 5], {}, None),
+    "z0..5 cap 7": ([0, 1, 2, 3, 4, 5], {"max_features_per_tile": 7}, None),
+    # every zoom above the anchor: no low level at all
+    "deep only": ([6, 7], {}, None),
+    # 5 documents (docs=) leave tiles with polygon layers but no pages;
+    # typed default tags send every point group down the generic route
+    "5 docs, typed tags": ([0, 1, 2, 3, 4], {"default_tags": {
+        "rank": 3, "flag": True, "weight": 0.5}}, 5),
+}
+_level_builds = {}
+
+
+def _level_build(spark, sf_dir, case, anchor_z):
+    """(tiles, per-layer lineage) of one case at one anchor level,
+    built once per module."""
+    from tegola_spark.sources import corpus
+
+    if (case, anchor_z) in _level_builds:
+        return _level_builds[case, anchor_z]
+    zooms, kw, n_docs = _LEVEL_CASES[case]
+    if n_docs is not None:
+        kw = dict(kw, docs=corpus.documents(spark, sf_dir)
+                  .where(F.col("doc_id") < n_docs))
+    metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
+                                          anchor_z=anchor_z, **kw)
+    out = ({(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
+            for r in tiles.collect()},
+           {(r["z"], r["x"], r["y"], r["layer"]):
+            (r["n_features"], r["n_dropped"]) for r in metrics.collect()})
+    _level_builds[case, anchor_z] = out
+    return out
+
+
+def _assert_level_case(spark, sf_dir, case, anchor_z):
+    """Points grouped on the anchor level give the same tiles AND
+    per-layer lineage as every zoom on its own level (anchor_z above
+    max(zooms))."""
+    zooms, kw, _ = _LEVEL_CASES[case]
+    ref_tiles, ref_lineage = _level_build(spark, sf_dir, case,
+                                          max(zooms) + 1)
+    tiles, lineage = _level_build(spark, sf_dir, case, anchor_z)
+    assert set(tiles) == set(ref_tiles), case
+    diff = [k for k in ref_tiles if tiles[k] != ref_tiles[k]]
+    assert diff == [], f"{case}: {len(diff)} tiles differ, e.g. {diff[:5]}"
+    assert lineage == ref_lineage, case
+    pages = {k: v for k, v in lineage.items() if k[3] == "pages"}
+    if "max_features_per_tile" in kw:
+        # the anchor kernel's cap binds and meters its drops
+        assert all(n <= 7 for n, _ in pages.values())
+        assert any(d > 0 for (z, *_), (_, d) in pages.items()
+                   if z >= anchor_z), case
+    if case.startswith("5 docs"):
+        assert {k[:3] for k in lineage} - {k[:3] for k in pages}, \
+            "expected at least one polygon-only tile"
+
+
+@pytest.mark.parametrize("anchor_z", [1, 2])
+def test_anchor_level_byte_identical(spark, sf_dir, anchor_z):
+    for case in _LEVEL_CASES:
+        _assert_level_case(spark, sf_dir, case, anchor_z)
+
+
 def test_hierarchical_build_byte_identical(spark, sf_dir):
-    """build_tiles_hierarchical (one anchor shuffle for deep point
-    zooms) must produce byte-identical tiles to the per-zoom fan-out."""
-    zooms = [0, 1, 2, 3, 4, 5]
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in std.collect()}
-    _, hier = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms)
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in hier.collect()}
-    assert set(a) == set(b)
-    diff = [k for k in a if a[k] != b[k]]
-    assert diff == [], f"{len(diff)} tiles differ, e.g. {diff[:5]}"
+    """z0..5 on the default anchor (4): deep zooms derived from one
+    anchor group each, byte-identical to every zoom on its own level."""
+    _assert_level_case(spark, sf_dir, "z0..5 auto", 4)
 
 
 def test_hierarchical_cap_enforced(spark, sf_dir):
     """The anchor kernel applies the same per-(tile, layer) budget as
-    the standard path's window cap, with metered drops."""
+    the low levels' window cap, with metered drops."""
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    metrics, _ = pipeline.build_tiles_hierarchical(
+    metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[4], anchor_z=4, with_polygons=False,
         max_features_per_tile=2)
     rows = metrics.where("layer = 'pages'").collect()
@@ -205,69 +262,55 @@ def test_hierarchical_cap_enforced(spark, sf_dir):
 
 
 def test_hierarchical_deep_only_zooms_byte_identical(spark, sf_dir):
-    """zooms entirely above anchor_z (no low-zoom standard path for
-    points; polygons still standard): still byte-identical."""
-    zooms = [6, 7]
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
-    _, hier = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms,
-                                                anchor_z=4)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in std.collect()}
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in hier.collect()}
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
+    """Zooms entirely above anchor_z (no low level for points; polygons
+    unchanged): still byte-identical."""
+    _assert_level_case(spark, sf_dir, "deep only", 4)
 
 
 def test_fused_low_zoom_assembly_byte_identical(spark, sf_dir):
-    """The hierarchical build's low zooms (build_tiles on the
-    checkpointed points plus the polygon layers) and deep zooms (anchor
-    kernel) must equal the standard plan — tiles AND per-layer lineage
-    — with the default budgets and with a tiny cap forcing drops on
-    both the window cap and the anchor kernel's cap."""
-    zooms = [0, 1, 2, 3, 4, 5]
-    for cap in ("auto", 7):
-        sm, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                       max_features_per_tile=cap)
-        a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in std.collect()}
-        da = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in sm.collect()}
-        fm, hier = pipeline.build_tiles_hierarchical(
-            spark, sf_dir, zooms=zooms, anchor_z=4,
-            max_features_per_tile=cap)
-        b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in hier.collect()}
-        db = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in fm.collect()}
-        assert set(a) == set(b), f"cap={cap}"
-        diff = [k for k in a if a[k] != b[k]]
-        assert diff == [], \
-            f"cap={cap}: {len(diff)} tiles differ, e.g. {diff[:5]}"
-        assert da == db, f"cap={cap}"
+    """Low levels and the anchor level together equal every zoom on its
+    own level — tiles AND per-layer lineage — with the default budgets
+    and with a tiny cap forcing drops on both the window cap and the
+    anchor kernel's cap."""
+    for case in ("z0..5 auto", "z0..5 cap 7"):
+        _assert_level_case(spark, sf_dir, case, 4)
 
 
 def test_fused_low_polygon_only_tiles(spark, sf_dir):
     """Low-zoom tiles covered ONLY by polygon layers (no pages in range
-    — forced by a 5-doc corpus) must still be produced by the
-    hierarchical build, byte-identical to the standard path."""
-    from tegola_spark.sources import corpus
-    docs = corpus.documents(spark, sf_dir).where("doc_id < 5")
-    zooms = [0, 1, 2, 3, 4]
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms, docs=docs)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in std.collect()}
-    fm, hier = pipeline.build_tiles_hierarchical(
-        spark, sf_dir, zooms=zooms, anchor_z=4, docs=docs)
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in hier.collect()}
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
-    # some low-zoom tile has polygon layers but no pages layer
-    low = fm.where("z < 4").collect()
-    by_tile = {}
-    for r in low:
-        by_tile.setdefault((r["z"], r["x"], r["y"]), set()).add(r["layer"])
-    assert any("pages" not in ls for ls in by_tile.values()), \
-        "expected at least one polygon-only low-zoom tile"
+    — forced by a 5-doc corpus) are still produced on an anchor build,
+    byte-identical to every zoom on its own level."""
+    _assert_level_case(spark, sf_dir, "5 docs, typed tags", 4)
+
+
+def test_deep_build_one_count_no_checkpoint(spark, sf_dir, monkeypatch):
+    """A deep build counts its points once and checkpoints nothing."""
+    frame_cls = type(spark.range(1))   # the session's DataFrame class
+    calls = {"count": 0, "localCheckpoint": 0}
+    for name in calls:
+        real = getattr(frame_cls, name)
+
+        def spy(self, *a, _name=name, _real=real, **kw):
+            calls[_name] += 1
+            return _real(self, *a, **kw)
+        monkeypatch.setattr(frame_cls, name, spy)
+    pipeline.build_tiles(spark, sf_dir, zooms=[0, 1, 2, 3, 4], anchor_z=2)
+    assert calls == {"count": 1, "localCheckpoint": 0}
+
+
+@pytest.mark.parametrize("cap", ["auto", 3])
+def test_deep_build_one_point_kernel(spark, sf_dir, cap):
+    """Low levels and the anchor level share one shuffle and one
+    grouped-map kernel; a binding cap (3) adds its window after that
+    shuffle, on the one sort the grouped map needs anyway."""
+    metrics, _ = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1, 2, 3, 4],
+                                      anchor_z=2, with_polygons=False,
+                                      max_features_per_tile=cap)
+    plan = metrics._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("Exchange") == 1
+    assert plan.count("Sort [") == 1
+    assert ("Window" in plan) == (cap == 3)
 
 
 def test_typed_tag_values_bytematch_hand_built_protobuf():
@@ -294,7 +337,7 @@ def test_typed_tag_values_bytematch_hand_built_protobuf():
         "tag_enabled__b": pd.array([True, False], dtype=object),
         "tag_price__f": pd.array([19.99, 5.50], dtype="float64"),
     })
-    out = pipeline.encode_bucket(pdf, const_layer=None)
+    out = pipeline.encode_bucket(pdf)
     blob = bytes(out.iloc[0]["layer_bytes"])
 
     # hand-built Tile_Value messages, framed as layer field 4 (0x22):

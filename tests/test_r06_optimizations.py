@@ -134,11 +134,12 @@ def test_big_point_group_matches_wkb_reference():
         "tag_url": [f"https://a.example.com/{i}" for i in range(n)],
         "tag_lang": ["en"] * n,
     })
-    arrays = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
-    ref = pipeline.encode_bucket(
+    # anchor_z=1 makes z0 a low level: the group is its own tile
+    arrays = pipeline.encode_point_bucket(pdf.copy(), 1, [])
+    ref = pipeline.encode_point_bucket(
         pdf.drop(columns=["lon", "lat"]).assign(geom=[
             wkb.encode(("Point", np.array(p))) for p in zip(lon, lat)]),
-        const_layer="pages")
+        1, [])
     for col in ("layer_bytes", "n_features", "n_dropped"):
         assert arrays[col].tolist() == ref[col].tolist()
     assert int(arrays["n_features"].iloc[0]) == n

@@ -129,19 +129,21 @@ def _sink_digest(path):
 
 def _persisted(spark):
     """Ids of the persisted RDDs. Compared as sets: a leftover from an
-    earlier test (e.g. a hierarchical build's localCheckpoint) may be
-    released by Spark's ContextCleaner at any moment, so a count can
-    drop for reasons unrelated to the call under test."""
+    earlier test (e.g. a cached frame nobody unpersisted, or an
+    operator's localCheckpoint) may be released by Spark's
+    ContextCleaner at any moment, so a count can drop for reasons
+    unrelated to the call under test."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
                .toArray())
 
 
 @pytest.mark.parametrize("plan_args, max_zoom, n_batches, golden", [
+    # default anchor_z 4: every zoom is its own level
     ([], 2, 2, SF001_Z2_GOLDEN),
-    (["--hierarchical", "--anchor-z", "1"], 2, 2, SF001_Z2_GOLDEN),
+    (["--anchor-z", "1"], 2, 2, SF001_Z2_GOLDEN),
     # batch [4] spans 3 levels below its anchor
-    (["--hierarchical", "--anchor-z", "1"], 4, 3, SF001_Z4_GOLDEN),
-], ids=["standard", "hierarchical", "hierarchical_deep"])
+    (["--anchor-z", "1"], 4, 3, SF001_Z4_GOLDEN),
+], ids=["own_levels", "anchor_z1", "anchor_z1_deep"])
 def test_write_batch_writes_from_persisted_encode(spark, sf_dir, tmp_path,
                                                   monkeypatch, plan_args,
                                                   max_zoom, n_batches,
@@ -227,6 +229,21 @@ def test_seed_tile_list_unpersists_work_set(spark, sf_dir, tmp_path,
     with pytest.raises(RuntimeError, match="sink unavailable"):
         cli.main(argv + ["--out", str(tmp_path / "bad")], spark=spark)
     assert _persisted(spark) <= before
+
+
+def test_deep_seed_leaves_nothing_persisted(spark, sf_dir, tmp_path):
+    """A seed whose batches reach below the anchor level persists
+    nothing past its own run: the geocoded points are read once, so
+    no checkpoint of them is left behind. (--hierarchical is accepted
+    and changes nothing.)"""
+    from tegola_spark import cli
+
+    before = _persisted(spark)
+    assert cli.main(["seed", "--input", sf_dir, "--out",
+                     str(tmp_path / "sink"), "--min-zoom", "0",
+                     "--max-zoom", "4", "--hierarchical", "--anchor-z", "1"],
+                    spark=spark) == 0
+    assert _persisted(spark) - before == set()
 
 
 def test_existing_keys_missing_empty_and_corrupt(spark, sf_dir, tmp_path):

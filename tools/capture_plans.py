@@ -38,7 +38,7 @@ def main():
         corpus.col_lat(F.col("doc_id")).alias("lat"))
 
     def build_mvt():
-        _m, tiles = pipeline.build_tiles_hierarchical(
+        _m, tiles = pipeline.build_tiles(
             spark, sf_dir, zooms=list(range(0, 6)), docs=docs)
         return tiles.agg(F.count("*"), F.sum("tile_len"), F.sum("n_features"))
 

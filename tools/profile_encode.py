@@ -16,12 +16,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import functions as F
-
 from tegola_spark.operators import tiling
 from tegola_spark.plans import pipeline
 from tegola_spark.plans.session import get_spark
-from tegola_spark.sources import corpus
 
 
 def main():
@@ -32,44 +29,27 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     pts = pipeline.point_features(spark, sf_dir)
-    low = tiling.assign_point_tiles(pts, [0, 1, 2, 3]).select(
-        "z", "x", "y", "feature_id", "lon", "lat", "tag_url", "tag_lang")
-    pdf = low.toPandas()
-    print(f"low fan-out rows: {len(pdf)}", file=sys.stderr)
-    pdf = pdf.sort_values(["z", "x", "y", "feature_id"], kind="mergesort")
-
-    t0 = time.perf_counter()
-    out = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
-    t1 = time.perf_counter()
-    print(f"encode_bucket (low zooms, {len(out)} groups): {t1-t0:.2f}s",
-          file=sys.stderr)
-
-    prof = cProfile.Profile()
-    prof.enable()
-    pipeline.encode_bucket(pdf.copy(), const_layer="pages")
-    prof.disable()
-    st = pstats.Stats(prof)
-    st.sort_stats("cumulative").print_stats(30)
-
-    # anchor kernel (z4..5 derived from anchor_z=4)
-    anchored = tiling.assign_point_tiles(pts, [4]).select(
-        "x", "y", "feature_id", "lon", "lat", "tag_url", "tag_lang")
-    apdf = anchored.toPandas()
-    print(f"anchor rows: {len(apdf)}", file=sys.stderr)
     caps = {4: pipeline.CAP_LOW_ZOOM, 5: pipeline.CAP_HIGH_ZOOM}
-    t0 = time.perf_counter()
-    out2 = pipeline._encode_anchor_bucket(
-        apdf.copy(), 4, [4, 5], False, True, caps=caps)
-    t1 = time.perf_counter()
-    print(f"anchor encode ({len(out2)} rows): {t1-t0:.2f}s", file=sys.stderr)
+    # the point kernel with anchor_z=4: levels 0..3 are tiles, and the
+    # anchor level derives z4..5 (the rows of a z0..5 build_tiles)
+    for name, levels, deep in (("low zooms", [0, 1, 2, 3], []),
+                               ("anchor z4..5", [4], [4, 5])):
+        pdf = tiling.assign_point_tiles(pts, levels).select(
+            *pipeline.POINT_STREAM_COLS).toPandas()
+        print(f"{name}: {len(pdf)} fan-out rows", file=sys.stderr)
 
-    prof = cProfile.Profile()
-    prof.enable()
-    pipeline._encode_anchor_bucket(
-        apdf.copy(), 4, [4, 5], False, True, caps=caps)
-    prof.disable()
-    st = pstats.Stats(prof)
-    st.sort_stats("cumulative").print_stats(30)
+        t0 = time.perf_counter()
+        out = pipeline.encode_point_bucket(pdf.copy(), 4, deep, caps=caps)
+        t1 = time.perf_counter()
+        print(f"encode_point_bucket ({name}, {len(out)} tiles): "
+              f"{t1-t0:.2f}s", file=sys.stderr)
+
+        prof = cProfile.Profile()
+        prof.enable()
+        pipeline.encode_point_bucket(pdf.copy(), 4, deep, caps=caps)
+        prof.disable()
+        st = pstats.Stats(prof)
+        st.sort_stats("cumulative").print_stats(30)
     spark.stop()
 
 

@@ -8,7 +8,7 @@ imported absolutely.
     python tools/make_pyfiles.py /tmp/tegola_spark.zip
     spark-submit --py-files /tmp/tegola_spark.zip tools/submit_seed.py \
         seed --input /root/testdata/sf0.001 --out /tmp/sink \
-        --min-zoom 0 --max-zoom 3 --hierarchical
+        --min-zoom 0 --max-zoom 3
 
 On a cluster the same line works with --master yarn/k8s; the session
 factory only pins local[N] when --cpus is given (cli.py).
