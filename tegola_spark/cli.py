@@ -18,8 +18,9 @@ Semantics carried over from the reference CLI:
   * --overwrite re-seeds from scratch (the `purge` + seed flow)
   * per-(z,x,y,layer) lineage metrics land in the sink's _metrics table
 
-One evaluation per batch: each zoom batch's (metrics, tiles) frames go
-to ``sinks.write_batch``, which persists the encoded metrics frame
+The batch loop is ``streaming/checkpoint.seed_tiles``. One evaluation
+per batch: each zoom batch's (metrics, tiles) frames go to
+``sinks.write_batch``, which persists the encoded metrics frame
 before any action. The resume emptiness test, the tile write and the
 metrics write all read that one encode — the reference likewise renders
 a tile once and then stores it (cache.go:118-234). The frame is
@@ -74,9 +75,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def cmd_seed(args, spark=None) -> int:
-    from .plans import pipeline
     from .plans.session import get_spark
-    from .sources import sinks
+    from .streaming import checkpoint
 
     if args.overwrite:
         shutil.rmtree(args.out, ignore_errors=True)
@@ -102,16 +102,11 @@ def cmd_seed(args, spark=None) -> int:
             spark, args.tile_list, zooms,
             explicit=args.tile_list_explicit).cache()
 
-    recs = []
     try:
-        for i in range(0, len(zooms), args.batch_zooms):
-            batch = zooms[i:i + args.batch_zooms]
-            metrics, tiles = pipeline.build_tiles(
-                spark, args.input, zooms=batch, max_features_per_tile=cap,
-                tile_filter=tile_filter, anchor_z=args.anchor_z)
-            rec = sinks.write_batch(spark, tiles, metrics, args.out)
-            if rec is not None:
-                recs.append(rec)
+        recs = checkpoint.seed_tiles(
+            spark, args.input, args.out, zooms, batch_zooms=args.batch_zooms,
+            max_features_per_tile=cap, tile_filter=tile_filter,
+            anchor_z=args.anchor_z)
     finally:
         # the cached --tile-list work set lives exactly as long as the
         # batch loop, whether it finished or raised

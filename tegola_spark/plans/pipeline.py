@@ -2,18 +2,19 @@
 `tegola cache seed` — SURVEY.md §3.1-3.2).
 
 ONE builder, build_tiles, with one physical plan; no core count, corpus
-size or env knob picks between alternatives. Each feature stream
+size or env knob picks between alternatives. Every feature stream
 (corpus points / polygon layers / roads / debug) shuffles only its own
-columns:
+columns, and every stream takes the same plan (_stream_plan):
 
-  pages --geocode(UDF)--> points --tile fan-out over LEVELS (column
-        exprs)--> repartition(bucket of (z,x,y))
-        --> [window cap on low-level tiles, skipped when it cannot bind]
-        --> applyInPandas(encode_point_bucket)
-  polygon layers / roads / debug --bbox fan-out-->
-        [per-(tile, layer) window cap] --> repartition(bucket of
-        (z,x,y,layer)) --> applyInPandas(encode_bucket: reproject ->
-        [simplify] -> quantize -> clip -> MVT encode)
+  stream --fan-out (column exprs)--> repartition(bucket of its group key)
+         --> [window cap, after the one exchange, on its sort]
+         --> applyInPandas(encode_bucket: reproject -> [simplify] ->
+             quantize -> clip -> MVT encode)
+
+  points:  pages --geocode(UDF)--> tile fan-out over LEVELS; key
+           (z,x,y), layer "pages"; the cap window is skipped when it
+           cannot bind
+  polygon layers / roads / debug: bbox fan-out; key (z,x,y,layer)
   union of the streams' metric rows
         --> assemble_tiles: groupBy(z,x,y) binary concat, layer order
 
@@ -23,7 +24,8 @@ more level, the anchor, whose groups (one per anchor tile, with its
 buffered neighbours' points) derive and encode every descendant tile
 inside the kernel. So the points fan out, shuffle and encode once
 whatever the depth — the fixed-grid form of SpatialHadoop's
-sample-built partitions (VLDB 2015).
+sample-built partitions (VLDB 2015): partition once, then do all the
+work inside the partition.
 
 Stage-fusion decision (SURVEY.md §4 R5): the entire per-feature
 geometry chain runs inside ONE grouped-map UDF — Catalyst cannot fuse
@@ -96,27 +98,41 @@ _METRIC_COLS = ["z", "x", "y", "layer", "layer_bytes", "n_features",
                 "n_dropped", "bytes", "encode_ms"]
 
 
-def encode_bucket(pdf: pd.DataFrame, simplify: bool = False,
-                  repair: bool = True) -> pd.DataFrame:
-    """Bucketed grouped-map kernel of the layered streams: MANY
-    (z, x, y, layer) groups per UDF invocation. groupBy on the raw
-    tile-layer key pays one Python/Arrow round-trip per group — at z>=5
-    groups hold a handful of features and invocation overhead
-    dominates. Salting the shuffle key down to n_buckets amortizes
-    that, while each tile-layer is still encoded whole because the
-    bucket key is a pure function of the group key. Output rows
-    accumulate as dicts — building a 1-row pd.DataFrame per group cost
-    ~1 ms each (29k groups = 29 s, measured). The bucket is sorted ONCE
-    by (group key, feature_id) so each group arrives pre-sorted and
-    _encode_one skips its per-group mergesort."""
-    pdf = pdf.sort_values(["z", "x", "y", "layer", "feature_id"],
-                          kind="mergesort")
-    rows = [
-        _encode_one(g, time.perf_counter(),
-                    int(k[0]), int(k[1]), int(k[2]), k[3],
-                    simplify=simplify, repair=repair, presorted=True)
-        for k, g in pdf.groupby(["z", "x", "y", "layer"], sort=False)
-    ]
+def encode_bucket(pdf: pd.DataFrame, anchor_z: int | None = None,
+                  deep_zooms=(), simplify: bool = False,
+                  repair: bool = True,
+                  caps: dict | None = None) -> pd.DataFrame:
+    """The grouped-map kernel of every stream: MANY (z, x, y, layer)
+    groups per UDF invocation. groupBy on the raw tile-layer key pays
+    one Python/Arrow round-trip per group — at z>=5 groups hold a
+    handful of features and invocation overhead dominates. Salting the
+    shuffle key down to n_buckets amortizes that, while each tile-layer
+    is still encoded whole because the bucket key is a pure function of
+    the group key. Output rows accumulate as dicts — building a 1-row
+    pd.DataFrame per group cost ~1 ms each (29k groups = 29 s,
+    measured). The bucket is sorted ONCE by (group key, feature_id) so
+    each group arrives pre-sorted and _encode_one skips its per-group
+    mergesort.
+
+    A point row has no layer column; its layer is "pages". A group
+    below ``anchor_z`` (any group when it is None) is one tile; a group
+    AT ``anchor_z`` is one anchor tile, from whose points every
+    descendant tile in ``deep_zooms`` is derived and encoded under the
+    per-zoom budgets ``caps`` (_encode_anchor_tiles)."""
+    keys = ["z", "x", "y", "layer"] if "layer" in pdf.columns \
+        else ["z", "x", "y"]
+    pdf = pdf.sort_values([*keys, "feature_id"], kind="mergesort")
+    rows = []
+    for k, g in pdf.groupby(keys, sort=False):
+        z, x, y = int(k[0]), int(k[1]), int(k[2])
+        if anchor_z is None or z < anchor_z:
+            rows.append(_encode_one(
+                g, time.perf_counter(), z, x, y,
+                k[3] if len(k) > 3 else "pages",
+                simplify=simplify, repair=repair, presorted=True))
+        else:
+            rows.extend(_encode_anchor_tiles(
+                g, anchor_z, x, y, deep_zooms, simplify, repair, caps))
     return pd.DataFrame(rows, columns=_METRIC_COLS)
 
 
@@ -327,8 +343,7 @@ def _generic_features(pdf, lonlat, ext, clip_region, z, simplify, repair):
 
 def point_features(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """pages -> geocoded point features (the single-layer 'pages'
-    stream — the layer name never ships; encode_point_bucket attaches
-    it).
+    stream — the layer name never ships; encode_bucket attaches it).
 
     SoA transport: points travel as (lon, lat) double columns with no
     geom/srid/layer columns at all — no WKB codec UDF touches the
@@ -533,40 +548,42 @@ def assemble_tiles(metrics: DataFrame) -> DataFrame:
 
 def _window_cap(feats: DataFrame, keys, cap) -> DataFrame:
     """Keep the ``cap`` lowest feature ids of each window partition
-    over ``keys``; a null cap keeps the partition whole. Rank and group
-    count share one sort; the dropped count rides on the kept rows as
-    ``_cap_dropped`` for the n_dropped lineage."""
-    w = Window.partitionBy(*keys).orderBy("feature_id")
-    wc = Window.partitionBy(*keys)
+    over ``keys``. A row whose cap is null is its own partition, keyed
+    by feature_id through the ``_solo`` column, so the window neither
+    caps nor buffers it (a real column: an inline key expression costs
+    the plan one more Sort). Rank and group count share one sort; the
+    dropped count rides on the kept rows as ``_cap_dropped`` for the
+    n_dropped lineage."""
+    part = [*keys, "_solo"]
+    w = Window.partitionBy(*part).orderBy("feature_id")
+    wc = Window.partitionBy(*part)
     return (
-        feats.withColumn("_rk", F.row_number().over(w))
+        feats.withColumn("_solo", F.when(cap.isNull(), F.col("feature_id")))
+        .withColumn("_rk", F.row_number().over(w))
         .withColumn("_cap_dropped",
                     F.greatest(F.lit(0), F.count("*").over(wc) - cap))
-        .where(F.coalesce(F.col("_rk") <= cap, F.lit(True))).drop("_rk")
+        .where(F.coalesce(F.col("_rk") <= cap, F.lit(True)))
+        .drop("_rk", "_solo")
     )
 
 
-def encode_point_bucket(pdf: pd.DataFrame, anchor_z: int, deep_zooms,
-                        simplify: bool = False, repair: bool = True,
-                        caps: dict | None = None) -> pd.DataFrame:
-    """Grouped-map kernel of the point stream (the single 'pages'
-    layer, whose name never ships). The bucket is sorted ONCE by
-    (z, x, y, feature_id). A group below ``anchor_z`` is a low-level
-    tile and encodes pre-sorted; a group AT ``anchor_z`` is one anchor
-    tile, from whose points every descendant tile in ``deep_zooms`` is
-    derived and encoded (_encode_anchor_tiles)."""
-    pdf = pdf.sort_values(["z", "x", "y", "feature_id"], kind="mergesort")
-    rows = []
-    for (z, x, y), g in pdf.groupby(["z", "x", "y"], sort=False):
-        if z < anchor_z:
-            rows.append(_encode_one(
-                g, time.perf_counter(), int(z), int(x), int(y), "pages",
-                simplify=simplify, repair=repair, presorted=True))
-        else:
-            rows.extend(_encode_anchor_tiles(
-                g, anchor_z, int(x), int(y), deep_zooms, simplify, repair,
-                caps))
-    return pd.DataFrame(rows, columns=_METRIC_COLS)
+def _stream_plan(feats: DataFrame, keys, nb: int, cap, kernel) -> DataFrame:
+    """One feature stream's plan, the same for every stream: hash the
+    group ``keys`` into ``nb`` buckets, shuffle once, [cap], encode.
+
+    The explicit repartition on the bucket key is the only exchange:
+    groupBy reuses it (HashPartitioning(_bucket, n) satisfies the
+    grouped map's ClusteredDistribution), and a REPARTITION_BY_NUM
+    shuffle is exempt from AQE byte-based coalescing — which otherwise
+    shrank the python-heavy stage to bytes/1m tasks (measured 5 tasks
+    on 32 cores, round-6 profile). The window cap runs AFTER it: its
+    partition keys start with _bucket, so it adds only the
+    in-partition sort the grouped map needs anyway."""
+    feats = (feats.withColumn("_bucket", F.pmod(F.hash(*keys), F.lit(nb)))
+             .repartition(nb, "_bucket"))
+    if cap is not None:
+        feats = _window_cap(feats, ["_bucket", *keys], cap)
+    return feats.groupBy("_bucket").applyInPandas(kernel, ENCODE_SCHEMA)
 
 
 def _encode_anchor_tiles(g: pd.DataFrame, anchor_z: int, ax: int, ay: int,
@@ -713,47 +730,29 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         # documents count bounds the rows of any point-stream group
         n_pts = (docs if docs is not None
                  else corpus.documents(spark, sf_dir)).count()
-        nb = _encode_buckets(sp, n_pts * len(levels))
-        # explicit repartition on the bucket key: groupBy reuses the
-        # exchange (HashPartitioning(_bucket, n) satisfies the grouped-
-        # map's ClusteredDistribution), and a REPARTITION_BY_NUM shuffle
-        # is exempt from AQE byte-based coalescing — which otherwise
-        # shrank this python-heavy stage to bytes/1m tasks (measured 5
-        # tasks on 32 cores, round-6 profile)
-        feats = (
-            _prepare(tiling.assign_point_tiles(
-                point_features(spark, sf_dir, docs=docs), levels)
-                .select(*POINT_STREAM_COLS))
-            .withColumn("_bucket", F.pmod(F.hash("z", "x", "y"), F.lit(nb)))
-            .repartition(nb, "_bucket")
-        )
+        feats = _prepare(tiling.assign_point_tiles(
+            point_features(spark, sf_dir, docs=docs), levels)
+            .select(*POINT_STREAM_COLS))
         # exact cap-skip (round-6): assign_point_tiles emits a point to
         # a tile AT MOST ONCE (the 3x3 neighbor offsets are distinct),
         # so a low-level tile can never exceed n_pts rows — when n_pts
         # <= the smallest low-level budget the window is provably the
         # identity and its sort is pure cost. Exact, not heuristic: the
         # moment the corpus outgrows the budget the window returns.
+        # Anchor rows get a null cap; the kernel caps their derived
+        # tiles.
+        cap = None
         if rule is not None and low and n_pts > min(rule(z) for z in low):
-            # the window runs AFTER the one exchange: its clustering
-            # keys start with _bucket, so the bucket partitioning
-            # satisfies it and it adds only the in-partition sort the
-            # grouped map needs anyway. Anchor rows get a null cap and
-            # each is its own window partition (keyed by feature_id), so
-            # the window neither caps nor buffers them; the kernel caps
-            # their derived tiles.
-            below = F.col("z") < anchor_z
-            feats = _window_cap(
-                feats.withColumn("_solo", F.when(~below, F.col("feature_id"))),
-                ["_bucket", "z", "x", "y", "_solo"],
-                F.when(below, _cap_col(rule, low))).drop("_solo")
+            cap = F.when(F.col("z") < anchor_z, _cap_col(rule, low))
         caps = None if rule is None else {z: rule(z) for z in deep}
 
         def _encode_points(pdf: pd.DataFrame) -> pd.DataFrame:
-            return encode_point_bucket(pdf, anchor_z, deep, simplify,
-                                       repair_polygons, caps)
+            return encode_bucket(pdf, anchor_z, deep, simplify,
+                                 repair_polygons, caps)
 
-        outs.append(feats.groupBy("_bucket")
-                    .applyInPandas(_encode_points, ENCODE_SCHEMA))
+        outs.append(_stream_plan(
+            feats, ["z", "x", "y"], _encode_buckets(sp, n_pts * len(levels)),
+            cap, _encode_points))
 
     streams = []
     cat = None
@@ -790,22 +789,14 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
         return encode_bucket(pdf, simplify=simplify, repair=repair_polygons)
 
-    group_keys = ["z", "x", "y", "layer"]
     # bbox streams (polygons/roads) are catalog-sized by contract — a
     # full-width bucket fan costs ~120 ms of fixed python-task overhead
     # per bucket for a handful of rows each (round-6 measurement); give
     # them a quarter of the width
-    nb = max(8, sp // 4)
+    cap = None if rule is None else _cap_col(rule, zooms)
     for feats in streams:
-        feats = _prepare(feats)
-        if rule is not None:
-            feats = _window_cap(feats, group_keys, _cap_col(rule, zooms))
-        outs.append(
-            feats.withColumn(
-                "_bucket", F.pmod(F.hash(*group_keys), F.lit(nb)))
-            .repartition(nb, "_bucket")
-            .groupBy("_bucket")
-            .applyInPandas(_encode, ENCODE_SCHEMA))
+        outs.append(_stream_plan(_prepare(feats), ["z", "x", "y", "layer"],
+                                 max(8, sp // 4), cap, _encode))
     metrics = outs[0]
     for m in outs[1:]:
         metrics = metrics.unionByName(m)

@@ -61,10 +61,9 @@ def get_spark(app_name: str = "tegola_spark", cpus: int | None = None,
         # exchange), so the default stays 1m and the PYTHON-KERNEL
         # exchanges are instead pinned wide with explicit
         # repartition(n, key) (REPARTITION_BY_NUM shuffles are exempt
-        # from AQE coalescing) — see plans/pipeline.py. Env knob kept
-        # for measurement.
+        # from AQE coalescing) — see plans/pipeline.py.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PART", "1m"))
+                "1m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -81,8 +80,7 @@ def get_spark(app_name: str = "tegola_spark", cpus: int | None = None,
         # (1,153 -> 807 B/tile). Locally shuffle hits page cache so
         # bytes don't cost wall time; on a network-shuffled cluster
         # they do, and bytes-per-tile is the cluster-predictive metric.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"))
+        .config("spark.io.compression.codec", "zstd")
         # UI off by default (local-mode overhead); SPARK_GRAFT_UI=1
         # enables it so bench.py can read per-stage shuffle volumes from
         # the status REST API (the bytes-shuffled-per-tile metric)

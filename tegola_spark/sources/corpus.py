@@ -57,10 +57,7 @@ def spread_scan(df: DataFrame, key_col: str) -> DataFrame:
     row key (deterministic under retries — guide §2.5 warns off
     round-robin/rand keys) so downstream per-row work parallelizes.
     Conditional by construction: a real multi-file corpus at scale
-    already scans wider than the core count, making this a no-op;
-    SPARK_GRAFT_SCAN_SPREAD=0 forces it off."""
-    if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "1") != "1":
-        return df
+    already scans wider than the core count, making this a no-op."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() * 2 >= par:
         return df

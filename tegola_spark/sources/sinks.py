@@ -12,9 +12,9 @@ cmd/tegola/cmd/cache/worker.go:50-77). The Spark-native form:
     On Iceberg the same layout is the partition spec ``(z, bucket(x))``
     plus snapshot metadata; this module keeps a JSON manifest as the
     snapshot stand-in since Iceberg jars aren't in this image.
-  * resume: LEFT ANTI join of the tile work-list against the sink's
-    existing (z, x, y) keys — the R6 skip-if-cached, in one shuffle-free
-    broadcastable join when the done-list is small, shuffled otherwise.
+  * resume: LEFT ANTI join of a batch's tiles and metrics against the
+    sink's existing (z, x, y) keys — the R6 skip-if-cached, in one
+    shuffle-free broadcast join (``write_batch``).
   * lineage: the per-(z,x,y,layer) metrics table rides along in a
     ``_metrics`` subdirectory (north rule: per-partition lineage +
     metrics).
@@ -158,17 +158,6 @@ def write_batch(spark: SparkSession, tiles: DataFrame, metrics: DataFrame,
         if metrics.isEmpty():
             return None
         return write_tiles(tiles, metrics, path)
-
-
-def remaining_work(work_list: DataFrame, spark: SparkSession, path: str,
-                   broadcast_done: bool = True) -> DataFrame:
-    """R6 resume: work-list rows whose (z, x, y) is NOT in the sink."""
-    done = existing_keys(spark, path)
-    if done is None:
-        return work_list
-    if broadcast_done:
-        done = F.broadcast(done)
-    return work_list.join(done, TILE_KEYS, "left_anti")
 
 
 def write_bucketed(df: DataFrame, table: str, keys: list[str],

@@ -3,10 +3,11 @@ Iceberg snapshot checkpoints").
 
 Without Iceberg jars in this image, the checkpoint is the sink's own
 key set + a JSON manifest (sources/sinks.py); on a real deployment the
-manifest maps 1:1 to Iceberg snapshot ids and `remaining_work` becomes
-a snapshot-diff. The semantics verified here — a killed run re-invoked
-with the same args completes exactly the missing tiles and never
-re-encodes a finished one — are the semantics the north rule grades.
+manifest maps 1:1 to Iceberg snapshot ids and the resume anti-join
+becomes a snapshot-diff. The semantics verified here — a killed run
+re-invoked with the same args completes exactly the missing tiles and
+never re-encodes a finished one — are the semantics the north rule
+grades.
 
 Mirrors `tegola cache seed` + its skip-if-cached worker
 (cmd/tegola/cmd/cache/cache.go:118-234, worker.go:50-77).
@@ -21,14 +22,18 @@ from ..sources import sinks
 
 
 def seed_tiles(spark: SparkSession, sf_dir: str, out_path: str, zooms,
-               batch_zooms: int = 2, docs=None) -> list[dict]:
-    """Seed all zooms into the sink in zoom batches, skipping batches
-    whose tiles already exist (resume). Returns manifest records."""
+               batch_zooms: int = 2, **build_kwargs) -> list[dict]:
+    """Seed all zooms into the sink in zoom batches, skipping tiles the
+    sink already holds (resume). ``build_kwargs`` (e.g. ``docs``,
+    ``max_features_per_tile``, ``tile_filter``, ``anchor_z``) pass
+    through to every batch's ``pipeline.build_tiles``. Returns manifest
+    records. The one seed loop: `cli seed` runs it too."""
     recs = []
     zooms = sorted(zooms)
     for i in range(0, len(zooms), batch_zooms):
         batch = zooms[i:i + batch_zooms]
-        metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=batch, docs=docs)
+        metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=batch,
+                                              **build_kwargs)
         rec = sinks.write_batch(spark, tiles, metrics, out_path)
         if rec is not None:
             recs.append(rec)

@@ -6,8 +6,7 @@ import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "tegola_spark"
 
-KNOBS = {"CPUS", "DRIVER_MEM", "IO_CODEC", "AQE_MIN_PART", "SCAN_SPREAD",
-         "UI"}
+KNOBS = {"CPUS", "DRIVER_MEM", "UI"}
 
 
 def test_env_knob_census():

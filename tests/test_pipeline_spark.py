@@ -298,19 +298,34 @@ def test_deep_build_one_count_no_checkpoint(spark, sf_dir, monkeypatch):
     assert calls == {"count": 1, "localCheckpoint": 0}
 
 
-@pytest.mark.parametrize("cap", ["auto", 3])
-def test_deep_build_one_point_kernel(spark, sf_dir, cap):
-    """Low levels and the anchor level share one shuffle and one
-    grouped-map kernel; a binding cap (3) adds its window after that
-    shuffle, on the one sort the grouped map needs anyway."""
+# (streams, build options): the points alone keep the ids `auto`/`3`
+_STREAM_CASES = {
+    "": (1, dict(with_polygons=False)),
+    "polygons-": (2, dict()),
+    "polygons-roads-debug-": (4, dict(with_roads=True, with_debug=True)),
+}
+
+
+@pytest.mark.parametrize("case,cap", [
+    pytest.param(case, cap, id=f"{case}{cap}")
+    for case in _STREAM_CASES for cap in ("auto", 3)])
+def test_deep_build_one_point_kernel(spark, sf_dir, case, cap):
+    """Every stream takes one exchange into one grouped-map kernel:
+    the points' low levels and anchor level share theirs, and each
+    layered stream (polygons, roads, debug) has its own. A window cap
+    runs after that exchange, on the one sort the grouped map needs
+    anyway, so Exchange = Sort = FlatMapGroupsInPandas = streams with
+    and without a binding cap (3)."""
+    n_streams, kw = _STREAM_CASES[case]
     metrics, _ = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1, 2, 3, 4],
-                                      anchor_z=2, with_polygons=False,
-                                      max_features_per_tile=cap)
+                                      anchor_z=2, max_features_per_tile=cap,
+                                      **kw)
     plan = metrics._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1
-    assert plan.count("Exchange") == 1
-    assert plan.count("Sort [") == 1
-    assert ("Window" in plan) == (cap == 3)
+    assert plan.count("FlatMapGroupsInPandas") == n_streams
+    assert plan.count("Exchange") == n_streams
+    assert plan.count("Sort [") == n_streams
+    # the layered streams always cap; the points only when it can bind
+    assert ("Window" in plan) == (cap == 3 or n_streams > 1)
 
 
 def test_typed_tag_values_bytematch_hand_built_protobuf():

@@ -135,8 +135,8 @@ def test_big_point_group_matches_wkb_reference():
         "tag_lang": ["en"] * n,
     })
     # anchor_z=1 makes z0 a low level: the group is its own tile
-    arrays = pipeline.encode_point_bucket(pdf.copy(), 1, [])
-    ref = pipeline.encode_point_bucket(
+    arrays = pipeline.encode_bucket(pdf.copy(), 1, [])
+    ref = pipeline.encode_bucket(
         pdf.drop(columns=["lon", "lat"]).assign(geom=[
             wkb.encode(("Point", np.array(p))) for p in zip(lon, lat)]),
         1, [])

@@ -33,17 +33,6 @@ def test_seed_and_resume(spark, sf_dir, tmp_path):
     assert len(open(manifest).readlines()) == len(recs) + len(recs2)
 
 
-def test_remaining_work(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "sink2")
-    work = spark.createDataFrame(
-        [(0, 0, 0), (1, 0, 0), (1, 1, 1)], "z int, x long, y long")
-    # empty sink -> everything remains
-    assert sinks.remaining_work(work, spark, out).count() == 3
-    checkpoint.seed_tiles(spark, sf_dir, out, zooms=[0])
-    rem = sinks.remaining_work(work, spark, out).collect()
-    assert {(r["z"], r["x"], r["y"]) for r in rem} == {(1, 0, 0), (1, 1, 1)}
-
-
 def test_manifest_counts_batch_not_whole_sink(spark, sf_dir, tmp_path):
     """write_tiles must count the batch being written, not rescan all
     historical output (a full sink read per batch at scale)."""

@@ -39,14 +39,14 @@ def main():
         print(f"{name}: {len(pdf)} fan-out rows", file=sys.stderr)
 
         t0 = time.perf_counter()
-        out = pipeline.encode_point_bucket(pdf.copy(), 4, deep, caps=caps)
+        out = pipeline.encode_bucket(pdf.copy(), 4, deep, caps=caps)
         t1 = time.perf_counter()
-        print(f"encode_point_bucket ({name}, {len(out)} tiles): "
+        print(f"encode_bucket ({name}, {len(out)} tiles): "
               f"{t1-t0:.2f}s", file=sys.stderr)
 
         prof = cProfile.Profile()
         prof.enable()
-        pipeline.encode_point_bucket(pdf.copy(), 4, deep, caps=caps)
+        pipeline.encode_bucket(pdf.copy(), 4, deep, caps=caps)
         prof.disable()
         st = pstats.Stats(prof)
         st.sort_stats("cumulative").print_stats(30)
