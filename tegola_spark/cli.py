@@ -16,14 +16,18 @@ Semantics carried over from the reference CLI:
   * resume: re-invoking with the same --out completes only missing
     tiles (skip-if-cached, worker.go:50-77) via the sink anti-join
   * --overwrite re-seeds from scratch (the `purge` + seed flow)
-  * per-(z,x,y,layer) lineage metrics land in the sink's _metrics table
+  * per-(z,x,y,layer) lineage metrics (counts, bytes, encode time; no
+    layer blobs — each tile is stored once, in tiles/) land in the
+    sink's _metrics table, and each batch's manifest record carries a
+    per-(layer, z) build report (sinks.build_report)
 
 The batch loop is ``streaming/checkpoint.seed_tiles``. One evaluation
 per batch: each zoom batch's (metrics, tiles) frames go to
 ``sinks.write_batch``, which persists the encoded metrics frame
-before any action. The resume emptiness test, the tile write and the
-metrics write all read that one encode — the reference likewise renders
-a tile once and then stores it (cache.go:118-234). The frame is
+before any action. The build report (which doubles as the resume
+emptiness test), the tile write and the lineage write all read that
+one encode — the reference likewise renders a tile once and then
+stores it (cache.go:118-234). The frame is
 unpersisted when the batch ends, whether written, skipped or failed.
 A --tile-list work set is cached once for the whole batch loop and
 unpersisted when the loop ends, also when it raises.

@@ -14,7 +14,9 @@ columns, and every stream takes the same plan (_stream_plan):
   points:  pages --geocode(UDF)--> tile fan-out over LEVELS; key
            (z,x,y), layer "pages"; the cap window is skipped when it
            cannot bind
-  polygon layers / roads / debug: bbox fan-out; key (z,x,y,layer)
+  polygon layers / roads / debug: bbox fan-out; key (z,x,y,layer);
+           the cap window is skipped when it cannot bind (source
+           footer row count, or one debug feature, <= the budget)
   union of the streams' metric rows
         --> assemble_tiles: groupBy(z,x,y) binary concat, layer order
 
@@ -727,9 +729,15 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     if with_points:
         # point-row count, derived here so no caller-supplied count can
         # change output: one geocoded point per document, so the
-        # documents count bounds the rows of any point-stream group
-        n_pts = (docs if docs is not None
-                 else corpus.documents(spark, sf_dir)).count()
+        # documents count bounds the rows of any point-stream group.
+        # The corpus scan is counted from its parquet footers (no job);
+        # a caller's frame, or a non-local corpus, takes a count job.
+        n_pts = None
+        if docs is None:
+            docs = corpus.documents(spark, sf_dir)
+            n_pts = corpus.footer_rows(docs)
+        if n_pts is None:
+            n_pts = docs.count()
         feats = _prepare(tiling.assign_point_tiles(
             point_features(spark, sf_dir, docs=docs), levels)
             .select(*POINT_STREAM_COLS))
@@ -754,6 +762,11 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
             feats, ["z", "x", "y"], _encode_buckets(sp, n_pts * len(levels)),
             cap, _encode_points))
 
+    # the layered streams as (features, bound): the bound is the most
+    # rows any (z, x, y, layer) group of the stream can hold, or None
+    # when it cannot be read. assign_bbox_tiles emits a feature to a
+    # tile at most once, so a bbox stream's source row count bounds its
+    # groups; a debug group is one feature.
     streams = []
     cat = None
     if with_polygons or with_roads:
@@ -761,27 +774,29 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         # static config — driver-side read, no per-build collect job
         cat = layers.layer_zoom_ranges()
     if with_polygons:
-        polys = tiling.assign_bbox_tiles(polygon_features(spark, sf_dir), zooms)
+        src = polygon_features(spark, sf_dir)
+        polys = tiling.assign_bbox_tiles(src, zooms)
         cond = None
         for name, (lo, hi) in cat.items():
             c = (F.col("layer") == name) & (F.col("z") >= lo) & (F.col("z") <= hi)
             cond = c if cond is None else (cond | c)
-        streams.append(polys.where(cond).select(
+        streams.append((polys.where(cond).select(
             "z", "x", "y", "layer", "feature_id", *POLY_SOA_COLS,
-            "tag_name"))
+            "tag_name"), corpus.footer_rows(src)))
     if with_roads:
         # LineString stream: same bbox fan-out + SoA transport as the
         # polygon layers; the encode kernel routes gkind=LINESTRING
         # through reproject -> quantize -> G2 clip walk -> E1-E4 emit
         lo, hi = cat.get("roads", (0, grid.MAX_Z))
-        roads = tiling.assign_bbox_tiles(layers.road_layer(spark, sf_dir),
-                                         zooms)
-        streams.append(
+        src = layers.road_layer(spark, sf_dir)
+        roads = tiling.assign_bbox_tiles(src, zooms)
+        streams.append((
             roads.where((F.col("z") >= lo) & (F.col("z") <= hi)).select(
                 "z", "x", "y", "layer", "feature_id", *POLY_SOA_COLS,
-                F.col("name").alias("tag_name")))
+                F.col("name").alias("tag_name")),
+            corpus.footer_rows(src)))
     if with_debug:
-        streams.append(debug_features(spark, zooms))
+        streams.append((debug_features(spark, zooms), 1))
     if not streams and not outs:
         raise ValueError("build_tiles: nothing to build "
                          "(no points, polygons or debug layers)")
@@ -792,9 +807,14 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     # bbox streams (polygons/roads) are catalog-sized by contract — a
     # full-width bucket fan costs ~120 ms of fixed python-task overhead
     # per bucket for a handful of rows each (round-6 measurement); give
-    # them a quarter of the width
-    cap = None if rule is None else _cap_col(rule, zooms)
-    for feats in streams:
+    # them a quarter of the width. The cap window is skipped, as the
+    # point stream's is, when the stream's group bound cannot exceed
+    # the smallest budget over its zooms.
+    for feats, bound in streams:
+        cap = None
+        if rule is not None and (bound is None
+                                 or bound > min(rule(z) for z in zooms)):
+            cap = _cap_col(rule, zooms)
         outs.append(_stream_plan(_prepare(feats), ["z", "x", "y", "layer"],
                                  max(8, sp // 4), cap, _encode))
     metrics = outs[0]

@@ -26,6 +26,7 @@ is the stand-in for the geocoder the north star requires.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -71,6 +72,25 @@ def spread_scan(df: DataFrame, key_col: str) -> DataFrame:
     if n_bytes < _SPREAD_MIN_BYTES:
         return df
     return df.repartition(par, F.col(key_col))
+
+
+def footer_rows(df: DataFrame) -> int | None:
+    """Row count of a frame whose rows are its parquet files' rows (a
+    scan, projections of scans, unions of distinct scans), summed from
+    the file footers on the driver: exact, and no Spark job. None when a
+    file is not local (s3a://, hdfs://, ...) or cannot be read, so the
+    caller counts with a job instead."""
+    import pyarrow.parquet as pq
+
+    n = 0
+    for f in df.inputFiles():
+        if not f.startswith("file:"):
+            return None
+        try:
+            n += pq.read_metadata(unquote(urlparse(f).path)).num_rows
+        except OSError:
+            return None
+    return n
 
 
 def documents(spark: SparkSession, sf_dir: str) -> DataFrame:

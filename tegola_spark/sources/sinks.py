@@ -17,10 +17,18 @@ cmd/tegola/cmd/cache/worker.go:50-77). The Spark-native form:
     shuffle-free broadcast join (``write_batch``).
   * lineage: the per-(z,x,y,layer) metrics table rides along in a
     ``_metrics`` subdirectory (north rule: per-partition lineage +
-    metrics).
+    metrics) — lineage columns only (z, x, y, layer, n_features,
+    n_dropped, bytes, encode_ms). The layer blobs are already
+    concatenated into ``tiles/``, so each tile is stored once, as
+    tegola stores one blob per cache key.
+  * build report: each manifest record carries a per-(layer, z)
+    ``report`` — tile, feature and dropped counts, byte sum and max,
+    and encode time in the buckets of tegola's per-(map, layer, z)
+    histograms (provider/postgis/postgis.go:110-138) — plus the count
+    of tiles past the 500 KB advisory size (server/server.go:18-20).
   * one evaluation per batch: a batch's tiles and metrics come from
     one encode; ``write_batch`` persists the metrics frame so the
-    emptiness test and both writes read it instead of re-running the
+    report aggregate and both writes read it instead of re-running the
     encode once per action (tegola renders a tile once, then stores
     it — cmd/tegola/cmd/cache/cache.go:118-234).
 """
@@ -36,6 +44,12 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 TILE_KEYS = ["z", "x", "y"]
+# tegola's advisory tile size: larger tiles are logged, not truncated
+# (MaxTileSize, server/server.go:18-20)
+MAX_TILE_SIZE = 500_000
+# upper bounds, in seconds, of tegola's per-(map, layer, z) latency
+# histogram buckets (provider/postgis/postgis.go:110-138)
+ENCODE_S_BUCKETS = (0.1, 1, 5, 20)
 # the sink's key columns as written by write_tiles (z is the partition
 # column); declared so a sink directory holding no data files yet (a
 # first batch killed before its commit) reads as an empty key set
@@ -60,32 +74,39 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
-                mode: str = "append") -> dict:
-    """Write the tile table + metrics table + a manifest entry.
+                mode: str = "append", report: list | None = None) -> dict:
+    """Write the tile table, the lineage table and a manifest entry.
+
+    ``_metrics`` gets the metrics frame without its ``layer_bytes``
+    blob (the tile table holds those bytes); a frame without the blob,
+    such as a re-read ``_metrics`` table, is written as it is.
 
     Returns the manifest record (the Iceberg-snapshot stand-in). The
-    manifest counts THIS batch via ``observe()``: the counters are
-    collected by the same job that writes the tile files, so counting
-    adds no pass of its own, and cumulative totals come from summing
-    manifest records — re-scanning the whole sink per batch is a full
-    read of all historical output (reviewed round 1).
+    manifest counts THIS batch via ``observe()``: the counters (tiles,
+    zooms, bytes, tiles past ``MAX_TILE_SIZE``) are collected by the
+    same job that writes the tile files, so counting adds no pass of
+    its own, and cumulative totals come from summing manifest records —
+    re-scanning the whole sink per batch is a full read of all
+    historical output (reviewed round 1). ``report`` (``build_report``
+    rows) is recorded as given.
 
     The two writes are two Spark actions. Over an un-persisted build
     each one re-runs the encode; ``write_batch`` is the caller that
-    makes them (and its emptiness test) share one evaluation."""
+    makes them (and its report) share one evaluation."""
     from pyspark.sql import Observation
 
     exprs = [F.count(F.lit(1)).alias("n"), F.collect_set("z").alias("zs")]
     if "tile_bytes" in tiles.columns:
-        exprs.append(F.coalesce(F.sum(F.length("tile_bytes")), F.lit(0))
-                     .alias("n_bytes"))
+        size = F.length("tile_bytes")
+        exprs += [F.coalesce(F.sum(size), F.lit(0)).alias("n_bytes"),
+                  F.count(F.when(size > MAX_TILE_SIZE, 1)).alias("n_big")]
     obs = Observation()
     (tiles.observe(obs, *exprs)
      .repartition("z")
      .sortWithinPartitions("x", "y")
      .write.mode(mode).partitionBy("z").parquet(os.path.join(path, "tiles")))
     batch = obs.get
-    (metrics
+    (metrics.drop("layer_bytes")
      .write.mode(mode).partitionBy("z").parquet(os.path.join(path, "_metrics")))
     manifest = os.path.join(path, "manifest.jsonl")
     prev_total = 0
@@ -107,6 +128,9 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
     }
     if "n_bytes" in batch:
         rec["n_bytes"] = int(batch["n_bytes"])
+        rec["n_tiles_over_500kb"] = int(batch["n_big"])
+    if report is not None:
+        rec["report"] = report
     with open(manifest, "a") as f:
         f.write(json.dumps(rec) + "\n")
     return rec
@@ -139,25 +163,55 @@ def persisted(metrics: DataFrame):
         metrics.unpersist()
 
 
+def build_report(metrics: DataFrame) -> list:
+    """The build report of a metrics frame: one small aggregate (one
+    job) grouped by (layer, z), collected as dicts sorted by (layer, z)
+    — tiles, features and dropped features, the sum and max of the
+    layer bytes, and ``encode_s_le``, the cumulative count of layers
+    encoded within each of ``ENCODE_S_BUCKETS`` seconds (Prometheus
+    ``le`` form; "+Inf" is every layer)."""
+    le = {str(b): F.count(F.when(F.col("encode_ms") <= b * 1000.0, 1))
+          for b in ENCODE_S_BUCKETS}
+    rows = (metrics.groupBy("layer", "z")
+            .agg(F.count(F.lit(1)).alias("tiles"),
+                 F.sum("n_features").alias("features"),
+                 F.sum("n_dropped").alias("dropped"),
+                 F.sum("bytes").alias("bytes"),
+                 F.max("bytes").alias("max_bytes"),
+                 *(c.alias("le_" + b) for b, c in le.items()))
+            .collect())
+    out = []
+    for r in sorted(rows, key=lambda r: (r["layer"], r["z"])):
+        d = {k: r[k] for k in ("layer", "z", "tiles", "features", "dropped",
+                                "bytes", "max_bytes")}
+        d["encode_s_le"] = {**{b: r["le_" + b] for b in le},
+                            "+Inf": r["tiles"]}
+        out.append(d)
+    return out
+
+
 def write_batch(spark: SparkSession, tiles: DataFrame, metrics: DataFrame,
                 path: str) -> dict | None:
     """Write one seed batch of a build's (metrics, tiles) frames,
     skipping tiles the sink already holds (R6 resume). Returns the
-    manifest record, or None when nothing is left to write.
+    manifest record, with the batch's ``build_report``, or None when
+    nothing is left to write.
 
-    The metrics frame is persisted before any action, so the emptiness
-    test, the tile write and the metrics write evaluate the encode once.
-    Tiles and metrics share their (z, x, y) keys, so the batch is empty
-    exactly when the remaining metrics are."""
+    The metrics frame is persisted before any action, so the report
+    aggregate, the tile write and the lineage write evaluate the encode
+    once. Tiles and metrics share their (z, x, y) keys, so the batch is
+    empty exactly when the report of the remaining metrics has no
+    rows."""
     with persisted(metrics):
         done = existing_keys(spark, path)
         if done is not None:
             done = F.broadcast(done)
             tiles = tiles.join(done, TILE_KEYS, "left_anti")
             metrics = metrics.join(done, TILE_KEYS, "left_anti")
-        if metrics.isEmpty():
+        report = build_report(metrics)
+        if not report:
             return None
-        return write_tiles(tiles, metrics, path)
+        return write_tiles(tiles, metrics, path, report=report)
 
 
 def write_bucketed(df: DataFrame, table: str, keys: list[str],

@@ -51,13 +51,16 @@ def affected_tiles(spark: SparkSession, new_docs: DataFrame, sf_dir: str,
 
 def _write_versioned(tiles: DataFrame, metrics: DataFrame, out_path: str,
                      batch_id: int) -> None:
-    """Append one micro-batch's tiles and metrics, tagged ``_batch``.
-    Both writes read the one persisted encode (``sinks.persisted``)."""
+    """Append one micro-batch's tiles and lineage, tagged ``_batch``.
+    Both writes read the one persisted encode (``sinks.persisted``);
+    the lineage leaves out the layer blobs, as ``sinks.write_tiles``
+    does."""
     with sinks.persisted(metrics):
         (tiles.withColumn("_batch", F.lit(int(batch_id)))
          .repartition("z").sortWithinPartitions("x", "y")
          .write.mode("append").partitionBy("z").parquet(f"{out_path}/tiles"))
-        (metrics.withColumn("_batch", F.lit(int(batch_id)))
+        (metrics.drop("layer_bytes")
+         .withColumn("_batch", F.lit(int(batch_id)))
          .write.mode("append").partitionBy("z").parquet(f"{out_path}/_metrics"))
 
 

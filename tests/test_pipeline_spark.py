@@ -284,7 +284,10 @@ def test_fused_low_polygon_only_tiles(spark, sf_dir):
 
 
 def test_deep_build_one_count_no_checkpoint(spark, sf_dir, monkeypatch):
-    """A deep build counts its points once and checkpoints nothing."""
+    """A deep build counts its points at most once and checkpoints
+    nothing: the corpus it reads itself is counted from its parquet
+    footers (no count job), a caller's documents frame with one
+    count()."""
     frame_cls = type(spark.range(1))   # the session's DataFrame class
     calls = {"count": 0, "localCheckpoint": 0}
     for name in calls:
@@ -295,6 +298,10 @@ def test_deep_build_one_count_no_checkpoint(spark, sf_dir, monkeypatch):
             return _real(self, *a, **kw)
         monkeypatch.setattr(frame_cls, name, spy)
     pipeline.build_tiles(spark, sf_dir, zooms=[0, 1, 2, 3, 4], anchor_z=2)
+    assert calls == {"count": 0, "localCheckpoint": 0}
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    pipeline.build_tiles(spark, sf_dir, zooms=[0, 1, 2, 3, 4], anchor_z=2,
+                         docs=docs)
     assert calls == {"count": 1, "localCheckpoint": 0}
 
 
@@ -315,7 +322,8 @@ def test_deep_build_one_point_kernel(spark, sf_dir, case, cap):
     layered stream (polygons, roads, debug) has its own. A window cap
     runs after that exchange, on the one sort the grouped map needs
     anyway, so Exchange = Sort = FlatMapGroupsInPandas = streams with
-    and without a binding cap (3)."""
+    and without a binding cap (3). A stream whose groups cannot reach
+    the budget (every stream here under "auto") has no window."""
     n_streams, kw = _STREAM_CASES[case]
     metrics, _ = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1, 2, 3, 4],
                                       anchor_z=2, max_features_per_tile=cap,
@@ -324,8 +332,9 @@ def test_deep_build_one_point_kernel(spark, sf_dir, case, cap):
     assert plan.count("FlatMapGroupsInPandas") == n_streams
     assert plan.count("Exchange") == n_streams
     assert plan.count("Sort [") == n_streams
-    # the layered streams always cap; the points only when it can bind
-    assert ("Window" in plan) == (cap == 3 or n_streams > 1)
+    # a stream caps only when its budget can bind: every stream at 3
+    # but debug (one feature per group), none under "auto"
+    assert ("Window" in plan) == (cap == 3)
 
 
 def test_typed_tag_values_bytematch_hand_built_protobuf():
