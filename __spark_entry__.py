@@ -1052,7 +1052,7 @@ def q_similarity_ivf(spark, sf_dir):
     Lloyd iterations), sequential-fold distances, ties on centroid
     rank — DuckDB replays centroids, cell assignment, nprobe probing
     and the exact cosine re-rank bit-for-bit. The Lloyd-trained
-    variant (similarity.ivf_ann_topk) remains the throughput path,
+    variant (similarity.ivf_ann_topk_df) remains the throughput path,
     recall-tested in tests/."""
     from tegola_spark.operators import similarity
 
@@ -2013,12 +2013,12 @@ def _ell_y_sql(lat: str) -> str:
 
 
 def _wx_sql(lon: str, nd: str) -> str:
-    """tiling.col_world_x: ((lon + 180) / 360) * n."""
+    """tiling.col_world_x_n: ((lon + 180) / 360) * n."""
     return f"(((({lon}) + 180.0) / 360.0) * {nd})"
 
 
 def _wy_sql(lat: str, nd: str) -> str:
-    """tiling.col_world_y: (0.5 - ln(tan(pi/4 + (lat*(pi/180))/2)) /
+    """tiling.col_world_y_n: (0.5 - ln(tan(pi/4 + (lat*(pi/180))/2)) /
     (2 pi)) * n."""
     ymerc = f"ln(tan({_QPI} + (({lat}) * {_RAD}) / 2.0))"
     return f"((0.5 - {ymerc} / {_TWO_PI}) * {nd})"

@@ -201,7 +201,9 @@ def _shuffle_totals(spark):
             timeout=10))
         return {"write": sum(s.get("shuffleWriteBytes", 0) for s in stages),
                 "read": sum(s.get("shuffleReadBytes", 0) for s in stages)}
-    except Exception:
+    except (OSError, ValueError, KeyError, IndexError):
+        # unreachable UI (URLError is an OSError), a body that is not
+        # JSON, or no application listed; any other error is a bug here
         return None
 
 

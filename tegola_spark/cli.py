@@ -3,9 +3,10 @@
 The reference's batch mode enumerates every tile in a bounds x zoom
 range and renders it under a worker pool
 (cmd/tegola/cmd/cache/seed_purge.go:206-266, cache.go:118-234); this is
-the same job as one spark-submit invocation:
+the same job as one spark-submit invocation (spark-submit runs a script,
+so the entry is the tools/submit_seed.py shim):
 
-    spark-submit --py-files tegola_spark.zip -m tegola_spark.cli \\
+    spark-submit --py-files tegola_spark.zip tools/submit_seed.py \\
         seed --input /data/corpus --out /sinks/tiles \\
         --min-zoom 0 --max-zoom 10 [--cpus N]
 
@@ -55,7 +56,10 @@ def build_parser() -> argparse.ArgumentParser:
     seed.add_argument("--min-zoom", type=int, default=0)
     seed.add_argument("--max-zoom", type=int, default=5)
     seed.add_argument("--cpus", type=int, default=None,
-                      help="local[N] cores (default: let spark-submit decide)")
+                      help="pin the master to local[N]; without it the "
+                           "master given to spark-submit stays, unless "
+                           "SPARK_GRAFT_CPUS is set (then local[that]) or "
+                           "there is no spark-submit (then local[all cores])")
     seed.add_argument("--batch-zooms", type=int, default=2,
                       help="zoom levels per write batch (resume granularity)")
     seed.add_argument("--hierarchical", action="store_true",

@@ -8,8 +8,8 @@ vendor/.../geom/slippy/tile.go). Properties we rely on:
 
   * hierarchical: parent(cell) = (res-1, x>>1, y>>1)  (slippy/tile.go:76-84)
   * equal-area-ish per row, deterministic, pure integer arithmetic
-  * ring expansion: chebyshev ring k around (x, y) with x wraparound
-  * cover(bbox): inclusive tile range (slippy/tile.go:111-145)
+  * cell assignment agrees with tile assignment at the same level
+    (the slippy nudged conversion, grid.col_lon2num/col_lat2num)
 
 Cell id packing (64-bit, SQL-expressible so the DuckDB oracle can
 reproduce it with plain arithmetic):
@@ -36,13 +36,6 @@ except ImportError:  # pragma: no cover
     Column = None
 
 
-def cell_id(res: int, x, y):
-    """Pack (res, x, y) -> int64 cell id."""
-    x = np.asarray(x, dtype=np.int64)
-    y = np.asarray(y, dtype=np.int64)
-    return np.int64(res) * _RES_MULT + x * _XY_MULT + y
-
-
 def cell_decode(cell):
     """int64 cell id -> (res, x, y)."""
     cell = np.asarray(cell, dtype=np.int64)
@@ -52,75 +45,12 @@ def cell_decode(cell):
     return res, x, y
 
 
-def cell_from_lonlat(lon, lat, res: int):
-    """Vectorized lon/lat -> cell id at resolution ``res``.
-
-    Uses the slippy nudged conversion (grid.lon2num/lat2num) so cell
-    assignment agrees with tile assignment at the same level.
-    """
-    x = grid.lon2num(lon, res)
-    y = grid.lat2num(lat, res)
-    return cell_id(res, x, y)
-
-
-def cell_parent(cell, dres: int = 1):
-    """Ancestor cell dres levels up — slippy/tile.go:76-84 semantics."""
-    res, x, y = cell_decode(cell)
-    return cell_id(0, x >> dres, y >> dres) + (res - dres) * _RES_MULT
-
-
-def cell_ring(res: int, x: int, y: int, k: int):
-    """Cells at chebyshev distance exactly k (k=0 -> the cell itself).
-
-    x wraps around the antimeridian (mod 2^res); y is clamped to the
-    grid (no wrap over the poles). Deterministic ordering: row-major
-    over (dy, dx). This is the kNN ring-expansion primitive
-    (BASELINE.json north_star; no tegola precedent — SURVEY.md §7.4(7)).
-    """
-    n = 1 << res
-    out = []
-    if k == 0:
-        return [cell_id(res, x, y)]
-    for dy in range(-k, k + 1):
-        yy = y + dy
-        if yy < 0 or yy >= n:
-            continue
-        if abs(dy) == k:
-            dxs = range(-k, k + 1)
-        else:
-            dxs = (-k, k)
-        for dx in dxs:
-            xx = (x + dx) % n
-            out.append(cell_id(res, xx, yy))
-    return out
-
-
-def cell_disk(res: int, x: int, y: int, k: int):
-    """All cells within chebyshev distance k (the union of rings 0..k)."""
-    out = []
-    for i in range(k + 1):
-        out.extend(cell_ring(res, x, y, i))
-    return out
-
-
-def cover_bbox(min_lon, min_lat, max_lon, max_lat, res: int):
-    """Cells covering a lon/lat bbox at ``res`` (inclusive tile range,
-    slippy/tile.go:111-145). Small covers only — used for the broadcast
-    side of the two-phase spatial join; caller bounds the result size."""
-    x0, x1, y0, y1 = grid.tile_range_for_bounds(min_lon, min_lat, max_lon, max_lat, res)
-    return [
-        int(cell_id(res, x, y))
-        for x in range(x0, x1 + 1)
-        for y in range(y0, y1 + 1)
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Spark column expressions
 # ---------------------------------------------------------------------------
 
 def col_cell_from_lonlat(lon: "Column", lat: "Column", res: int) -> "Column":
-    """Column form of :func:`cell_from_lonlat` — plain arithmetic so the
+    """lon/lat -> cell id at ``res`` — plain arithmetic so the
     expression stays in WholeStageCodegen AND is reproducible in the
     DuckDB oracle: res*2^52 + x*2^26 + y."""
     x = grid.col_lon2num(lon, res)

@@ -1,14 +1,13 @@
-"""Job config handling (reference P12 + F5 layer catalog).
+"""Typed config values with env-var substitution (reference P12).
 
 Env-var substitution semantics from internal/env/parse.go:11-44:
 ``${VAR}`` references are replaced from the environment anywhere in
 config strings; a missing variable is an error (EnvVar required).
 ``${VAR:-default}`` extension: fall back to a default (tegola's env
 package has typed defaults; the shell-style spelling is clearer here).
-
-The config dict itself is plain data: maps -> layers -> provider sql /
-zoom ranges / toggles, mirroring the TOML layout (config/config.go:51-70,
-provider/map_layer.go:11-28).
+:class:`EnvDict` layers the reference's typed accessors over that.
+No output path reads a config file yet; the module stays for the
+reference env-dict table (tests/test_env_dict.py).
 """
 
 from __future__ import annotations
@@ -148,22 +147,3 @@ class EnvDict(dict):
     def float_slice(self, key):
         return self._slice(key, float, float)
 
-
-def validate_map_config(cfg: dict) -> None:
-    """Config-time checks mirroring config/config.go:159-336: unique
-    layer names per map; zoom ranges sane; overlapping zooms for the
-    same layer name are an error (config.go:293-303)."""
-    for map_name, m in cfg.get("maps", {}).items():
-        seen: dict[str, list[tuple[int, int]]] = {}
-        for layer in m.get("layers", []):
-            name = layer["name"]
-            lo = int(layer.get("min_zoom", 0))
-            hi = int(layer.get("max_zoom", 22))
-            if lo > hi or lo < 0 or hi > 22:
-                raise ValueError(f"{map_name}/{name}: bad zoom range {lo}..{hi}")
-            for (plo, phi) in seen.get(name, []):
-                if lo <= phi and hi >= plo:
-                    raise ValueError(
-                        f"{map_name}/{name}: overlapping zoom ranges "
-                        f"{lo}..{hi} vs {plo}..{phi}")
-            seen.setdefault(name, []).append((lo, hi))

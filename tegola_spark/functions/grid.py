@@ -1,13 +1,14 @@
 """Slippy tile grid math (reference operators T1-T7, P4, P7).
 
 Semantics derived from go-spatial/tegola:
-  - Deg2Num / Num2Deg            tile.go:110-132
+  - Deg2Num / Num2Deg (lon)      tile.go:110-123
   - slippy lat/lon->tile with the float nudge + lat clamp
                                  vendor/.../geom/slippy/maths.go:19-135
   - tile -> web-mercator extent  tile.go:76-108 (max = 20037508.34)
   - buffered pixel bounds        tile.go:104-107  ([-64,-64,4160,4160])
-  - ZRes / ZEpislon              tile.go:204-228
-  - parent/child tiles           vendor/.../geom/slippy/tile.go:76-104
+  - ZEpislon                     tile.go:213-228
+  - tile-list ancestor/descendant spans
+                                 vendor/.../geom/slippy/tile.go:76-104
   - bounds -> tile range         vendor/.../geom/slippy/tile.go:111-145
 
 Every function exists twice:
@@ -38,8 +39,6 @@ MAX_Z = 22
 
 # Web-mercator half-world used by tegola's Tile.Init — tile.go:77
 WEBMERCATOR_MAX = 20037508.34
-# Equator length used by ZRes — tile.go:207-210
-EQUATOR = 40075016.6855785
 
 # slippy clamp + nudge constants — vendor/.../slippy/maths.go:19-38
 LAT_MAX = 85.05112
@@ -51,22 +50,6 @@ TILE_SIZE = 256.0
 # ---------------------------------------------------------------------------
 # NumPy mirrors (vectorized; scalars work too)
 # ---------------------------------------------------------------------------
-
-def deg2num(lon, lat, z):
-    """T1: lon/lat -> (x, y) tile, tegola's own formula (tile.go:110-115).
-
-    No clamps, no nudge — int(floor(.)) semantics. Vectorized.
-    """
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    n = np.exp2(float(z))
-    x = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
-    rad = lat * math.pi / 180.0
-    y = np.floor(
-        (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / math.pi) / 2.0 * n
-    ).astype(np.int64)
-    return x, y
-
 
 def lon2num(lon, z):
     """T2 (x): slippy lon->tile with clamp + 1e-6 nudge.
@@ -108,13 +91,6 @@ def tile2lon(x, z):
     """Num2Deg lon — tile.go:123."""
     x = np.asarray(x, dtype=np.float64)
     return x / np.exp2(float(z)) * 360.0 - 180.0
-
-
-def tile2lat(y, z):
-    """Num2Deg lat — tile.go:125-132 (n = pi when y == 0)."""
-    y = np.asarray(y, dtype=np.float64)
-    n = np.where(y == 0, math.pi, math.pi - 2.0 * math.pi * y / np.exp2(float(z)))
-    return 180.0 / math.pi * np.arctan(0.5 * (np.exp(n) - np.exp(-n)))
 
 
 def tile_extent(z, x, y):
@@ -161,19 +137,6 @@ def merc_y_spherical(lat):
     return SPHERICAL_R * np.log(np.tan(math.pi / 4.0 + lat * math.pi / 360.0))
 
 
-def x2deg_spherical(x):
-    """Inverse spherical mercator x -> lon (proj.Inverse path used by
-    the map-bounds check, server/handle_map_layer_zxy.go:154-182)."""
-    x = np.asarray(x, dtype=np.float64)
-    return x / SPHERICAL_R * 180.0 / math.pi
-
-
-def y2deg_spherical(y):
-    """Inverse spherical mercator y -> lat."""
-    y = np.asarray(y, dtype=np.float64)
-    return (2.0 * np.arctan(np.exp(y / SPHERICAL_R)) - math.pi / 2.0) * 180.0 / math.pi
-
-
 def tile_extent_3857(z, x, y):
     """The extent the atlas pipeline actually quantizes against
     (provider/provider.go:95-105 -> slippy.Extent -> Grid.ToNative):
@@ -195,26 +158,6 @@ def tile_extent_3857(z, x, y):
     )
 
 
-def pixel_ratio_for_zoom(z, tile_dim=DEFAULT_EXTENT):
-    """projected-units per MVT pixel at zoom z — slippy/tile.go:150-170:
-    xspan of tile (z, 0, 0) / 4096."""
-    minx, _, maxx, _ = tile_extent_3857(z, 0, 0)
-    return (maxx - minx) / float(tile_dim)
-
-
-def buffered_tile_extent_3857(z, x, y, buffer=DEFAULT_BUFFER):
-    """provider.Tile.BufferedExtent (provider/provider.go:107-110):
-    extent expanded on all sides by pixel_ratio * buffer."""
-    minx, miny, maxx, maxy = tile_extent_3857(z, x, y)
-    d = pixel_ratio_for_zoom(z) * float(buffer)
-    return (minx - d, miny - d, maxx + d, maxy + d)
-
-
-def zres(z, extent=DEFAULT_EXTENT):
-    """T6: meters/pixel at zoom z — tile.go:208-210."""
-    return EQUATOR / (extent * math.exp2(float(z)))
-
-
 def zepsilon(z, tolerance=DEFAULT_TOLERANCE, extent=DEFAULT_EXTENT):
     """T7: Douglas-Peucker tolerance for zoom z — tile.go:213-228."""
     if z == MAX_Z or tolerance <= 0:
@@ -225,11 +168,6 @@ def zepsilon(z, tolerance=DEFAULT_TOLERANCE, extent=DEFAULT_EXTENT):
 def buffered_pixel_bounds(extent=DEFAULT_EXTENT, buffer=DEFAULT_BUFFER):
     """Pixel-space clip region — tile.go:104-107: [-64,-64,4160,4160]."""
     return (-buffer, -buffer, extent + buffer, extent + buffer)
-
-
-def parent_tile(z, x, y, dz=1):
-    """T4: ancestor tile — vendor/.../slippy/tile.go:76-84 (x >> dz)."""
-    return z - dz, x >> dz, y >> dz
 
 
 def tile_range_for_bounds(min_lon, min_lat, max_lon, max_lat, z):
@@ -276,7 +214,7 @@ def parse_tile_name(line: str):
 
 
 def tile_spans_from_list(entries, zooms=None, explicit: bool = False):
-    """Span form of :func:`tiles_from_list`: inclusive (z, x0, x1, y0, y1)
+    """S11 tile-list expansion as inclusive (z, x0, x1, y0, y1)
     ranges, one per (entry, zoom) — O(entries x zooms) driver-side work
     regardless of zoom delta. The reference streams the 4^dz descendant
     expansion through a channel (tile_list_generator.go); the Spark analog
@@ -297,31 +235,6 @@ def tile_spans_from_list(entries, zooms=None, explicit: bool = False):
                 spans.append((tz, x << d, ((x + 1) << d) - 1,
                               y << d, ((y + 1) << d) - 1))
     return spans
-
-
-def tiles_from_list(entries, zooms=None, explicit: bool = False):
-    """S11 tile-list source expansion (generateTilesForTileList,
-    cmd/tegola/cmd/cache/tile_list_generator.go): each listed tile is
-    emitted as-is when ``explicit`` (or no zooms given); otherwise it
-    expands across ``zooms`` to its ancestor at each shallower zoom
-    and ALL its descendants at each deeper zoom. Deduplicated, sorted.
-    ``entries`` are (z, x, y) triples or "z/x/y" strings."""
-    out = set()
-    for e in entries:
-        z, x, y = parse_tile_name(e) if isinstance(e, str) else e
-        if explicit or not zooms:
-            out.add((z, x, y))
-            continue
-        for tz in zooms:
-            if tz <= z:
-                d = z - tz
-                out.add((tz, x >> d, y >> d))
-            else:
-                d = tz - z
-                for cx in range(x << d, (x + 1) << d):
-                    for cy in range(y << d, (y + 1) << d):
-                        out.add((tz, cx, cy))
-    return sorted(out)
 
 
 # ---------------------------------------------------------------------------

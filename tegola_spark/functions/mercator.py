@@ -1,4 +1,4 @@
-"""Ellipsoidal WGS84 <-> WebMercator (reference operator P8).
+"""Ellipsoidal WGS84 -> WebMercator (reference operator P8).
 
 tegola does NOT use the standard spherical EPSG:3857 formula; it uses an
 ellipsoidal variant (maths/webmercator/main.go:14-88) with
@@ -21,9 +21,6 @@ RATIO = R_MINOR / R_MAJOR
 ECCENT = math.sqrt(1.0 - RATIO * RATIO)
 COM = 0.5 * ECCENT
 
-# Published extent of the projection — maths/webmercator/main.go:26-29
-EXTENT = (-20026376.39, -20048966.10, 20026376.39, 20048966.10)
-
 
 def _con(phi):
     v = ECCENT * np.sin(phi)
@@ -43,36 +40,3 @@ def lat_to_y(lat):
     phi = lat * math.pi / 180.0
     ts = np.tan(0.5 * (math.pi * 0.5 - phi)) / _con(phi)
     return 0.0 - R_MAJOR * np.log(ts)
-
-
-def x_to_lon(x):
-    """maths/webmercator/main.go:70-73."""
-    x = np.asarray(x, dtype=np.float64)
-    return (x * 180.0 / math.pi) / R_MAJOR
-
-
-def y_to_lat(y):
-    """maths/webmercator/main.go:75-88 — fixed-point iteration to 1e-9,
-    max 15 steps. Vectorized: iterate all lanes until all converge."""
-    y = np.asarray(y, dtype=np.float64)
-    ts = np.exp(-y / R_MAJOR)
-    phi = math.pi / 2.0 - 2.0 * np.arctan(ts)
-    dphi = np.ones_like(phi)
-    for _ in range(15):
-        mask = np.abs(dphi) > 1e-9
-        if not mask.any():
-            break
-        step = math.pi / 2.0 - 2.0 * np.arctan(ts * _con(phi)) - phi
-        dphi = np.where(mask, step, 0.0)
-        phi = phi + dphi
-    return phi * 180.0 / math.pi
-
-
-def project_points(lon, lat):
-    """(lon, lat) -> (x, y) in the reference's ellipsoidal WebMercator."""
-    return lon_to_x(lon), lat_to_y(lat)
-
-
-def unproject_points(x, y):
-    """(x, y) -> (lon, lat)."""
-    return x_to_lon(x), y_to_lat(y)

@@ -84,14 +84,3 @@ def contamination_scan_shingled(docs: DataFrame, probes: DataFrame,
     return (hits.groupBy(id_col, "probe_id")
             .agg(F.min("pos").cast("long").alias("first_pos"))
             .select(id_col, "probe_id", "first_pos"))
-
-
-def contamination_summary(docs: DataFrame, probes: DataFrame,
-                          text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Per-document contamination verdict: hit count and the lowest
-    matching probe_id (deterministic evidence pointer)."""
-    hits = contamination_scan(docs, probes, text_col, id_col)
-    return (hits.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_probe_hits"),
-                 F.min("probe_id").alias("first_probe_id")))

@@ -8,12 +8,12 @@ corpus operators the engine adds as first-class components:
   * normalized dedup      — same after lower/trim/whitespace-collapse
   * MinHash + LSH         — shingle -> minhash signature (vectorized
                             NumPy universal hashing) -> band buckets ->
-                            in-bucket candidate pairs -> exact-jaccard
-                            verify. The classic near-dup pipeline
-                            (Broder; used by every large LM corpus).
-  * SimHash               — 64-bit token-hash sign aggregate; near-dup
-                            pairs via 16-bit band buckets + hamming
-                            verify.
+                            in-bucket candidate pairs with their
+                            signature-estimated jaccard. The classic
+                            near-dup pipeline (Broder; used by every
+                            large LM corpus).
+  * SimHash               — 64-bit token-hash sign aggregate
+                            (fingerprints per document).
 
 Scale notes: signatures are fixed-size arrays (num_perm * 4 bytes); the
 only shuffles are on band-bucket keys (well distributed by
@@ -192,33 +192,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     )
 
 
-def ngram_jaccard_verify(pairs: DataFrame, df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", shingle_k: int = 5) -> DataFrame:
-    """Exact character-k-gram jaccard for candidate pairs (the verify
-    stage after LSH)."""
-    texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    joined = (
-        pairs.join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("t", "t_a"), "id_a")
-        .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("t", "t_b"), "id_b")
-    )
-
-    @F.pandas_udf(T.DoubleType())
-    def jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = np.empty(len(ta))
-        for i, (x, y) in enumerate(zip(ta.fillna(""), tb.fillna(""))):
-            sa = _shingle_hashes(x, shingle_k)
-            sb = _shingle_hashes(y, shingle_k)
-            if len(sa) == 0 and len(sb) == 0:
-                out[i] = 1.0
-                continue
-            inter = np.intersect1d(sa, sb, assume_unique=True).size
-            out[i] = inter / float(len(sa) + len(sb) - inter)
-        return pd.Series(out)
-
-    return joined.withColumn("jaccard", jac("t_a", "t_b")) \
-                 .select("id_a", "id_b", "est_jaccard", "jaccard")
-
-
 def simhash_fingerprints(df: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash over whitespace tokens (FNV token hashes)."""
@@ -303,31 +276,6 @@ def simhash_fingerprints_portable(df: DataFrame, text_col: str = "text",
     base = df.select(F.col(id_col).alias("id"))
     return base.join(out, "id", "left").select(
         "id", F.coalesce("simhash", F.lit(0)).cast("long").alias("simhash"))
-
-
-def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by simhash hamming distance <= max_hamming,
-    bucketed on 4 x 16-bit bands (any pair within distance 3 shares at
-    least one exact band — pigeonhole)."""
-    fp = simhash_fingerprints(df, text_col, id_col).cache()
-    bands = [
-        F.struct(F.lit(i).alias("band"),
-                 F.shiftright(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)).alias("bucket"))
-        for i in range(4)
-    ]
-    ex = fp.select("id", "simhash", F.explode(F.array(*bands)).alias("bb")) \
-           .select("id", "simhash", "bb.band", "bb.bucket")
-    cand = (
-        ex.alias("l").join(ex.alias("r"), ["band", "bucket"])
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                F.col("l.simhash").alias("h_a"), F.col("r.simhash").alias("h_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return cand.withColumn("hamming", ham).where(ham <= max_hamming) \
-               .select("id_a", "id_b", "hamming")
 
 
 def span_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -447,29 +395,3 @@ def edit_distance_verify(df: DataFrame, pairs: DataFrame,
     return out.withColumn(
         "is_editdup",
         (F.lit(5) * F.col("edit_dist") <= F.lit(2) * F.col("max_len")))
-
-
-def incremental_dedup(new_docs: DataFrame, store: DataFrame,
-                      text_col: str = "text",
-                      id_col: str = "doc_id"):
-    """Ingest-time dedup of a NEW batch against the historical
-    fingerprint store: returns ``(fresh_docs, new_fingerprints)`` —
-    batch rows whose md5(text) appears neither in the store nor
-    earlier in the batch (first-arrival by id), plus the fingerprint
-    rows to append to the store.
-
-    The scale contract is the join's asymmetry: the store is the
-    100 TB side and must NEVER re-shuffle per batch.  Persist it
-    bucketed on ``text_hash`` (sources/sinks.py write_bucketed) and
-    the left-anti join reads matching buckets in place — only the new
-    batch crosses the wire (one Exchange, batch-sized), pinned by
-    tests/test_bucketed_join.py::test_incremental_dedup_shuffles_batch_only.
-    """
-    keyed = new_docs.withColumn(
-        "text_hash", F.md5(F.col(text_col).cast("binary")))
-    # first-arrival-wins inside the batch (same rule as exact_dedup)
-    w_min = keyed.groupBy("text_hash").agg(F.min(id_col).alias(id_col))
-    batch_unique = keyed.join(w_min, ["text_hash", id_col])
-    fresh = batch_unique.join(store.select("text_hash"),
-                              "text_hash", "left_anti")
-    return fresh, fresh.select("text_hash", id_col)

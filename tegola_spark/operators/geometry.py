@@ -10,8 +10,6 @@ Ported semantics:
     gate, the ring-area gates.
   * Line clipping: the 4-case in/out walk with sorted intersect points
     and direction preservation (maths/clip/clip.go:26-122).
-  * CleanLinestring repeated-point-cycle removal
-    (maths/validate/validate.go:15-38).
   * Point-in-polygon: even-odd crossing with boundary-inclusive
     semantics (on-edge => contained), matching the hitmap's behavior
     of returning true for on-line points (maths/hitmap/hitmap.go:108-196).
@@ -609,27 +607,6 @@ def clean_geometry(geom, clip_region, repair: bool = True):
         pts = pts[keep]
         return ("MultiPoint", pts) if len(pts) else None
     return geom
-
-
-# ---------------------------------------------------------------------------
-# Clean: repeated-point-cycle removal
-# ---------------------------------------------------------------------------
-
-def clean_linestring(pts: np.ndarray) -> np.ndarray:
-    """CleanLinestring — validate.go:15-38: when a point repeats, skip
-    ahead to its LAST occurrence (removes self-closing cycles)."""
-    pts = np.asarray(pts, dtype=np.float64)
-    last_idx = {}
-    for i, p in enumerate(map(tuple, pts)):
-        last_idx[p] = i
-    out = []
-    i = 0
-    while i < len(pts):
-        p = tuple(pts[i])
-        out.append(pts[i])
-        j = last_idx[p]
-        i = (j if j > i else i) + 1
-    return np.array(out)
 
 
 # ---------------------------------------------------------------------------

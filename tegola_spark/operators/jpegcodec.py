@@ -3,17 +3,18 @@
 Round-2 review asked whether the last honest media stub — JPEG entropy
 decode — could be closed without a codec library. It can: baseline JPEG
 needs nothing beyond ``struct`` + NumPy. This module implements
+the decode:
 
-  * decode: marker walk (DQT/SOF0/SOF1/DHT/SOS/DRI), canonical Huffman
+  * marker walk (DQT/SOF0/SOF1/DHT/SOS/DRI), canonical Huffman
     table construction, entropy decode with byte-unstuffing + restart
     intervals, dequantization, 8x8 IDCT as two matrix multiplies,
     chroma upsampling for arbitrary (h, v) sampling factors, and JFIF
     YCbCr -> RGB. Progressive (SOF2) and arithmetic-coded JPEGs fall
     back to header-only (dims + channels).
-  * encode: a minimal baseline writer (4:4:4 or 4:2:0, flat or scaled
-    quant tables, fixed-length canonical Huffman tables) used as the
-    test-fixture generator so decode round-trips are verified without
-    any external image.
+
+The tests build their JPEG inputs with a minimal baseline writer
+(tests/media_fixtures.py), so decode round-trips are verified without
+any external image.
 
 Everything here derives from the public T.81 spec; the reference engine
 has no JPEG path (its providers ship geometry, not media) — this is an
@@ -329,214 +330,3 @@ def decode_jpeg(b: bytes) -> dict:
                      0, 255).astype(np.uint8)
     info["pixels"] = px
     return info
-
-
-# ---------------------------------------------------------------------------
-# minimal baseline encoder (fixture generator)
-# ---------------------------------------------------------------------------
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, length: int):
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.n = 0
-
-    def flush(self):
-        while self.n:
-            self.write(1, 1)  # pad with 1-bits
-
-
-def _enc_tables():
-    """Fixed-length canonical tables: 12 DC categories at 4 bits, all
-    162 AC (run, size) symbols at 8 bits — valid Huffman tables (the
-    all-ones max-length code stays unused) without carrying the Annex K
-    constants."""
-    dc_bits = [0, 0, 0, 12] + [0] * 12
-    dc_vals = list(range(12))
-    ac_vals = [0x00, 0xF0] + [(r << 4) | s
-                              for r in range(16) for s in range(1, 11)]
-    ac_bits = [0] * 7 + [len(ac_vals)] + [0] * 8
-    return (dc_bits, dc_vals), (ac_bits, ac_vals)
-
-
-def _enc_code_map(bits, vals):
-    m = {}
-    for (ln, code), sym in _canonical_codes(bits, vals).items():
-        m[sym] = (code, ln)
-    return m
-
-
-def _size_cat(v: int) -> int:
-    return 0 if v == 0 else int(abs(v)).bit_length()
-
-
-def _encode_block(bw: _BitWriter, block: np.ndarray, qtab: np.ndarray,
-                  pred: int, dcm, acm) -> int:
-    coef = _M @ (block - 128.0) @ _M.T
-    q = np.round(coef.reshape(-1) / qtab).astype(np.int64)
-    zz = q[ZIGZAG]
-    diff = int(zz[0]) - pred
-    s = _size_cat(diff)
-    code, ln = dcm[s]
-    bw.write(code, ln)
-    if s:
-        bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-    last = 63
-    while last > 0 and zz[last] == 0:
-        last -= 1
-    run = 0
-    for k in range(1, last + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = acm[0xF0]
-            bw.write(code, ln)
-            run -= 16
-        s = _size_cat(v)
-        code, ln = acm[(run << 4) | s]
-        bw.write(code, ln)
-        bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last < 63:
-        code, ln = acm[0x00]
-        bw.write(code, ln)
-    return int(zz[0])
-
-
-def encode_jpeg(pixels: np.ndarray, quant: int = 1,
-                subsample: bool = False, restart: int = 0,
-                multiscan: bool = False) -> bytes:
-    """Baseline JPEG writer: grayscale or RGB, 4:4:4 (default) or 4:2:0
-    (``subsample=True``), flat quant tables of ``quant`` (1 = as near
-    lossless as the DCT rounding allows), optional DRI restart interval
-    of ``restart`` MCUs (exercises the decoder's RST path).
-
-    ``multiscan=True`` writes one non-interleaved SOS per component (a
-    legal baseline layout per T.81 — exercises the decoder's multi-scan
-    path); incompatible with ``restart``."""
-    if multiscan and restart:
-        raise JpegError("multiscan fixtures do not support restart")
-    px = np.asarray(pixels, dtype=np.float64)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, nch = px.shape
-    if nch == 3:
-        r, g, bl = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * bl
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * bl + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * bl + 128.0
-        chans = [y, cb, cr]
-    else:
-        chans = [px[..., 0]]
-        subsample = False
-    samp = [(2, 2), (1, 1), (1, 1)] if subsample else [(1, 1)] * 3
-    hmax = max(s[0] for s in samp[:len(chans)])
-    vmax = max(s[1] for s in samp[:len(chans)])
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-
-    qtab = np.full(64, float(quant))
-    (dcb, dcv), (acb, acv) = _enc_tables()
-    dcm, acm = _enc_code_map(dcb, dcv), _enc_code_map(acb, acv)
-
-    # pad each plane to its MCU-aligned size (edge replicate)
-    padded = []
-    for i, ch in enumerate(chans):
-        sh, sv = samp[i]
-        if (sh, sv) != (hmax, vmax):  # 4:2:0 chroma: 2x2 mean
-            ev = np.pad(ch, ((0, h % 2), (0, w % 2)), mode="edge")
-            ch = ev.reshape(ev.shape[0] // 2, 2,
-                            ev.shape[1] // 2, 2).mean(axis=(1, 3))
-        th = mcuy * 8 * sv
-        tw = mcux * 8 * sh
-        ch = np.pad(ch, ((0, th - ch.shape[0]), (0, tw - ch.shape[1])),
-                    mode="edge")
-        padded.append(ch)
-
-    if multiscan:
-        # one entropy segment per component, each over its own
-        # ceil(cw/8) x ceil(ch/8) grid (T.81 non-interleaved scan)
-        scans = []
-        for i, ch in enumerate(padded):
-            sh, sv = samp[i]
-            cw = -(-w * sh // hmax)
-            ch_h = -(-h * sv // vmax)
-            bwn, bhn = -(-cw // 8), -(-ch_h // 8)
-            bw = _BitWriter()
-            pred_i = 0
-            for m in range(bwn * bhn):
-                my, mx = divmod(m, bwn)
-                pred_i = _encode_block(
-                    bw, ch[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8],
-                    qtab, pred_i, dcm, acm)
-            bw.flush()
-            scans.append(bytes(bw.out))
-        entropy = None
-    else:
-        entropy = bytearray()
-        bw = _BitWriter()
-        pred = [0] * len(chans)
-        rst = 0
-        for m in range(mcux * mcuy):
-            if restart and m and m % restart == 0:
-                bw.flush()
-                entropy += bw.out
-                entropy += bytes([0xFF, 0xD0 + (rst % 8)])
-                rst += 1
-                bw = _BitWriter()
-                pred = [0] * len(chans)
-            my, mx = divmod(m, mcux)
-            for i, ch in enumerate(padded):
-                sh, sv = samp[i]
-                for vy in range(sv):
-                    for hx in range(sh):
-                        y0 = (my * sv + vy) * 8
-                        x0 = (mx * sh + hx) * 8
-                        pred[i] = _encode_block(
-                            bw, ch[y0:y0 + 8, x0:x0 + 8], qtab, pred[i],
-                            dcm, acm)
-        bw.flush()
-        entropy += bw.out
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    zzq = np.zeros(64, dtype=np.uint8)
-    zzq[np.arange(64)] = qtab[ZIGZAG].astype(np.uint8)
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + zzq.tobytes())
-    sof = struct.pack(">BHHB", 8, h, w, len(chans))
-    for i in range(len(chans)):
-        sof += bytes([i + 1, (samp[i][0] << 4) | samp[i][1], 0])
-    out += seg(0xC0, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(dcb) + bytes(dcv))
-    out += seg(0xC4, bytes([0x10]) + bytes(acb) + bytes(acv))
-    if restart:
-        out += seg(0xDD, struct.pack(">H", restart))
-    if multiscan:
-        for i in range(len(chans)):
-            sos = bytes([1, i + 1, 0x00, 0, 63, 0])
-            out += seg(0xDA, sos)
-            out += scans[i]
-    else:
-        sos = bytes([len(chans)])
-        for i in range(len(chans)):
-            sos += bytes([i + 1, 0x00])
-        sos += bytes([0, 63, 0])
-        out += seg(0xDA, sos)
-        out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)

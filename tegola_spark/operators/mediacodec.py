@@ -116,24 +116,6 @@ def decode_png(b: bytes) -> dict:
     return info
 
 
-def encode_png(pixels: np.ndarray) -> bytes:
-    """Minimal PNG writer (filter 0 rows) — test/fixture generator."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, ch = px.shape
-    ctype = {1: 0, 3: 2, 4: 6}[ch]
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (struct.pack(">I", len(body)) + tag + body
-                + struct.pack(">I", zlib.crc32(tag + body)))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    raw = b"".join(b"\x00" + px[y].tobytes() for y in range(h))
-    return (_PNG_MAGIC + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-
 # ---------------------------------------------------------------------------
 # BMP
 # ---------------------------------------------------------------------------
@@ -163,20 +145,6 @@ def decode_bmp(b: bytes) -> dict:
         info["pixels"] = px
         info["channels"] = 3
     return info
-
-
-def encode_bmp(pixels: np.ndarray) -> bytes:
-    """Minimal 24-bit BI_RGB writer (bottom-up) — fixture generator."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w, _ = px.shape
-    stride = (w * 3 + 3) & ~3
-    body = b"".join(
-        px[y, :, ::-1].tobytes() + b"\x00" * (stride - w * 3)
-        for y in range(h - 1, -1, -1))
-    header = b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
-                      2835, 2835, 0, 0)
-    return header + dib + body
 
 
 # ---------------------------------------------------------------------------
@@ -215,17 +183,6 @@ def decode_wav(b: bytes) -> dict:
             "pixels": None, "samples": samples}
 
 
-def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
-    """Minimal PCM16 writer — fixture generator."""
-    s = np.asarray(samples, dtype="<i2")
-    nch = 1 if s.ndim == 1 else s.shape[1]
-    body = s.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, nch, rate, rate * nch * 2, nch * 2, 16)
-    return (b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(body)) + body)
-
-
 # ---------------------------------------------------------------------------
 # header-only formats
 # ---------------------------------------------------------------------------
@@ -236,28 +193,6 @@ def decode_gif_header(b: bytes) -> dict:
     w, h = struct.unpack_from("<HH", b, 6)
     return {"format": "gif", "width": int(w), "height": int(h),
             "channels": 3, "bitdepth": 8, "pixels": None, "samples": None}
-
-
-def decode_jpeg_header(b: bytes) -> dict:
-    if b[:3] != b"\xff\xd8\xff":
-        raise MediaDecodeError("not a JPEG")
-    pos = 2
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = b[pos + 1]
-        if marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2
-            _, h, w, nch = struct.unpack_from(">BHHB", b, pos + 4)
-            return {"format": "jpeg", "width": int(w), "height": int(h),
-                    "channels": int(nch), "bitdepth": 8,
-                    "pixels": None, "samples": None}
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (ln,) = struct.unpack_from(">H", b, pos + 2)
-        pos += 2 + ln
-    raise MediaDecodeError("JPEG missing SOF marker")
 
 
 def decode_jpeg(b: bytes) -> dict:

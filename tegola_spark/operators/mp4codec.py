@@ -1,4 +1,4 @@
-"""Pure-stdlib MP4 (ISO BMFF, ISO/IEC 14496-12) box parser + writer.
+"""Pure-stdlib MP4 (ISO BMFF, ISO/IEC 14496-12) box parser.
 
 Closes the round-2 "mp4 video is fully stubbed" gap to the extent
 possible without a codec library: the CONTAINER layer — box walk,
@@ -10,9 +10,8 @@ Only the entropy-coded sample payloads themselves (H.264/HEVC NAL
 units) still need an external decoder; ``decode_mp4`` returns
 ``pixels=None`` for them, exactly like the header-only image paths.
 
-``encode_mp4`` writes a minimal single-track video file (one chunk,
-uniform timing) so tests and synthetic corpora get deterministic
-real fixtures — same role as mediacodec.encode_png/encode_wav.
+The tests build their MP4 inputs with a minimal single-track writer
+(tests/media_fixtures.py).
 
 Reference analog: tegola has no media pipeline; this supports the
 engine-extra multimodal columns (BASELINE.json input_hint: web corpus
@@ -242,80 +241,3 @@ def decode_mp4(b: bytes) -> dict:
         "duration_s": float(info.get("duration_s", 0.0)),
         "pixels": None, "samples": None,
     }
-
-
-# ---------------------------------------------------------------------------
-# writer (test fixtures / synthetic corpora)
-# ---------------------------------------------------------------------------
-
-def _box(fourcc: bytes, body: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(body)) + fourcc + body
-
-
-def _full(fourcc: bytes, version: int, body: bytes) -> bytes:
-    return _box(fourcc, struct.pack(">I", version << 24) + body)
-
-
-def encode_mp4(frames: list[bytes], width: int, height: int,
-               fps: int = 30, codec: bytes = b"mp4v") -> bytes:
-    """Minimal valid single-video-track MP4: all samples in one chunk,
-    uniform frame duration. Round-trips through parse_mp4/frame_samples
-    bit-exactly."""
-    if not frames:
-        raise Mp4Error("need at least one frame")
-    timescale = int(fps) * 1000
-    delta = 1000
-    duration = delta * len(frames)
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-
-    entry = (struct.pack(">I", 86) + codec + b"\x00" * 6
-             + struct.pack(">H", 1) + b"\x00" * 16
-             + struct.pack(">HH", width, height)
-             + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
-             + struct.pack(">I", 0) + struct.pack(">H", 1)
-             + b"\x00" * 32 + struct.pack(">H", 24)
-             + struct.pack(">h", -1))
-    stsd = _full(b"stsd", 0, struct.pack(">I", 1) + entry)
-    stts = _full(b"stts", 0, struct.pack(">III", 1, len(frames), delta))
-    stsc = _full(b"stsc", 0, struct.pack(">IIII", 1, 1, len(frames), 1))
-    stsz = _full(b"stsz", 0, struct.pack(">II", 0, len(frames))
-                 + b"".join(struct.pack(">I", len(f)) for f in frames))
-    # stco chunk offset is patched after the header length is known
-    stco_body = struct.pack(">II", 1, 0)
-    stco = _full(b"stco", 0, stco_body)
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-
-    url = _full(b"url ", 1, b"")  # flag 1: data in this file
-    dref = _full(b"dref", 0, struct.pack(">I", 1) + url)
-    dinf = _box(b"dinf", dref)
-    vmhd = _full(b"vmhd", 1, struct.pack(">HHHH", 0, 0, 0, 0))
-    minf = _box(b"minf", vmhd + dinf + stbl)
-    hdlr = _full(b"hdlr", 0, struct.pack(">I", 0) + b"vide"
-                 + b"\x00" * 12 + b"tegola_spark video\x00")
-    mdhd = _full(b"mdhd", 0, struct.pack(">IIIIHH", 0, 0, timescale,
-                                         duration, 0x55C4, 0))
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-
-    matrix = struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
-                         0x40000000)
-    tkhd = _full(b"tkhd", 0, struct.pack(">IIIII", 0, 0, 1, 0, duration)
-                 + b"\x00" * 8 + struct.pack(">HHHH", 0, 0, 0, 0) + matrix
-                 + struct.pack(">II", width << 16, height << 16))
-    # tkhd needs flags=enabled(1)|in_movie(2): the fullbox is
-    # size(4)+type(4)+version(1)+flags(3), so flags are bytes 9-11
-    tkhd = tkhd[:10] + b"\x00\x03" + tkhd[12:]
-    trak = _box(b"trak", tkhd + mdia)
-    mvhd = _full(b"mvhd", 0, struct.pack(">IIII", 0, 0, timescale, duration)
-                 + struct.pack(">IHH", 0x00010000, 0x0100, 0)
-                 + b"\x00" * 8 + matrix + b"\x00" * 24
-                 + struct.pack(">I", 2))
-    moov = _box(b"moov", mvhd + trak)
-
-    mdat_payload = b"".join(frames)
-    header_len = len(ftyp) + len(moov) + 8  # + mdat box header
-    # patch the single chunk offset (points at mdat payload start)
-    idx = moov.find(stco)
-    assert idx >= 0
-    patched = _full(b"stco", 0, struct.pack(">II", 1, header_len))
-    moov = moov[:idx] + patched + moov[idx + len(stco):]
-    return ftyp + moov + _box(b"mdat", mdat_payload)

@@ -31,7 +31,6 @@ plans/pipeline.py via applyInPandas (SURVEY.md §2.10).
 
 from __future__ import annotations
 
-import gzip as _gzip
 import struct
 
 import numpy as np
@@ -50,9 +49,6 @@ DEFAULT_EXTENT = 4096
 
 # 1e-9 comparator used by prepare's dedup — vendor/.../geom/cmp/default_compare.go:10-13
 HI_CMP_TOL = 1e-9
-
-_U64 = np.uint64
-_I64 = np.int64
 
 
 # ---------------------------------------------------------------------------
@@ -203,65 +199,6 @@ def rectify_polygon(rings, y_positive_down: bool):
         want = CLOCKWISE if i == 0 else COUNTER_CLOCKWISE
         out.append(ring[::-1] if wo != want else ring)
     return out
-
-
-def winding_of_pts(pts: np.ndarray) -> int:
-    """basic-geometry winding (maths/windingorder.go:34-49) — the
-    reference's OTHER convention, distinct from winding(): raw shoelace
-    sum; sum < 0 -> CounterClockwise, else (INCLUDING 0) -> Clockwise.
-    Used by the ring-grouping cleaner below, exactly as
-    basic.Line.Direction() feeds cleanPolygon."""
-    pts = np.asarray(pts, dtype=np.float64)
-    if len(pts) == 0:
-        return CLOCKWISE
-    s = float(np.dot(pts[:, 0], np.roll(pts[:, 1], -1))
-              - np.dot(np.roll(pts[:, 0], -1), pts[:, 1]))
-    return COUNTER_CLOCKWISE if s < 0 else CLOCKWISE
-
-
-def clean_polygon(rings):
-    """cleanPolygon (basic/maths/clean.go:17-55): group a ring list
-    into valid polygons — each Clockwise ring (basic convention) starts
-    a new polygon, CounterClockwise rings are its holes; CCW rings with
-    no open shell are returned as invalids; empty rings are skipped.
-    Returns (polygons, invalids)."""
-    polygons, invalids = [], []
-    current = None
-    for r in rings:
-        r = np.asarray(r, dtype=np.float64)
-        if len(r) == 0:
-            continue
-        if winding_of_pts(r) == CLOCKWISE:
-            if current is not None:
-                polygons.append(current)
-            current = []
-        elif current is None:
-            invalids.append(r)
-            continue
-        current.append(r)
-    if current is not None:
-        polygons.append(current)
-    return polygons, invalids
-
-
-def clean_multipolygon(polys):
-    """cleanMultiPolygon (basic/maths/clean.go:59-76): re-group a
-    MultiPolygon's rings into OGC shape. A member polygon consisting of
-    orphan CCW rings attaches them as holes to the LAST cleaned polygon
-    (the "polygon broken up" case); orphans with no prior polygon are
-    an error. Quirk ported exactly: when a member has BOTH invalid
-    rings and valid polygons, the reference `continue`s and DROPS the
-    valid ones."""
-    mp = []
-    for p in polys:
-        poly, invalids = clean_polygon(p)
-        if invalids:
-            if not mp:
-                raise ValueError("unable to clean MultiPolygon")
-            mp[-1].extend(invalids)
-            continue
-        mp.extend(poly)
-    return mp
 
 
 # ---------------------------------------------------------------------------
@@ -820,11 +757,6 @@ def encode_tile(layers) -> bytes:
                     f"layer already is named {name}, new layer not added")
             seen.add(name)
     return b"".join(parts)
-
-
-def gzip_tile(tile_bytes: bytes) -> bytes:
-    """E7 — atlas/map.go:396-412; parity compares pre-gzip (map_test.go:230-244)."""
-    return _gzip.compress(tile_bytes, mtime=0)
 
 
 # ---------------------------------------------------------------------------

@@ -164,34 +164,6 @@ def lsh_ann_topk(emb: DataFrame, query_ids, k: int, dim: int,
                            id_col, emb_col, sequential=sequential)
 
 
-def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95, dim: int = 0,
-                          n_planes: int = 10, id_col: str = "vec_id",
-                          emb_col: str = "embedding") -> DataFrame:
-    """Embedding near-duplicate pairs (cosine >= threshold) via LSH
-    buckets: pairs sharing a bucket at any of the probe rotations are
-    exact-checked. High-cosine pairs collide with high probability; at
-    0.95+ the single-bucket miss rate is negligible for dedup use."""
-    if dim == 0:
-        first = emb.select(F.size(emb_col)).first()
-        dim = first[0]
-    sigs = with_norm(lsh_signatures(emb, dim, n_planes, id_col, emb_col), emb_col)
-    ex = sigs.select(F.col(id_col).alias("id"), F.col(emb_col).alias("e"),
-                     F.col("_norm").alias("nm"), F.col("_sig").alias("sig"))
-    cand = (
-        ex.alias("l").join(ex.alias("r"), "sig")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                F.col("l.e").alias("ea"), F.col("r.e").alias("eb"),
-                F.col("l.nm").alias("na"), F.col("r.nm").alias("nb"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cos = _dot_expr("ea", "eb") / (F.col("na") * F.col("nb"))
-    return (
-        cand.withColumn("score", cos).where(F.col("score") >= threshold)
-        .select("id_a", "id_b", F.round("score", 6).alias("score_r6"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the coarse-quantizer scale path
 # ---------------------------------------------------------------------------
@@ -467,18 +439,3 @@ def ann_self_topk(emb: DataFrame, k: int, dim: int, method: str = "ivf",
         raise ValueError(f"unknown ANN method {method!r}")
     return ivf_ann_topk_df(emb, queries, k, dim, id_col=id_col,
                            emb_col=emb_col, broadcast_queries=False, **kw)
-
-
-def ivf_ann_topk(emb: DataFrame, query_ids, k: int, dim: int,
-                 n_centroids: int = 16, nprobe: int = 3, n_iter: int = 3,
-                 id_col: str = "vec_id", emb_col: str = "embedding",
-                 centroids: np.ndarray | None = None,
-                 max_train: int | None = 65536) -> DataFrame:
-    """IVF ANN for an id list: the query side is carved out of the
-    corpus AS A DATAFRAME and delegated to ivf_ann_topk_df — no driver
-    collect anywhere (round-2 review item closed)."""
-    queries = emb.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("qemb"))
-    return ivf_ann_topk_df(emb, queries, k, dim, n_centroids, nprobe, n_iter,
-                           id_col, emb_col, centroids=centroids,
-                           max_train=max_train)

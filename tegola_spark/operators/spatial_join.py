@@ -61,7 +61,8 @@ def polygon_cover(polys: DataFrame, res: int) -> DataFrame:
     of every spatial join; the sequence+explode twin emits the same
     inclusive tile-range cell set from the same nudged conversions
     (grid.col_lon2num/col_lat2num are the oracle-proven column twins of
-    the python pair cells.cover_bbox uses)."""
+    grid.lon2num/lat2num; test_r06_optimizations checks the cell set
+    against a python cover built from those)."""
     from ..functions import grid
 
     x0 = grid.col_lon2num(F.col("minx"), res)

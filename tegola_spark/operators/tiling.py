@@ -26,18 +26,6 @@ from ..functions import grid
 BUFFER_FRAC = grid.DEFAULT_BUFFER / grid.DEFAULT_EXTENT  # 64/4096
 
 
-def col_world_x(lon: Column, z: int) -> Column:
-    """Continuous tile-unit x at zoom z (spherical; linear in lon)."""
-    return (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << z))
-
-
-def col_world_y(lat: Column, z: int) -> Column:
-    """Continuous tile-unit y at zoom z (spherical mercator)."""
-    phi = lat * F.lit(math.pi / 180.0)
-    ymerc = F.log(F.tan(F.lit(math.pi / 4.0) + phi / F.lit(2.0)))
-    return (F.lit(0.5) - ymerc / F.lit(2.0 * math.pi)) * F.lit(float(1 << z))
-
-
 def _col_n(z: Column) -> Column:
     """2^z as an exact double for a zoom COLUMN — multiplies the world
     coordinate last, so the float-op order (and result bits) match the

@@ -16,21 +16,27 @@ from pyspark.sql import SparkSession
 
 
 def _submit_master() -> str | None:
-    """spark.master injected by spark-submit (None under plain python).
-    spark-submit passes --master through the launcher env; a pinned
-    local[N] here would silently override a cluster master, so
-    get_spark only pins when the caller asked for a core count."""
-    try:
-        from pyspark import SparkConf
+    """spark.master given to spark-submit (None under plain python).
 
-        m = SparkConf().get("spark.master", None)
-        return m or None
-    except Exception:
+    spark-submit starts the JVM itself and exports PYSPARK_GATEWAY_PORT
+    (set only there); SparkConf reads the launcher's --master only once
+    this process has joined that gateway, so it is joined first. Under
+    plain python nothing starts here: the JVM must not launch before
+    get_spark sets spark.driver.memory."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
         return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None) or None
 
 
 def get_spark(app_name: str = "tegola_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's session. The master is pinned to ``local[N]`` when
+    ``cpus`` is given, when SPARK_GRAFT_CPUS is set, or when no
+    spark-submit master exists (plain python); otherwise the master
+    given to spark-submit (``--master yarn``, ``local[2]``, ...) stays."""
     pin_master = cpus is not None or "SPARK_GRAFT_CPUS" in os.environ \
         or _submit_master() is None
     if cpus is None:

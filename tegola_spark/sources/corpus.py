@@ -31,11 +31,9 @@ from urllib.parse import unquote, urlparse
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-# geocode constants — keep in sync with ORACLE_* SQL fragments below
+# geocode constants — the oracle SQL in __spark_entry__ repeats them
 LON_MULT = 7919
 LAT_MULT = 104729
-ORACLE_LON = "((doc_id * 7919) % 360000) / 1000.0 - 180.0 + 0.0005"
-ORACLE_LAT = "((doc_id * 104729) % 170000) / 1000.0 - 85.0 + 0.0005"
 
 # epoch seconds of 2025-01-01T00:00:00Z
 _TS_BASE = 1735689600

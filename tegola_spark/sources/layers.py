@@ -29,19 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions import wkb
 
-ORACLE_NATION_RECT = (
-    "CAST((n_nationkey * 37) % 340 - 170 AS DOUBLE) AS minx, "
-    "CAST((n_nationkey * 23) % 160 - 80 AS DOUBLE) AS miny, "
-    "CAST((n_nationkey * 37) % 340 - 170 + 6 + n_nationkey % 7 AS DOUBLE) AS maxx, "
-    "CAST((n_nationkey * 23) % 160 - 80 + 4 + n_nationkey % 5 AS DOUBLE) AS maxy"
-)
-ORACLE_REGION_RECT = (
-    "CAST(r_regionkey * 72 - 180 AS DOUBLE) AS minx, "
-    "CAST((r_regionkey * 13) % 20 - 70 AS DOUBLE) AS miny, "
-    "CAST(r_regionkey * 72 - 180 + 72 AS DOUBLE) AS maxx, "
-    "CAST((r_regionkey * 13) % 20 - 70 + 100 AS DOUBLE) AS maxy"
-)
-
 
 @F.pandas_udf(T.BinaryType())
 def _rect_wkb(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.Series:
@@ -142,16 +129,3 @@ def layer_zoom_ranges() -> dict:
     ~0.25 s wall and one whole Spark job per pipeline run spent
     collecting 4 constant rows)."""
     return {r[1]: (r[3], r[4]) for r in LAYER_CATALOG_ROWS}
-
-
-def infer_geom_type(df: DataFrame, geom_col: str = "geom"):
-    """S3 — inspectLayerGeomType (provider/postgis/postgis.go:468-565):
-    when a layer's geometry type is not declared in config, probe ONE
-    row and read its type. The reference rewrites ST_AsBinary ->
-    ST_GeometryType + LIMIT 1 against the database; the Spark analog is
-    a limit(1) scan decoding the WKB type code. Returns None for an
-    empty layer (the reference errors in that case; callers decide)."""
-    rows = df.select(geom_col).where(F.col(geom_col).isNotNull()).limit(1).collect()
-    if not rows:
-        return None
-    return wkb.decode(bytes(rows[0][0]))[0]

@@ -56,23 +56,6 @@ ENCODE_S_BUCKETS = (0.1, 1, 5, 20)
 _KEY_SCHEMA = "x long, y long, z int"
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """Probe for the Iceberg Spark runtime on the JVM classpath. This
-    sandbox ships 287 jars with no iceberg/delta/hudi artifact (verified
-    round 3), so the parquet + JSON-manifest stand-in below stays the
-    default; when a deployment provides the runtime jar this returns
-    True and write_tiles should be swapped for a real Iceberg catalog
-    (partition spec ``(z, bucket(x))``, snapshot-diff resume replacing
-    the manifest anti-join)."""
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.source.IcebergSource")
-        return True
-    except Exception:
-        return False
-
-
 def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
                 mode: str = "append", report: list | None = None) -> dict:
     """Write the tile table, the lineage table and a manifest entry.
@@ -212,26 +195,3 @@ def write_batch(spark: SparkSession, tiles: DataFrame, metrics: DataFrame,
         if not report:
             return None
         return write_tiles(tiles, metrics, path, report=report)
-
-
-def write_bucketed(df: DataFrame, table: str, keys: list[str],
-                   buckets: int, sort_keys: list[str] | None = None,
-                   mode: str = "overwrite") -> None:
-    """Materialize a table bucketed (hash-clustered) on ``keys`` so
-    later joins and aggregations on those keys are CO-LOCATED: both
-    sides of an equi-join over equally-bucketed tables read matching
-    buckets directly and the join plans with ZERO Exchange — the
-    pre-shuffle strategy for dimension/fact joins that repeat across
-    jobs (on Iceberg the same declaration is the ``bucket(N, key)``
-    partition transform; this is its Spark-catalog face, tested
-    shuffle-free in tests/test_bucketed_join.py).
-
-    ``buckets`` should be sized so one bucket of the BIG table fits an
-    executor's scan partition (e.g. 100 TB / 4096 buckets ≈ 24 GB of
-    raw input per bucket, further split by row groups); both tables of
-    a co-located pair must use the same (keys, buckets).
-    """
-    w = df.write.mode(mode).bucketBy(buckets, *keys)
-    if sort_keys:
-        w = w.sortBy(*sort_keys)
-    w.saveAsTable(table)

@@ -1,0 +1,51 @@
+"""Reference tile math the grid tests compare output-path functions
+against; no output path runs these."""
+
+from __future__ import annotations
+
+import math
+
+import numpy as np
+
+from tegola_spark.functions import grid
+
+
+def deg2num(lon, lat, z):
+    """T1: lon/lat -> (x, y) tile, tegola's own formula (tile.go:110-115).
+
+    No clamps, no nudge — int(floor(.)) semantics. Vectorized.
+    """
+    lon = np.asarray(lon, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    n = np.exp2(float(z))
+    x = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
+    rad = lat * math.pi / 180.0
+    y = np.floor(
+        (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / math.pi) / 2.0 * n
+    ).astype(np.int64)
+    return x, y
+
+
+def tiles_from_list(entries, zooms=None, explicit: bool = False):
+    """S11 tile-list source expansion (generateTilesForTileList,
+    cmd/tegola/cmd/cache/tile_list_generator.go): each listed tile is
+    emitted as-is when ``explicit`` (or no zooms given); otherwise it
+    expands across ``zooms`` to its ancestor at each shallower zoom
+    and ALL its descendants at each deeper zoom. Deduplicated, sorted.
+    ``entries`` are (z, x, y) triples or "z/x/y" strings."""
+    out = set()
+    for e in entries:
+        z, x, y = grid.parse_tile_name(e) if isinstance(e, str) else e
+        if explicit or not zooms:
+            out.add((z, x, y))
+            continue
+        for tz in zooms:
+            if tz <= z:
+                d = z - tz
+                out.add((tz, x >> d, y >> d))
+            else:
+                d = tz - z
+                for cx in range(x << d, (x + 1) << d):
+                    for cy in range(y << d, (y + 1) << d):
+                        out.add((tz, cx, cy))
+    return sorted(out)

@@ -37,7 +37,7 @@ def test_cli_seed_and_resume(spark, sf_dir, tmp_path, capsys):
 def test_cli_seed_tile_list(spark, sf_dir, tmp_path, capsys):
     """`seed --tile-list` renders ONLY the listed tiles, expanded across
     the zoom range (the reference's `cache seed tile-list` mode)."""
-    from tegola_spark.functions import grid
+    import grid_reference as ref
 
     listing = tmp_path / "tiles.txt"
     listing.write_text("1/0/0\n")
@@ -49,7 +49,7 @@ def test_cli_seed_tile_list(spark, sf_dir, tmp_path, capsys):
     capsys.readouterr()
     got = {(r["z"], r["x"], r["y"])
            for r in sinks.existing_keys(spark, out).collect()}
-    want = set(grid.tiles_from_list(["1/0/0"], [0, 1, 2]))
+    want = set(ref.tiles_from_list(["1/0/0"], [0, 1, 2]))
     # only listed-expansion tiles appear (tiles with no features at all
     # may be absent, but nothing OUTSIDE the expansion may exist)
     assert got <= want

@@ -1,7 +1,5 @@
 """Benchmark decontamination (operators/decontam.py)."""
 
-from pyspark.sql import functions as F
-
 from tegola_spark.operators import decontam
 
 DOCS = [
@@ -28,13 +26,6 @@ def test_scan_positions_first_occurrence(spark):
         (2, 100): 8,              # first of two occurrences
         (3, 200): 1,              # match at string start is 1-based
     }
-
-
-def test_summary_counts_and_evidence(spark):
-    docs, probes = _mk(spark)
-    got = {r["doc_id"]: (r["n_probe_hits"], r["first_probe_id"])
-           for r in decontam.contamination_summary(docs, probes).collect()}
-    assert got == {0: (2, 100), 2: (1, 100), 3: (1, 200)}
 
 
 def test_shingled_matches_broadcast_scan(spark):

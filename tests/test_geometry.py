@@ -229,15 +229,6 @@ def test_clean_geometry_buffered_tile_region():
     assert same[0] == "LineString"
 
 
-# -- clean_linestring ------------------------------------------------------------
-
-def test_clean_linestring_removes_cycle():
-    # A-B-C-B-D: the B..B cycle collapses (validate.go:15-38)
-    pts = L(0, 0, 1, 1, 2, 2, 1, 1, 3, 3)
-    out = G.clean_linestring(pts)
-    np.testing.assert_array_equal(out, L(0, 0, 1, 1, 3, 3))
-
-
 # -- J4 PIP ------------------------------------------------------------------------
 
 def test_pip_basic_square():

@@ -1,10 +1,9 @@
-"""Port of the root maths package tables (maths/maths_test.go
-Test_Contains; maths/maths_windingorder_test.go TestWindingOrderOf)."""
+"""Port of the root maths package's Test_Contains table
+(maths/maths_test.go)."""
 
 import numpy as np
 
 from tegola_spark.operators import geometry as G
-from tegola_spark.operators import mvt
 
 # the concave 12-vertex subject ring (maths_test.go:19)
 SUBJECT = np.array([
@@ -28,12 +27,3 @@ def test_maths_contains_table():
     want = np.array([e for _, e in CONTAINS_CASES])
     got = G.points_in_rings(pts, [SUBJECT])
     assert (got == want).all(), f"mismatch at {pts[got != want]}"
-
-
-def test_winding_order_of_table():
-    ring = np.array([(4, 2), (2, 4), (2, 6), (3, 7), (5, 8), (7, 7),
-                     (8, 5), (8, 3), (6, 2)], dtype=np.float64)
-    assert mvt.winding_of_pts(ring) == mvt.COUNTER_CLOCKWISE
-    # invertPoints keeps the first vertex and reverses the rest
-    inverted = np.vstack([ring[0:1], ring[:0:-1]])
-    assert mvt.winding_of_pts(inverted) == mvt.CLOCKWISE

@@ -10,6 +10,7 @@ import struct
 import numpy as np
 import pytest
 
+import media_fixtures as fx
 from tegola_spark.operators import mp4codec as M
 
 
@@ -21,7 +22,7 @@ def _frames(n=12, seed=7):
 
 def test_roundtrip_metadata():
     frames = _frames()
-    b = M.encode_mp4(frames, width=320, height=240, fps=30)
+    b = fx.encode_mp4(frames, width=320, height=240, fps=30)
     info = M.parse_mp4(b)
     assert info["brand"] == "isom"
     assert info["duration_s"] == pytest.approx(len(frames) / 30.0)
@@ -34,7 +35,7 @@ def test_roundtrip_metadata():
 
 def test_frame_samples_bit_exact():
     frames = _frames(n=9, seed=3)
-    b = M.encode_mp4(frames, width=64, height=64)
+    b = fx.encode_mp4(frames, width=64, height=64)
     assert M.frame_samples(b) == frames
     assert M.frame_samples(b, every_n=3) == frames[::3]
     assert M.frame_samples(b, every_n=2, max_frames=2) == frames[::2][:2]
@@ -42,7 +43,7 @@ def test_frame_samples_bit_exact():
 
 def test_sample_ranges_within_mdat():
     frames = _frames(n=5, seed=11)
-    b = M.encode_mp4(frames, width=16, height=16)
+    b = fx.encode_mp4(frames, width=16, height=16)
     rng = M.sample_ranges(b)
     assert rng.shape == (5, 2)
     assert (rng[:, 1] == np.array([len(f) for f in frames])).all()
@@ -53,7 +54,7 @@ def test_sample_ranges_within_mdat():
 
 
 def test_decode_contract():
-    b = M.encode_mp4(_frames(n=4), width=128, height=96, fps=24)
+    b = fx.encode_mp4(_frames(n=4), width=128, height=96, fps=24)
     d = M.decode_mp4(b)
     assert d["format"] == "mp4"
     assert (d["width"], d["height"], d["n_frames"]) == (128, 96, 4)
@@ -93,7 +94,7 @@ def test_malformed_rejected():
 
 def test_largesize_and_size0_boxes():
     frames = _frames(n=3, seed=5)
-    b = M.encode_mp4(frames, width=32, height=32)
+    b = fx.encode_mp4(frames, width=32, height=32)
     # rewrap the trailing mdat as a largesize box: same payload
     idx = b.rfind(b"mdat")
     payload = b[idx + 4:]
@@ -110,7 +111,7 @@ def test_tkhd_flags_track_enabled_in_movie():
     """ISO-BMFF fullbox flags occupy bytes 9-11 of the box; the fixture
     must carry flags=0x000003 (track_enabled|track_in_movie), not
     0x000300 (round-3 ADVICE finding)."""
-    b = M.encode_mp4(_frames(n=2, seed=7), width=16, height=16)
+    b = fx.encode_mp4(_frames(n=2, seed=7), width=16, height=16)
     i = b.find(b"tkhd")
     assert i >= 0
     version = b[i + 4]

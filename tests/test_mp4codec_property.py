@@ -1,11 +1,10 @@
-"""Property tests: mp4 container round-trip and ring-cleaner grouping
-hold for arbitrary generated inputs (hypothesis)."""
+"""Property test: the mp4 container round-trip holds for arbitrary
+generated inputs (hypothesis)."""
 
-import numpy as np
 from hypothesis import given, settings, strategies as st
 
+import media_fixtures as fx
 from tegola_spark.operators import mp4codec as M
-from tegola_spark.operators import mvt
 
 frames_strategy = st.lists(
     st.binary(min_size=1, max_size=512), min_size=1, max_size=40)
@@ -18,7 +17,7 @@ frames_strategy = st.lists(
        fps=st.integers(min_value=1, max_value=120),
        every=st.integers(min_value=1, max_value=7))
 def test_mp4_roundtrip_property(frames, w, h, fps, every):
-    b = M.encode_mp4(frames, width=w, height=h, fps=fps)
+    b = fx.encode_mp4(frames, width=w, height=h, fps=fps)
     info = M.parse_mp4(b)
     (t,) = info["tracks"]
     assert (t["width"], t["height"], t["n_samples"]) == (w, h, len(frames))
@@ -26,40 +25,3 @@ def test_mp4_roundtrip_property(frames, w, h, fps, every):
     assert M.frame_samples(b, every_n=every) == frames[::every]
     d = M.decode_mp4(b)
     assert d["n_frames"] == len(frames) and d["codec"] == "mp4v"
-
-
-@settings(max_examples=60, deadline=None)
-@given(data=st.data())
-def test_clean_polygon_grouping_property(data):
-    """Every CW ring starts a polygon; every CCW ring lands either in
-    the polygon of the nearest preceding CW ring or in invalids (only
-    when no CW ring precedes it); nothing is lost or duplicated."""
-    n = data.draw(st.integers(min_value=0, max_value=8))
-    rings = []
-    want_cw = []
-    for i in range(n):
-        cw = data.draw(st.booleans(), label=f"cw{i}")
-        # a CCW (basic convention: shoelace < 0) unit square, reversed
-        # for CW (shoelace > 0)
-        ox = data.draw(st.integers(min_value=0, max_value=50), label=f"ox{i}")
-        r = np.array([(ox, 0), (ox, 1), (ox + 1, 1), (ox + 1, 0)], float)
-        if cw:
-            r = r[::-1]
-        assert (mvt.winding_of_pts(r) == mvt.CLOCKWISE) == cw
-        rings.append(r)
-        want_cw.append(cw)
-    polys, invalids = mvt.clean_polygon(rings)
-    # leading CCW rings -> invalids
-    lead = 0
-    while lead < n and not want_cw[lead]:
-        lead += 1
-    assert len(invalids) == lead
-    assert len(polys) == sum(want_cw)
-    # conservation: every ring appears exactly once
-    total = sum(len(p) for p in polys) + len(invalids)
-    assert total == n
-    # each polygon starts with a CW ring, holes are CCW
-    for p in polys:
-        assert mvt.winding_of_pts(p[0]) == mvt.CLOCKWISE
-        for hole in p[1:]:
-            assert mvt.winding_of_pts(hole) == mvt.COUNTER_CLOCKWISE

@@ -207,12 +207,6 @@ def test_typed_value_identity():
     assert len(out["values"]) == 3
 
 
-def test_gzip_roundtrip():
-    import gzip
-    tile = mvt.encode_tile([("l", [])])
-    assert gzip.decompress(mvt.gzip_tile(tile)) == tile
-
-
 REF_FIXTURE = Path("/root/reference/provider/testdata/11_358_827.pbf")
 
 

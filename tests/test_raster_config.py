@@ -1,7 +1,5 @@
 """Raster<->vector resampling + config substitution."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,16 +95,3 @@ def test_env_substitution():
     assert out["cache"] == "/tmp/tiles"
     with pytest.raises(config.MissingEnvVar):
         config.substitute_env({"x": "${UNSET_VAR_XYZ}"}, env)
-
-
-def test_validate_map_config():
-    config.validate_map_config({"maps": {"m": {"layers": [
-        {"name": "a", "min_zoom": 0, "max_zoom": 5},
-        {"name": "a", "min_zoom": 6, "max_zoom": 10}]}}})
-    with pytest.raises(ValueError):
-        config.validate_map_config({"maps": {"m": {"layers": [
-            {"name": "a", "min_zoom": 0, "max_zoom": 5},
-            {"name": "a", "min_zoom": 5, "max_zoom": 10}]}}})
-    with pytest.raises(ValueError):
-        config.validate_map_config({"maps": {"m": {"layers": [
-            {"name": "a", "min_zoom": 9, "max_zoom": 2}]}}})

@@ -3,6 +3,8 @@
 TestGenerateTilesForBounds) against grid.tiles_for_bounds — the
 enumeration the seed CLI fans out over."""
 
+import grid_reference as ref
+
 from tegola_spark.functions import grid
 
 WORLD = (-180.0, -85.0511, 180.0, 85.0511)
@@ -28,7 +30,7 @@ def test_tile_list_expansion():
     """TestGenerateTilesForTileList case 0 (tile_list_generator_test.go:
     79-91): the listed 14/300/781 expands across zooms [13,14,15] to
     its z13 ancestor + itself + its four z15 children."""
-    got = grid.tiles_from_list(["14/300/781"], [13, 14, 15])
+    got = ref.tiles_from_list(["14/300/781"], [13, 14, 15])
     assert got == [
         (13, 150, 390),
         (14, 300, 781),
@@ -39,10 +41,10 @@ def test_tile_list_expansion():
 
 def test_tile_list_explicit():
     """Case 1: explicit mode yields the listed tile only."""
-    assert grid.tiles_from_list(["14/300/781"], [13, 14, 15],
+    assert ref.tiles_from_list(["14/300/781"], [13, 14, 15],
                                 explicit=True) == [(14, 300, 781)]
     # and with no zooms at all, as-is too
-    assert grid.tiles_from_list([(3, 1, 2)]) == [(3, 1, 2)]
+    assert ref.tiles_from_list([(3, 1, 2)]) == [(3, 1, 2)]
 
 
 def test_tile_name_parse_errors():
@@ -69,7 +71,7 @@ def test_tile_spans_match_materialized_expansion():
                        for z, x0, x1, y0, y1 in spans
                        for x in range(x0, x1 + 1)
                        for y in range(y0, y1 + 1)})
-    assert expanded == grid.tiles_from_list(["14/300/781"], [13, 14, 15])
+    assert expanded == ref.tiles_from_list(["14/300/781"], [13, 14, 15])
     # explicit mode: one degenerate span per entry
     assert grid.tile_spans_from_list([(3, 1, 2)]) == [(3, 1, 2, 1, 2, 2)] or \
         grid.tile_spans_from_list([(3, 1, 2)]) == [(3, 1, 1, 2, 2)]
@@ -84,5 +86,5 @@ def test_tile_list_from_file_distributed(tmp_path, spark):
     p.write_text("14/300/781\n\n12/75/195\n")
     df = tiling.tile_list_from_file(spark, str(p), [13, 14, 15])
     got = sorted((r.z, r.x, r.y) for r in df.collect())
-    want = grid.tiles_from_list(["14/300/781", "12/75/195"], [13, 14, 15])
+    want = ref.tiles_from_list(["14/300/781", "12/75/195"], [13, 14, 15])
     assert got == want

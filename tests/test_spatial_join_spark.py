@@ -123,11 +123,3 @@ def test_knn_job_count(spark, points):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("knn-job-count")) <= 8
-
-
-def test_infer_geom_type_probe(spark, sf_dir):
-    # S3 LIMIT-1 probe (inspectLayerGeomType analog)
-    nat = layers.nation_layer(spark, sf_dir)
-    assert layers.infer_geom_type(nat) == "Polygon"
-    empty = nat.where("1 = 0")
-    assert layers.infer_geom_type(empty) is None

@@ -60,10 +60,6 @@ def test_minhash_lsh_finds_near_dups(spark):
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     assert (1, 2) in got
     assert all(p in {(1, 2)} for p in got)
-    verified = dedup.ngram_jaccard_verify(
-        dedup.minhash_lsh_pairs(spark.createDataFrame(pdf), threshold=0.5, bands=16),
-        spark.createDataFrame(pdf)).collect()
-    assert verified[0]["jaccard"] > 0.8
 
 
 def test_minhash_capped_bucket_links_overflow_to_representative(spark):
@@ -87,17 +83,6 @@ def test_minhash_capped_bucket_links_overflow_to_representative(spark):
     # overflow ids (rank > 4) each link to the representative id 1
     for d in range(5, n + 1):
         assert (1, d) in got
-
-
-def test_simhash_near_pairs(spark):
-    base = "word" + " token alpha beta gamma delta" * 30
-    near = base.replace("gamma", "gamna")
-    far = "entirely unrelated text " * 40
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": [base, near, far]})
-    pairs = dedup.simhash_near_pairs(spark.createDataFrame(pdf), max_hamming=6).collect()
-    got = {(r["id_a"], r["id_b"]) for r in pairs}
-    assert (1, 2) in got
-    assert (1, 3) not in got and (2, 3) not in got
 
 
 # -- textstats --------------------------------------------------------------------
@@ -191,19 +176,6 @@ def test_lsh_ann_sanity_random_data(emb):
     assert len(e & a) / len(e) >= 0.3
 
 
-def test_cosine_near_dup_pairs_finds_planted(spark):
-    rng = np.random.default_rng(7)
-    v = rng.standard_normal(16).astype(np.float32)
-    near = v + rng.standard_normal(16).astype(np.float32) * 0.01
-    other = rng.standard_normal(16).astype(np.float32)
-    pdf = pd.DataFrame({
-        "vec_id": [1, 2, 3],
-        "embedding": [v.tolist(), near.tolist(), other.tolist()]})
-    out = similarity.cosine_near_dup_pairs(
-        spark.createDataFrame(pdf), threshold=0.95, dim=16).collect()
-    assert {(r["id_a"], r["id_b"]) for r in out} == {(1, 2)}
-
-
 # -- multimodal --------------------------------------------------------------------
 
 def test_decode_media_stub(spark, sf_dir):
@@ -226,9 +198,12 @@ def test_sniff_magic():
     assert multimodal.sniff_media_type(b"RIFFxxxx") == "audio/wav"
 
 
-def test_real_decode_raises():
-    with pytest.raises(NotImplementedError):
-        multimodal.real_decode(b"x", "image/png")
+def _ivf_topk(emb, qids, **kw):
+    """IVF top-k for corpus vectors picked by id (the query side is
+    carved out of the corpus as a DataFrame)."""
+    queries = emb.where(F.col("vec_id").isin(qids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"))
+    return similarity.ivf_ann_topk_df(emb, queries, **kw)
 
 
 def test_ivf_ann_recall_planted_clusters(spark):
@@ -247,8 +222,7 @@ def test_ivf_ann_recall_planted_clusters(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     qids = [0, 6, 12, 18, 24]
     exact = similarity.brute_force_topk(df, qids, k=4)
-    approx = similarity.ivf_ann_topk(df, qids, k=4, dim=32,
-                                     n_centroids=8, nprobe=2)
+    approx = _ivf_topk(df, qids, k=4, dim=32, n_centroids=8, nprobe=2)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -417,16 +391,15 @@ def test_ivf_deterministic_and_bounded_probe(emb):
     candidate set touches only nprobe cells per query."""
     dim = emb.select(F.size("embedding")).first()[0]
     qids = [0, 1, 2, 3]
-    a = similarity.ivf_ann_topk(emb, qids, k=5, dim=dim,
-                                n_centroids=8, nprobe=2).collect()
-    b = similarity.ivf_ann_topk(emb, qids, k=5, dim=dim,
-                                n_centroids=8, nprobe=2).collect()
+    a = _ivf_topk(emb, qids, k=5, dim=dim, n_centroids=8,
+                  nprobe=2).collect()
+    b = _ivf_topk(emb, qids, k=5, dim=dim, n_centroids=8,
+                  nprobe=2).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) == len(qids) * 5
     # exactness when probing every cell
     exact = similarity.brute_force_topk(emb, qids, k=5)
-    full = similarity.ivf_ann_topk(emb, qids, k=5, dim=dim,
-                                   n_centroids=8, nprobe=8)
+    full = _ivf_topk(emb, qids, k=5, dim=dim, n_centroids=8, nprobe=8)
     e = {(r["query_id"], r["rank"], r["neighbor_id"]) for r in exact.collect()}
     f = {(r["query_id"], r["rank"], r["neighbor_id"]) for r in full.collect()}
     assert e == f

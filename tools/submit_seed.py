@@ -10,8 +10,10 @@ imported absolutely.
         seed --input /root/testdata/sf0.001 --out /tmp/sink \
         --min-zoom 0 --max-zoom 3
 
-On a cluster the same line works with --master yarn/k8s; the session
-factory only pins local[N] when --cpus is given (cli.py).
+On a cluster the same line works with --master yarn/k8s: the session
+factory (plans/session.get_spark) keeps the master given to
+spark-submit and pins local[N] only when --cpus is given or
+SPARK_GRAFT_CPUS is set in the driver's environment.
 """
 
 import sys
