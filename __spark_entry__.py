@@ -517,32 +517,31 @@ def q_embedding_norms(spark, sf_dir):
 def q_similarity_ann(spark, sf_dir):
     """LSH multiprobe ANN, HASH-CHECKED end-to-end (round-3 VERDICT
     item 4): signatures use the sequential-fold dot expression
-    (similarity.lsh_signatures sequential=True) so the DuckDB oracle
-    recomputes the ENTIRE approximate pipeline — signatures, probe
-    buckets, candidate join, exact re-rank — bit-for-bit."""
+    (similarity.lsh_signatures) so the DuckDB oracle recomputes the
+    ENTIRE approximate pipeline — signatures, probe buckets, candidate
+    join, exact re-rank — bit-for-bit."""
     from tegola_spark.operators import similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dim = emb.select(F.size("embedding")).first()[0]
     return similarity.lsh_ann_topk(emb, SIM_QUERY_IDS, k=5, dim=dim,
-                                   n_planes=8, multiprobe=2,
-                                   sequential=True)
+                                   n_planes=8, multiprobe=2)
 
 
 def q_similarity_selfjoin(spark, sf_dir):
     """Per-document near-neighbor SELF-join (|Q| = corpus): every
     vector queries the LSH index with broadcast_queries=False — the
     shuffled-hash bucket join a corpus-sized query side needs at
-    100 TB (the ivf_batch entry exercises IVF + broadcast). Sequential
-    signatures make the whole self-join oracle-checkable: DuckDB
-    recomputes every bucket and every re-rank."""
+    100 TB (the ivf_batch entry exercises IVF + broadcast). The
+    sequential-fold signatures make the whole self-join
+    oracle-checkable: DuckDB recomputes every bucket and every
+    re-rank."""
     from tegola_spark.operators import similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dim = emb.select(F.size("embedding")).first()[0]
-    return similarity.ann_self_topk(emb, k=3, dim=dim, method="lsh",
-                                    n_planes=8, multiprobe=1,
-                                    sequential=True)
+    return similarity.ann_self_topk(emb, k=3, dim=dim,
+                                    n_planes=8, multiprobe=1)
 
 
 def q_similarity_ann_batch(spark, sf_dir):
@@ -562,8 +561,7 @@ def q_similarity_ann_batch(spark, sf_dir):
         F.transform("embedding",
                     lambda v: v.cast("double") + F.lit(0.01)).alias("qemb"))
     return similarity.lsh_ann_topk_df(
-        emb, q1.unionByName(q2), k=5, dim=dim, n_planes=8, multiprobe=1,
-        sequential=True)
+        emb, q1.unionByName(q2), k=5, dim=dim, n_planes=8, multiprobe=1)
 
 
 def q_contamination(spark, sf_dir):
@@ -1051,9 +1049,8 @@ def q_similarity_ivf(spark, sf_dir):
     VERDICT item 4): fixed quantizer = the 16 lowest-id vectors (zero
     Lloyd iterations), sequential-fold distances, ties on centroid
     rank — DuckDB replays centroids, cell assignment, nprobe probing
-    and the exact cosine re-rank bit-for-bit. The Lloyd-trained
-    variant (similarity.ivf_ann_topk_df) remains the throughput path,
-    recall-tested in tests/."""
+    and the exact cosine re-rank bit-for-bit. This fixed-quantizer
+    IVF (similarity.ivf_fixed_ann_topk_df) is the engine's one IVF."""
     from tegola_spark.operators import similarity
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

@@ -93,23 +93,6 @@ def tile2lon(x, z):
     return x / np.exp2(float(z)) * 360.0 - 180.0
 
 
-def tile_extent(z, x, y):
-    """T3: tile -> web-mercator extent (minx, miny, maxx, maxy).
-
-    tile.go:76-90: res = 2*20037508.34/2^z; minx = -max + x*res;
-    maxy = max - y*res; NOTE tegola stores (minx, maxy, maxx, miny) into
-    a (MinX, MinY, MaxX, MaxY) extent — i.e. its "MinY" slot holds the
-    TOP edge. We return a normalized (minx, miny, maxx, maxy); the
-    quantization stage uses top/bottom explicitly.
-    """
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    res = (WEBMERCATOR_MAX * 2.0) / np.exp2(float(z))
-    minx = -WEBMERCATOR_MAX + x * res
-    maxy = WEBMERCATOR_MAX - y * res
-    return minx, maxy - res, minx + res, maxy
-
-
 def tile2lat_slippy(y, z):
     """slippy y2deg — vendor/.../slippy/maths.go:149-153 (NO y=0 special
     case, unlike tegola's Tile2Lat)."""
@@ -275,7 +258,8 @@ def col_lat2num(lat: "Column", z: "Column | int") -> "Column":
 
 
 def col_tile_extent(z: "Column", x: "Column", y: "Column"):
-    """Column form of :func:`tile_extent` -> (minx, miny, maxx, maxy)."""
+    """T3: tile -> web-mercator extent, normalized to (minx, miny, maxx,
+    maxy) from tegola's (minx, maxy, maxx, miny) (tile.go:76-90)."""
     res = (F.lit(WEBMERCATOR_MAX) * F.lit(2.0)) / F.pow(F.lit(2.0), z.cast("double"))
     minx = F.lit(-WEBMERCATOR_MAX) + x.cast("double") * res
     maxy = F.lit(WEBMERCATOR_MAX) - y.cast("double") * res

@@ -281,113 +281,6 @@ def _point_less(p1, p2) -> bool:
     return (p1[0], p1[1]) < (p2[0], p2[1])
 
 
-# ---------------------------------------------------------------------------
-# clip region primitive (reference maths/clip/region — G2 parity surface)
-# ---------------------------------------------------------------------------
-
-def region_sentinels(rmin, rmax, clockwise: bool = True):
-    """The region's 4 sentinel corner points + per-axis down-or-right
-    flags, in the reference's winding-dependent order
-    (maths/clip/region/region.go:56-89)."""
-    minx, miny = rmin
-    maxx, maxy = rmax
-    if clockwise:
-        pts = [(minx, maxy), (minx, miny), (maxx, miny), (maxx, maxy)]
-        down_or_right = [False, True, True, False]
-    else:
-        pts = [(minx, miny), (minx, maxy), (maxx, maxy), (maxx, miny)]
-        down_or_right = [True, True, False, False]
-    return pts, down_or_right
-
-
-def _ex_in_between(seg, pt) -> bool:
-    # maths/line.go:54-75: strict interior of the segment bbox, with a
-    # degenerate (zero-extent) coordinate counting as good
-    (p0, p1) = seg
-    lx, gx = (p0[0], p1[0]) if p0[0] <= p1[0] else (p1[0], p0[0])
-    ly, gy = (p0[1], p1[1]) if p0[1] <= p1[1] else (p1[1], p0[1])
-    goodx = (lx < pt[0] < gx) or (gx - lx == 0)
-    goody = (ly < pt[1] < gy) or (gy - ly == 0)
-    return goodx and goody
-
-
-def region_axis_intersect(seg, rmin, rmax, axis_idx: int,
-                          clockwise: bool = True):
-    """Axis.Intersect (axis.go:50-75): (pt, does_intersect). The
-    infinite-line hit must lie ON the segment (inclusive) and in the
-    axis's strict interior — except that a corner hit still counts
-    when the segment is NOT perpendicular-axis-aligned and lies on the
-    axis inclusively (the diagonal-through-corner case of the
-    reference's own axis table)."""
-    pts, _ = region_sentinels(rmin, rmax, clockwise)
-    axis = (pts[axis_idx], pts[(axis_idx + 1) % 4])
-    pt = _intersect_infinite(axis, seg)  # maths.Intersect arg order
-    if pt is None:
-        return None, False
-    if not _in_between(seg, pt):
-        return pt, False
-    if not _ex_in_between(axis, pt):
-        # axis.go:63-73: reject parallel-degenerate hits, keep hits
-        # that at least lie on the axis inclusively
-        p1, p2 = tuple(seg[0]), tuple(seg[1])
-        a_horz = axis[0][1] == axis[1][1]
-        a_vert = axis[0][0] == axis[1][0]
-        s_horz = p1[1] == p2[1]
-        s_vert = p1[0] == p2[0]
-        if (a_horz and s_vert) or (a_vert and s_horz) \
-                or not _in_between(axis, pt):
-            return pt, False
-    return pt, True
-
-
-def region_axis_is_inward(seg, axis_idx: int, clockwise: bool = True):
-    """Axis.IsInward (axis.go:197-255): (inward, ok); ok=False is the
-    reference's ErrNoDirection (segment parallel to the axis pair).
-    Axes 0/2 test dx, 1/3 test dy, with the 1/3 roles swapped for
-    counter-clockwise regions."""
-    p1, p2 = tuple(seg[0]), tuple(seg[1])
-    dx = p2[0] - p1[0]
-    dy = p2[1] - p1[1]
-    idx = axis_idx
-    if idx in (0, 2):
-        if dx == 0:
-            return False, False
-        return ((dx > 0) if idx == 0 else (dx < 0)), True
-    if dy == 0:
-        return False, False
-    if not clockwise:
-        idx = 3 if idx == 1 else 1
-    return ((dy > 0) if idx == 1 else (dy < 0)), True
-
-
-def region_intersections(seg, rmin, rmax, clockwise: bool = True):
-    """Region.Intersections (maths/clip/region/region.go:146-178 +
-    axis.go:50-75,197-255): the 0-4 intersections of ``seg`` with the
-    region's axes, each tagged with whether the segment is heading
-    INWARD across that axis, in axis order. Duplicates and cancelling
-    pairs are intentionally NOT removed (the reference leaves that to
-    the caller). Returns [(x, y), inward, axis_idx] triples."""
-    p1, p2 = tuple(seg[0]), tuple(seg[1])
-    minx, miny = rmin
-    maxx, maxy = rmax
-
-    def strictly_contains(pt):  # region.go:122-125 (exclusive)
-        return maxx > pt[0] > minx and maxy > pt[1] > miny
-
-    out = []
-    if strictly_contains(p1) and strictly_contains(p2):
-        return out
-    for i in range(4):
-        pt, ok = region_axis_intersect(seg, rmin, rmax, i, clockwise)
-        if not ok:
-            continue
-        inward, has_dir = region_axis_is_inward(seg, i, clockwise)
-        if not has_dir:
-            continue
-        out.append((pt, inward, i))
-    return out
-
-
 def clip_linestring(pts: np.ndarray, ext):
     """clip.LineString — clip.go:50-122. ``ext`` = (minx, miny, maxx,
     maxy). Returns a list of (n,2) arrays (the clipped multi-line)."""

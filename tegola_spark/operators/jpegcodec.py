@@ -32,6 +32,12 @@ class JpegError(ValueError):
     pass
 
 
+def _need(body: bytes, n: int, marker: int) -> None:
+    """A segment body must hold the ``n`` bytes its own fields declare."""
+    if len(body) < n:
+        raise JpegError(f"segment FF{marker:02X} truncated")
+
+
 # natural index of the k-th zigzag position (T.81 figure A.6)
 ZIGZAG = np.array([
     0,  1,  8, 16,  9,  2,  3, 10,
@@ -242,6 +248,7 @@ def decode_jpeg(b: bytes) -> dict:
             while i < len(body):
                 pq, tq = body[i] >> 4, body[i] & 0x0F
                 i += 1
+                _need(body, i + (64 if pq == 0 else 128), marker)
                 if pq == 0:
                     tab = np.frombuffer(body, dtype=np.uint8,
                                         count=64, offset=i).astype(np.float64)
@@ -253,33 +260,36 @@ def decode_jpeg(b: bytes) -> dict:
                 nat = np.zeros(64)
                 nat[ZIGZAG] = tab
                 qt[tq] = nat
-        elif marker in (0xC0, 0xC1):  # SOF0/1: baseline/extended huffman
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
+                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):  # SOFn
+            _need(body, 6, marker)
             _, height, width, nc = struct.unpack_from(">BHHB", body, 0)
+            _need(body, 6 + 3 * nc, marker)
             comps = [(body[6 + 3 * i], body[7 + 3 * i] >> 4,
                       body[7 + 3 * i] & 0x0F, body[8 + 3 * i])
                      for i in range(nc)]
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            _, height, width, nc = struct.unpack_from(">BHHB", body, 0)
-            comps = [(body[6 + 3 * i], body[7 + 3 * i] >> 4,
-                      body[7 + 3 * i] & 0x0F, body[8 + 3 * i])
-                     for i in range(nc)]
-            baseline = False  # progressive/lossless/arithmetic
+            if marker not in (0xC0, 0xC1):  # SOF0/1: baseline/extended huffman
+                baseline = False  # progressive/lossless/arithmetic
         elif marker == 0xC4:  # DHT
             i = 0
             while i < len(body):
+                _need(body, i + 17, marker)
                 tc, th = body[i] >> 4, body[i] & 0x0F
                 bits = list(body[i + 1:i + 17])
                 n = sum(bits)
+                _need(body, i + 17 + n, marker)
                 vals = list(body[i + 17:i + 17 + n])
                 huff[(tc, th)] = _canonical_codes(bits, vals)
                 i += 17 + n
         elif marker == 0xDD:  # DRI
+            _need(body, 2, marker)
             (restart,) = struct.unpack_from(">H", body, 0)
         elif marker == 0xDA:  # SOS
             if comps is None:
                 raise JpegError("SOS before SOF")
+            _need(body, 1, marker)
             ns = body[0]
+            _need(body, 1 + 2 * ns, marker)
             scan = [(body[1 + 2 * i], body[2 + 2 * i] >> 4,
                      body[2 + 2 * i] & 0x0F) for i in range(ns)]
             epos = pos + 2 + ln

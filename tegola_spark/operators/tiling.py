@@ -107,13 +107,6 @@ def assign_bbox_tiles(feats: DataFrame, zooms, buffer_frac: float = BUFFER_FRAC)
     )
 
 
-def tile_list(spark, bounds, zooms) -> DataFrame:
-    """T5: the driving tile work-list for (bounds, zooms) — the Spark
-    form of the seed fan-out (cmd/tegola/cmd/cache/seed_purge.go:232-266)."""
-    rows = grid.tiles_for_bounds(bounds[0], bounds[1], bounds[2], bounds[3], zooms)
-    return spark.createDataFrame(rows, "z int, x long, y long")
-
-
 def tile_list_from_file(spark, path: str, zooms=None,
                         explicit: bool = False) -> DataFrame:
     """S11 tile-list source: one z/x/y name per line, expanded across

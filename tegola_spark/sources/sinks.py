@@ -57,8 +57,8 @@ _KEY_SCHEMA = "x long, y long, z int"
 
 
 def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
-                mode: str = "append", report: list | None = None) -> dict:
-    """Write the tile table, the lineage table and a manifest entry.
+                report: list | None = None) -> dict:
+    """Append the tile table, the lineage table and a manifest entry.
 
     ``_metrics`` gets the metrics frame without its ``layer_bytes``
     blob (the tile table holds those bytes); a frame without the blob,
@@ -87,10 +87,10 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
     (tiles.observe(obs, *exprs)
      .repartition("z")
      .sortWithinPartitions("x", "y")
-     .write.mode(mode).partitionBy("z").parquet(os.path.join(path, "tiles")))
+     .write.mode("append").partitionBy("z").parquet(os.path.join(path, "tiles")))
     batch = obs.get
     (metrics.drop("layer_bytes")
-     .write.mode(mode).partitionBy("z").parquet(os.path.join(path, "_metrics")))
+     .write.mode("append").partitionBy("z").parquet(os.path.join(path, "_metrics")))
     manifest = os.path.join(path, "manifest.jsonl")
     prev_total = 0
     if os.path.exists(manifest):
@@ -101,8 +101,6 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
                 # then-cumulative n_tiles — fall back so resume keeps lineage
                 prev_total = rec0.get("n_tiles_total",
                                       rec0.get("n_tiles", 0)) or prev_total
-    if mode == "overwrite":
-        prev_total = 0
     rec = {
         "ts": time.time(),
         "n_tiles": int(batch["n"]),

@@ -10,6 +10,13 @@ documents touch:
   cumulative docs --build_tiles(tile_filter=affected)--> fresh tiles
   fresh tiles --append with _batch--> versioned sink (latest wins)
 
+Each micro-batch writes through ``sinks.write_tiles``, the seed path's
+writer, inside ``sinks.persisted``: the tiles and the lineage (both
+tagged ``_batch``) read one encode, and the sink's manifest gains one
+record per non-empty micro-batch. A tile rewritten by a later batch
+is appended again, so a record's ``n_tiles_total`` counts appended
+rows, rewrites included, not distinct tiles.
+
 Correctness invariant (tested): after any sequence of micro-batches,
 ``read_current(sink)`` is BYTE-IDENTICAL to a from-scratch batch build
 over the cumulative corpus — incremental maintenance is exactly a
@@ -49,21 +56,6 @@ def affected_tiles(spark: SparkSession, new_docs: DataFrame, sf_dir: str,
     return fanned.select("z", "x", "y").distinct()
 
 
-def _write_versioned(tiles: DataFrame, metrics: DataFrame, out_path: str,
-                     batch_id: int) -> None:
-    """Append one micro-batch's tiles and lineage, tagged ``_batch``.
-    Both writes read the one persisted encode (``sinks.persisted``);
-    the lineage leaves out the layer blobs, as ``sinks.write_tiles``
-    does."""
-    with sinks.persisted(metrics):
-        (tiles.withColumn("_batch", F.lit(int(batch_id)))
-         .repartition("z").sortWithinPartitions("x", "y")
-         .write.mode("append").partitionBy("z").parquet(f"{out_path}/tiles"))
-        (metrics.drop("layer_bytes")
-         .withColumn("_batch", F.lit(int(batch_id)))
-         .write.mode("append").partitionBy("z").parquet(f"{out_path}/_metrics"))
-
-
 def read_current(spark: SparkSession, out_path: str) -> DataFrame:
     """Latest-wins view of the versioned sink: one row per (z, x, y),
     from the highest ``_batch`` that wrote it (merge-on-read)."""
@@ -74,24 +66,19 @@ def read_current(spark: SparkSession, out_path: str) -> DataFrame:
 
 
 def stream_tiles(spark: SparkSession, input_dir: str, sf_dir: str,
-                 out_path: str, zooms, checkpoint_dir: str,
-                 with_polygons: bool = True,
-                 max_files_per_trigger: int | None = None):
+                 out_path: str, zooms, checkpoint_dir: str):
     """Run the incremental maintenance stream over a document directory
     until all currently-available files are processed (availableNow
     trigger; call again as new files land, or swap the trigger for a
     continuous deployment). Returns after awaitTermination."""
     schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
+    stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         keys = affected_tiles(spark, batch_df, sf_dir, zooms)
-        if batch_id == 0 and with_polygons:
+        if batch_id == 0:
             # bootstrap: static polygon layers touch tiles no document
             # ever will (polygon-only tiles); build them once in the
             # first batch — later batches re-encode a tile's polygon
@@ -103,8 +90,11 @@ def stream_tiles(spark: SparkSession, input_dir: str, sf_dir: str,
         cumulative = spark.read.parquet(input_dir)
         metrics, tiles = pipeline.build_tiles(
             spark, sf_dir, zooms=list(zooms), docs=cumulative,
-            tile_filter=keys, with_polygons=with_polygons)
-        _write_versioned(tiles, metrics, out_path, batch_id)
+            tile_filter=keys)
+        tag = F.lit(int(batch_id))
+        with sinks.persisted(metrics):
+            sinks.write_tiles(tiles.withColumn("_batch", tag),
+                              metrics.withColumn("_batch", tag), out_path)
 
     q = (stream.writeStream.foreachBatch(process)
          .option("checkpointLocation", checkpoint_dir)

@@ -49,3 +49,20 @@ def tiles_from_list(entries, zooms=None, explicit: bool = False):
                     for cy in range(y << d, (y + 1) << d):
                         out.add((tz, cx, cy))
     return sorted(out)
+
+
+def tile_extent(z, x, y):
+    """T3: tile -> web-mercator extent (minx, miny, maxx, maxy).
+
+    tile.go:76-90: res = 2*20037508.34/2^z; minx = -max + x*res;
+    maxy = max - y*res; NOTE tegola stores (minx, maxy, maxx, miny) into
+    a (MinX, MinY, MaxX, MaxY) extent — i.e. its "MinY" slot holds the
+    TOP edge. We return a normalized (minx, miny, maxx, maxy); the
+    quantization stage uses top/bottom explicitly.
+    """
+    x = np.asarray(x, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    res = (grid.WEBMERCATOR_MAX * 2.0) / np.exp2(float(z))
+    minx = -grid.WEBMERCATOR_MAX + x * res
+    maxy = grid.WEBMERCATOR_MAX - y * res
+    return minx, maxy - res, minx + res, maxy

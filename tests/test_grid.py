@@ -58,7 +58,7 @@ def test_known_tile_chicago_z17():
 
 def test_tile_extent_z233():
     # tile.go:76-90 with max=20037508.34; z=2 res=10018754.17
-    minx, miny, maxx, maxy = grid.tile_extent(2, 3, 3)
+    minx, miny, maxx, maxy = ref.tile_extent(2, 3, 3)
     assert minx == pytest.approx(10018754.17, abs=1e-6)
     assert maxx == pytest.approx(20037508.34, abs=1e-6)
     assert maxy == pytest.approx(-10018754.17, abs=1e-6)

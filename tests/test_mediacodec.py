@@ -291,3 +291,38 @@ def test_decode_media_mjpeg_real_features(spark):
         {"pixels": frames_px[0], "samples": None})
     # decoded first frame differs from source only by DCT rounding
     np.testing.assert_allclose(out["feature"], want, atol=0.05)
+
+
+_APP0 = b"\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+
+
+@pytest.mark.parametrize("segment", [
+    b"\xff\xc0\x00\x09\x08\x00\x10\x00\x10\x03\x01",  # SOF0: 3 comps, 1 byte
+    b"\xff\xc0\x00\x05\x08\x00\x10",                  # SOF0: short header
+    b"\xff\xc2\x00\x07\x08\x00\x10\x00",              # SOF2: short header
+    b"\xff\xdb\x00\x0a\x00" + bytes(7),               # DQT: 7 of 64 entries
+    b"\xff\xc4\x00\x08\x00" + bytes(5),               # DHT: 5 of 16 counts
+    b"\xff\xc4\x00\x15\x00\x04" + bytes(15),          # DHT: 4 values missing
+    b"\xff\xdd\x00\x03\x00",                          # DRI: 1 of 2 bytes
+    b"\xff\xc0\x00\x0b\x08\x00\x10\x00\x10\x01\x01\x11\x00"
+    b"\xff\xda\x00\x04\x03\x01",                      # SOS: 3 comps, 1 byte
+], ids=["sof0-comps", "sof0-header", "sof2-header", "dqt-table",
+        "dht-counts", "dht-values", "dri", "sos"])
+def test_jpeg_truncated_segment_raises_jpegerror(segment):
+    """A segment shorter than its own fields declare is a JpegError, not
+    an IndexError or struct.error."""
+    from tegola_spark.operators import jpegcodec as jc
+
+    with pytest.raises(jc.JpegError, match="truncated"):
+        jc.decode_jpeg(b"\xff\xd8" + _APP0 + segment + b"\xff\xd9")
+
+
+def test_mjpeg_truncated_first_frame_keeps_container_dims():
+    """A first MJPEG frame whose SOF is cut short keeps the container's
+    dims with pixels=None instead of failing the whole payload."""
+    good = fx.encode_jpeg(_gradient_rgb(16, 16), quant=1)
+    bad = b"\xff\xd8" + _APP0 + b"\xff\xc0\x00\x09\x08\x00\x10\x00\x10\x03\x01"
+    info = mc.decode(fx.encode_mp4([bad, good], 16, 16, codec=b"mjpg"),
+                     "video/mp4")
+    assert (info["width"], info["height"]) == (16, 16)
+    assert info["pixels"] is None

@@ -6,12 +6,17 @@ uses stays with it).
 Roots are every non-test ``.py`` file outside the package (the
 ``queries()`` entry, bench, tools, perfbench) plus the public names of
 ``cli.py`` and ``streaming/*``. Reachability is transitive over AST
-``Name``/``Attribute``/import nodes only, so a name that appears only in
-a docstring or a comment does not count. It is module-aware: a
-definition is reached only when its name is used by reached code AND
-its module is imported by reached code, so a whole module that nothing
-reached imports is dead even where its names collide with a live
-module's (``wkt.encode`` vs ``wkb.encode``).
+``Name``/``Attribute`` nodes only, so a name that appears only in a
+docstring or a comment does not count. Every reference is qualified
+before it counts: an attribute of a module alias (``wkb.encode``)
+names that module's definition, a bare name bound by ``from ... import``
+names the definition it was imported from (through re-exports), and
+any other bare name names its own module's definition. A definition
+is reached only through a reference qualified to it, so two modules'
+same-named definitions (``wkt.encode`` vs ``wkb.encode``, a function
+vs a same-named attribute such as ``args.tile_list``) never keep each
+other alive. A module's import-time code runs, and is walked, once
+reached code imports it.
 """
 
 from __future__ import annotations
@@ -34,9 +39,6 @@ ALLOW = {
     "tegola_spark.functions.config.EnvDict":
         "typed config accessors; kept this round with their 53-case "
         "table, deletion queued in ROADMAP direction 12",
-    "tegola_spark.operators.geometry.region_intersections":
-        "reference clip-region tables; kept this round with their 23 "
-        "cases, deletion queued in ROADMAP direction 12",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -49,8 +51,18 @@ def _modname(path: pathlib.Path) -> str:
     return ".".join(parts)
 
 
+def _resolve(mod_name: str, is_pkg: bool, node: ast.ImportFrom) -> str:
+    if not node.level:
+        return node.module or ""
+    base = mod_name.split(".")
+    if not is_pkg:
+        base = base[:-1]
+    base = base[:len(base) - (node.level - 1)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
 class _Module:
-    def __init__(self, path: pathlib.Path):
+    def __init__(self, path: pathlib.Path, pkg_mods: set[str]):
         self.name = _modname(path)
         self.is_pkg = path.name == "__init__.py"
         self.tree = ast.parse(path.read_text(), str(path))
@@ -64,95 +76,136 @@ class _Module:
                                  else [n.target])
                        if isinstance(t, ast.Name)
                        and not t.id.startswith("__")}
+        # local name -> {(module, None) for a module alias,
+        #                (module, name) for an imported name}, from every
+        # import in the file (function-level imports included)
+        self.binds: dict[str, set] = {}
+        for n in ast.walk(self.tree):
+            if isinstance(n, ast.Import):
+                for a in n.names:
+                    mod = a.name if a.asname else a.name.split(".")[0]
+                    self.binds.setdefault(a.asname or mod, set()).add(
+                        (mod, None))
+            elif isinstance(n, ast.ImportFrom):
+                base = _resolve(self.name, self.is_pkg, n)
+                for a in n.names:
+                    full = f"{base}.{a.name}"
+                    self.binds.setdefault(a.asname or a.name, set()).add(
+                        (full, None) if full in pkg_mods
+                        else (base, a.name))
+
+    def module_of(self, expr, pkg_mods: set[str]) -> set[str]:
+        """Package modules an expression names (an alias, or an
+        attribute chain of one such as ``tegola_spark.functions.wkb``)."""
+        if isinstance(expr, ast.Name):
+            return {m for m, d in self.binds.get(expr.id, ()) if d is None}
+        if isinstance(expr, ast.Attribute):
+            return {f"{m}.{expr.attr}"
+                    for m in self.module_of(expr.value, pkg_mods)
+                    if f"{m}.{expr.attr}" in pkg_mods}
+        return set()
 
 
-def _resolve(mod_name: str, is_pkg: bool, node: ast.ImportFrom) -> str:
-    if not node.level:
-        return node.module or ""
-    base = mod_name.split(".")
-    if not is_pkg:
-        base = base[:-1]
-    base = base[:len(base) - (node.level - 1)]
-    return ".".join(base + ([node.module] if node.module else []))
-
-
-def _uses(nodes, mod_name: str, is_pkg: bool):
-    """(identifiers, imported module names) of the code under ``nodes``."""
-    names, mods = set(), set()
+def _uses(nodes, m: _Module, pkg_mods: set[str]):
+    """(qualified (module, name) references, imported module names) of
+    the code under ``nodes`` in module ``m``."""
+    refs, mods = set(), set()
     for top in nodes:
         for n in ast.walk(top):
             if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
-                names.add(n.id)
+                if n.id in m.binds:
+                    refs |= {t for t in m.binds[n.id] if t[1] is not None}
+                else:
+                    refs.add((m.name, n.id))
             elif isinstance(n, ast.Attribute):
-                names.add(n.attr)
+                refs |= {(mod, n.attr)
+                         for mod in m.module_of(n.value, pkg_mods)}
             elif isinstance(n, ast.Import):
                 mods |= {a.name for a in n.names}
             elif isinstance(n, ast.ImportFrom):
-                base = _resolve(mod_name, is_pkg, n)
+                base = _resolve(m.name, m.is_pkg, n)
                 mods.add(base)
-                for a in n.names:
-                    names.add(a.name)
-                    mods.add(f"{base}.{a.name}")
+                mods |= {f"{base}.{a.name}" for a in n.names}
     closed = set()
-    for m in mods:
-        parts = m.split(".")
+    for mod in mods:
+        parts = mod.split(".")
         closed |= {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
-    return names, closed
+    return refs, closed
+
+
+def _target(modules: dict, mod: str, name: str, depth: int = 0):
+    """The definition a qualified reference names, following
+    re-exports (``from .x import f`` in ``mod``), or None."""
+    m = modules.get(mod)
+    if m is None or depth > 8:
+        return None
+    if name in m.defs or name in m.consts:
+        return mod, name
+    for tmod, tname in m.binds.get(name, ()):
+        if tname is not None:
+            hit = _target(modules, tmod, tname, depth + 1)
+            if hit:
+                return hit
+    return None
 
 
 def census(extra_roots=()) -> set[str]:
     """Module-qualified top-level definitions that no root reaches.
     ``extra_roots`` (module-qualified names) count as roots too."""
-    modules = {m.name: m for m in map(_Module, sorted(PKG.rglob("*.py")))}
-    names, mods = set(), set()
+    paths = sorted(PKG.rglob("*.py"))
+    pkg_mods = {_modname(p) for p in paths}
+    modules = {m.name: m for m in (_Module(p, pkg_mods) for p in paths)}
+    refs, mods, seen = set(), set(), set()
     reached: set[tuple[str, str]] = set()
     walked_mods: set[str] = set()
 
-    def use(nodes, mod_name, is_pkg):
-        n, m = _uses(nodes, mod_name, is_pkg)
-        names.update(n)
-        mods.update(m)
+    def use(nodes, m):
+        r, md = _uses(nodes, m, pkg_mods)
+        refs.update(r)
+        mods.update(md)
 
     for path in sorted(ROOT.rglob("*.py")):
         rel = path.relative_to(ROOT).parts
         if rel[0] in ("tegola_spark", "tests") or rel[0].startswith("."):
             continue
-        use([ast.parse(path.read_text(), str(path))], _modname(path), False)
+        root = _Module(path, pkg_mods)
+        use([root.tree], root)
     for m in modules.values():
         if m.name == "tegola_spark.cli" or m.name.startswith(
                 "tegola_spark.streaming"):
             mods.add(m.name)
-            reached |= {(m.name, d) for d in m.defs if not d.startswith("_")}
-            use([m.defs[d] for d in m.defs if not d.startswith("_")],
-                m.name, m.is_pkg)
+            public = [d for d in m.defs if not d.startswith("_")]
+            reached |= {(m.name, d) for d in public}
+            use([m.defs[d] for d in public], m)
     for qual in extra_roots:
         mod, d = qual.rsplit(".", 1)
         mods.add(mod)
         reached.add((mod, d))
-        use([modules[mod].defs[d]], mod, modules[mod].is_pkg)
+        use([modules[mod].defs[d]], modules[mod])
 
     changed = True
     while changed:
         changed = False
         for m in modules.values():
-            if m.name not in mods:
-                continue
-            if m.name not in walked_mods:
+            if m.name in mods and m.name not in walked_mods:
                 # import-time code: everything but def/class bodies
                 walked_mods.add(m.name)
                 top = [n for n in m.tree.body if not isinstance(n, _DEFS)]
                 top += [d for n in m.defs.values() for d in n.decorator_list]
-                use(top, m.name, m.is_pkg)
+                use(top, m)
                 changed = True
-            for d, node in m.defs.items():
-                if (m.name, d) not in reached and d in names:
-                    reached.add((m.name, d))
-                    use([node], m.name, m.is_pkg)
-                    changed = True
+        for ref in refs - seen:
+            seen.add(ref)
+            hit = _target(modules, *ref)
+            if hit is None or hit in reached:
+                continue
+            reached.add(hit)
+            node = modules[hit[0]].defs.get(hit[1])
+            if node is not None:
+                use([node], modules[hit[0]])
+            changed = True
     return {f"{m.name}.{d}" for m in modules.values()
-            for d in (*m.defs, *m.consts)
-            if (m.name, d) not in reached
-            and not (d in m.consts and m.name in mods and d in names)}
+            for d in (*m.defs, *m.consts) if (m.name, d) not in reached}
 
 
 def test_every_definition_is_on_an_output_path():
@@ -164,7 +217,7 @@ def test_every_definition_is_on_an_output_path():
 
 
 def test_allow_list_is_short_and_current():
-    assert len(ALLOW) <= 5
+    assert len(ALLOW) <= 4
     assert all(reason.strip() for reason in ALLOW.values())
     # every allow-listed name exists and still needs the exemption
     unreached = census()

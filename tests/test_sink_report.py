@@ -6,11 +6,11 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from tegola_spark.operators import mvt
 from tegola_spark.plans import pipeline
 from tegola_spark.sources import corpus, sinks
-from tegola_spark.streaming import live
 
 
 @pytest.fixture(scope="module")
@@ -35,8 +35,9 @@ def _binary_cols(path):
 
 
 def test_lineage_has_no_blob_column(spark, sf_dir, sf001_z3_sink, tmp_path):
-    """Both sink writers store each tile once: ``_metrics`` keeps the
-    lineage columns and no binary column."""
+    """The sink writer stores each tile once: ``_metrics`` keeps the
+    lineage columns and no binary column, also for the ``_batch``-tagged
+    frames the live stream writes."""
     m = pq.read_table(os.path.join(sf001_z3_sink, "_metrics"))
     assert _binary_cols(os.path.join(sf001_z3_sink, "_metrics")) == []
     assert set(m.column_names) == {"z", "x", "y", "layer", "n_features",
@@ -44,7 +45,9 @@ def test_lineage_has_no_blob_column(spark, sf_dir, sf001_z3_sink, tmp_path):
 
     metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1])
     out = str(tmp_path / "live")
-    live._write_versioned(tiles, metrics, out, 3)
+    tag = F.lit(3)
+    sinks.write_tiles(tiles.withColumn("_batch", tag),
+                      metrics.withColumn("_batch", tag), out)
     assert _binary_cols(os.path.join(out, "_metrics")) == []
     lineage = pq.read_table(os.path.join(out, "_metrics"))
     assert set(lineage.column("_batch").to_pylist()) == {3}

@@ -2,8 +2,10 @@
 any sequence of micro-batches the latest-wins sink equals a
 from-scratch batch build over the cumulative corpus, byte for byte;
 the second batch rebuilds only affected tiles and resumes from the
-stream checkpoint (wave-1 files are not reprocessed)."""
+stream checkpoint (wave-1 files are not reprocessed); each micro-batch
+adds one manifest record counting the rows it appended."""
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -58,6 +60,15 @@ def test_stream_matches_batch_rebuild(spark, sf_dir, tmp_path):
     n_affected = affected2.count()
     n_batch1 = raw.where(F.col("_batch") == batches[1]).count()
     assert n_batch1 == n_affected  # only affected tiles were rebuilt
+
+    # the live sink is written by sinks.write_tiles: one manifest record
+    # per non-empty micro-batch, each counting the rows its _batch added
+    with open(os.path.join(sink, "manifest.jsonl")) as f:
+        recs = [json.loads(line) for line in f]
+    per_batch = [raw.where(F.col("_batch") == b).count() for b in batches]
+    assert [r["n_tiles"] for r in recs] == per_batch
+    assert [r["n_tiles_total"] for r in recs] == [per_batch[0], sum(per_batch)]
+    assert [r["zooms"] for r in recs] == [ZOOMS, ZOOMS]
 
 
 def test_tile_filter_limits_build(spark, sf_dir):

@@ -198,86 +198,6 @@ def test_sniff_magic():
     assert multimodal.sniff_media_type(b"RIFFxxxx") == "audio/wav"
 
 
-def _ivf_topk(emb, qids, **kw):
-    """IVF top-k for corpus vectors picked by id (the query side is
-    carved out of the corpus as a DataFrame)."""
-    queries = emb.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"))
-    return similarity.ivf_ann_topk_df(emb, queries, **kw)
-
-
-def test_ivf_ann_recall_planted_clusters(spark):
-    """IVF recall on clustered data: k-means cells align with the
-    planted clusters, so nprobe=2 finds nearly all true neighbors."""
-    rng = np.random.default_rng(12)
-    rows = []
-    vid = 0
-    for c in range(20):
-        base = rng.standard_normal(32)
-        base /= np.linalg.norm(base)
-        for _ in range(6):
-            v = base + rng.standard_normal(32) * 0.01
-            rows.append((vid, (v / np.linalg.norm(v)).astype(np.float32).tolist()))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    qids = [0, 6, 12, 18, 24]
-    exact = similarity.brute_force_topk(df, qids, k=4)
-    approx = _ivf_topk(df, qids, k=4, dim=32, n_centroids=8, nprobe=2)
-    e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.9, f"recall {recall}"
-
-
-def test_ivf_df_external_queries_and_sample_training(spark):
-    """DataFrame-native query side (round-2 review item): queries are a
-    DataFrame of EXTERNAL vectors (never collected to the driver), and
-    the quantizer trains on a bounded deterministic sample
-    (max_train < corpus) — recall vs a NumPy-exact oracle stays high."""
-    rng = np.random.default_rng(13)
-    vecs = []
-    for c in range(20):
-        base = rng.standard_normal(32)
-        base /= np.linalg.norm(base)
-        for _ in range(6):
-            v = base + rng.standard_normal(32) * 0.01
-            vecs.append((v / np.linalg.norm(v)).astype(np.float32))
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>")
-
-    qsrc = [0, 6, 12, 18, 24, 30]
-    qrows = []
-    for s in qsrc:
-        qv = vecs[s] + rng.standard_normal(32).astype(np.float32) * 0.005
-        qrows.append((1000 + s, qv.tolist()))
-    qdf = spark.createDataFrame(qrows, "query_id long, qemb array<float>")
-
-    out = similarity.ivf_ann_topk_df(df, qdf, k=4, dim=32,
-                                     n_centroids=8, nprobe=2,
-                                     max_train=32)  # < 120 -> sampled train
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-
-    M = np.vstack(vecs).astype(np.float64)
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    hits = 0
-    total = 0
-    for qid, qv in qrows:
-        q = np.asarray(qv, dtype=np.float64)
-        cos = Mn @ (q / np.linalg.norm(q))
-        exact = set(np.argsort(-cos, kind="stable")[:4].tolist())
-        hits += len(exact & got.get(qid, set()))
-        total += 4
-    assert hits / total >= 0.9, f"recall {hits / total}"
-    # determinism of the sampled training + df query side
-    again = similarity.ivf_ann_topk_df(df, qdf, k=4, dim=32,
-                                       n_centroids=8, nprobe=2,
-                                       max_train=32).collect()
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again))
-
-
 def test_lsh_df_external_queries_recall(spark):
     """lsh_ann_topk_df with EXTERNAL query vectors (ids not in the
     corpus): probe buckets are generated as column expressions, and
@@ -354,57 +274,6 @@ def test_word_ngrams_and_jaccard(spark):
     assert same.select(ts.col_jaccard(F.col("ga"), F.col("gb")).alias("j")).first()["j"] == 1.0
 
 
-def test_ann_self_topk_recall(spark):
-    """Self-join ANN (every vector queries the index, non-broadcast
-    query side): IVF recall vs the NumPy-exact self-kNN stays high on
-    clustered data, and no query pairs with itself."""
-    rng = np.random.default_rng(21)
-    vecs = []
-    for c in range(20):
-        base = rng.standard_normal(24)
-        base /= np.linalg.norm(base)
-        for _ in range(6):
-            v = base + rng.standard_normal(24) * 0.02
-            vecs.append((v / np.linalg.norm(v)).astype(np.float32))
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>")
-    out = similarity.ann_self_topk(df, k=3, dim=24, n_centroids=8, nprobe=3)
-    got = {}
-    for r in out.collect():
-        assert r["neighbor_id"] != r["query_id"]
-        got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    M = np.vstack(vecs).astype(np.float64)
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    cos = Mn @ Mn.T
-    np.fill_diagonal(cos, -np.inf)
-    hits = total = 0
-    for qid in range(len(vecs)):
-        exact = set(np.argsort(-cos[qid], kind="stable")[:3].tolist())
-        hits += len(exact & got.get(qid, set()))
-        total += 3
-    assert hits / total >= 0.9, f"recall {hits / total}"
-
-
-def test_ivf_deterministic_and_bounded_probe(emb):
-    """Same inputs -> same centroids -> same results; the probed
-    candidate set touches only nprobe cells per query."""
-    dim = emb.select(F.size("embedding")).first()[0]
-    qids = [0, 1, 2, 3]
-    a = _ivf_topk(emb, qids, k=5, dim=dim, n_centroids=8,
-                  nprobe=2).collect()
-    b = _ivf_topk(emb, qids, k=5, dim=dim, n_centroids=8,
-                  nprobe=2).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) == len(qids) * 5
-    # exactness when probing every cell
-    exact = similarity.brute_force_topk(emb, qids, k=5)
-    full = _ivf_topk(emb, qids, k=5, dim=dim, n_centroids=8, nprobe=8)
-    e = {(r["query_id"], r["rank"], r["neighbor_id"]) for r in exact.collect()}
-    f = {(r["query_id"], r["rank"], r["neighbor_id"]) for r in full.collect()}
-    assert e == f
-
-
 def test_ivf_fixed_full_probe_is_exact(emb):
     """The oracle-replayable fixed-quantizer IVF (round-5): probing
     every cell must reproduce brute force exactly; bounded probing
@@ -420,19 +289,6 @@ def test_ivf_fixed_full_probe_is_exact(emb):
                                          n_centroids=8, nprobe=2).collect()
     assert len(part) == len(qids) * 5
     assert all(r["neighbor_id"] != r["query_id"] for r in part)
-
-
-def test_sequential_signatures_match_blas(emb):
-    """The sequential-fold signature (the oracle-checkable path) agrees
-    with the BLAS batch path on the driver embeddings — same bits
-    unless a dot lands within summation-reordering distance of zero,
-    which the seeded planes never do on this data."""
-    dim = emb.select(F.size("embedding")).first()[0]
-    a = similarity.lsh_signatures(emb, dim, n_planes=8).select(
-        "vec_id", "_sig").toPandas().sort_values("vec_id")
-    b = similarity.lsh_signatures(emb, dim, n_planes=8, sequential=True) \
-        .select("vec_id", "_sig").toPandas().sort_values("vec_id")
-    assert (a["_sig"].to_numpy() == b["_sig"].to_numpy()).all()
 
 
 def test_simhash_portable_matches_reference_loop(spark):
@@ -468,13 +324,12 @@ def test_simhash_portable_matches_reference_loop(spark):
 
 
 def test_lsh_selfjoin_sequential_recall(emb):
-    """The oracle-checked LSH self-join (sequential signatures,
+    """The oracle-checked LSH self-join (sequential-fold signatures,
     multiprobe=1) still finds a sane fraction of true neighbors on the
     random-gaussian worst case."""
     dim = emb.select(F.size("embedding")).first()[0]
-    got = similarity.ann_self_topk(emb, k=3, dim=dim, method="lsh",
-                                   n_planes=8, multiprobe=1,
-                                   sequential=True)
+    got = similarity.ann_self_topk(emb, k=3, dim=dim,
+                                   n_planes=8, multiprobe=1)
     allids = [r[0] for r in emb.select("vec_id").limit(20).collect()]
     exact = similarity.brute_force_topk(emb, allids, k=3)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}

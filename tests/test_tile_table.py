@@ -5,7 +5,7 @@ All float-exact.
 ToPixel/FromPixel (tile.go:173-193) truncate pixels to int64 and use
 the raw tegola extent whose "MinY" slot holds the TOP edge (yspan is
 NEGATIVE) — the round-trip test replicates that composition against
-grid.tile_extent's normalized values.
+grid_reference.tile_extent's normalized values.
 """
 
 import grid_reference as ref
@@ -26,7 +26,7 @@ def _init_extent(z, x, y):
     """tile.go:76-90 Init: returns (minx, top, res) with max=20037508.34
     truncated constant; tegola's MinY slot holds the TOP edge and
     yspan = MaxY - MinY = -res."""
-    minx, miny, maxx, maxy = grid.tile_extent(z, x, y)
+    minx, miny, maxx, maxy = ref.tile_extent(z, x, y)
     return minx, maxy, maxx - minx
 
 
