@@ -176,14 +176,13 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
 
 
 def domain_pagerank(spark: SparkSession, docs: DataFrame,
-                    n_docs: int | None = None, iters: int = 5) -> DataFrame:
+                    iters: int = 5) -> DataFrame:
     """End-to-end domain rank over the corpus link graph: derive
     edges, run ``iters`` integer PageRank sweeps, and attach each
-    domain's total out-link weight.  Output
+    domain's total out-link weight.  Link targets are picked modulo
+    the corpus's own document count.  Output
     ``(domain, pr_micro, out_weight)``, one row per domain."""
-    if n_docs is None:
-        n_docs = docs.count()
-    edges = link_graph(docs, n_docs).localCheckpoint()
+    edges = link_graph(docs, docs.count()).localCheckpoint()
     nodes = docs.select(
         F.concat(F.col("source"), F.lit(".example.com")).alias("domain")) \
         .distinct()
@@ -218,15 +217,14 @@ def top_en_seeds(docs: DataFrame, k: int = 4) -> DataFrame:
 
 
 def domain_trustrank(spark: SparkSession, docs: DataFrame,
-                     n_docs: int | None = None, iters: int = 5) -> DataFrame:
+                     iters: int = 5) -> DataFrame:
     """TrustRank over the corpus link graph: personalized PageRank
     whose teleport (and dangling mass) lands only on the trusted seed
     domains, so trust decays with link distance from the seed set —
     the web-spam demotion / quality propagation operator (Gyöngyi et
-    al. 2004).  Output ``(domain, tr_micro, is_seed)``."""
-    if n_docs is None:
-        n_docs = docs.count()
-    edges = link_graph(docs, n_docs).localCheckpoint()
+    al. 2004).  The link graph is ``domain_pagerank``'s.  Output
+    ``(domain, tr_micro, is_seed)``."""
+    edges = link_graph(docs, docs.count()).localCheckpoint()
     nodes = docs.select(
         F.concat(F.col("source"), F.lit(".example.com")).alias("domain")) \
         .distinct()

@@ -1,16 +1,13 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
-metadata struct; decode and feature extraction run as an Arrow-batched
-``mapInPandas`` stage. The decode kernels are REAL for every
-stdlib-decodable layer (mediacodec.py: PNG/BMP/baseline JPEG pixels,
-WAV PCM samples, GIF headers, MP4 container + sample tables, and the
-first frame's pixels of an MJPEG-in-MP4 track); ``decode_media``
-computes content features from decoded pixels/samples and falls back
-to deterministic payload-hash features only where an external codec
-library would be required (non-MJPEG video codecs — no
-PIL/ffmpeg/librosa in this container, per the BASELINE round-1
-instructions).
+metadata struct, derived in an Arrow-batched ``mapInPandas`` stage.
+Nothing parses a payload: its media type is sniffed from the magic
+prefix, and its dims and feature vector are a deterministic stub
+computed from its length and first bytes. There is no decoder because
+no output supplies media: the corpus's only binary column is the
+rendered ``html`` page (``media_from_pages``), which always sniffs as
+``application/octet-stream``.
 
 Scale notes: payload columns must NEVER pass through a wide shuffle;
 derive features early, project the payload away, and let the narrow
@@ -61,39 +58,14 @@ def _stub_features(payload: bytes, n: int = 8) -> np.ndarray:
     return np.array([c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32)
 
 
-def _real_features(info: dict) -> np.ndarray | None:
-    """8-dim feature vector from ACTUAL decoded content: images get
-    per-channel means + a 4-bin luminance histogram + std; audio gets
-    RMS/mean/std/zero-cross + duration stats."""
-    px = info.get("pixels")
-    if px is not None:
-        flat = px.reshape(-1, px.shape[-1]).astype(np.float64)
-        lum = flat.mean(axis=1)
-        hist, _ = np.histogram(lum, bins=4, range=(0, 256))
-        hist = hist / max(len(lum), 1)
-        chm = flat.mean(axis=0)
-        chm = np.pad(chm, (0, 3 - len(chm)))[:3] if len(chm) < 3 else chm[:3]
-        return np.concatenate([chm / 255.0, hist,
-                               [lum.std() / 255.0]]).astype(np.float32)
-    s = info.get("samples")
-    if s is not None and np.size(s):
-        x = np.asarray(s, dtype=np.float64).reshape(-1) / 32768.0
-        zc = float(np.mean(np.abs(np.diff(np.sign(x))) > 0)) if len(x) > 1 else 0.0
-        return np.array([
-            np.sqrt(np.mean(x * x)), x.mean(), x.std(), zc,
-            x.min(), x.max(), float(info.get("rate", 0)) / 48000.0,
-            info["n_frames"] / 1e6], dtype=np.float32)
-    return None
-
-
 def decode_media(df: DataFrame, payload_col: str = "payload",
                  id_col: str = "doc_id") -> DataFrame:
-    """mapInPandas decode stage: sniff type, REAL-decode stdlib-decodable
-    formats (PNG/BMP/JPEG pixels, WAV PCM, GIF headers — mediacodec.py)
-    for true metadata + content features, deterministic stub features
-    for everything else; the payload column is PROJECTED AWAY in the
-    output."""
-    from . import mediacodec
+    """mapInPandas metadata stage: sniff each payload's type from its
+    magic prefix and give it the deterministic stub dims (width
+    ``16 + len % 1024``, height ``16 + len % 768``, one frame for images
+    and ``1 + len % 30`` otherwise) and stub features. The payload is
+    opaque, never decoded, whatever its prefix; the payload column is
+    PROJECTED AWAY in the output."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -103,26 +75,10 @@ def decode_media(df: DataFrame, payload_col: str = "payload",
             for i, b in zip(ids, payloads):
                 b = bytes(b) if b is not None else b""
                 mt = sniff_media_type(b)
-                info = None
-                try:
-                    info = mediacodec.decode(b, mt)
-                except mediacodec.MediaDecodeError:
-                    pass
-                if info is not None:
-                    feat = _real_features(info)
-                    if feat is None:
-                        feat = _stub_features(b)
-                    w = info.get("width", 0)
-                    h = info.get("height", 0)
-                    frames = info.get("n_frames", 1) or 1
-                else:
-                    feat = _stub_features(b)
-                    # deterministic fake dims derived from content length
-                    w = 16 + (len(b) % 1024)
-                    h = 16 + (len(b) % 768)
-                    frames = 1 if mt.startswith("image") else 1 + (len(b) % 30)
-                rows.append((int(i), mt, len(b), int(w), int(h), int(frames),
-                             np.asarray(feat, dtype=np.float32).tolist()))
+                n = len(b)
+                frames = 1 if mt.startswith("image") else 1 + n % 30
+                rows.append((int(i), mt, n, 16 + n % 1024, 16 + n % 768,
+                             frames, _stub_features(b).tolist()))
             yield pd.DataFrame(rows, columns=[
                 "doc_id", "media_type", "payload_len", "width", "height",
                 "n_frames", "feature"])

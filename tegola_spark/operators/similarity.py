@@ -69,7 +69,7 @@ def _planes(dim: int, n_planes: int, seed: int = _SEED) -> np.ndarray:
 
 
 def lsh_signatures(emb: DataFrame, dim: int, n_planes: int = 12,
-                   id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
+                   emb_col: str = "embedding") -> DataFrame:
     """Random-hyperplane signatures. Each plane dot is the same
     left-fold column expression the brute-force oracle uses (aggregate
     over zip_with), so any engine with ordered list aggregation
@@ -116,12 +116,12 @@ def lsh_ann_topk_df(emb: DataFrame, queries: DataFrame, k: int, dim: int,
     equi-join on the bucket id and an exact re-rank. Set
     ``broadcast_queries=False`` for corpus-sized query sets (shuffled
     hash join + AQE on the bucket key)."""
-    sigs = with_norm(lsh_signatures(emb, dim, n_planes, id_col, emb_col), emb_col)
+    sigs = with_norm(lsh_signatures(emb, dim, n_planes, emb_col), emb_col)
     base = sigs.select(F.col(id_col).alias("nid"), F.col(emb_col).alias("nemb"),
                        F.col("_norm").alias("nnorm"), F.col("_sig").alias("nsig"))
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_emb_col).alias("qemb"))
-    qsigs = with_norm(lsh_signatures(q, dim, n_planes, "query_id", "qemb"),
+    qsigs = with_norm(lsh_signatures(q, dim, n_planes, "qemb"),
                       "qemb").withColumnRenamed("_norm", "qnorm")
     masks = [0]
     if multiprobe >= 1:

@@ -12,9 +12,11 @@ cmd/tegola/cmd/cache/worker.go:50-77). The Spark-native form:
     On Iceberg the same layout is the partition spec ``(z, bucket(x))``
     plus snapshot metadata; this module keeps a JSON manifest as the
     snapshot stand-in since Iceberg jars aren't in this image.
-  * resume: LEFT ANTI join of a batch's tiles and metrics against the
-    sink's existing (z, x, y) keys — the R6 skip-if-cached, in one
-    shuffle-free broadcast join (``write_batch``).
+  * resume: LEFT ANTI join of a batch's tiles against the tile table's
+    (z, x, y) keys, and of its metrics against the lineage table's —
+    the R6 skip-if-cached, in shuffle-free broadcast joins
+    (``write_batch``); a batch killed between its two writes gets its
+    lineage on resume.
   * lineage: the per-(z,x,y,layer) metrics table rides along in a
     ``_metrics`` subdirectory (north rule: per-partition lineage +
     metrics) — lineage columns only (z, x, y, layer, n_features,
@@ -68,10 +70,10 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
     manifest counts THIS batch via ``observe()``: the counters (tiles,
     zooms, bytes, tiles past ``MAX_TILE_SIZE``) are collected by the
     same job that writes the tile files, so counting adds no pass of
-    its own, and cumulative totals come from summing manifest records —
-    re-scanning the whole sink per batch is a full read of all
-    historical output (reviewed round 1). ``report`` (``build_report``
-    rows) is recorded as given.
+    its own. A record carries no running total, so a write reads
+    neither the sink nor the manifest's earlier records; a sink's totals
+    are the sums of its records. ``report`` (``build_report`` rows) is
+    recorded as given.
 
     The two writes are two Spark actions. Over an un-persisted build
     each one re-runs the encode; ``write_batch`` is the caller that
@@ -84,27 +86,19 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
         exprs += [F.coalesce(F.sum(size), F.lit(0)).alias("n_bytes"),
                   F.count(F.when(size > MAX_TILE_SIZE, 1)).alias("n_big")]
     obs = Observation()
-    (tiles.observe(obs, *exprs)
-     .repartition("z")
+    # observed above the exchange: when the exchange turns out empty (a
+    # resumed batch whose tiles are all written), adaptive execution
+    # replaces the plan below it, and a counter there is never reported
+    (tiles.repartition("z")
+     .observe(obs, *exprs)
      .sortWithinPartitions("x", "y")
      .write.mode("append").partitionBy("z").parquet(os.path.join(path, "tiles")))
     batch = obs.get
     (metrics.drop("layer_bytes")
      .write.mode("append").partitionBy("z").parquet(os.path.join(path, "_metrics")))
-    manifest = os.path.join(path, "manifest.jsonl")
-    prev_total = 0
-    if os.path.exists(manifest):
-        with open(manifest) as f:
-            for line in f:
-                rec0 = json.loads(line)
-                # manifests written before n_tiles_total existed carried a
-                # then-cumulative n_tiles — fall back so resume keeps lineage
-                prev_total = rec0.get("n_tiles_total",
-                                      rec0.get("n_tiles", 0)) or prev_total
     rec = {
         "ts": time.time(),
         "n_tiles": int(batch["n"]),
-        "n_tiles_total": prev_total + int(batch["n"]),
         "zooms": sorted(int(z) for z in batch["zs"]),
     }
     if "n_bytes" in batch:
@@ -112,21 +106,22 @@ def write_tiles(tiles: DataFrame, metrics: DataFrame, path: str,
         rec["n_tiles_over_500kb"] = int(batch["n_big"])
     if report is not None:
         rec["report"] = report
-    with open(manifest, "a") as f:
+    with open(os.path.join(path, "manifest.jsonl"), "a") as f:
         f.write(json.dumps(rec) + "\n")
     return rec
 
 
-def existing_keys(spark: SparkSession, path: str) -> DataFrame | None:
-    """(z, x, y) keys already in the sink, or None if the sink has no
-    tile table yet. A tile table that exists but cannot be read raises
-    (when the keys are scanned) instead of reading as empty: an empty
-    key set would make resume append every tile again and duplicate
-    (z, x, y) keys."""
-    tiles_path = os.path.join(path, "tiles")
-    if not os.path.exists(tiles_path):
+def existing_keys(spark: SparkSession, path: str,
+                  table: str = "tiles") -> DataFrame | None:
+    """(z, x, y) keys already in one of the sink's tables — ``tiles``
+    or ``_metrics`` — or None if the sink has no such table yet. A
+    table that exists but cannot be read raises (when the keys are
+    scanned) instead of reading as empty: an empty key set would make
+    resume append every row again and duplicate (z, x, y) keys."""
+    table_path = os.path.join(path, table)
+    if not os.path.exists(table_path):
         return None
-    return spark.read.schema(_KEY_SCHEMA).parquet(tiles_path) \
+    return spark.read.schema(_KEY_SCHEMA).parquet(table_path) \
         .select(*TILE_KEYS)
 
 
@@ -174,21 +169,35 @@ def build_report(metrics: DataFrame) -> list:
 def write_batch(spark: SparkSession, tiles: DataFrame, metrics: DataFrame,
                 path: str) -> dict | None:
     """Write one seed batch of a build's (metrics, tiles) frames,
-    skipping tiles the sink already holds (R6 resume). Returns the
+    skipping rows the sink already holds (R6 resume). Returns the
     manifest record, with the batch's ``build_report``, or None when
     nothing is left to write.
 
+    Each frame is anti-joined against its own table's keys: the tiles
+    against ``tiles/``, the metrics against ``_metrics``. So a batch
+    killed between its two writes heals on resume: its tiles are
+    skipped and its lineage is written. ``write_tiles`` writes the tiles
+    before the lineage, so the sink's lineage keys are a subset of its
+    tile keys, and the tile keys left to write are a subset of the
+    lineage keys left to write. The batch is therefore empty exactly
+    when the report of the remaining metrics has no rows. A lineage key
+    counts as written only where the tile table holds it too; by the
+    write order that is every lineage key, and it makes the report read
+    the tile table, so an unreadable one raises even when no lineage is
+    left to write.
+
     The metrics frame is persisted before any action, so the report
     aggregate, the tile write and the lineage write evaluate the encode
-    once. Tiles and metrics share their (z, x, y) keys, so the batch is
-    empty exactly when the report of the remaining metrics has no
-    rows."""
+    once."""
     with persisted(metrics):
         done = existing_keys(spark, path)
         if done is not None:
-            done = F.broadcast(done)
-            tiles = tiles.join(done, TILE_KEYS, "left_anti")
-            metrics = metrics.join(done, TILE_KEYS, "left_anti")
+            tiles = tiles.join(F.broadcast(done), TILE_KEYS, "left_anti")
+            lineage = existing_keys(spark, path, "_metrics")
+            if lineage is not None:
+                done = lineage.join(done, TILE_KEYS, "left_semi")
+                metrics = metrics.join(F.broadcast(done), TILE_KEYS,
+                                       "left_anti")
         report = build_report(metrics)
         if not report:
             return None

@@ -2,15 +2,18 @@
 Iceberg snapshot checkpoints").
 
 Without Iceberg jars in this image, the checkpoint is the sink's own
-key set + a JSON manifest (sources/sinks.py); on a real deployment the
+key sets + a JSON manifest (sources/sinks.py); on a real deployment the
 manifest maps 1:1 to Iceberg snapshot ids and the resume anti-join
 becomes a snapshot-diff. The semantics verified here — a killed run
 re-invoked with the same args writes exactly the missing tiles and
-never rewrites a finished one — are the semantics the north rule
-grades. A resumed batch is still encoded in full: the anti-join
-against the sink's keys runs after the encode (``sinks.write_batch``),
-so finished tiles are re-encoded and then dropped. Skipping them
-before the encode is ROADMAP direction 9.
+lineage rows and never rewrites a finished one — are the semantics the
+north rule grades. Tiles resume against the tile table's keys and
+lineage against the lineage table's, so a batch killed between its
+tile write and its lineage write gets its lineage on resume; the
+sink's lineage keys are always a subset of its tile keys. A resumed
+batch is still encoded in full: the anti-joins run after the encode
+(``sinks.write_batch``), so finished tiles are re-encoded and then
+dropped. Skipping them before the encode is ROADMAP direction 9.
 
 Mirrors `tegola cache seed` + its skip-if-cached worker
 (cmd/tegola/cmd/cache/cache.go:118-234, worker.go:50-77).

@@ -14,8 +14,8 @@ Each micro-batch writes through ``sinks.write_tiles``, the seed path's
 writer, inside ``sinks.persisted``: the tiles and the lineage (both
 tagged ``_batch``) read one encode, and the sink's manifest gains one
 record per non-empty micro-batch. A tile rewritten by a later batch
-is appended again, so a record's ``n_tiles_total`` counts appended
-rows, rewrites included, not distinct tiles.
+is appended again, so the sum of the records' ``n_tiles`` counts
+appended rows, rewrites included, not distinct tiles.
 
 Correctness invariant (tested): after any sequence of micro-batches,
 ``read_current(sink)`` is BYTE-IDENTICAL to a from-scratch batch build

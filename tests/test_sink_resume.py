@@ -42,26 +42,8 @@ def test_manifest_counts_batch_not_whole_sink(spark, sf_dir, tmp_path):
     checkpoint.seed_tiles(spark, sf_dir, out, zooms=[0, 1, 2])
     recs = [json.loads(l) for l in open(os.path.join(out, "manifest.jsonl"))]
     assert [r["n_tiles"] for r in recs] == [5, 16]     # per-batch counts
-    assert recs[-1]["n_tiles_total"] == 21             # cumulative from manifest
+    assert sum(r["n_tiles"] for r in recs) == 21       # totals are sums
     assert recs[0]["zooms"] == [0, 1] and recs[-1]["zooms"] == [2]
-
-
-def test_iceberg_probe_and_legacy_manifest_fallback(spark, tmp_path):
-    """Manifests written before n_tiles_total existed resume with their
-    then-cumulative n_tiles (ADVICE r2)."""
-    from tegola_spark.sources import sinks
-    import json
-
-    path = tmp_path / "sink"
-    path.mkdir()
-    with open(path / "manifest.jsonl", "w") as f:
-        f.write(json.dumps({"ts": 0.0, "n_tiles": 7, "zooms": [0]}) + "\n")
-    tiles = spark.createDataFrame(
-        [(0, 0, 0, bytearray(b"x"))], "z int, x long, y long, tile_bytes binary")
-    metrics = spark.createDataFrame(
-        [(0, 0, 0, "l", 1)], "z int, x long, y long, layer string, n_features long")
-    rec = sinks.write_tiles(tiles, metrics, str(path))
-    assert rec["n_tiles_total"] == 7 + 1
 
 
 def test_manifest_observed_bytes(spark, tmp_path):
@@ -157,6 +139,58 @@ def test_write_batch_writes_from_persisted_encode(spark, sf_dir, tmp_path,
         assert "InMemoryTableScan" in tiles_plan
         assert "InMemoryTableScan" in metrics_plan
     assert _sink_digest(out) == golden
+
+
+def _lineage(path):
+    """The sink's lineage rows without the encode time (a timing), in
+    key order, read without Spark."""
+    import pyarrow.parquet as pq
+
+    if not os.path.exists(os.path.join(path, "_metrics")):
+        return []
+    t = pq.read_table(os.path.join(path, "_metrics")).to_pandas()
+    t = t.drop(columns="encode_ms").astype({"z": int})
+    return sorted(map(tuple, t[sorted(t.columns)].itertuples(index=False)))
+
+
+@pytest.fixture(scope="module")
+def sf001_z2_lineage(spark, sf_dir, tmp_path_factory):
+    """Lineage rows of an uninterrupted seed of sf0.01 z0..2."""
+    out = str(tmp_path_factory.mktemp("ref") / "sink")
+    checkpoint.seed_tiles(spark, os.path.join(os.path.dirname(sf_dir),
+                                              "sf0.01"), out, zooms=[0, 1, 2])
+    return _lineage(out)
+
+
+@pytest.mark.parametrize("batch_zooms", [2, 3])
+def test_resume_heals_lineage_of_batch_killed_between_writes(
+        spark, sf_dir, tmp_path, monkeypatch, sf001_z2_lineage, batch_zooms):
+    """A seed killed after a batch's tile write and before its lineage
+    write leaves tiles without lineage. Re-running the seed writes the
+    missing lineage and no tile twice: the sink equals an
+    uninterrupted seed's."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+    killed = []
+
+    def parquet_killed_once(self, path, *args, **kwargs):
+        if path.endswith("_metrics") and not killed:
+            killed.append(path)
+            raise RuntimeError("killed before the lineage write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_killed_once)
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    out = str(tmp_path / "sink")
+    with pytest.raises(RuntimeError, match="killed"):
+        checkpoint.seed_tiles(spark, sf001, out, zooms=[0, 1, 2],
+                              batch_zooms=batch_zooms)
+    assert not os.path.exists(os.path.join(out, "_metrics"))
+    checkpoint.seed_tiles(spark, sf001, out, zooms=[0, 1, 2],
+                          batch_zooms=batch_zooms)
+    assert _sink_digest(out) == SF001_Z2_GOLDEN
+    assert _lineage(out) == sf001_z2_lineage
 
 
 def test_write_batch_unpersists_on_every_exit(spark, sf_dir, tmp_path,

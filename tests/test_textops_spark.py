@@ -1,5 +1,8 @@
 """Training-data operators: dedup, text stats, similarity, multimodal."""
 
+import hashlib
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -178,18 +181,68 @@ def test_lsh_ann_sanity_random_data(emb):
 
 # -- multimodal --------------------------------------------------------------------
 
+# md5 of the sorted decode_media rows of the sf0.01 rendered pages
+# (``_media_digest``); recorded from the engine while it still carried
+# stdlib PNG/BMP/WAV/GIF/JPEG/MP4 decoders, none of which a page reaches
+SF001_MEDIA_MD5 = "265c9c8acb69343e2781fd821ed23822"
+
+
+def _stub_dims(media_type, n):
+    frames = 1 if media_type.startswith("image") else 1 + n % 30
+    return 16 + n % 1024, 16 + n % 768, frames
+
+
+def _media_digest(rows):
+    h = hashlib.md5()
+    for r in sorted(rows, key=lambda r: r["doc_id"]):
+        h.update(repr((r["doc_id"], r["media_type"], r["payload_len"],
+                       r["width"], r["height"], r["n_frames"],
+                       list(r["feature"]))).encode())
+    return h.hexdigest()
+
+
 def test_decode_media_stub(spark, sf_dir):
-    pages = corpus.pages(spark, sf_dir).limit(50)
-    media = multimodal.media_from_pages(pages)
-    out = multimodal.decode_media(media)
+    """Every payload is opaque: its type is sniffed from the magic
+    prefix and its dims and features are the deterministic stub. Pins
+    the whole ``q_multimodal_decode`` output over the sf0.01 pages, and
+    payloads that carry a media magic prefix but garbage after it."""
+    import __spark_entry__ as entry
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    out = multimodal.decode_media(
+        multimodal.media_from_pages(corpus.pages(spark, sf001)))
+    assert "payload" not in out.columns          # payload projected away
     rows = out.collect()
-    assert len(rows) == 50
+    assert len(rows) == 500
     for r in rows:
         assert r["payload_len"] > 0
         assert len(r["feature"]) == 8
         assert r["media_type"] == "application/octet-stream"
-    # payload projected away
-    assert "payload" not in out.columns
+        assert (r["width"], r["height"], r["n_frames"]) == _stub_dims(
+            r["media_type"], r["payload_len"])
+    assert _media_digest(rows) == SF001_MEDIA_MD5
+    q = entry.q_multimodal_decode(spark, sf001).collect()
+    assert sorted(map(tuple, q)) == sorted(
+        tuple(r)[:6] for r in rows)
+
+    tail = b"\x07\x00\xff!"
+    garbage = [b"\x89PNG\r\n\x1a\n" + tail, b"\xff\xd8\xff" + tail,
+               b"GIF8" + tail, b"BM" + tail, b"RIFF" + tail,
+               b"\x00\x00\x00\x18ftyp" + tail]
+    df = spark.createDataFrame([(i, bytearray(p))
+                                for i, p in enumerate(garbage)],
+                               "doc_id long, payload binary")
+    got = sorted(multimodal.decode_media(df).collect(),
+                 key=lambda r: r["doc_id"])
+    assert [r["media_type"] for r in got] == [
+        "image/png", "image/jpeg", "image/gif", "image/bmp", "audio/wav",
+        "video/mp4"]
+    for r, p in zip(got, garbage):
+        assert r["payload_len"] == len(p)
+        assert (r["width"], r["height"], r["n_frames"]) == _stub_dims(
+            r["media_type"], len(p))
+        assert r["feature"] == pytest.approx(
+            multimodal._stub_features(p).tolist())
 
 
 def test_sniff_magic():
