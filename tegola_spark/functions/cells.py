@@ -19,8 +19,6 @@ reproduce it with plain arithmetic):
 
 from __future__ import annotations
 
-import numpy as np
-
 from . import grid
 
 RES_SHIFT = 52
@@ -34,15 +32,6 @@ try:
 except ImportError:  # pragma: no cover
     F = None
     Column = None
-
-
-def cell_decode(cell):
-    """int64 cell id -> (res, x, y)."""
-    cell = np.asarray(cell, dtype=np.int64)
-    res = cell >> RES_SHIFT
-    x = (cell >> XY_SHIFT) & (_XY_MULT - 1)
-    y = cell & (_XY_MULT - 1)
-    return res, x, y
 
 
 # ---------------------------------------------------------------------------

@@ -87,12 +87,6 @@ def lat2num(lat, z):
     return y
 
 
-def tile2lon(x, z):
-    """Num2Deg lon — tile.go:123."""
-    x = np.asarray(x, dtype=np.float64)
-    return x / np.exp2(float(z)) * 360.0 - 180.0
-
-
 def tile2lat_slippy(y, z):
     """slippy y2deg — vendor/.../slippy/maths.go:149-153 (NO y=0 special
     case, unlike tegola's Tile2Lat)."""

@@ -581,16 +581,3 @@ def points_in_rings(points: np.ndarray, rings) -> np.ndarray:
             )
             on_edge |= ((d == 0) & within).any(axis=0)
     return inside | on_edge
-
-
-def points_in_polygon(points: np.ndarray, geom) -> np.ndarray:
-    """Containment against a Polygon or MultiPolygon geometry tuple."""
-    gtype, data = geom
-    if gtype == "Polygon":
-        return points_in_rings(points, data)
-    if gtype == "MultiPolygon":
-        out = np.zeros(len(points), dtype=bool)
-        for rings in data:
-            out |= points_in_rings(points, rings)
-        return out
-    raise ValueError(f"not a polygon: {gtype}")

@@ -5,25 +5,25 @@ step 7).
 A "raster" here is the engine's native gridded form: a DataFrame of
 (cell, value) at one resolution — the standard discrete-global-grid
 representation (H3/S2 papers call these "cell rasters"). All operators
-are pure column expressions except the per-cell geometry synthesis.
+are pure column expressions; none runs a Python stage.
 
   * rasterize_points   points + value -> cell aggregate        (1 shuffle)
   * rasterize_polygons polygons -> covered cells whose center is inside
-                       (cover explode + vectorized PIP residual)
+                       (cover explode + the spatial join's Catalyst
+                       point-in-polygon residual)
   * resample           raster at res R -> coarser res R' (parent rollup,
                        map-side combine) or finer (children explode,
                        value divided or copied)
   * vectorize          raster -> polygon features (one bbox quad per
-                       cell) usable as a spatial-join layer or MVT input
+                       cell, ring-SoA columns) usable as a spatial-join
+                       layer or MVT input
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions import cells, grid
+from ..functions import cells, wkb
 from . import spatial_join as sj
 
 _XY_MULT = 1 << cells.XY_SHIFT
@@ -44,10 +44,10 @@ def rasterize_points(points: DataFrame, res: int, value_col: str | None = None,
 
 
 def rasterize_polygons(polys: DataFrame, res: int, value_col: str = "feature_id") -> DataFrame:
-    """polygons (geom WKB + envelope cols) -> cells whose CENTER is
+    """polygons (ring-SoA + envelope cols) -> cells whose CENTER is
     inside the polygon, valued by value_col (last-writer-wins resolved
     by max). Center-point sampling is the standard rasterization rule."""
-    cover = sj.polygon_cover(polys, res)
+    cover = sj.polygon_cover(sj.with_ring_edges(polys), res)
     # cell center in lon/lat (pure column exprs: inverse slippy)
     cx = F.shiftright("cell", cells.XY_SHIFT) % F.lit(_XY_MULT)
     cy = F.col("cell") % F.lit(_XY_MULT)
@@ -58,8 +58,7 @@ def rasterize_polygons(polys: DataFrame, res: int, value_col: str = "feature_id"
     inner = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * (cy.cast("double") + 0.5) / F.lit(n))
     lat = F.atan((F.exp(inner) - F.exp(-inner)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
     cand = cover.withColumn("lon", lon).withColumn("lat", lat)
-    pip = sj.pip_filter_udf()
-    hit = cand.where(pip(F.col("lon"), F.col("lat"), F.col("geom")))
+    hit = cand.where(sj.contains())
     return hit.groupBy("cell").agg(F.max(value_col).cast("double").alias("value"))
 
 
@@ -94,25 +93,11 @@ def resample(raster: DataFrame, from_res: int, to_res: int,
 
 
 def vectorize(raster: DataFrame, min_value: float | None = None) -> DataFrame:
-    """raster -> polygon features (cell bbox quads in lon/lat WKB),
-    suitable as a spatial-join right side or MVT layer input."""
-    from ..functions import wkb as wkbmod
-
+    """raster -> polygon features: each cell's bbox quad in lon/lat,
+    as envelope columns plus one 4-vertex Polygon ring in ring-SoA
+    columns (vertex order SW, SE, NE, NW), suitable as a spatial-join
+    right side or MVT layer input."""
     r = raster if min_value is None else raster.where(F.col("value") >= min_value)
-
-    @F.pandas_udf(T.BinaryType())
-    def cell_poly(cell: pd.Series) -> pd.Series:
-        res, x, y = cells.cell_decode(cell.to_numpy())
-        out = []
-        for rr, xx, yy in zip(res, x, y):
-            lon0 = float(grid.tile2lon(xx, rr))
-            lon1 = float(grid.tile2lon(xx + 1, rr))
-            lat0 = float(grid.tile2lat_slippy(yy + 1, rr))  # south
-            lat1 = float(grid.tile2lat_slippy(yy, rr))      # north
-            ring = np.array([[lon0, lat0], [lon1, lat0], [lon1, lat1], [lon0, lat1]])
-            out.append(wkbmod.encode(("Polygon", [ring])))
-        return pd.Series(out)
-
     cx = F.shiftright("cell", cells.XY_SHIFT) % F.lit(_XY_MULT)
     cy = F.col("cell") % F.lit(_XY_MULT)
     res_col = F.shiftright("cell", cells.RES_SHIFT)
@@ -124,9 +109,13 @@ def vectorize(raster: DataFrame, min_value: float | None = None) -> DataFrame:
     inner1 = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * (cy.cast("double") + 1) / n)
     lat1c = F.atan((F.exp(inner0) - F.exp(-inner0)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
     lat0c = F.atan((F.exp(inner1) - F.exp(-inner1)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
-    return r.select(
+    quad = r.select(
         F.col("cell").alias("feature_id"), "value",
         lon0.alias("minx"), lat0c.alias("miny"),
-        lon1.alias("maxx"), lat1c.alias("maxy"),
-        cell_poly("cell").alias("geom"),
-    )
+        lon1.alias("maxx"), lat1c.alias("maxy"))
+    x0, y0, x1, y1 = (F.col(c) for c in ("minx", "miny", "maxx", "maxy"))
+    return quad.select(
+        "*", F.array(x0, y0, x1, y0, x1, y1, x0, y1).alias("coords"),
+        F.array(F.lit(4)).alias("ring_lens"),
+        F.array(F.lit(1)).alias("poly_lens"),
+        F.lit(wkb.WKB_POLYGON).alias("gkind"))

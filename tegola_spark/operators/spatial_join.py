@@ -11,8 +11,13 @@ provider/postgis/util.go:152-179) + GPKG r-tree index join
       is small (it replaces the r-tree), shuffled hash join + AQE skew
       split otherwise. This is the canonical range-join decomposition:
       the big side never shuffles when the dim side broadcasts.
-  phase 2 (residual): exact point-in-polygon as an Arrow pandas UDF,
-      vectorized per distinct polygon within each batch.
+  phase 2 (residual): exact point-in-polygon as one Catalyst
+      expression, no Python stage. Each broadcast cover row carries its
+      polygon's ring edges, built once from the layer's ring-SoA
+      columns; each candidate folds an `aggregate` over them (crossing
+      parity per part, parts ORed, boundary-inclusive) behind an exact
+      vertex-bbox test. O(edges) per candidate: meant for layers of
+      small rings (every layer an output supplies has 4-5 vertices).
 
 At 100 TB the only wide exchange is the (optional) final aggregation;
 the join itself is map-side. Hot cells (continent-scale polygons over
@@ -41,10 +46,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import cells, wkb
-from . import geometry as geo
 
 
 # ---------------------------------------------------------------------------
@@ -79,48 +83,87 @@ def polygon_cover(polys: DataFrame, res: int) -> DataFrame:
     return out.withColumn("cell", cell).drop("_cx", "_cy")
 
 
-def pip_filter_udf():
-    """Residual predicate: exact PIP on WKB polygons, vectorized per
-    distinct polygon inside each Arrow batch (J4)."""
+# Each polygon's ring edges, built once on the build side from the
+# layers' ring-SoA columns (coords, ring_lens, poly_lens, gkind): ring i
+# starts at vertex s = sum(ring_lens[:i]), is closed j -> (j+1) % m, and
+# belongs to part `part` (its polygon's index in a MultiPolygon, else 0).
+# Rings of fewer than 3 vertices are skipped, as points_in_rings does.
+_EDGES = """flatten(transform(
+  filter(transform(ring_lens, (m, i) -> named_struct(
+      'm', m,
+      's', aggregate(slice(ring_lens, 1, i), 0, (a, b) -> a + b),
+      'part', IF(gkind = {multi}, size(filter(
+          transform(poly_lens, (c, k) ->
+              aggregate(slice(poly_lens, 1, k + 1), 0, (a, b) -> a + b)),
+          c -> c <= i)), 0))),
+    r -> r.m >= 3),
+  r -> transform(sequence(0, r.m - 1), j -> named_struct(
+    'ax', coords[2 * (r.s + j)],
+    'ay', coords[2 * (r.s + j) + 1],
+    'bx', coords[2 * (r.s + (j + 1) % r.m)],
+    'by', coords[2 * (r.s + (j + 1) % r.m) + 1],
+    'part', r.part))))""".format(multi=wkb.WKB_MULTIPOLYGON)
 
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series, geom_wkb: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        pts = np.column_stack([lon.to_numpy(), lat.to_numpy()])
-        # group rows by polygon so each polygon decodes once and tests
-        # all its points in one vectorized call; factorize + stable
-        # argsort builds the groups in C (no per-row Python on the join
-        # path — the only remaining loop is per DISTINCT polygon)
-        codes, uniques = pd.factorize(geom_wkb, use_na_sentinel=False)
-        order = np.argsort(codes, kind="stable")
-        bounds = np.searchsorted(codes[order], np.arange(1, len(uniques)))
-        for b, idx in zip(uniques, np.split(order, bounds)):
-            g = wkb.decode(bytes(b))
-            out[idx] = geo.points_in_polygon(pts[idx], g)
-        return pd.Series(out)
+# Exact point-in-polygon of (lon, lat) against _edges (hitmap semantics,
+# maths/hitmap/hitmap.go:108-196): even-odd crossing parity per part,
+# parts ORed, and a point on any edge is contained. The float operations
+# are geometry.points_in_rings' own, in its order; the crossing's
+# division only runs when the edge straddles lat (ANSI mode raises on
+# x / 0.0). Edges arrive grouped by part, so a part's parity is folded
+# into `hit` when the next part starts. The vertex-bbox test in front
+# is exact: no point outside a polygon's vertex bbox lies in or on it.
+_CONTAINS = """lon >= _vx0 AND lon <= _vx1 AND lat >= _vy0 AND lat <= _vy1
+AND aggregate(_edges, named_struct('part', 0, 'par', false, 'hit', false),
+  (acc, e) -> named_struct(
+    'part', e.part,
+    'par', (acc.par AND acc.part = e.part) != IF(
+        (e.ay > lat) != (e.by > lat),
+        lon < e.ax + (lat - e.ay) * (e.bx - e.ax) / (e.by - e.ay),
+        false),
+    'hit', acc.hit OR (acc.par AND acc.part != e.part)
+        OR ((e.bx - e.ax) * (lat - e.ay) - (lon - e.ax) * (e.by - e.ay) = 0
+            AND least(e.ax, e.bx) <= lon AND lon <= greatest(e.ax, e.bx)
+            AND least(e.ay, e.by) <= lat AND lat <= greatest(e.ay, e.by))),
+  acc -> acc.hit OR acc.par)"""
 
-    return pip
+_EDGE_COLS = ["_edges", "_vx0", "_vy0", "_vx1", "_vy1"]
+
+
+def with_ring_edges(polys: DataFrame) -> DataFrame:
+    """``polys`` plus the residual's build-side columns: the ring edges
+    and the vertex bbox (``_EDGE_COLS``)."""
+    xs = F.expr("filter(coords, (v, k) -> k % 2 = 0)")
+    ys = F.expr("filter(coords, (v, k) -> k % 2 = 1)")
+    return polys.select(
+        "*", F.expr(_EDGES).alias("_edges"),
+        F.array_min(xs).alias("_vx0"), F.array_min(ys).alias("_vy0"),
+        F.array_max(xs).alias("_vx1"), F.array_max(ys).alias("_vy1"))
+
+
+def contains() -> Column:
+    """The residual over a candidate row holding ``lon``/``lat`` and
+    :func:`with_ring_edges`' columns (J4)."""
+    return F.expr(_CONTAINS)
 
 
 def spatial_join(points: DataFrame, polys: DataFrame, res: int,
                  broadcast_polys: bool = True) -> DataFrame:
-    """points (lon, lat, ...) x polys (feature_id, layer, geom WKB,
-    minx..maxy) -> matched pairs. Inner join; a point can match many
-    polygons (one row per match)."""
-    cover = polygon_cover(polys, res)
+    """points (lon, lat, ...) x polys (feature_id, layer, ring-SoA
+    coords/ring_lens/poly_lens/gkind, minx..maxy) -> matched pairs.
+    Inner join; a point can match many polygons (one row per match)."""
+    cover = polygon_cover(with_ring_edges(polys), res)
     if broadcast_polys:
         cover = F.broadcast(cover)
-    # NO scan spread here (round-6 A/B): the PIP residual's python work
-    # is proportional to the CANDIDATE set, which the cell prefilter
+    # NO scan spread here (round-6 A/B): the residual's work is
+    # proportional to the CANDIDATE set, which the cell prefilter
     # usually makes small (nations: ~2% of points) — spreading the
     # points shuffled the whole input to parallelize a tiny stage, and
-    # spreading the candidates shipped the joined polygon geom per row.
+    # spreading the candidates shipped the joined polygon per row.
     # Both variants measured at or below the round-start plan, which is
     # kept; at volume the scan is already wide and the question is moot.
     pts = points.withColumn("cell", cells.col_cell_from_lonlat(F.col("lon"), F.col("lat"), res))
     cand = pts.join(cover, "cell", "inner")
-    pip = pip_filter_udf()
-    return cand.where(pip(F.col("lon"), F.col("lat"), F.col("geom"))).drop("cell")
+    return cand.where(contains()).drop("cell", *_EDGE_COLS)
 
 
 # ---------------------------------------------------------------------------

@@ -368,26 +368,15 @@ POLY_SOA_COLS = ["coords", "ring_lens", "poly_lens", "gkind"]
 
 
 def polygon_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon layers as ring-SoA columns: flat coord array + ring/poly
-    length arrays + the WKB type code — built with PURE column
-    expressions (the rect corners are already columns), so no codec UDF
-    runs on the scan side and the encode kernel reconstructs identical
-    ring arrays without parsing bytes. Arbitrary-geometry sources can
-    keep shipping a `geom` WKB column instead; the kernel handles both."""
-    nat = layers.nation_layer(spark, sf_dir)
-    reg = layers.region_layer(spark, sf_dir)
-    both = nat.unionByName(reg)
-    d = [F.col(c).cast("double") for c in ("minx", "miny", "maxx", "maxy")]
-    # same vertex order as the WKB rect ring: (x0,y0)(x1,y0)(x1,y1)(x0,y1)(x0,y0)
-    ring = F.array(d[0], d[1], d[2], d[1], d[2], d[3], d[0], d[3], d[0], d[1])
-    return both.select(
-        "feature_id", "layer", "minx", "miny", "maxx", "maxy",
-        ring.alias("coords"),
-        F.array(F.lit(5)).alias("ring_lens"),
-        F.array(F.lit(1)).alias("poly_lens"),
-        F.lit(wkb.WKB_POLYGON).alias("gkind"),
-        F.col("name").alias("tag_name"),
-    )
+    """Polygon layers with their ring-SoA columns (flat coord array +
+    ring/poly length arrays + the WKB type code), as the layers build
+    them with column expressions: no codec UDF runs on the scan side
+    and the encode kernel reconstructs the ring arrays without parsing
+    bytes. Arbitrary-geometry sources can ship a `geom` WKB column
+    instead; the kernel handles both."""
+    both = layers.nation_layer(spark, sf_dir).unionByName(layers.region_layer(spark, sf_dir))
+    return both.select("feature_id", "layer", "minx", "miny", "maxx", "maxy",
+                       *POLY_SOA_COLS, F.col("name").alias("tag_name"))
 
 
 def debug_features(spark: SparkSession, zooms) -> DataFrame:

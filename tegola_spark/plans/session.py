@@ -92,6 +92,14 @@ def get_spark(app_name: str = "tegola_spark", cpus: int | None = None,
         # the status REST API (the bytes-shuffled-per-tile metric)
         .config("spark.ui.enabled",
                 "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false")
+        # PySpark 4's DataFrame-origin capture costs extra py4j round
+        # trips (and an `import IPython` probe) on every Column/DataFrame
+        # call: a warm spatial_query-shaped op (perfbench inputs, seed 7)
+        # made 8,100-8,900 driver round trips with it and 3,000-3,500
+        # without (py4j send_command counted, 4-core host). Errors keep
+        # their class and message but lose the Python call-site context.
+        # A static conf: it must be set before the session starts.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if pin_master:
         builder = builder.master(f"local[{cpus}]")

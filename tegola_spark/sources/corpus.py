@@ -91,6 +91,11 @@ def footer_rows(df: DataFrame) -> int | None:
     return n
 
 
+# the corpus table's columns, shared by the test corpora and the
+# benchmark's generated inputs; declared so no schema-inference job runs
+_DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
 def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT spread here: consumers that do per-row python/heavy work call
     # spread_scan themselves (pages, geocoded_points, minhash/simhash
@@ -99,7 +104,7 @@ def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange went from 16-byte map-side-aggregated hashes to the full
     # text column (measured +0.5 s), exactly the "shuffle fewer bytes"
     # inversion guide §2.3 warns about.
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return spark.read.schema(_DOC_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
 
 
 def col_lon(doc_id):

@@ -17,59 +17,60 @@ integer arithmetic (constants mirrored in __spark_entry__.oracle_sql):
     miny = (r_regionkey * 13) % 20 - 70          maxy = miny + 100
 
 Rectangles keep the two-phase join oracle SQL-expressible (range
-predicates); the engine still runs the generic WKB + point-in-polygon
-path, so arbitrary polygons work identically.
+predicates). The polygon layers ship their geometry as ring-SoA columns
+(``coords``/``ring_lens``/``poly_lens``/``gkind``, see
+``wkb.soa_to_geometry``) built from column expressions: the spatial
+join's Catalyst point-in-polygon residual and the tile pipeline's encode
+kernel both read them directly, so no codec runs on either path, and
+any Polygon or MultiPolygon in that form joins the same way.
+
+The reads declare their schemas (shared by the test corpora and the
+benchmark's generated inputs), so no schema-inference job runs.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions import wkb
 
+_NATION_SCHEMA = "n_nationkey int, n_name string, n_regionkey int"
+_REGION_SCHEMA = "r_regionkey int, r_name string"
 
-@F.pandas_udf(T.BinaryType())
-def _rect_wkb(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-    out = []
-    for x0, y0, x1, y1 in zip(minx, miny, maxx, maxy):
-        ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
-        out.append(wkb.encode(("Polygon", [ring])))
-    return pd.Series(out)
+
+def _rect_layer(src: DataFrame, k: Column, name: str, layer: str,
+                minx: Column, miny: Column, maxx: Column, maxy: Column) -> DataFrame:
+    """One rectangle per row of ``src``: its envelope columns plus the
+    rectangle as one closed 5-vertex Polygon ring in ring-SoA columns,
+    vertex order (x0,y0)(x1,y0)(x1,y1)(x0,y1)(x0,y0)."""
+    x0, y0, x1, y1 = (c.cast("double") for c in (minx, miny, maxx, maxy))
+    return src.select(
+        k.alias("feature_id"), F.lit(layer).alias("layer"), F.col(name).alias("name"),
+        x0.alias("minx"), y0.alias("miny"), x1.alias("maxx"), y1.alias("maxy"),
+        F.array(x0, y0, x1, y0, x1, y1, x0, y1, x0, y0).alias("coords"),
+        F.array(F.lit(5)).alias("ring_lens"),
+        F.array(F.lit(1)).alias("poly_lens"),
+        F.lit(wkb.WKB_POLYGON).alias("gkind"),
+    )
 
 
 def nation_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """25 mid-size rectangles; feature id/tags model the reference's
     test_tags_table (uuid/name/int tag columns)."""
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    n = spark.read.schema(_NATION_SCHEMA).parquet(f"{sf_dir}/nation.parquet")
     k = F.col("n_nationkey").cast("long")
-    df = n.select(
-        k.alias("feature_id"),
-        F.lit("nations").alias("layer"),
-        F.col("n_name").alias("name"),
-        ((k * 37) % 340 - 170).cast("double").alias("minx"),
-        ((k * 23) % 160 - 80).cast("double").alias("miny"),
-        ((k * 37) % 340 - 170 + 6 + k % 7).cast("double").alias("maxx"),
-        ((k * 23) % 160 - 80 + 4 + k % 5).cast("double").alias("maxy"),
-    )
-    return df.withColumn("geom", _rect_wkb("minx", "miny", "maxx", "maxy"))
+    return _rect_layer(n, k, "n_name", "nations",
+                       (k * 37) % 340 - 170, (k * 23) % 160 - 80,
+                       (k * 37) % 340 - 170 + 6 + k % 7, (k * 23) % 160 - 80 + 4 + k % 5)
 
 
 def region_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5 continent-scale rectangles (hot-cell skew driver)."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = spark.read.schema(_REGION_SCHEMA).parquet(f"{sf_dir}/region.parquet")
     k = F.col("r_regionkey").cast("long")
-    df = r.select(
-        k.alias("feature_id"),
-        F.lit("regions").alias("layer"),
-        F.col("r_name").alias("name"),
-        (k * 72 - 180).cast("double").alias("minx"),
-        ((k * 13) % 20 - 70).cast("double").alias("miny"),
-        (k * 72 - 180 + 72).cast("double").alias("maxx"),
-        ((k * 13) % 20 - 70 + 100).cast("double").alias("maxy"),
-    )
-    return df.withColumn("geom", _rect_wkb("minx", "miny", "maxx", "maxy"))
+    return _rect_layer(r, k, "r_name", "regions",
+                       k * 72 - 180, (k * 13) % 20 - 70,
+                       k * 72 - 180 + 72, (k * 13) % 20 - 70 + 100)
 
 
 def road_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,7 +81,7 @@ def road_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog the athens-osm road layers (provider/gpkg/gpkg_test.go:23-27).
     Ships as ring-SoA columns like the polygon layers; the DuckDB
     oracle reproduces the segment from the same integer arithmetic."""
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    n = spark.read.schema(_NATION_SCHEMA).parquet(f"{sf_dir}/nation.parquet")
     k = F.col("n_nationkey").cast("long")
     rminx = ((k * 37) % 340 - 170).cast("double")
     rminy = ((k * 23) % 160 - 80).cast("double")

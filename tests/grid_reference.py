@@ -7,7 +7,7 @@ import math
 
 import numpy as np
 
-from tegola_spark.functions import grid
+from tegola_spark.functions import cells, grid
 
 
 def deg2num(lon, lat, z):
@@ -66,3 +66,17 @@ def tile_extent(z, x, y):
     minx = -grid.WEBMERCATOR_MAX + x * res
     maxy = grid.WEBMERCATOR_MAX - y * res
     return minx, maxy - res, minx + res, maxy
+
+
+def tile2lon(x, z):
+    """Num2Deg lon — tile.go:123."""
+    x = np.asarray(x, dtype=np.float64)
+    return x / np.exp2(float(z)) * 360.0 - 180.0
+
+
+def cell_decode(cell):
+    """int64 cell id -> (res, x, y), the inverse of the packing
+    res*2^52 + x*2^26 + y that cells.col_cell_from_lonlat computes."""
+    cell = np.asarray(cell, dtype=np.int64)
+    mask = (1 << cells.XY_SHIFT) - 1
+    return cell >> cells.RES_SHIFT, (cell >> cells.XY_SHIFT) & mask, cell & mask

@@ -1,10 +1,11 @@
 """Golden tests: ellipsoidal web-mercator (P8), cell index, WKB codec (E9)."""
 
+import grid_reference
 import numpy as np
 import pytest
 import wkb_reference
 
-from tegola_spark.functions import cells, grid, mercator, wkb
+from tegola_spark.functions import grid, mercator, wkb
 
 
 # -- mercator (maths/webmercator/main.go) -----------------------------------
@@ -35,7 +36,7 @@ def test_cell_pack_roundtrip():
     # the packing col_cell_from_lonlat and the DuckDB oracle compute
     c = (12 * 2**52 + int(grid.lon2num(13.4, 12)) * 2**26
          + int(grid.lat2num(52.5, 12)))
-    res, x, y = cells.cell_decode(c)
+    res, x, y = grid_reference.cell_decode(c)
     assert res == 12
     assert x == grid.lon2num(13.4, 12)
     assert y == grid.lat2num(52.5, 12)

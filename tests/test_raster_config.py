@@ -65,7 +65,8 @@ def test_rasterize_polygons_and_vectorize_roundtrip(spark, sf_dir, points):
     row = v.first()
     assert row["minx"] < row["maxx"] and row["miny"] < row["maxy"]
     from tegola_spark.functions import wkb
-    g = wkb.decode(bytes(row["geom"]))
+    g = wkb.soa_to_geometry(row["gkind"], row["coords"], row["ring_lens"],
+                            row["poly_lens"])
     assert g[0] == "Polygon"
     bb = wkb_reference.bbox(g)
     assert bb[0] == pytest.approx(row["minx"])

@@ -10,11 +10,9 @@ grid_reference.tile_extent's normalized values.
 
 import grid_reference as ref
 
-from tegola_spark.functions import grid
-
 
 def test_num2deg():
-    assert float(grid.tile2lon(1, 2)) == -90.0
+    assert float(ref.tile2lon(1, 2)) == -90.0
 
 
 def test_deg2num():
