@@ -126,9 +126,29 @@ def cmd_seed(args, spark=None) -> int:
     return 0
 
 
+def _check_seed_args(parser: argparse.ArgumentParser, args) -> None:
+    """Reject a zoom range or batch size that would seed nothing (an
+    empty or reversed range, a batch of fewer than one zoom) or zooms
+    outside the grid, with an argparse error (exit 2) before any Spark
+    session starts."""
+    from .functions.grid import MAX_Z
+
+    if args.batch_zooms < 1:
+        parser.error(f"--batch-zooms must be >= 1, got {args.batch_zooms}")
+    for opt, z in (("--min-zoom", args.min_zoom),
+                   ("--max-zoom", args.max_zoom)):
+        if not 0 <= z <= MAX_Z:
+            parser.error(f"{opt} must be in [0, {MAX_Z}], got {z}")
+    if args.min_zoom > args.max_zoom:
+        parser.error(f"--min-zoom {args.min_zoom} is above "
+                     f"--max-zoom {args.max_zoom}")
+
+
 def main(argv=None, spark=None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
     if args.cmd == "seed":
+        _check_seed_args(parser, args)
         return cmd_seed(args, spark=spark)
     return 2
 

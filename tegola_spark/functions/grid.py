@@ -135,16 +135,17 @@ def tile_extent_3857(z, x, y):
     )
 
 
-def zepsilon(z, tolerance=DEFAULT_TOLERANCE, extent=DEFAULT_EXTENT):
+def zepsilon(z, tolerance=DEFAULT_TOLERANCE):
     """T7: Douglas-Peucker tolerance for zoom z — tile.go:213-228."""
     if z == MAX_Z or tolerance <= 0:
         return 0.0
-    return tolerance / (math.exp2(float(z)) * extent)
+    return tolerance / (math.exp2(float(z)) * DEFAULT_EXTENT)
 
 
-def buffered_pixel_bounds(extent=DEFAULT_EXTENT, buffer=DEFAULT_BUFFER):
+def buffered_pixel_bounds():
     """Pixel-space clip region — tile.go:104-107: [-64,-64,4160,4160]."""
-    return (-buffer, -buffer, extent + buffer, extent + buffer)
+    return (-DEFAULT_BUFFER, -DEFAULT_BUFFER,
+            DEFAULT_EXTENT + DEFAULT_BUFFER, DEFAULT_EXTENT + DEFAULT_BUFFER)
 
 
 def tile_range_for_bounds(min_lon, min_lat, max_lon, max_lat, z):

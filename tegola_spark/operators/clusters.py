@@ -35,11 +35,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def connected_components(edges: DataFrame, a_col: str = "id_a",
-                         b_col: str = "id_b",
-                         max_iter: int = 50) -> DataFrame:
+# label-propagation rounds: a component settles within its diameter
+MAX_ITER = 50
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """Resolve connected components of the undirected graph given by
-    ``edges`` (one row per edge, endpoint columns ``a_col``/``b_col``).
+    ``edges`` (one row per edge, endpoint columns ``id_a``/``id_b``),
+    in at most ``MAX_ITER`` label-propagation rounds.
 
     Returns one row per node that appears in an edge: ``(id,
     cluster_rep)`` where ``cluster_rep`` is the minimum node id in the
@@ -47,7 +50,7 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
     absent — callers attach them via ``coalesce`` (see
     :func:`dedup_clusters`).
     """
-    sym = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    sym = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     sym = sym.unionByName(
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.dropDuplicates(["src", "dst"]).localCheckpoint()
@@ -57,7 +60,7 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
               .withColumn("label", F.col("id"))
               .localCheckpoint())
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # label of src flows across each edge to dst; keeping the old
         # label in the union makes min monotone non-increasing, which
         # is what guarantees the fixpoint.
@@ -77,19 +80,16 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
     return labels.select("id", F.col("label").alias("cluster_rep"))
 
 
-def dedup_clusters(nodes: DataFrame, pairs: DataFrame,
-                   id_col: str = "doc_id", a_col: str = "id_a",
-                   b_col: str = "id_b", max_iter: int = 50) -> DataFrame:
+def dedup_clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Full-corpus cluster table: every node gets a ``cluster_rep``
     (its own id when it has no duplicates) and the component's
     ``cluster_size``.  Keeping ``doc_id == cluster_rep`` is the
     standard "retain one representative per duplicate group" dedup.
     """
-    cc = connected_components(pairs, a_col=a_col, b_col=b_col,
-                              max_iter=max_iter)
-    out = (nodes.select(F.col(id_col).alias("id"))
+    cc = connected_components(pairs)
+    out = (nodes.select(F.col("doc_id").alias("id"))
            .join(cc, "id", "left")
-           .select(F.col("id").alias(id_col),
+           .select(F.col("id").alias("doc_id"),
                    F.coalesce("cluster_rep", "id").alias("cluster_rep")))
     w = Window.partitionBy("cluster_rep")
     return out.withColumn("cluster_size", F.count(F.lit(1)).over(w))

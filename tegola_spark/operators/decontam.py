@@ -22,22 +22,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def contamination_scan(docs: DataFrame, probes: DataFrame,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def contamination_scan(docs: DataFrame, probes: DataFrame) -> DataFrame:
     """One row per (document, probe) hit with the 1-based position of
     the first occurrence.  ``probes`` carries (probe_id, probe)."""
-    hits = (docs.select(id_col, text_col)
+    hits = (docs.select("doc_id", "text")
             .crossJoin(F.broadcast(probes.select("probe_id", "probe")))
             .withColumn("first_pos",
-                        F.expr(f"locate(probe, {text_col})").cast("long"))
+                        F.expr("locate(probe, text)").cast("long"))
             .where(F.col("first_pos") > 0))
-    return hits.select(id_col, "probe_id", "first_pos")
+    return hits.select("doc_id", "probe_id", "first_pos")
 
 
 def contamination_scan_shingled(docs: DataFrame, probes: DataFrame,
-                                text_col: str = "text",
-                                id_col: str = "doc_id",
                                 k: int | None = None,
                                 prefilter: bool = True) -> DataFrame:
     """Same output contract as :func:`contamination_scan`, for probe
@@ -68,19 +64,19 @@ def contamination_scan_shingled(docs: DataFrame, probes: DataFrame,
     pg = probes.select("probe_id", "probe",
                        F.substring("probe", 1, k).alias("gram"),
                        F.length("probe").alias("plen"))
-    n_grams = F.length(F.col(text_col)) - F.lit(k) + 1
+    n_grams = F.length(F.col("text")) - F.lit(k) + 1
     positions = F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)) \
                  .otherwise(F.array().cast("array<int>"))
-    grams = (docs.select(id_col, text_col)
+    grams = (docs.select("doc_id", "text")
              .withColumn("pos", F.explode(positions))
-             .withColumn("gram", F.expr(f"substring({text_col}, pos, {k})")))
+             .withColumn("gram", F.expr(f"substring(text, pos, {k})")))
     if prefilter:
         gram_hashes = pg.select(F.xxhash64("gram").alias("_gh")).distinct()
         grams = grams.join(
             F.broadcast(gram_hashes),
             F.xxhash64("gram") == F.col("_gh"), "left_semi")
     hits = (grams.join(pg, "gram")
-            .where(F.expr(f"substring({text_col}, pos, plen) = probe")))
-    return (hits.groupBy(id_col, "probe_id")
+            .where(F.expr("substring(text, pos, plen) = probe")))
+    return (hits.groupBy("doc_id", "probe_id")
             .agg(F.min("pos").cast("long").alias("first_pos"))
-            .select(id_col, "probe_id", "first_pos"))
+            .select("doc_id", "probe_id", "first_pos"))

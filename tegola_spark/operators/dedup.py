@@ -30,10 +30,13 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 MERSENNE = (1 << 61) - 1
 _SEED = 0x5EED_7E60
+NUM_PERM = 64       # minhash signature length
+SHINGLE_K = 5       # minhash shingle width, utf-8 bytes
+SIMHASH_BITS = 60   # portable simhash width: 15 hex digits of md5
 
 
-def _hash_params(num_perm: int, seed: int = _SEED):
-    rng = np.random.default_rng(seed)
+def _hash_params(num_perm: int):
+    rng = np.random.default_rng(_SEED)
     a = rng.integers(1, MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
     b = rng.integers(0, MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
     return a, b
@@ -69,12 +72,12 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
     return np.unique(h)
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Groups by md5(text): (text_hash, keep_id=min(id), dup_count)."""
     return (
-        df.select(F.md5(F.col(text_col).cast("binary")).alias("text_hash"), id_col)
+        df.select(F.md5(F.col("text").cast("binary")).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count"))
     )
 
 
@@ -83,54 +86,51 @@ def normalize_text_col(c):
     return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
-def normalized_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def normalized_dedup(df: DataFrame) -> DataFrame:
     return exact_dedup(
-        df.select(normalize_text_col(F.col(text_col)).alias(text_col), id_col),
-        text_col, id_col)
+        df.select(normalize_text_col(F.col("text")).alias("text"), "doc_id"))
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_perm: int = 64,
-                       shingle_k: int = 5) -> DataFrame:
-    """id -> minhash signature (array<long> of length num_perm)."""
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """doc_id -> minhash signature of ``text`` (array<long> of length
+    NUM_PERM over SHINGLE_K-byte shingles)."""
     from ..sources.corpus import spread_scan
 
     # the signature UDF is the corpus-scale python stage: spread an
     # under-split scan so it runs core-wide instead of single-threaded
     # (round-6; no-op on a properly split table). This was the 12-22 s
     # cold first rep of minhash_pairs in BENCH_r05.
-    df = spread_scan(df, id_col)
-    a, b = _hash_params(num_perm)
+    df = spread_scan(df, "doc_id")
+    a, b = _hash_params(NUM_PERM)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts.fillna(""):
-            sh = _shingle_hashes(t, shingle_k)
+            sh = _shingle_hashes(t, SHINGLE_K)
             # universal hash: (a*x + b) mod p, min over shingles, vectorized
             vals = (sh[:, None] * a[None, :] + b[None, :]) % np.uint64(MERSENNE)
             out.append(vals.min(axis=0).astype(np.int64).tolist())
         return pd.Series(out)
 
-    return df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("signature"))
+    return df.select(F.col("doc_id").alias("id"), sig(F.col("text")).alias("signature"))
 
 
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      num_perm: int = 64, bands: int = 8, shingle_k: int = 5,
-                      threshold: float = 0.8,
+def minhash_lsh_pairs(df: DataFrame, bands: int = 8, threshold: float = 0.8,
                       max_bucket: int = 4096) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) with estimated jaccard
-    (signature agreement) >= threshold.
+    """Candidate near-dup pairs (id_a < id_b) of ``doc_id`` with
+    estimated jaccard (agreement of ``NUM_PERM``-long signatures over
+    ``SHINGLE_K``-byte shingles of ``text``) >= threshold.
 
-    Band geometry: collision probability per band is jaccard^(num_perm/
+    Band geometry: collision probability per band is jaccard^(NUM_PERM/
     bands). Template-heavy web corpora have HIGH baseline jaccard
     between unrelated docs (~0.3 here), so shallow bands explode: at
     r=4 the candidate set hit 50M pairs on a 100k-doc corpus; at r=8
     it is ~1000x smaller while keeping >90% recall at jaccard >= 0.85.
     Tune bands DOWN (deeper rows) for dirtier corpora."""
-    assert num_perm % bands == 0
-    rows_per_band = num_perm // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
+    assert NUM_PERM % bands == 0
+    rows_per_band = NUM_PERM // bands
+    sigs = minhash_signatures(df)
     sigs = sigs.cache()
 
     band_cols = []
@@ -184,7 +184,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     )
     est = F.expr(
         "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)"
-    ).cast("double") / F.lit(float(num_perm))
+    ).cast("double") / F.lit(float(NUM_PERM))
     return (
         cand.withColumn("est_jaccard", est)
         .where(F.col("est_jaccard") >= threshold)
@@ -192,15 +192,14 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     )
 
 
-def simhash_fingerprints(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def simhash_fingerprints(df: DataFrame) -> DataFrame:
     """64-bit SimHash over whitespace tokens (FNV token hashes)."""
 
     from hashlib import blake2b
 
     from ..sources.corpus import spread_scan
 
-    df = spread_scan(df, id_col)  # python stage below: run it core-wide
+    df = spread_scan(df, "doc_id")  # python stage below: run it core-wide
 
     @F.pandas_udf(T.LongType())
     def sh(texts: pd.Series) -> pd.Series:
@@ -238,14 +237,12 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text",
         out[nonempty] = fp.view(np.int64)
         return pd.Series(out)
 
-    return df.select(F.col(id_col).alias("id"), sh(F.col(text_col)).alias("simhash"))
+    return df.select(F.col("doc_id").alias("id"), sh(F.col("text")).alias("simhash"))
 
 
-def simhash_fingerprints_portable(df: DataFrame, text_col: str = "text",
-                                  id_col: str = "doc_id",
-                                  bits: int = 60) -> DataFrame:
+def simhash_fingerprints_portable(df: DataFrame) -> DataFrame:
     """Cross-engine-reproducible SimHash, pure column expressions (no
-    Python anywhere): token hash = the low ``bits`` (default 60) of
+    Python anywhere): token hash = the low ``SIMHASH_BITS`` (60) of
     md5(token) — both Spark and DuckDB expose byte-identical md5, and
     60 bits keeps the hex parse inside a signed BIGINT — then the
     classic per-bit majority over ALL tokens (duplicates counted,
@@ -254,32 +251,33 @@ def simhash_fingerprints_portable(df: DataFrame, text_col: str = "text",
     this one exists so an independent SQL engine can recompute every
     fingerprint exactly (the oracle entry `simhash_portable`)."""
     toks = (
-        df.select(F.col(id_col).alias("id"),
-                  F.explode(F.split(F.trim(F.col(text_col)), r"\s+"))
+        df.select(F.col("doc_id").alias("id"),
+                  F.explode(F.split(F.trim(F.col("text")), r"\s+"))
                   .alias("tok"))
         .where(F.col("tok") != "")
         .withColumn("h", F.conv(
-            F.substring(F.md5(F.col("tok").cast("binary")), 2, bits // 4),
+            F.substring(F.md5(F.col("tok").cast("binary")), 2,
+                        SIMHASH_BITS // 4),
             16, 10).cast("long"))
     )
     aggs = [
         F.sum(F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1,
                      1).otherwise(-1)).alias(f"_b{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     per = toks.groupBy("id").agg(*aggs)
     fp = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         fp = fp + F.when(F.col(f"_b{b}") > 0,
                          F.lit(1 << b)).otherwise(F.lit(0))
     out = per.select("id", fp.alias("simhash"))
-    base = df.select(F.col(id_col).alias("id"))
+    base = df.select(F.col("doc_id").alias("id"))
     return base.join(out, "id", "left").select(
         "id", F.coalesce("simhash", F.lit(0)).cast("long").alias("simhash"))
 
 
-def span_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               span_words: int = 8, max_df: int | None = None) -> DataFrame:
+def span_dedup(df: DataFrame, span_words: int = 8,
+               max_df: int | None = None) -> DataFrame:
     """Cross-document span-level dedup / boilerplate removal.
 
     Splits each document into non-overlapping ``span_words``-word
@@ -309,13 +307,13 @@ def span_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     """
     from pyspark.sql import Window
 
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     n_spans_c = F.ceil(F.size(words) / F.lit(float(span_words))).cast("int")
     spans_c = F.transform(
         F.sequence(F.lit(0), n_spans_c - 1),
         lambda i: F.array_join(
             F.slice(words, i * span_words + 1, span_words), " "))
-    base = df.select(F.col(id_col).alias("id"), spans_c.alias("_spans"))
+    base = df.select(F.col("doc_id").alias("id"), spans_c.alias("_spans"))
     thin = (base.select("id", F.posexplode("_spans").alias("pos", "_span"))
                 .select("id", "pos", F.md5("_span").alias("h")))
     if max_df is None:
@@ -340,8 +338,7 @@ def span_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 
 def latest_snapshot(snaps: DataFrame, key_col: str = "url",
-                    ts_col: str = "warc_ts",
-                    tie_col: str = "doc_id") -> DataFrame:
+                    ts_col: str = "warc_ts") -> DataFrame:
     """CDX-style snapshot collapse: a crawl archive holds many fetches
     of the same URL; training pipelines keep exactly one — the latest
     capture — per URL (the index-server "collapse=urlkey" operation).
@@ -352,23 +349,22 @@ def latest_snapshot(snaps: DataFrame, key_col: str = "url",
     URL key with map-side partial aggregation — at 10^12 rows each
     task forwards at most one candidate row per URL it sees, vs a
     row_number window that would materialize every snapshot on the
-    reducer.  ``tie_col`` must make the ordering key unique
-    (capture ids are); determinism does not depend on encounter order.
+    reducer.  The tie-break column is ``doc_id``, which makes the
+    ordering key unique (capture ids are); determinism does not depend
+    on encounter order.
     """
     win = F.max_by(
-        F.struct(F.col(tie_col).alias("tie"), F.col(ts_col).alias("ts")),
-        F.struct(F.col(ts_col), F.col(tie_col)))
+        F.struct(F.col("doc_id").alias("tie"), F.col(ts_col).alias("ts")),
+        F.struct(F.col(ts_col), F.col("doc_id")))
     return (snaps.groupBy(key_col)
             .agg(win.alias("_top"), F.count("*").alias("n_snapshots"))
             .select(key_col,
-                    F.col("_top.tie").alias(tie_col),
+                    F.col("_top.tie").alias("doc_id"),
                     F.col("_top.ts").alias(ts_col),
                     "n_snapshots"))
 
 
-def edit_distance_verify(df: DataFrame, pairs: DataFrame,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def edit_distance_verify(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Second-stage verifier for near-dup candidate pairs: exact
     Levenshtein distance, evaluated ONLY on the candidate set (the
     cascade cheap-sketch -> exact-jaccard -> edit-distance that real
@@ -381,12 +377,12 @@ def edit_distance_verify(df: DataFrame, pairs: DataFrame,
     O(len^2) per CANDIDATE, never per corpus pair, which is the whole
     point of running it after the sketch stages.
     """
-    t = df.select(F.col(id_col), F.col(text_col))
+    t = df.select(F.col("doc_id"), F.col("text"))
     out = (pairs
-           .join(t.select(F.col(id_col).alias("id_a"),
-                          F.col(text_col).alias("_ta")), "id_a")
-           .join(t.select(F.col(id_col).alias("id_b"),
-                          F.col(text_col).alias("_tb")), "id_b")
+           .join(t.select(F.col("doc_id").alias("id_a"),
+                          F.col("text").alias("_ta")), "id_a")
+           .join(t.select(F.col("doc_id").alias("id_b"),
+                          F.col("text").alias("_tb")), "id_b")
            .select(
                "id_a", "id_b",
                F.levenshtein("_ta", "_tb").cast("long").alias("edit_dist"),

@@ -15,14 +15,10 @@ Ported semantics:
     of returning true for on-line points (maths/hitmap/hitmap.go:108-196).
     The hitmap's y*100 fixed-point quantization is a Go perf hack, not
     a semantic requirement; we use exact float comparisons.
-  * Polygon clip ("make valid + clip", G3): the reference runs a ~2.1k
-    LoC bespoke sweep (maths/makevalid). For VALID polygons clipped to
-    a rectangle its result equals Sutherland–Hodgman rect clipping, so
-    the engine uses S-H here (clip region is always the buffered tile
-    rect, tile.go:104-107) and drops degenerate output. Differential
-    testing against the reference's makevalid fixture table is the
-    round-2+ path if parity on invalid inputs is required
-    (SURVEY.md §7.4(2)).
+  * Polygon clip ("make valid + clip", G3): every polygon runs the
+    port of the reference's make-valid sweep (maths/makevalid, in
+    makevalid.py) against the buffered tile rect (tile.go:104-107);
+    ``clean_geometry`` is the one entry point.
 """
 
 from __future__ import annotations
@@ -328,72 +324,6 @@ def clip_linestring(pts: np.ndarray, ext):
     return [a for a in out if len(a) >= 2]
 
 
-# ---------------------------------------------------------------------------
-# G3 (substitute): polygon rect clip (Sutherland–Hodgman)
-# ---------------------------------------------------------------------------
-
-def _sh_clip_edge(pts: np.ndarray, inside_fn, intersect_fn) -> np.ndarray:
-    out = []
-    n = len(pts)
-    for i in range(n):
-        cur = pts[i]
-        prev = pts[i - 1]
-        cin, pin = inside_fn(cur), inside_fn(prev)
-        if cin:
-            if not pin:
-                out.append(intersect_fn(prev, cur))
-            out.append(tuple(cur))
-        elif pin:
-            out.append(intersect_fn(prev, cur))
-    return np.array(out) if out else np.empty((0, 2))
-
-
-def clip_ring_rect(ring: np.ndarray, ext) -> np.ndarray:
-    """Clip one ring to a rectangle (open ring in, open ring out)."""
-    minx, miny, maxx, maxy = ext
-    pts = np.asarray(ring, dtype=np.float64)
-
-    def clip_min_x(p0, p1):
-        t = (minx - p0[0]) / (p1[0] - p0[0])
-        return (minx, p0[1] + t * (p1[1] - p0[1]))
-
-    def clip_max_x(p0, p1):
-        t = (maxx - p0[0]) / (p1[0] - p0[0])
-        return (maxx, p0[1] + t * (p1[1] - p0[1]))
-
-    def clip_min_y(p0, p1):
-        t = (miny - p0[1]) / (p1[1] - p0[1])
-        return (p0[0] + t * (p1[0] - p0[0]), miny)
-
-    def clip_max_y(p0, p1):
-        t = (maxy - p0[1]) / (p1[1] - p0[1])
-        return (p0[0] + t * (p1[0] - p0[0]), maxy)
-
-    for inside, isect in (
-        (lambda p: p[0] >= minx, clip_min_x),
-        (lambda p: p[0] <= maxx, clip_max_x),
-        (lambda p: p[1] >= miny, clip_min_y),
-        (lambda p: p[1] <= maxy, clip_max_y),
-    ):
-        if len(pts) == 0:
-            return pts
-        pts = _sh_clip_edge(pts, inside, isect)
-    return pts
-
-
-def clip_polygon_rect(rings, ext):
-    """Clip polygon rings to a rect; degenerate (<3 pt or zero-area)
-    rings dropped; empty ring 0 drops the polygon."""
-    out = []
-    for i, ring in enumerate(rings):
-        c = clip_ring_rect(ring, ext)
-        if len(c) >= 3 and ring_area_abs(c) > 0:
-            out.append(c)
-        elif i == 0:
-            return []
-    return out
-
-
 def _rect_fast_path(ring: np.ndarray, clip_region):
     """If ``ring`` is an axis-aligned rectangle fully inside
     ``clip_region`` (or clip is None), return the canonical ring the
@@ -423,21 +353,19 @@ def _rect_fast_path(ring: np.ndarray, clip_region):
     return np.array([[minx, miny], [maxx, miny], [maxx, maxy], [minx, maxy]])
 
 
-def clean_geometry(geom, clip_region, repair: bool = True):
+def clean_geometry(geom, clip_region):
     """validate.CleanGeometry (validate.go:101-146): lines get the
     exact ported clip walk; polygons ALWAYS run the make-valid column
     sweep — the reference has no valid/invalid branch — wrapped in the
     x10 scale-up / x0.1 scale-down fixed-point trick (validate.go:104-111,
     79-99) so intersection rounding lands on a 0.1-unit grid. The
     hitmap is built from the scaled geometry with per-polygon ring
-    labels (hitmap.NewFromGeometry, hitmap.go:287-308). ``repair=False``
-    falls back to Sutherland-Hodgman rect clip (kept for the DontClean
-    layer toggle, atlas/layer.go:21-29 + map.go:307-314). clip_region
+    labels (hitmap.NewFromGeometry, hitmap.go:287-308). clip_region
     None = no clipping (DontClip)."""
     if geom is None:
         return None
     gtype, data = geom
-    if repair and gtype in ("Polygon", "MultiPolygon"):
+    if gtype in ("Polygon", "MultiPolygon"):
         from . import makevalid as MV
 
         # Fast path: a single axis-aligned rectangle FULLY INSIDE the
@@ -479,16 +407,6 @@ def clean_geometry(geom, clip_region, repair: bool = True):
         for line in data:
             parts.extend(clip_linestring(line, clip_region))
         return ("MultiLineString", parts) if parts else None
-    if gtype == "Polygon":
-        rings = clip_polygon_rect(data, clip_region)
-        return ("Polygon", rings) if rings else None
-    if gtype == "MultiPolygon":
-        polys = []
-        for rings in data:
-            c = clip_polygon_rect(rings, clip_region)
-            if c:
-                polys.append(c)
-        return ("MultiPolygon", polys) if polys else None
     if gtype == "Point":
         return geom if _contains_point(clip_region, data) else None
     if gtype == "MultiPoint":

@@ -48,20 +48,21 @@ def sniff_media_type(payload: bytes) -> str:
     return "application/octet-stream"
 
 
-def _stub_features(payload: bytes, n: int = 8) -> np.ndarray:
-    """Deterministic fake feature vector derived from payload bytes —
-    stands in for an embedding so the downstream plumbing is real."""
+def _stub_features(payload: bytes) -> np.ndarray:
+    """Deterministic fake 8-float feature vector derived from payload
+    bytes — stands in for an embedding so the downstream plumbing is
+    real."""
     arr = np.frombuffer(payload[:1024], dtype=np.uint8).astype(np.float32)
     if len(arr) == 0:
-        return np.zeros(n, dtype=np.float32)
-    chunks = np.array_split(arr, n)
+        return np.zeros(8, dtype=np.float32)
+    chunks = np.array_split(arr, 8)
     return np.array([c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32)
 
 
-def decode_media(df: DataFrame, payload_col: str = "payload",
-                 id_col: str = "doc_id") -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """mapInPandas metadata stage: sniff each payload's type from its
-    magic prefix and give it the deterministic stub dims (width
+    magic prefix (column ``payload``, keyed by ``doc_id``) and give it
+    the deterministic stub dims (width
     ``16 + len % 1024``, height ``16 + len % 768``, one frame for images
     and ``1 + len % 30`` otherwise) and stub features. The payload is
     opaque, never decoded, whatever its prefix; the payload column is
@@ -69,8 +70,8 @@ def decode_media(df: DataFrame, payload_col: str = "payload",
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[payload_col]
-            ids = pdf[id_col]
+            payloads = pdf["payload"]
+            ids = pdf["doc_id"]
             rows = []
             for i, b in zip(ids, payloads):
                 b = bytes(b) if b is not None else b""

@@ -55,7 +55,7 @@ HI_CMP_TOL = 1e-9
 # P9: PrepareGeo — projected coords -> tile pixel coords
 # ---------------------------------------------------------------------------
 
-def prepare_point(arr: np.ndarray, minx, miny, maxx, maxy, pixel_extent=DEFAULT_EXTENT):
+def prepare_point(arr: np.ndarray, minx, miny, maxx, maxy):
     """Affine to pixel space with Y flip — prepare.go:81-87.
 
     px = (x - minx) / xspan * extent ;  py = (maxy - y) / yspan * extent
@@ -64,8 +64,8 @@ def prepare_point(arr: np.ndarray, minx, miny, maxx, maxy, pixel_extent=DEFAULT_
     xspan = maxx - minx
     yspan = maxy - miny
     out = np.empty_like(arr)
-    out[:, 0] = (arr[:, 0] - minx) / xspan * pixel_extent
-    out[:, 1] = (maxy - arr[:, 1]) / yspan * pixel_extent
+    out[:, 0] = (arr[:, 0] - minx) / xspan * DEFAULT_EXTENT
+    out[:, 1] = (maxy - arr[:, 1]) / yspan * DEFAULT_EXTENT
     return out
 
 
@@ -78,7 +78,7 @@ def _dedup_consecutive(arr: np.ndarray) -> np.ndarray:
     return arr[keep]
 
 
-def prepare_geo(geom, tile_extent, pixel_extent=DEFAULT_EXTENT):
+def prepare_geo(geom, tile_extent):
     """PrepareGeo — prepare.go:21-150. ``tile_extent`` is the tile's
     projected (minx, miny, maxx, maxy). Returns a prepared geometry
     tuple or None (nil/empty geometries are skipped — atlas/map.go:232-236)."""
@@ -86,7 +86,7 @@ def prepare_geo(geom, tile_extent, pixel_extent=DEFAULT_EXTENT):
     gtype, data = geom
 
     def pp(a):
-        return prepare_point(a, minx, miny, maxx, maxy, pixel_extent)
+        return prepare_point(a, minx, miny, maxx, maxy)
 
     if gtype == "Point":
         return ("Point", pp(np.asarray(data).reshape(1, 2)).reshape(2))
@@ -599,7 +599,7 @@ def encode_feature(fid, tags_idx, geom_type: int, geometry: np.ndarray) -> bytes
 
 
 def encode_point_layer_arrays(name: str, fids: np.ndarray, zz: np.ndarray,
-                              tag_cols, extent: int = DEFAULT_EXTENT) -> bytes:
+                              tag_cols) -> bytes:
     """Array-direct emission of a pure-point layer: equivalent to
     building per-feature dicts + encode_layer, but the dictionaries
     come from ONE pd.factorize over the masked row-major value matrix
@@ -660,12 +660,12 @@ def encode_point_layer_arrays(name: str, fids: np.ndarray, zz: np.ndarray,
         parts.append(_len_delim(3, k.encode("utf-8")))
     if vals:
         parts.append(encode_str_values_block(vals))
-    parts.append(_tag(5, 0) + _varint(extent))
+    parts.append(_tag(5, 0) + _varint(DEFAULT_EXTENT))
     parts.append(_tag(15, 0) + _varint(MVT_VERSION))
     return b"".join(parts)
 
 
-def encode_layer(name: str, features, extent: int = DEFAULT_EXTENT) -> bytes:
+def encode_layer(name: str, features) -> bytes:
     """E5: one Tile_Layer message body.
 
     ``features`` is a list of dicts:
@@ -700,7 +700,7 @@ def encode_layer(name: str, features, extent: int = DEFAULT_EXTENT) -> bytes:
     else:
         for v in vals:
             parts.append(_len_delim(4, encode_value(v)))
-    parts.append(_tag(5, 0) + _varint(extent))
+    parts.append(_tag(5, 0) + _varint(DEFAULT_EXTENT))
     parts.append(_tag(15, 0) + _varint(MVT_VERSION))
     return b"".join(parts)
 

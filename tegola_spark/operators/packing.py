@@ -34,10 +34,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def prefix_sum(df: DataFrame, value_col: str, key_col: str,
-               out_col: str = "token_offset") -> DataFrame:
+def prefix_sum(df: DataFrame, value_col: str, key_col: str) -> DataFrame:
     """Exclusive prefix sum of ``value_col`` in ``key_col`` order —
-    ``out_col`` = sum of values of all STRICTLY-smaller keys.  Keys
+    ``token_offset`` = sum of values of all STRICTLY-smaller keys.  Keys
     must be unique (they order the rows)."""
     part = df.repartitionByRange(F.col(key_col))
     part = part.withColumn("_pid", F.spark_partition_id())
@@ -58,29 +57,28 @@ def prefix_sum(df: DataFrame, value_col: str, key_col: str,
         local.sparkSession.createDataFrame(
             [(p, o) for p, o in offsets.items()], "_pid int, _poff long"))
     return (local.join(off_df, "_pid")
-            .withColumn(out_col, (F.col("_poff") + F.col("_local")).cast("long"))
+            .withColumn("token_offset", (F.col("_poff") + F.col("_local")).cast("long"))
             .drop("_pid", "_local", "_poff"))
 
 
-def pack_bins(df: DataFrame, budget: int, tokens_col: str = "n_tokens",
-              key_col: str = "doc_id") -> DataFrame:
+def pack_bins(df: DataFrame, budget: int) -> DataFrame:
     """Assign each document to ``bin_id = offset // budget`` with its
-    position inside the bin.  Contiguous greedy packing: documents
+    position inside the bin, the offset summing ``n_tokens`` in
+    ``doc_id`` order.  Contiguous greedy packing: documents
     stay in key order, a document whose tokens straddle a boundary
     belongs to the bin where it starts (training-side splitting is a
     reader concern)."""
-    out = prefix_sum(df, tokens_col, key_col)
+    out = prefix_sum(df, "n_tokens", "doc_id")
     b = int(budget)
     return (out.withColumn("bin_id", F.expr(f"token_offset DIV {b}"))
             .withColumn("bin_offset",
                         (F.col("token_offset") % b).cast("long")))
 
 
-def pack_sequences(df: DataFrame, budget: int, eod: str = "<|eod|>",
-                   tokens_col: str = "n_tokens", key_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def pack_sequences(df: DataFrame, budget: int) -> DataFrame:
     """Materialize the packed training sequences: every bin's
-    documents concatenated in key order with an EOD separator.
+    documents (``doc_id``, ``n_tokens``, ``text``) concatenated in
+    ``doc_id`` order with the ``<|eod|>`` separator.
 
     Returns (bin_id, n_docs, bin_tokens, seq_md5) — the md5 of the
     concatenated text stands in for the sequence bytes so verification
@@ -91,14 +89,14 @@ def pack_sequences(df: DataFrame, budget: int, eod: str = "<|eod|>",
     holds at most ~budget tokens of text by construction), so per-group
     state is O(budget), not corpus-sized.
     """
-    binned = pack_bins(df, budget, tokens_col, key_col)
+    binned = pack_bins(df, budget)
     parts = F.sort_array(F.collect_list(
-        F.struct(F.col(key_col).alias("k"), F.col(text_col).alias("t"))))
+        F.struct(F.col("doc_id").alias("k"), F.col("text").alias("t"))))
     return (binned.groupBy("bin_id")
             .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.col(tokens_col).cast("long")).alias("bin_tokens"),
+                 F.sum(F.col("n_tokens").cast("long")).alias("bin_tokens"),
                  parts.alias("_p"))
             .select("bin_id", "n_docs", "bin_tokens",
                     F.md5(F.concat_ws(
-                        eod, F.transform(F.col("_p"), lambda s: s["t"]))
+                        "<|eod|>", F.transform(F.col("_p"), lambda s: s["t"]))
                         .cast("binary")).alias("seq_md5")))

@@ -39,14 +39,13 @@ def redact_col(c: Column) -> Column:
     return F.regexp_replace(c, PHONE_RE, PHONE_TOKEN)
 
 
-def scrub_documents(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def scrub_documents(df: DataFrame) -> DataFrame:
     """Per-document PII counts plus the redacted text and its md5 (the
     hash keeps oracle rows narrow while still pinning every byte of
-    the redaction output)."""
-    c = F.col(text_col)
+    the redaction output), keyed by ``doc_id``."""
+    c = F.col("text")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_count(c, F.lit(EMAIL_RE)).cast("long").alias("n_emails"),
         F.regexp_count(c, F.lit(IPV4_RE)).cast("long").alias("n_ipv4"),
         redact_col(c).alias("text_redacted"),

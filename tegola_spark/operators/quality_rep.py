@@ -50,18 +50,17 @@ def _grams(w, n: int):
             .otherwise(F.array().cast("array<string>"))
 
 
-def repetition_scores(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def repetition_scores(df: DataFrame) -> DataFrame:
     """Per-document repetition statistics + the Gopher keep decision.
 
     Columns: n_trigrams, dup_trigram_frac, top_bigram_count,
     top_bigram_frac (all deterministic; fractions rounded to 6 places
     so independent engines compare equal), keep boolean.
     """
-    w = _words(F.col(text_col))
+    w = _words(F.col("text"))
     tri = _grams(w, 3)
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(tri).cast("long").alias("n_trigrams"),
         F.round(
             F.when(F.size(tri) > 0,
@@ -72,12 +71,12 @@ def repetition_scores(df: DataFrame, text_col: str = "text",
     # distributed mode-of-bigrams: word-count shape with map-side
     # partial aggregation; ties don't matter (only the max count is
     # kept)
-    counts = (base.select(id_col, F.explode("_bi").alias("bg"))
-              .groupBy(id_col, "bg").agg(F.count(F.lit(1)).alias("c")))
-    top = counts.groupBy(id_col).agg(F.max("c").alias("top_bigram_count"))
+    counts = (base.select("doc_id", F.explode("_bi").alias("bg"))
+              .groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("c")))
+    top = counts.groupBy("doc_id").agg(F.max("c").alias("top_bigram_count"))
 
     out = (base.drop("_bi")
-           .join(top, id_col, "left")
+           .join(top, "doc_id", "left")
            .withColumn("top_bigram_count",
                        F.coalesce("top_bigram_count", F.lit(0)).cast("long"))
            .withColumn(

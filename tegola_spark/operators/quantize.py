@@ -26,19 +26,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sq8_quantize(emb: DataFrame, id_col: str = "vec_id",
-                 emb_col: str = "embedding") -> DataFrame:
+def sq8_quantize(emb: DataFrame) -> DataFrame:
     """(id, scale, q8): per-vector symmetric int8 quantization."""
-    e = F.transform(F.col(emb_col), lambda x: x.cast("double"))
+    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     amax = F.aggregate(e, F.lit(0.0),
                        lambda acc, x: F.greatest(acc, F.abs(x)))
-    df = emb.select(F.col(id_col), e.alias("_e"), (amax / 127.0).alias("scale"))
+    df = emb.select(F.col("vec_id"), e.alias("_e"), (amax / 127.0).alias("scale"))
     q = F.when(
         F.col("scale") > 0,
         F.transform(F.col("_e"),
                     lambda x: F.floor(x / F.col("scale") + 0.5).cast("int"))
     ).otherwise(F.transform(F.col("_e"), lambda x: F.lit(0)))
-    return df.select(id_col, "scale", q.alias("q8"))
+    return df.select("vec_id", "scale", q.alias("q8"))
 
 
 def _seq_dot(a, b):
@@ -46,15 +45,14 @@ def _seq_dot(a, b):
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
-def sq8_topk(emb: DataFrame, query_ids, k: int = 5,
-             id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
+def sq8_topk(emb: DataFrame, query_ids, k: int = 5) -> DataFrame:
     """Asymmetric cosine top-k: full-precision queries against the
     SQ8-dequantized corpus. Output matches brute_force_topk:
     (query_id, rank, neighbor_id, score_r6)."""
-    qt = sq8_quantize(emb, id_col, emb_col)
-    e = F.transform(F.col(emb_col), lambda x: x.cast("double"))
-    queries = (emb.where(F.col(id_col).isin(list(query_ids)))
-               .select(F.col(id_col).alias("query_id"), e.alias("qemb")))
+    qt = sq8_quantize(emb)
+    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    queries = (emb.where(F.col("vec_id").isin(list(query_ids)))
+               .select(F.col("vec_id").alias("query_id"), e.alias("qemb")))
     queries = queries.withColumn(
         "qnorm", F.sqrt(_seq_dot(F.col("qemb"), F.col("qemb"))))
 
@@ -62,13 +60,13 @@ def sq8_topk(emb: DataFrame, query_ids, k: int = 5,
         F.col("q8"), lambda qi: qi.cast("double") * F.col("scale"))
     cand = (qt.withColumn("dq", dq)
             .crossJoin(F.broadcast(queries))
-            .where(F.col(id_col) != F.col("query_id")))
+            .where(F.col("vec_id") != F.col("query_id")))
     nnorm = F.sqrt(_seq_dot(F.col("dq"), F.col("dq")))
     score = (_seq_dot(F.col("dq"), F.col("qemb"))
              / (F.col("qnorm") * nnorm)).alias("score")
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.col("neighbor_id"))
-    return (cand.select("query_id", F.col(id_col).alias("neighbor_id"), score)
+    return (cand.select("query_id", F.col("vec_id").alias("neighbor_id"), score)
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "rank", "neighbor_id",

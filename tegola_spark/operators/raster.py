@@ -7,7 +7,7 @@ A "raster" here is the engine's native gridded form: a DataFrame of
 representation (H3/S2 papers call these "cell rasters"). All operators
 are pure column expressions; none runs a Python stage.
 
-  * rasterize_points   points + value -> cell aggregate        (1 shuffle)
+  * rasterize_points   points -> per-cell point count         (1 shuffle)
   * rasterize_polygons polygons -> covered cells whose center is inside
                        (cover explode + the spatial join's Catalyst
                        point-in-polygon residual)
@@ -30,17 +30,12 @@ _XY_MULT = 1 << cells.XY_SHIFT
 _RES_MULT = 1 << cells.RES_SHIFT
 
 
-def rasterize_points(points: DataFrame, res: int, value_col: str | None = None,
-                     agg: str = "count") -> DataFrame:
-    """points (lon, lat[, value]) -> (cell, value) at ``res``.
-
-    agg: count | sum | avg | min | max (over value_col when given)."""
+def rasterize_points(points: DataFrame, res: int) -> DataFrame:
+    """points (lon, lat) -> (cell, value) at ``res``; the value is the
+    cell's point count."""
     with_cell = points.withColumn(
         "cell", cells.col_cell_from_lonlat(F.col("lon"), F.col("lat"), res))
-    if agg == "count" or value_col is None:
-        return with_cell.groupBy("cell").agg(F.count("*").cast("double").alias("value"))
-    fn = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[agg]
-    return with_cell.groupBy("cell").agg(fn(value_col).cast("double").alias("value"))
+    return with_cell.groupBy("cell").agg(F.count("*").cast("double").alias("value"))
 
 
 def rasterize_polygons(polys: DataFrame, res: int, value_col: str = "feature_id") -> DataFrame:
@@ -92,12 +87,11 @@ def resample(raster: DataFrame, from_res: int, to_res: int,
     return out.select(child.alias("cell"), val.alias("value"))
 
 
-def vectorize(raster: DataFrame, min_value: float | None = None) -> DataFrame:
+def vectorize(raster: DataFrame) -> DataFrame:
     """raster -> polygon features: each cell's bbox quad in lon/lat,
     as envelope columns plus one 4-vertex Polygon ring in ring-SoA
     columns (vertex order SW, SE, NE, NW), suitable as a spatial-join
     right side or MVT layer input."""
-    r = raster if min_value is None else raster.where(F.col("value") >= min_value)
     cx = F.shiftright("cell", cells.XY_SHIFT) % F.lit(_XY_MULT)
     cy = F.col("cell") % F.lit(_XY_MULT)
     res_col = F.shiftright("cell", cells.RES_SHIFT)
@@ -109,7 +103,7 @@ def vectorize(raster: DataFrame, min_value: float | None = None) -> DataFrame:
     inner1 = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * (cy.cast("double") + 1) / n)
     lat1c = F.atan((F.exp(inner0) - F.exp(-inner0)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
     lat0c = F.atan((F.exp(inner1) - F.exp(-inner1)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
-    quad = r.select(
+    quad = raster.select(
         F.col("cell").alias("feature_id"), "value",
         lon0.alias("minx"), lat0c.alias("miny"),
         lon1.alias("maxx"), lat1c.alias("maxy"))

@@ -30,6 +30,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 RESOLUTION = 1_000_000
+DSIR_BUCKETS = 8192  # hashed-unigram buckets of dsir_select
+# split_and_shuffle's split fractions, in assignment order
+SPLITS = {"train": 0.98, "valid": 0.01, "test": 0.01}
 
 
 def sample_bucket_col(id_col: Column, salt: str = "") -> Column:
@@ -46,44 +49,38 @@ def sample_bucket_col(id_col: Column, salt: str = "") -> Column:
 
 
 def stratified_sample(df: DataFrame, rates: dict[str, float],
-                      strata_col: str = "lang", id_col: str = "doc_id",
-                      salt: str = "mix-v1",
-                      default_rate: float = 0.0,
-                      bucket_col: str = "sample_bucket") -> DataFrame:
+                      default_rate: float = 0.0) -> DataFrame:
     """Keep each row iff its deterministic bucket falls under the
     stratum's threshold.  ``rates`` maps stratum value -> keep
     fraction in [0, 1]; strata absent from the map use
-    ``default_rate``.  The bucket rides along in ``bucket_col`` for
+    ``default_rate``.  Strata are ``lang`` values and the bucket is
+    salted over ``doc_id``; it rides along in ``sample_bucket`` for
     auditability."""
     thresholds = {k: int(round(v * RESOLUTION)) for k, v in rates.items()}
     default_thr = int(round(default_rate * RESOLUTION))
     if thresholds:
         thr = reduce(
-            lambda acc, kv: acc.when(F.col(strata_col) == kv[0], F.lit(kv[1])),
+            lambda acc, kv: acc.when(F.col("lang") == kv[0], F.lit(kv[1])),
             sorted(thresholds.items()),
             F).otherwise(F.lit(default_thr))
     else:
         thr = F.lit(default_thr)
-    out = df.withColumn(bucket_col, sample_bucket_col(F.col(id_col), salt))
-    return out.where(F.col(bucket_col) < thr)
+    out = df.withColumn("sample_bucket",
+                        sample_bucket_col(F.col("doc_id"), "mix-v1"))
+    return out.where(F.col("sample_bucket") < thr)
 
 
-def assign_split(df: DataFrame, holdout_rate: float = 0.1,
-                 id_col: str = "doc_id", salt: str = "split-v1",
-                 split_col: str = "split") -> DataFrame:
+def assign_split(df: DataFrame, holdout_rate: float = 0.1) -> DataFrame:
     """Deterministic train/holdout labeling via an independently
     salted bucket (uncorrelated with any sampling salt)."""
     thr = int(round(holdout_rate * RESOLUTION))
-    b = sample_bucket_col(F.col(id_col), salt)
+    b = sample_bucket_col(F.col("doc_id"), "split-v1")
     return df.withColumn(
-        split_col, F.when(b < F.lit(thr), F.lit("holdout")).otherwise(F.lit("train")))
+        "split", F.when(b < F.lit(thr), F.lit("holdout")).otherwise(F.lit("train")))
 
 
 def mixture_sample(df: DataFrame, weights: dict[str, float],
-                   strata_col: str = "source", id_col: str = "doc_id",
-                   salt: str = "mixture-v1",
-                   default_weight: float = 1.0,
-                   copy_col: str = "copy_id") -> DataFrame:
+                   default_weight: float = 1.0) -> DataFrame:
     """Weighted mixture up/down-sampling — the epoch-weighting step of
     dataset mixing (e.g. "2.25 epochs of wiki, 0.5 of common crawl").
 
@@ -93,7 +90,8 @@ def mixture_sample(df: DataFrame, weights: dict[str, float],
     of rows a third time, and a weight of 0.5 keeps a deterministic
     half.  Expected multiplicity is exactly ``w`` per stratum with
     zero RNG state; reruns, retries and other engines reproduce the
-    same copies.  Output adds ``copy_col`` (0..n_copies-1) so
+    same copies.  Strata are ``source`` values.  Output adds
+    ``copy_id`` (0..n_copies-1) so
     downstream shuffles can decorrelate the copies.
 
     Like :func:`stratified_sample`, thresholds are integerized on the
@@ -109,30 +107,28 @@ def mixture_sample(df: DataFrame, weights: dict[str, float],
                       int(round((default_weight - int(default_weight))
                                 * RESOLUTION)))
     base = reduce(
-        lambda acc, kv: acc.when(F.col(strata_col) == kv[0], F.lit(kv[1][0])),
+        lambda acc, kv: acc.when(F.col("source") == kv[0], F.lit(kv[1][0])),
         sorted(parts.items()), F).otherwise(F.lit(d_base)) \
         if parts else F.lit(d_base)
     frac = reduce(
-        lambda acc, kv: acc.when(F.col(strata_col) == kv[0], F.lit(kv[1][1])),
+        lambda acc, kv: acc.when(F.col("source") == kv[0], F.lit(kv[1][1])),
         sorted(parts.items()), F).otherwise(F.lit(d_frac)) \
         if parts else F.lit(d_frac)
-    bucket = sample_bucket_col(F.col(id_col), salt)
+    bucket = sample_bucket_col(F.col("doc_id"), "mixture-v1")
     n_copies = base + (bucket < frac).cast("int")
     copies = F.when(n_copies > 0,
                     F.sequence(F.lit(0), n_copies - 1)).otherwise(
         F.array().cast("array<int>"))
-    return df.withColumn(copy_col, F.explode(copies))
+    return df.withColumn("copy_id", F.explode(copies))
 
 
-def split_and_shuffle(df, splits: dict[str, float] | None = None,
-                      id_col: str = "doc_id", salt: str = "split3-v1",
-                      shuffle_salt: str = "shuffle-v1") -> DataFrame:
+def split_and_shuffle(df) -> DataFrame:
     """Deterministic multi-way split + global shuffle key — the last
     mile of a training-data pipeline: carve train/valid/test and give
     every row a reproducible pseudo-random ORDER for training-time
     shuffling, with zero RNG state.
 
-    ``splits`` maps name -> fraction (must sum to <= 1; any remainder
+    ``SPLITS`` maps name -> fraction (summing to <= 1; any remainder
     falls into the LAST split listed). Assignment compares the salted
     md5 bucket against cumulative integer thresholds (integerized on
     the driver, same rationale as :func:`stratified_sample`).
@@ -146,32 +142,28 @@ def split_and_shuffle(df, splits: dict[str, float] | None = None,
     shuffle_key is the consumer's choice (range partition on the key
     gives a balanced, skew-free sort because md5 is uniform).
     """
-    if splits is None:
-        splits = {"train": 0.98, "valid": 0.01, "test": 0.01}
-    names = list(splits)
+    names = list(SPLITS)
     cum, edges = 0, []
     for name in names[:-1]:
-        cum += int(round(splits[name] * RESOLUTION))
+        cum += int(round(SPLITS[name] * RESOLUTION))
         edges.append((name, cum))
-    b = sample_bucket_col(F.col(id_col), salt)
+    b = sample_bucket_col(F.col("doc_id"), "split3-v1")
     expr = F
     for name, edge in edges:
         expr = expr.when(F.col("split_bucket") < edge, F.lit(name))
-    split = expr.otherwise(F.lit(names[-1])) if edges else F.lit(names[-1])
+    split = expr.otherwise(F.lit(names[-1]))
     shuffle_key = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(shuffle_salt),
-                           F.col(id_col).cast("string")).cast("binary")),
+            F.md5(F.concat(F.lit("shuffle-v1"),
+                           F.col("doc_id").cast("string")).cast("binary")),
             1, 12),
         16, 10).cast("long")
     return (df.withColumn("split_bucket", b)
-            .select(F.col(id_col), "split_bucket", split.alias("split"),
+            .select(F.col("doc_id"), "split_bucket", split.alias("split"),
                     shuffle_key.alias("shuffle_key")))
 
 
-def exact_k_per_stratum(df, k: int, strata_col: str = "lang",
-                        id_col: str = "doc_id",
-                        salt: str = "exactk-v1") -> DataFrame:
+def exact_k_per_stratum(df, k: int) -> DataFrame:
     """Exactly min(k, n) rows per stratum, chosen by salted-hash order
     — the distributed, deterministic replacement for reservoir
     sampling (whose result depends on encounter order, i.e. on
@@ -187,29 +179,26 @@ def exact_k_per_stratum(df, k: int, strata_col: str = "lang",
     """
     pri = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt),
-                           F.col(id_col).cast("string")).cast("binary")),
+            F.md5(F.concat(F.lit("exactk-v1"),
+                           F.col("doc_id").cast("string")).cast("binary")),
             1, 12),
         16, 10).cast("long")
     from pyspark.sql import Window
-    w = Window.partitionBy(strata_col).orderBy(F.col("_pri"), F.col(id_col))
-    return (df.select(F.col(strata_col), F.col(id_col), pri.alias("_pri"))
+    w = Window.partitionBy("lang").orderBy(F.col("_pri"), F.col("doc_id"))
+    return (df.select(F.col("lang"), F.col("doc_id"), pri.alias("_pri"))
             .withColumn("sample_rank", F.row_number().over(w).cast("int"))
             .where(F.col("sample_rank") <= k)
-            .select(strata_col, id_col, "sample_rank"))
+            .select("lang", "doc_id", "sample_rank"))
 
 
-def dsir_select(df: DataFrame, k: int, target_col: Column | None = None,
-                text_col: str = "text", id_col: str = "doc_id",
-                n_buckets: int = 8192, salt: str = "dsir-v1") -> DataFrame:
+def dsir_select(df: DataFrame, k: int) -> DataFrame:
     """Data Selection with Importance Resampling (Xie et al. 2023):
     rank raw documents by how target-like they are under hashed n-gram
     importance weights, and keep the top ``k``.
 
-    ``target_col`` is the boolean target-membership predicate (default:
-    ``lang == 'en'``).  Features are hashed unigrams — each token maps
-    to one of ``n_buckets`` buckets via the repo's portable salted-md5
-    hash — and a document's log importance weight is
+    The target is ``lang == 'en'``.  Features are hashed unigrams of
+    ``text`` — each token maps to one of ``DSIR_BUCKETS`` buckets via
+    the repo's portable salted-md5 hash — and a document's log importance weight is
 
         Σ_tokens [ ln((ct[b]+1)/(Nt+B)) - ln((cr[b]+1)/(Nr+B)) ]
 
@@ -219,19 +208,17 @@ def dsir_select(df: DataFrame, k: int, target_col: Column | None = None,
     is deterministic top-k by (weight, id) — the systematic variant of
     DSIR's Gumbel resampling (zero RNG, reproducible).
 
-    100 TB posture: both bucket tables are ≤``n_buckets`` rows no
+    100 TB posture: both bucket tables are ≤``DSIR_BUCKETS`` rows no
     matter the corpus (map-side partial agg collapses each task to
-    ≤n_buckets rows), broadcast back to the token stream; the per-doc
+    ≤DSIR_BUCKETS rows), broadcast back to the token stream; the per-doc
     reduce is a partial-agg groupBy; top-k is TakeOrdered (per-partition
     k then driver merge of k-sized lists), never a global sort.
     """
-    if target_col is None:
-        target_col = F.col("lang") == "en"
-    toks = (df.select(F.col(id_col).alias("doc_id"),
-                      target_col.alias("_is_tgt"),
-                      F.explode(F.split(F.col(text_col), " ")).alias("w"))
+    toks = (df.select(F.col("doc_id"),
+                      (F.col("lang") == "en").alias("_is_tgt"),
+                      F.explode(F.split(F.col("text"), " ")).alias("w"))
             .where(F.col("w") != ""))
-    b = (sample_bucket_col(F.col("w"), salt=salt) % n_buckets).alias("b")
+    b = (sample_bucket_col(F.col("w"), salt="dsir-v1") % DSIR_BUCKETS).alias("b")
     toks = toks.select("doc_id", "_is_tgt", b)
 
     cr = toks.groupBy("b").agg(F.count("*").alias("nr"))
@@ -245,10 +232,10 @@ def dsir_select(df: DataFrame, k: int, target_col: Column | None = None,
               "b",
               F.floor(
                   (F.log((F.col("nt") + F.lit(1)).cast("double")
-                         / (F.col("_nt_tot") + F.lit(n_buckets))
+                         / (F.col("_nt_tot") + F.lit(DSIR_BUCKETS))
                          .cast("double"))
                    - F.log((F.col("nr") + F.lit(1)).cast("double")
-                           / (F.col("_nr_tot") + F.lit(n_buckets))
+                           / (F.col("_nr_tot") + F.lit(DSIR_BUCKETS))
                            .cast("double"))) * 1e6 + 0.5)
               .cast("long").alias("lw_micro")))
     per_doc = (toks.join(F.broadcast(lw), "b")
@@ -260,8 +247,7 @@ def dsir_select(df: DataFrame, k: int, target_col: Column | None = None,
             .limit(k))
 
 
-def proportional_quota(df: DataFrame, total: int,
-                       key_col: str = "source") -> DataFrame:
+def proportional_quota(df: DataFrame, total: int) -> DataFrame:
     """Exact proportional budget allocation across groups — the
     domain-balanced subsampling quota: split ``total`` sampling slots
     across domains proportionally to their document counts so that the
@@ -280,18 +266,18 @@ def proportional_quota(df: DataFrame, total: int,
     ``exact_k_sample`` consumes the quotas as per-stratum k's.
     """
     total = int(total)
-    counts = df.groupBy(key_col).agg(F.count("*").alias("n_docs"))
+    counts = df.groupBy("source").agg(F.count("*").alias("n_docs"))
     tot = counts.agg(F.sum("n_docs").alias("_N"))
     c = (counts.crossJoin(F.broadcast(tot))
-         .select(key_col, "n_docs",
+         .select("source", "n_docs",
                  F.expr(f"({total} * n_docs) div _N").alias("_base"),
                  F.expr(f"({total} * n_docs) % _N").alias("_rem")))
     leftover = c.crossJoin(
         F.broadcast(c.agg((F.lit(total) - F.sum("_base")).alias("_R"))))
-    w = Window.orderBy(F.col("_rem").desc(), F.col(key_col))
+    w = Window.orderBy(F.col("_rem").desc(), F.col("source"))
     return (leftover
             .withColumn("_rank", F.row_number().over(w))
-            .select(key_col, "n_docs",
+            .select("source", "n_docs",
                     (F.col("_base")
                      + F.when(F.col("_rank") <= F.col("_R"), 1).otherwise(0))
                     .cast("long").alias("quota")))

@@ -13,7 +13,10 @@
     inverted equi-join on cell id and the same exact re-rank; the
     SemDeDup pass reuses its cells.
 
-Every entry replays bit-for-bit in DuckDB (``oracle_sql``).
+Every operator reads the ``vec_id`` and ``embedding`` columns; a query
+side given as a DataFrame is (query_id, qemb). Only the LSH self-join
+shuffles its query side; every other query side is broadcast. Every
+entry replays bit-for-bit in DuckDB (``oracle_sql``).
 """
 
 from __future__ import annotations
@@ -35,8 +38,7 @@ def with_norm(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
     return df.withColumn("_norm", F.sqrt(_dot_expr(emb_col, emb_col)))
 
 
-def brute_force_topk(emb: DataFrame, query_ids, k: int,
-                     id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
+def brute_force_topk(emb: DataFrame, query_ids, k: int) -> DataFrame:
     """For each query id, the k nearest OTHER vectors by cosine.
     Output: (query_id, rank, neighbor_id, score_r6) — score rounded to
     6 decimals for cross-engine hash stability."""
@@ -46,9 +48,10 @@ def brute_force_topk(emb: DataFrame, query_ids, k: int,
     # the raw embeddings scan — a single-row-group parquet file plans
     # 1-2 tasks, so every dot product ran on one core (guide §2.5
     # input skew). Conditional no-op on a properly-split table.
-    emb = spread_scan(emb, id_col)
-    base = with_norm(emb, emb_col).select(
-        F.col(id_col).alias("nid"), F.col(emb_col).alias("nemb"), F.col("_norm").alias("nnorm"))
+    emb = spread_scan(emb, "vec_id")
+    base = with_norm(emb).select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("nemb"),
+        F.col("_norm").alias("nnorm"))
     queries = base.where(F.col("nid").isin(list(query_ids))).select(
         F.col("nid").alias("query_id"), F.col("nemb").alias("qemb"),
         F.col("nnorm").alias("qnorm"))
@@ -63,8 +66,8 @@ def brute_force_topk(emb: DataFrame, query_ids, k: int,
     )
 
 
-def _planes(dim: int, n_planes: int, seed: int = _SEED) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def _planes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.default_rng(_SEED)
     return rng.standard_normal((n_planes, dim))
 
 
@@ -103,9 +106,6 @@ def _rank_probed(cand: DataFrame, k: int) -> DataFrame:
 
 def lsh_ann_topk_df(emb: DataFrame, queries: DataFrame, k: int, dim: int,
                     n_planes: int = 12, multiprobe: int = 1,
-                    id_col: str = "vec_id", emb_col: str = "embedding",
-                    query_id_col: str = "query_id",
-                    query_emb_col: str = "qemb",
                     broadcast_queries: bool = True) -> DataFrame:
     """Fully-distributed approximate top-k: ``queries`` is a DataFrame
     of (query_id, qemb) — per-document queries at |Q| = corpus scale
@@ -116,11 +116,10 @@ def lsh_ann_topk_df(emb: DataFrame, queries: DataFrame, k: int, dim: int,
     equi-join on the bucket id and an exact re-rank. Set
     ``broadcast_queries=False`` for corpus-sized query sets (shuffled
     hash join + AQE on the bucket key)."""
-    sigs = with_norm(lsh_signatures(emb, dim, n_planes, emb_col), emb_col)
-    base = sigs.select(F.col(id_col).alias("nid"), F.col(emb_col).alias("nemb"),
+    sigs = with_norm(lsh_signatures(emb, dim, n_planes))
+    base = sigs.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("nemb"),
                        F.col("_norm").alias("nnorm"), F.col("_sig").alias("nsig"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(query_emb_col).alias("qemb"))
+    q = queries.select("query_id", "qemb")
     qsigs = with_norm(lsh_signatures(q, dim, n_planes, "qemb"),
                       "qemb").withColumnRenamed("_norm", "qnorm")
     masks = [0]
@@ -139,40 +138,37 @@ def lsh_ann_topk_df(emb: DataFrame, queries: DataFrame, k: int, dim: int,
 
 
 def lsh_ann_topk(emb: DataFrame, query_ids, k: int, dim: int,
-                 n_planes: int = 12, multiprobe: int = 1,
-                 id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
+                 n_planes: int = 12, multiprobe: int = 1) -> DataFrame:
     """Approximate top-k for an id list: the query side is carved out of
     the corpus AS A DATAFRAME and delegated to lsh_ann_topk_df — no
     driver collect anywhere (round-2 review item closed)."""
-    queries = emb.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("qemb"))
-    return lsh_ann_topk_df(emb, queries, k, dim, n_planes, multiprobe,
-                           id_col, emb_col)
+    queries = emb.where(F.col("vec_id").isin(list(query_ids))).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"))
+    return lsh_ann_topk_df(emb, queries, k, dim, n_planes, multiprobe)
 
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — a fixed coarse quantizer
 # ---------------------------------------------------------------------------
 
-def _fixed_centroids(emb: DataFrame, n_centroids: int,
-                     id_col: str, emb_col: str) -> DataFrame:
+def _fixed_centroids(emb: DataFrame, n_centroids: int) -> DataFrame:
     """Fixed coarse quantizer: the ``n_centroids`` lowest-id vectors,
     indexed by rank — a pure function of the data any engine replays."""
-    return (emb.orderBy(id_col).limit(n_centroids)
-            .select(F.col(id_col).alias("_ck"), F.col(emb_col).alias("cemb"))
+    return (emb.orderBy("vec_id").limit(n_centroids)
+            .select(F.col("vec_id").alias("_ck"),
+                    F.col("embedding").alias("cemb"))
             .withColumn("cidx",
                         F.row_number().over(Window.orderBy("_ck")) - 1)
             .drop("_ck")
             .withColumn("dcc", _dot_expr("cemb", "cemb")))
 
 
-def _fixed_cells(emb: DataFrame, cents: DataFrame,
-                 id_col: str, emb_col: str) -> DataFrame:
+def _fixed_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign every vector to its nearest fixed centroid (argmin of
     ||c||^2 - 2 x.c, sequential-fold dots, ties on centroid rank).
     Returns (nid, nemb, nnorm, ncid)."""
-    base = with_norm(emb, emb_col).select(
-        F.col(id_col).alias("nid"), F.col(emb_col).alias("nemb"),
+    base = with_norm(emb).select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("nemb"),
         F.col("_norm").alias("nnorm"))
     d_n = F.col("dcc") - F.lit(2.0) * _dot_expr("nemb", "cemb")
     w_n = Window.partitionBy("nid").orderBy(d_n.asc(), F.col("cidx"))
@@ -183,12 +179,7 @@ def _fixed_cells(emb: DataFrame, cents: DataFrame,
 
 
 def ivf_fixed_ann_topk_df(emb: DataFrame, queries: DataFrame, k: int,
-                          n_centroids: int = 16, nprobe: int = 4,
-                          id_col: str = "vec_id",
-                          emb_col: str = "embedding",
-                          query_id_col: str = "query_id",
-                          query_emb_col: str = "qemb",
-                          broadcast_queries: bool = True) -> DataFrame:
+                          n_centroids: int = 16, nprobe: int = 4) -> DataFrame:
     """Oracle-replayable IVF ANN (round-4 VERDICT item 4): the coarse
     quantizer is FIXED as the ``n_centroids`` lowest-id vectors — zero
     Lloyd iterations, so the model is a pure function of the data that
@@ -201,12 +192,12 @@ def ivf_fixed_ann_topk_df(emb: DataFrame, queries: DataFrame, k: int,
     equi-join on cell id, and the exact cosine re-rank.
 
     A trained quantizer (k-means) would change only the centroid
-    table; the join and rank plan stays as it is."""
-    cents = _fixed_centroids(emb, n_centroids, id_col, emb_col)
-    inv = _fixed_cells(emb, cents, id_col, emb_col)
+    table; the join and rank plan stays as it is. The probed query
+    side is broadcast."""
+    cents = _fixed_centroids(emb, n_centroids)
+    inv = _fixed_cells(emb, cents)
 
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(query_emb_col).alias("qemb"))
+    q = queries.select("query_id", "qemb")
     qn = with_norm(q, "qemb").withColumnRenamed("_norm", "qnorm")
     d_q = F.col("dcc") - F.lit(2.0) * _dot_expr("qemb", "cemb")
     w_q = Window.partitionBy("query_id").orderBy(d_q.asc(), F.col("cidx"))
@@ -215,27 +206,21 @@ def ivf_fixed_ann_topk_df(emb: DataFrame, queries: DataFrame, k: int,
              .where(F.col("_crk") <= nprobe)
              .select("query_id", "qemb", "qnorm",
                      F.col("cidx").alias("ncid")))
-    if broadcast_queries:
-        qside = F.broadcast(qside)
-    cand = inv.join(qside, "ncid").where(F.col("nid") != F.col("query_id"))
+    cand = inv.join(F.broadcast(qside), "ncid").where(F.col("nid") != F.col("query_id"))
     return _rank_probed(cand, k)
 
 
 def ivf_fixed_ann_topk(emb: DataFrame, query_ids, k: int,
-                       n_centroids: int = 16, nprobe: int = 4,
-                       id_col: str = "vec_id",
-                       emb_col: str = "embedding") -> DataFrame:
+                       n_centroids: int = 16, nprobe: int = 4) -> DataFrame:
     """Fixed-quantizer IVF for an id list (query side carved out as a
     DataFrame, no driver collect)."""
-    queries = emb.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("qemb"))
-    return ivf_fixed_ann_topk_df(emb, queries, k, n_centroids, nprobe,
-                                 id_col, emb_col)
+    queries = emb.where(F.col("vec_id").isin(list(query_ids))).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"))
+    return ivf_fixed_ann_topk_df(emb, queries, k, n_centroids, nprobe)
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
-                   n_centroids: int = 16, id_col: str = "vec_id",
-                   emb_col: str = "embedding") -> DataFrame:
+                   n_centroids: int = 16) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with a coarse quantizer,
     then WITHIN each cell mark every vector whose cosine similarity to
@@ -260,8 +245,8 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
     the per-vector reduction (max / conditional min) has map-side
     partial aggregation. No driver materialization at any size.
     """
-    cents = _fixed_centroids(emb, n_centroids, id_col, emb_col)
-    inv = _fixed_cells(emb, cents, id_col, emb_col)
+    cents = _fixed_centroids(emb, n_centroids)
+    inv = _fixed_cells(emb, cents)
     a = inv.select(F.col("nid").alias("aid"), F.col("nemb").alias("aemb"),
                    F.col("nnorm").alias("anorm"), "ncid")
     b = inv.select(F.col("nid").alias("bid"), F.col("nemb").alias("bemb"),
@@ -285,20 +270,20 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
 
 
 def ann_self_topk(emb: DataFrame, k: int, dim: int,
-                  id_col: str = "vec_id", emb_col: str = "embedding",
-                  **kw) -> DataFrame:
+                  n_planes: int = 12, multiprobe: int = 1) -> DataFrame:
     """Per-document LSH near-neighbor self-join (|Q| = corpus): EVERY
     vector queries the index — the dedup-adjacent workload the round-2
     verdict flagged as blocked on driver-side query collection. The
     query side is the corpus itself as a DataFrame;
     ``broadcast_queries=False`` because a corpus-sized query side must
     shuffle-hash-join on the bucket key (AQE splits skewed buckets),
-    never broadcast. ``kw`` goes to :func:`lsh_ann_topk_df`.
+    never broadcast. ``n_planes`` and ``multiprobe`` go to
+    :func:`lsh_ann_topk_df`.
 
     100 TB posture: candidate generation touches only same-bucket
     pairs, top-k is window-limited map-side, and nothing query- or
     corpus-sized reaches the driver."""
-    queries = emb.select(F.col(id_col).alias("query_id"),
-                         F.col(emb_col).alias("qemb"))
-    return lsh_ann_topk_df(emb, queries, k, dim, id_col=id_col,
-                           emb_col=emb_col, broadcast_queries=False, **kw)
+    queries = emb.select(F.col("vec_id").alias("query_id"),
+                         F.col("embedding").alias("qemb"))
+    return lsh_ann_topk_df(emb, queries, k, dim, n_planes, multiprobe,
+                           broadcast_queries=False)

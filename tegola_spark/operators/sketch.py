@@ -31,12 +31,13 @@ from pyspark.sql import DataFrame, functions as F
 
 _M = 256            # registers; bucket = first md5 byte
 _TAIL_BITS = 52     # 13 hex chars — fits a BIGINT exactly
+CMS_DEPTH = 4       # count-min rows
+CMS_WIDTH = 1024    # count-min counters per row
 
 
-def hll_distinct(df: DataFrame, group_col: str, value_col: str,
-                 out_col: str = "hll_est") -> DataFrame:
+def hll_distinct(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-group HLL distinct estimate of ``value_col``. Returns
-    (group_col, n_registers, ``out_col``) with the estimate rounded to
+    (group_col, n_registers, ``hll_est``) with the estimate rounded to
     6 decimals (the one permitted float-divergence absorber)."""
     h = F.md5(F.col(value_col).cast("string").cast("binary"))
     bucket = F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
@@ -62,18 +63,16 @@ def hll_distinct(df: DataFrame, group_col: str, value_col: str,
                  F.lit(256.0) * F.log(F.lit(256.0) / v.cast("double"))
                  ).otherwise(raw_e)
     return per.select(group_col, "n_registers",
-                      F.round(est, 6).alias(out_col))
+                      F.round(est, 6).alias("hll_est"))
 
 
-def cms_heavy_hitters(df: DataFrame, text_col: str = "text", k: int = 20,
-                      depth: int = 4, width: int = 1024,
-                      salt: str = "cms-v1") -> DataFrame:
-    """Count-min-sketch heavy hitters over corpus tokens — the
-    HLL's sibling for FREQUENCY: the sketch state is depth x width
-    int64 counters (32 KB here), built with one map-side-combined
+def cms_heavy_hitters(df: DataFrame, k: int = 20) -> DataFrame:
+    """Count-min-sketch heavy hitters over the ``text`` tokens — the
+    HLL's sibling for FREQUENCY: the sketch state is CMS_DEPTH x
+    CMS_WIDTH int64 counters (32 KB), built with one map-side-combined
     exchange whose key space is the counter grid, never the vocab.
     Like the HLL, every primitive is engine-portable (md5 row-salted
-    buckets, integer sums, min over depth), so DuckDB replays the
+    buckets, integer sums, min over the rows), so DuckDB replays the
     sketch AND the estimates bit-for-bit.
 
     Returns the top-k tokens by CMS estimate with their exact counts
@@ -89,15 +88,15 @@ def cms_heavy_hitters(df: DataFrame, text_col: str = "text", k: int = 20,
     elementwise +, so per-shard sketches combine without re-reading
     text (the same posture as the HLL register max).
     """
-    rows = F.array(*[F.lit(r) for r in range(depth)])
-    words = (df.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+    rows = F.array(*[F.lit(r) for r in range(CMS_DEPTH)])
+    words = (df.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
                .where(F.col("word") != ""))
 
     def bucket(r_col, word_col):
         return F.conv(F.substring(F.md5(
-            F.concat(F.lit(salt), r_col.cast("string"), F.lit(":"),
+            F.concat(F.lit("cms-v1"), r_col.cast("string"), F.lit(":"),
                      word_col).cast("binary")), 1, 8),
-            16, 10).cast("long") % F.lit(width)
+            16, 10).cast("long") % F.lit(CMS_WIDTH)
 
     wr = words.select("word", F.explode(rows).alias("r"))
     sketch = (wr.groupBy("r", bucket(F.col("r"), F.col("word")).alias("b"))

@@ -177,11 +177,10 @@ def _knn_cell(deg: Column, offset: float) -> Column:
     return F.floor((deg + F.lit(offset)) / F.lit(_KNN_STEP_DEG)).cast("long")
 
 
-def knn_cell_ring_df(points: DataFrame, queries: DataFrame, k: int,
-                     id_col: str = "doc_id") -> DataFrame:
+def knn_cell_ring_df(points: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact kNN of each query (``queries``: query_id, qlon, qlat)
     against ``points`` (lon/lat) by squared euclidean degree distance,
-    ties broken by ``id_col``. Returns (query_id, rank, <id_col>,
+    ties broken by ``doc_id``. Returns (query_id, rank, doc_id,
     dist_sq), the same rows as :func:`knn_bruteforce`.
 
     One histogram job reaches the driver (one count per occupied grid
@@ -240,25 +239,24 @@ def knn_cell_ring_df(points: DataFrame, queries: DataFrame, k: int,
 
     qcells = (q.withColumn("_cx", span(qlon, 180.0, x0, x0 + w - 1))
                .withColumn("_cy", span(qlat, 90.0, y0, y0 + h - 1)))
-    pts = points.select(id_col, "lon", "lat",
+    pts = points.select("doc_id", "lon", "lat",
                         _knn_cell(F.col("lon"), 180.0).alias("_cx"),
                         _knn_cell(F.col("lat"), 90.0).alias("_cy"))
     dlon = F.col("lon") - F.col("qlon")
     dlat = F.col("lat") - F.col("qlat")
     dist = (dlon * dlon + dlat * dlat).alias("dist_sq")
-    w_rank = Window.partitionBy("query_id").orderBy("dist_sq", id_col)
+    w_rank = Window.partitionBy("query_id").orderBy("dist_sq", "doc_id")
     return (
         pts.join(F.broadcast(qcells), ["_cx", "_cy"])
-        .select("query_id", id_col, dist, "_d2")
+        .select("query_id", "doc_id", dist, "_d2")
         .where(F.col("dist_sq") <= F.col("_d2"))
         .withColumn("rank", F.row_number().over(w_rank))
         .where(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "dist_sq")
+        .select("query_id", "rank", "doc_id", "dist_sq")
     )
 
 
-def knn_bruteforce(points: DataFrame, queries, k: int,
-                   id_col: str = "doc_id") -> DataFrame:
+def knn_bruteforce(points: DataFrame, queries, k: int) -> DataFrame:
     """Reference implementation: broadcast cross join + window top-k.
     O(|P| * |Q|) but fully distributed — the baseline the cell-ring
     variant is differentially tested against."""
@@ -268,10 +266,10 @@ def knn_bruteforce(points: DataFrame, queries, k: int,
     dlon = F.col("lon") - F.col("qlon")
     dlat = F.col("lat") - F.col("qlat")
     dist = (dlon * dlon + dlat * dlat).alias("dist_sq")
-    w = Window.partitionBy("query_id").orderBy("dist_sq", id_col)
+    w = Window.partitionBy("query_id").orderBy("dist_sq", "doc_id")
     return (
-        cand.select("query_id", id_col, dist)
+        cand.select("query_id", "doc_id", dist)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "dist_sq")
+        .select("query_id", "rank", "doc_id", "dist_sq")
     )

@@ -26,30 +26,32 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# asof_join's right-side payload; event_id also breaks timestamp ties
+_ASOF_PAYLOAD = ("event_id", "value")
 
-def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
-              ts_col: str = "ts", right_cols: tuple = ("event_id", "value"),
-              tie_col: str = "event_id", tolerance_s: int | None = None,
-              prefix: str = "r_") -> DataFrame:
+
+def asof_join(left: DataFrame, right: DataFrame,
+              tolerance_s: int | None = None) -> DataFrame:
     """Backward as-of join: left rows + the latest right row with
-    ``right.ts <= left.ts`` per ``on`` key (LEFT semantics — unmatched
-    left rows keep nulls). ``tolerance_s`` additionally requires
+    ``right.ts <= left.ts`` per ``user_id`` (LEFT semantics — unmatched
+    left rows keep nulls); at equal ``ts`` the greatest ``event_id``
+    wins. ``tolerance_s`` additionally requires
     ``right.ts >= left.ts - tolerance_s`` (matches outside the window
     revert to nulls, the row is kept). Output: every left column, then
-    ``prefix + ts_col`` and ``prefix + c`` for each right payload col.
+    ``r_ts``, ``r_event_id`` and ``r_value``.
     """
     lcols = left.columns
     r_payload = F.struct(
-        F.col(ts_col).alias("_rts"),
-        *[F.col(c).alias(c) for c in right_cols])
+        F.col("ts").alias("_rts"),
+        *[F.col(c) for c in _ASOF_PAYLOAD])
     r_side = right.select(
-        F.col(on).alias("_k"), F.col(ts_col).alias("_ts"),
-        F.lit(0).alias("_side"), F.col(tie_col).alias("_tie"),
+        F.col("user_id").alias("_k"), F.col("ts").alias("_ts"),
+        F.lit(0).alias("_side"), F.col("event_id").alias("_tie"),
         r_payload.alias("_r"),
         *[F.lit(None).cast(left.schema[c].dataType).alias("_l_" + c)
           for c in lcols])
     l_side = left.select(
-        F.col(on).alias("_k"), F.col(ts_col).alias("_ts"),
+        F.col("user_id").alias("_k"), F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"), F.lit(None).cast("long").alias("_tie"),
         F.lit(None).cast(r_side.schema["_r"].dataType).alias("_r"),
         *[F.col(c).alias("_l_" + c) for c in lcols])
@@ -67,14 +69,13 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
             "_m", F.when(in_window, F.col("_m")))
     return matched.select(
         *[F.col("_l_" + c).alias(c) for c in lcols],
-        F.col("_m._rts").alias(prefix + ts_col),
-        *[F.col("_m." + c).alias(prefix + c) for c in right_cols])
+        F.col("_m._rts").alias("r_ts"),
+        *[F.col("_m." + c).alias("r_" + c) for c in _ASOF_PAYLOAD])
 
 
 def interval_join(points: DataFrame, intervals: DataFrame,
-                  t_col: str = "ts", start_col: str = "t_start",
-                  end_col: str = "t_end", bucket_s: int = 21600) -> DataFrame:
-    """Non-equi point-in-interval range join (``start <= t < end``)
+                  bucket_s: int = 21600) -> DataFrame:
+    """Non-equi point-in-interval range join (``t_start <= ts < t_end``)
     without a key column — the join Spark cannot plan as anything but
     a nested loop on its own.
 
@@ -91,19 +92,18 @@ def interval_join(points: DataFrame, intervals: DataFrame,
     in a cell the interval covers (cover is conservative; the residual
     is exact on full-precision timestamps).
     """
-    pb = F.floor(F.unix_timestamp(t_col) / bucket_s).cast("long")
-    sb = F.floor(F.unix_timestamp(start_col) / bucket_s).cast("long")
-    eb = F.floor(F.unix_timestamp(end_col) / bucket_s).cast("long")
+    pb = F.floor(F.unix_timestamp("ts") / bucket_s).cast("long")
+    sb = F.floor(F.unix_timestamp("t_start") / bucket_s).cast("long")
+    eb = F.floor(F.unix_timestamp("t_end") / bucket_s).cast("long")
     p = points.withColumn("_cell", pb)
     iv = intervals.withColumn("_cell", F.explode(F.sequence(sb, eb)))
     return (p.join(iv, "_cell")
-             .where((F.col(t_col) >= F.col(start_col)) &
-                    (F.col(t_col) < F.col(end_col)))
+             .where((F.col("ts") >= F.col("t_start")) &
+                    (F.col("ts") < F.col("t_end")))
              .drop("_cell"))
 
 
-def time_rollup(ev: DataFrame, ts_col: str = "ts", value_col: str = "value",
-                levels: tuple = (60, 3600, 86400)) -> DataFrame:
+def time_rollup(ev: DataFrame, levels: tuple = (60, 3600, 86400)) -> DataFrame:
     """Hypertable-style hierarchical time rollup (continuous-aggregate
     cascade): the finest level aggregates raw events ONCE; every
     coarser level re-aggregates the previous level's partials
@@ -119,13 +119,13 @@ def time_rollup(ev: DataFrame, ts_col: str = "ts", value_col: str = "value",
     for a, b in zip(levels, levels[1:]):
         if b % a:
             raise ValueError(f"levels must nest: {b} % {a} != 0")
-    ep = F.unix_timestamp(ts_col)
+    ep = F.unix_timestamp("ts")
     cur = (ev.withColumn("bucket", F.floor(ep / levels[0]).cast("long"))
              .groupBy("bucket")
              .agg(F.count("*").alias("n_events"),
-                  F.sum(value_col).alias("sum_value"),
-                  F.min(value_col).alias("min_value"),
-                  F.max(value_col).alias("max_value"))
+                  F.sum("value").alias("sum_value"),
+                  F.min("value").alias("min_value"),
+                  F.max("value").alias("max_value"))
              .withColumn("level_s", F.lit(levels[0]).cast("long")))
     out = cur
     for prev, nxt in zip(levels, levels[1:]):
@@ -141,10 +141,7 @@ def time_rollup(ev: DataFrame, ts_col: str = "ts", value_col: str = "value",
     return out
 
 
-def rolling_user_stats(ev: DataFrame, user_col: str = "user_id",
-                       ts_col: str = "ts", value_col: str = "value",
-                       id_col: str = "event_id",
-                       window_s: int = 3600) -> DataFrame:
+def rolling_user_stats(ev: DataFrame, window_s: int = 3600) -> DataFrame:
     """Trailing time-window aggregates per entity: at every event, the
     count and value-sum of that user's events in the preceding
     ``window_s`` seconds (inclusive) — the rate-limit / burst-feature
@@ -164,13 +161,13 @@ def rolling_user_stats(ev: DataFrame, user_col: str = "user_id",
     partition, so a truly pathological key would need a two-level
     pre-aggregate by (user, coarse bucket) — not warranted here).
     """
-    ep = F.unix_timestamp(F.col(ts_col)).cast("long")
-    vm = F.floor(F.col(value_col) * 1e6 + F.lit(0.5)).cast("long")
-    base = ev.select(F.col(id_col), F.col(user_col),
+    ep = F.unix_timestamp(F.col("ts")).cast("long")
+    vm = F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long")
+    base = ev.select(F.col("event_id"), F.col("user_id"),
                      ep.alias("ep"), vm.alias("vm"))
-    w = (Window.partitionBy(user_col).orderBy("ep")
+    w = (Window.partitionBy("user_id").orderBy("ep")
          .rangeBetween(-(window_s - 1), 0))
     return base.select(
-        id_col, user_col, "ep",
+        "event_id", "user_id", "ep",
         F.count("*").over(w).cast("long").alias("roll_n"),
         F.sum("vm").over(w).cast("long").alias("roll_sum_micro"))

@@ -6,7 +6,10 @@ codegen) — no UDF in the hot path. The buffered-tile duplication
 buffered extent it intersects) is a 3x3 neighbor explode + filter,
 exactly equivalent to the reference's per-tile bbox query with the
 buffered extent (provider/provider.go:107-110; postgis util.go:152-179)
-because the buffer (64px of a 4096px tile) is < 1 tile.
+because the buffer (64px of a 4096px tile) is < 1 tile. The buffer is
+the one constant ``BUFFER_FRAC`` for every layer and zoom, as it is in
+tegola's tile (tile.go:104-107); the anchor kernel in plans/pipeline.py
+reads the same constant.
 
 Membership is evaluated in SPHERICAL web-mercator tile units — the
 projection the reference's bbox path uses (proj EPSG3857 with a=b,
@@ -43,7 +46,7 @@ def col_world_y_n(lat: Column, n: Column) -> Column:
     return (F.lit(0.5) - ymerc / F.lit(2.0 * math.pi)) * n
 
 
-def assign_point_tiles(points: DataFrame, zooms, buffer_frac: float = BUFFER_FRAC) -> DataFrame:
+def assign_point_tiles(points: DataFrame, zooms) -> DataFrame:
     """Fan each point out to every (z, x, y) whose BUFFERED extent
     contains it. Adds columns z, x, y; one output row per membership.
 
@@ -62,7 +65,7 @@ def assign_point_tiles(points: DataFrame, zooms, buffer_frac: float = BUFFER_FRA
     out = out.select("*", F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])).alias("_dy"))
     x = (F.floor("_wx") + F.col("_dx")).cast("long")
     y = (F.floor("_wy") + F.col("_dy")).cast("long")
-    b = F.lit(buffer_frac)
+    b = F.lit(BUFFER_FRAC)
     keep = (
         (x >= 0) & (x < F.col("_n")) & (y >= 0) & (y < F.col("_n"))
         & (F.col("_wx") >= x.cast("double") - b)
@@ -77,7 +80,7 @@ def assign_point_tiles(points: DataFrame, zooms, buffer_frac: float = BUFFER_FRA
     )
 
 
-def assign_bbox_tiles(feats: DataFrame, zooms, buffer_frac: float = BUFFER_FRAC) -> DataFrame:
+def assign_bbox_tiles(feats: DataFrame, zooms) -> DataFrame:
     """Fan bbox'd features (minx/miny/maxx/maxy in lon/lat) out to all
     tiles whose buffered extent intersects the bbox — the J2 bbox range
     join realized as sequence+explode (bounded: polygon layers are the
@@ -93,7 +96,7 @@ def assign_bbox_tiles(feats: DataFrame, zooms, buffer_frac: float = BUFFER_FRAC)
     out = feats.select("*", zdf)
     n = _col_n(F.col("z"))
     nmax = n.cast("long") - 1
-    b = F.lit(buffer_frac)
+    b = F.lit(BUFFER_FRAC)
     x0 = F.floor(col_world_x_n(F.col("minx"), n) - b).cast("long")
     x1 = F.floor(col_world_x_n(F.col("maxx"), n) + b).cast("long")
     # y grows downward: maxy (north) -> smaller y

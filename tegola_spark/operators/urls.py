@@ -53,20 +53,18 @@ def host_col(c: Column) -> Column:
     return F.lower(F.regexp_extract(c, r"^[A-Za-z]+://(?:[^/@]*@)?([^/:]*)", 1))
 
 
-def canonicalize(df: DataFrame, url_col: str = "url") -> DataFrame:
-    out = df.withColumn("url_canon", canonicalize_url_col(F.col(url_col)))
+def canonicalize(df: DataFrame) -> DataFrame:
+    out = df.withColumn("url_canon", canonicalize_url_col(F.col("url")))
     return out.withColumn("host", host_col(F.col("url_canon")))
 
 
-def domain_stats(df: DataFrame, url_col: str = "url",
-                 text_col: str = "text",
-                 lang_col: str = "lang") -> DataFrame:
+def domain_stats(df: DataFrame) -> DataFrame:
     """Per-domain rollup over canonical URLs: page/distinct-URL
     counts (their gap = intra-domain URL duplication), language
     spread, and text volume."""
-    c = canonicalize(df, url_col)
+    c = canonicalize(df)
     return (c.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.countDistinct("url_canon").alias("n_urls"),
-        F.countDistinct(lang_col).alias("n_langs"),
-        F.sum(F.length(F.col(text_col)).cast("long")).alias("total_chars")))
+        F.countDistinct("lang").alias("n_langs"),
+        F.sum(F.length(F.col("text")).cast("long")).alias("total_chars")))

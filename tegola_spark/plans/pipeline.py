@@ -9,7 +9,11 @@ columns, and every stream takes the same plan (_stream_plan):
   stream --fan-out (column exprs)--> repartition(bucket of its group key)
          --> [window cap, after the one exchange, on its sort]
          --> applyInPandas(encode_bucket: reproject -> [simplify] ->
-             quantize -> clip -> MVT encode)
+             quantize -> clean -> MVT encode)
+
+  clean is geometry.clean_geometry: lines take the clip walk, and every
+  polygon takes the make-valid sweep (there is no opt-out, as there is
+  none in tegola's CleanGeometry).
 
   points:  pages --geocode(UDF)--> tile fan-out over LEVELS; key
            (z,x,y), layer "pages"; the cap window is skipped when it
@@ -102,7 +106,6 @@ _METRIC_COLS = ["z", "x", "y", "layer", "layer_bytes", "n_features",
 
 def encode_bucket(pdf: pd.DataFrame, anchor_z: int | None = None,
                   deep_zooms=(), simplify: bool = False,
-                  repair: bool = True,
                   caps: dict | None = None) -> pd.DataFrame:
     """The grouped-map kernel of every stream: MANY (z, x, y, layer)
     groups per UDF invocation. groupBy on the raw tile-layer key pays
@@ -131,10 +134,10 @@ def encode_bucket(pdf: pd.DataFrame, anchor_z: int | None = None,
             rows.append(_encode_one(
                 g, time.perf_counter(), z, x, y,
                 k[3] if len(k) > 3 else "pages",
-                simplify=simplify, repair=repair, presorted=True))
+                simplify=simplify, presorted=True))
         else:
             rows.extend(_encode_anchor_tiles(
-                g, anchor_z, x, y, deep_zooms, simplify, repair, caps))
+                g, anchor_z, x, y, deep_zooms, simplify, caps))
     return pd.DataFrame(rows, columns=_METRIC_COLS)
 
 
@@ -219,7 +222,7 @@ def _string_tag_cols(pdf: pd.DataFrame):
 
 def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
                 layer: str, simplify: bool = False,
-                repair: bool = True, presorted: bool = False) -> dict:
+                presorted: bool = False) -> dict:
     """Encode one (z, x, y, layer) group into a metric row with its
     layer blob. Two routes, chosen by the group's rows alone:
 
@@ -261,7 +264,7 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
         n_in, n_feats = len(pdf), int(keep.sum())
     else:
         feats, n_in = _generic_features(pdf, lonlat, ext, clip_region, z,
-                                        simplify, repair)
+                                        simplify)
         body = mvt.encode_layer(layer, feats)
         n_feats = len(feats)
     blob = mvt.encode_tile([body])  # wrap as field-3 record
@@ -306,7 +309,7 @@ def _decoded_iter(pdf: pd.DataFrame, lonlat: np.ndarray):
             yield fid, wkb.soa_to_geometry(code, coords, rl, pl), tags, srid
 
 
-def _generic_features(pdf, lonlat, ext, clip_region, z, simplify, repair):
+def _generic_features(pdf, lonlat, ext, clip_region, z, simplify):
     """The generic route's per-feature chain. Returns the encode-ready
     feature dicts sorted by id and the input feature count (rows plus
     the extra members of flattened collections)."""
@@ -334,7 +337,7 @@ def _generic_features(pdf, lonlat, ext, clip_region, z, simplify, repair):
             g = mvt.prepare_geo(g, ext)                  # P9 quantize
             if g is None:
                 continue
-            g = geo.clean_geometry(g, clip_region, repair=repair)  # G2/G3
+            g = geo.clean_geometry(g, clip_region)  # G2/G3
             if g is None:
                 continue
             feats.append({"id": int(fid), "tags": tags, "geom": g})
@@ -578,7 +581,7 @@ def _stream_plan(feats: DataFrame, keys, nb: int, cap, kernel) -> DataFrame:
 
 
 def _encode_anchor_tiles(g: pd.DataFrame, anchor_z: int, ax: int, ay: int,
-                         deep_zooms, simplify: bool, repair: bool,
+                         deep_zooms, simplify: bool,
                          caps: dict | None) -> list:
     """Metric rows of the descendant tiles of anchor tile (ax, ay):
     derive every (z, x, y) membership for z in ``deep_zooms`` locally
@@ -638,7 +641,7 @@ def _encode_anchor_tiles(g: pd.DataFrame, anchor_z: int, ax: int, ay: int,
                     _cap_dropped=n_over)
             rows.append(_encode_one(
                 lg, time.perf_counter(), z, int(tx), int(ty), "pages",
-                simplify=simplify, repair=repair))
+                simplify=simplify))
     return rows
 
 
@@ -649,7 +652,6 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
                 with_debug: bool = False,
                 default_tags: dict | None = None,
                 simplify: bool = False,
-                repair_polygons: bool = True,
                 with_points: bool = True,
                 tile_filter: DataFrame | None = None,
                 anchor_z: int | None = None
@@ -672,6 +674,10 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
 
     ``with_points``: False builds only the polygon / road / debug
     layers (no geocode, no count).
+
+    ``with_debug``, ``default_tags`` and ``simplify`` turn on tegola's
+    debug provider, default-tag merge and Douglas-Peucker
+    simplification. Polygons always run the make-valid sweep.
 
     ``tile_filter``: optional DataFrame of (z, x, y) keys — only those
     tiles are built (semi-join on the fanned-out features BEFORE the
@@ -744,8 +750,7 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         caps = None if rule is None else {z: rule(z) for z in deep}
 
         def _encode_points(pdf: pd.DataFrame) -> pd.DataFrame:
-            return encode_bucket(pdf, anchor_z, deep, simplify,
-                                 repair_polygons, caps)
+            return encode_bucket(pdf, anchor_z, deep, simplify, caps)
 
         outs.append(_stream_plan(
             feats, ["z", "x", "y"], _encode_buckets(sp, n_pts * len(levels)),
@@ -791,7 +796,7 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
                          "(no points, polygons or debug layers)")
 
     def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        return encode_bucket(pdf, simplify=simplify, repair=repair_polygons)
+        return encode_bucket(pdf, simplify=simplify)
 
     # bbox streams (polygons/roads) are catalog-sized by contract — a
     # full-width bucket fan costs ~120 ms of fixed python-task overhead

@@ -21,25 +21,29 @@ Mirrors `tegola cache seed` + its skip-if-cached worker
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import pipeline
 from ..sources import sinks
 
 
 def seed_tiles(spark: SparkSession, sf_dir: str, out_path: str, zooms,
-               batch_zooms: int = 2, **build_kwargs) -> list[dict]:
+               batch_zooms: int = 2, max_features_per_tile="auto",
+               tile_filter: DataFrame | None = None,
+               anchor_z: int | None = None) -> list[dict]:
     """Seed all zooms into the sink in zoom batches, skipping tiles the
-    sink already holds (resume). ``build_kwargs`` (e.g. ``docs``,
-    ``max_features_per_tile``, ``tile_filter``, ``anchor_z``) pass
-    through to every batch's ``pipeline.build_tiles``. Returns manifest
-    records. The one seed loop: `cli seed` runs it too."""
+    sink already holds (resume). ``max_features_per_tile``,
+    ``tile_filter`` and ``anchor_z`` pass through to every batch's
+    ``pipeline.build_tiles``. Returns manifest records. The one seed
+    loop: `cli seed` runs it too."""
     recs = []
     zooms = sorted(zooms)
     for i in range(0, len(zooms), batch_zooms):
         batch = zooms[i:i + batch_zooms]
-        metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=batch,
-                                              **build_kwargs)
+        metrics, tiles = pipeline.build_tiles(
+            spark, sf_dir, zooms=batch,
+            max_features_per_tile=max_features_per_tile,
+            tile_filter=tile_filter, anchor_z=anchor_z)
         rec = sinks.write_batch(spark, tiles, metrics, out_path)
         if rec is not None:
             recs.append(rec)

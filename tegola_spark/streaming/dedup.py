@@ -25,26 +25,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def stream_exact_dedup(docs: DataFrame, watermark: str = "1 hour",
-                       ts_col: str = "ts",
-                       text_col: str = "text") -> DataFrame:
+def stream_exact_dedup(docs: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """First-arrival-wins exact dedup on md5(text) with
     watermark-bounded state. Works on batch frames too (falls back to
     plain dropDuplicates semantics over the same key) so the twin
     comparison runs the identical expression tree."""
     keyed = docs.withColumn(
-        "text_hash", F.md5(F.col(text_col).cast("binary")))
+        "text_hash", F.md5(F.col("text").cast("binary")))
     if keyed.isStreaming:
-        keyed = keyed.withWatermark(ts_col, watermark)
+        keyed = keyed.withWatermark("ts", watermark)
         return keyed.dropDuplicatesWithinWatermark(["text_hash"])
     return keyed.dropDuplicates(["text_hash"])
 
 
 def stream_dedup_files(spark, input_dir: str, checkpoint_dir: str,
                        query_name: str = "dedupsink",
-                       out_dir: str | None = None,
-                       watermark: str = "30 minutes",
-                       max_files_per_trigger: int = 1):
+                       out_dir: str | None = None):
     """Run the streaming dedup over the document files currently in
     ``input_dir`` (availableNow, one file per micro-batch so the
     watermark advances between files and state eviction is observable).
@@ -53,9 +49,9 @@ def stream_dedup_files(spark, input_dir: str, checkpoint_dir: str,
     """
     schema = spark.read.parquet(input_dir).schema
     docs = (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", int(max_files_per_trigger))
+            .option("maxFilesPerTrigger", 1)
             .parquet(input_dir))
-    writer = (stream_exact_dedup(docs, watermark=watermark)
+    writer = (stream_exact_dedup(docs, watermark="30 minutes")
               .writeStream.outputMode("append")
               .option("checkpointLocation", checkpoint_dir)
               .trigger(availableNow=True))

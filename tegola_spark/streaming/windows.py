@@ -22,14 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def windowed_counts(ev: DataFrame, window: str = "1 hour",
-                    watermark: str | None = None) -> DataFrame:
-    """Tumbling event-time windows per kind; with ``watermark`` set the
-    plan is streamable in append mode."""
+def windowed_counts(ev: DataFrame, watermark: str | None = None) -> DataFrame:
+    """Tumbling one-hour event-time windows per kind; with
+    ``watermark`` set the plan is streamable in append mode."""
     if watermark is not None:
         ev = ev.withWatermark("ts", watermark)
     return (
-        ev.groupBy(F.window("ts", window).alias("w"), "kind")
+        ev.groupBy(F.window("ts", "1 hour").alias("w"), "kind")
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum("value"), 6).alias("value_sum"))
         .select(F.col("w.start").alias("win_start"),
@@ -40,10 +39,7 @@ def windowed_counts(ev: DataFrame, window: str = "1 hour",
 
 def stream_event_windows(spark: SparkSession, input_dir: str,
                          checkpoint_dir: str, query_name: str = "windows",
-                         out_dir: str | None = None,
-                         window: str = "1 hour",
-                         watermark: str = "30 minutes",
-                         max_files_per_trigger: int = 1):
+                         out_dir: str | None = None):
     """Run the watermarked windowed aggregation over the event files
     currently in ``input_dir`` (availableNow; one file per micro-batch
     so the watermark advances BETWEEN files, which is what makes
@@ -54,9 +50,9 @@ def stream_event_windows(spark: SparkSession, input_dir: str,
     sink cannot recover a checkpoint). Returns after awaitTermination."""
     schema = spark.read.parquet(input_dir).schema
     ev = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", int(max_files_per_trigger))
+          .option("maxFilesPerTrigger", 1)
           .parquet(input_dir))
-    writer = (windowed_counts(ev, window=window, watermark=watermark)
+    writer = (windowed_counts(ev, watermark="30 minutes")
               .writeStream.outputMode("append")
               .option("checkpointLocation", checkpoint_dir)
               .trigger(availableNow=True))

@@ -33,8 +33,9 @@ def frames(spark):
 
 
 def test_backward_inclusive_match(frames):
+    left, right = frames
     got = {r["event_id"]: (r["r_event_id"], r["r_value"])
-           for r in asof_join(*frames).collect()}
+           for r in asof_join(left, right).collect()}
     assert got[100] == (201, 2.0)   # equal ts matches (inclusive)
     assert got[101] == (200, 1.0)   # ts=11 click is in the future
     assert got[102] == (204, 9.0)   # equal-ts tie: greatest event_id
@@ -42,8 +43,9 @@ def test_backward_inclusive_match(frames):
 
 
 def test_tolerance_nulls_stale_matches(frames):
+    left, right = frames
     got = {r["event_id"]: r["r_event_id"]
-           for r in asof_join(*frames, tolerance_s=2).collect()}
+           for r in asof_join(left, right, tolerance_s=2).collect()}
     assert got[100] == 201          # lag 0 <= 2s
     assert got[101] == 200          # lag 1s
     assert got[102] is None         # lag 6s > 2s -> nulled, row kept
@@ -62,7 +64,8 @@ def test_left_columns_pass_through(frames):
 def test_single_key_exchange_no_join(frames):
     """The plan must contain no join operator at all — the as-of is a
     union + window; each input crosses one hash exchange on the key."""
-    plan = asof_join(*frames)._jdf.queryExecution().executedPlan().toString()
+    left, right = frames
+    plan = asof_join(left, right)._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     # the union is map-side, so ONE exchange total carries both inputs
     assert plan.count("Exchange") == 1

@@ -3,6 +3,8 @@
 import json
 import os
 
+import pytest
+
 from tegola_spark import cli
 from tegola_spark.operators import mvt
 from tegola_spark.sources import sinks
@@ -70,3 +72,29 @@ def test_cli_seed_tile_list_explicit(spark, sf_dir, tmp_path, capsys):
     got = {(r["z"], r["x"], r["y"])
            for r in sinks.existing_keys(spark, out).collect()}
     assert got == {(2, 1, 1)}
+
+
+@pytest.mark.parametrize("zoom_args", [
+    ["--batch-zooms", "0"],
+    ["--batch-zooms", "-1"],
+    ["--min-zoom", "5", "--max-zoom", "3"],
+    ["--min-zoom", "-1", "--max-zoom", "2"],
+    ["--min-zoom", "0", "--max-zoom", "23"],
+], ids=["batch-zooms-0", "batch-zooms-negative", "min-above-max",
+        "min-below-0", "max-above-MAX_Z"])
+def test_cli_seed_rejects_zoom_range_that_seeds_nothing(
+        tmp_path, monkeypatch, capsys, zoom_args):
+    """A batch size below one, a reversed range or a zoom off the grid
+    is an argparse error (exit 2) raised before any Spark session
+    starts, not a run that writes nothing and exits 0."""
+    from tegola_spark.plans import session
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["seed", "--input", str(tmp_path), "--out",
+                  str(tmp_path / "sink")] + zoom_args)
+    assert exc.value.code == 2
+    assert "error:" in capsys.readouterr().err

@@ -43,5 +43,5 @@ def test_cycle_terminates(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], "id_a long, id_b long")
     got = {r["id"]: r["cluster_rep"]
-           for r in clusters.connected_components(edges, max_iter=10).collect()}
+           for r in clusters.connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1}

@@ -188,36 +188,6 @@ def test_clip_linestring_fully_inside_and_outside():
     assert G.clip_linestring(outside, ext) == []
 
 
-# -- G3 polygon rect clip ----------------------------------------------------------
-
-def test_clip_polygon_inside_untouched():
-    ring = L(1, 1, 9, 1, 9, 9, 1, 9)
-    out = G.clip_polygon_rect([ring], (0, 0, 10, 10))
-    np.testing.assert_allclose(out[0], ring)
-
-
-def test_clip_polygon_corner():
-    ring = L(-5, -5, 5, -5, 5, 5, -5, 5)
-    out = G.clip_polygon_rect([ring], (0, 0, 10, 10))
-    assert len(out) == 1
-    assert G.ring_area_abs(out[0]) == pytest.approx(25.0)
-    assert out[0].min() >= 0.0
-
-
-def test_clip_polygon_outside_dropped():
-    ring = L(20, 20, 30, 20, 30, 30, 20, 30)
-    assert G.clip_polygon_rect([ring], (0, 0, 10, 10)) == []
-
-
-def test_clip_polygon_hole_preserved():
-    outer = L(-5, -5, 15, -5, 15, 15, -5, 15)
-    hole = L(2, 2, 8, 2, 8, 8, 2, 8)
-    out = G.clip_polygon_rect([outer, hole], (0, 0, 10, 10))
-    assert len(out) == 2
-    assert G.ring_area_abs(out[0]) == pytest.approx(100.0)
-    assert G.ring_area_abs(out[1]) == pytest.approx(36.0)
-
-
 def test_clean_geometry_buffered_tile_region():
     # the standard clip region [-64,-64,4160,4160] (tile.go:104-107)
     region = (-64.0, -64.0, 4160.0, 4160.0)

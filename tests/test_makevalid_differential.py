@@ -1,53 +1,30 @@
 """G3 differential tests against the reference's makevalid fixture table
 (maths/makevalid/makevalid_test.go).
 
-The engine currently substitutes Sutherland–Hodgman rect clipping for
-tegola's bespoke make-valid sweep (SURVEY.md §7.4(2)). For VALID
-polygons the results agree (asserted below). For polygons needing
-repair — overlapping rings, self-intersections — the reference unions
-via an even-odd trapezoid sweep; that path is planned round-2 work and
-the fixture case is kept here as an xfail to make the gap explicit.
+Every polygon the engine encodes runs the port of tegola's make-valid
+sweep (operators/makevalid.py) through ``geometry.clean_geometry``;
+there is no second polygon path. Overlapping rings resolve as the
+reference's even-odd trapezoid sweep resolves them (case 0 below), and
+the hitmap labeling behind it (shell minus holes) is checked point by
+point. tests/test_makevalid_golden.py holds the vertex-exact table.
 """
 
 import numpy as np
-import pytest
 
 from tegola_spark.operators import geometry as G
 
 
-def test_valid_polygon_clip_agrees_with_reference_semantics():
-    """A valid ring fully inside the clip region passes through
-    unchanged — matching makevalid's identity behavior on valid
-    input within the extent."""
-    ring = np.array([[3.0, 1.0], [7.0, 1.0], [7.0, 6.0], [3.0, 6.0]])
-    out = G.clip_polygon_rect([ring], (0, 0, 4096, 4096))
-    assert len(out) == 1
-    np.testing.assert_allclose(out[0], ring)
-
-
 def test_makevalid_case0_via_clean_geometry_repair():
-    """makevalid_test.go case 0 through the clean path with repair=True
-    (the reference's always-on behavior, opt-in here): two overlapping
-    rectangles resolve to the expected 8-vertex polygon."""
+    """makevalid_test.go case 0 through the clean path (the reference's
+    always-on behavior): two overlapping rectangles resolve to the
+    expected 8-vertex polygon."""
     r1 = np.array([[3.0, 1.0], [7.0, 1.0], [7.0, 6.0], [3.0, 6.0]])
     r2 = np.array([[4.0, 4.0], [4.0, 9.0], [5.0, 9.0], [5.0, 4.0]])
-    out = G.clean_geometry(("Polygon", [r1, r2]), (0, 0, 4096, 4096),
-                           repair=True)
+    out = G.clean_geometry(("Polygon", [r1, r2]), (0, 0, 4096, 4096))
     assert out[0] == "MultiPolygon" and len(out[1]) == 1
     got = {tuple(p) for p in out[1][0][0]}
     assert got == {(3, 1), (7, 1), (7, 6), (5, 6), (5, 4),
                    (4, 4), (4, 6), (3, 6)}
-
-
-def test_default_clean_path_keeps_hole_semantics():
-    """Without repair, the default S-H path clips rings independently —
-    overlapping ring 2 stays a raw hole ring (renderers apply even-odd,
-    so the visual result matches shell-minus-hole); repair=True is the
-    geometric fixup."""
-    r1 = np.array([[3.0, 1.0], [7.0, 1.0], [7.0, 6.0], [3.0, 6.0]])
-    r2 = np.array([[4.0, 4.0], [4.0, 9.0], [5.0, 9.0], [5.0, 4.0]])
-    out = G.clip_polygon_rect([r1, r2], (0, 0, 4096, 4096))
-    assert len(out) == 2
 
 
 def test_shell_minus_holes_coverage_of_case0():
@@ -56,8 +33,7 @@ def test_shell_minus_holes_coverage_of_case0():
     holes (later rings, Outside) — hitmap.NewFromGeometry — so the
     expected output polygon covers exactly {in shell} - {in hole}.
     Our PIP reproduces that coverage point-for-point on a sample grid,
-    pinning the labeling piece of G3 (only the ring-assembly sweep
-    remains for round 2)."""
+    pinning the labeling piece of G3."""
     r1 = np.array([[3.0, 1.0], [7.0, 1.0], [7.0, 6.0], [3.0, 6.0]])
     r2 = np.array([[4.0, 4.0], [4.0, 9.0], [5.0, 9.0], [5.0, 4.0]])
     expected = [np.array([[3, 1], [7, 1], [7, 6], [5, 6], [5, 4],

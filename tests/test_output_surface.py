@@ -149,17 +149,24 @@ def _target(modules: dict, mod: str, name: str, depth: int = 0):
     return None
 
 
-def census(extra_roots=()) -> set[str]:
-    """Module-qualified top-level definitions that no root reaches.
-    ``extra_roots`` (module-qualified names) count as roots too."""
+def reach(extra_roots=()):
+    """Walk every output path. Returns
+    ``(modules, pkg_mods, reached, code)``: the package's parsed
+    modules, their names, the reached ``(module, name)`` definitions
+    and constants, and every ``(module, node)`` the walk ran — the root
+    files, the import-time code of each imported package module, and
+    the node of each reached definition. ``extra_roots``
+    (module-qualified names) count as roots too."""
     paths = sorted(PKG.rglob("*.py"))
     pkg_mods = {_modname(p) for p in paths}
     modules = {m.name: m for m in (_Module(p, pkg_mods) for p in paths)}
     refs, mods, seen = set(), set(), set()
     reached: set[tuple[str, str]] = set()
     walked_mods: set[str] = set()
+    code: list[tuple[_Module, ast.AST]] = []
 
     def use(nodes, m):
+        code.extend((m, n) for n in nodes)
         r, md = _uses(nodes, m, pkg_mods)
         refs.update(r)
         mods.update(md)
@@ -204,6 +211,12 @@ def census(extra_roots=()) -> set[str]:
             if node is not None:
                 use([node], modules[hit[0]])
             changed = True
+    return modules, pkg_mods, reached, code
+
+
+def census(extra_roots=()) -> set[str]:
+    """Module-qualified top-level definitions that no root reaches."""
+    modules, _, reached, _ = reach(extra_roots)
     return {f"{m.name}.{d}" for m in modules.values()
             for d in (*m.defs, *m.consts) if (m.name, d) not in reached}
 

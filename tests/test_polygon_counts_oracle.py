@@ -52,7 +52,7 @@ def _ellipsoidal(arr):
 
 def _real_keep(pring, ext):
     g = mvt.prepare_geo(("Polygon", [pring]), ext)
-    return g is not None and geo.clean_geometry(g, CLIP, repair=True) is not None
+    return g is not None and geo.clean_geometry(g, CLIP) is not None
 
 
 def _pred_keep(pax, pbx, pay, pby, ext):

@@ -258,11 +258,10 @@ def test_footer_rows(spark, sf_dir):
 def test_layered_streams_skip_window_when_cap_cannot_bind(spark, sf_dir,
                                                          tmp_path,
                                                          monkeypatch):
-    """A seed with every layered stream writes a plan with no Window:
-    catalog-sized polygons and roads, and one-feature debug groups, can
-    never reach the budget. An unreadable bound keeps the window."""
-    from tegola_spark.streaming import checkpoint
-
+    """A seed batch with every layered stream writes a plan with no
+    Window: catalog-sized polygons and roads, and one-feature debug
+    groups, can never reach the budget. An unreadable bound keeps the
+    window."""
     plans = []
     real_write = sinks.write_tiles
 
@@ -271,9 +270,10 @@ def test_layered_streams_skip_window_when_cap_cannot_bind(spark, sf_dir,
         return real_write(tiles, metrics, path, **kw)
 
     monkeypatch.setattr(sinks, "write_tiles", spying_write)
-    recs = checkpoint.seed_tiles(spark, sf_dir, str(tmp_path / "sink"),
-                                 [0, 1], with_roads=True, with_debug=True)
-    assert {r["layer"] for r in recs[0]["report"]} == {
+    metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=[0, 1],
+                                          with_roads=True, with_debug=True)
+    rec = sinks.write_batch(spark, tiles, metrics, str(tmp_path / "sink"))
+    assert {r["layer"] for r in rec["report"]} == {
         "pages", "nations", "regions", "roads", "debug-tile-outline",
         "debug-tile-center"}
     assert len(plans) == 1

@@ -7,6 +7,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -72,6 +73,12 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     sys.path.insert(0, ".")
+    # one result per line: Spark's console progress bar otherwise shares
+    # the terminal line with the ok/FAIL/rows lines (\r-separated). The
+    # conf is static, so it goes to the JVM launch.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.ui.showConsoleProgress=false "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell"))
     import __spark_entry__ as entrymod
     from tegola_spark.plans.session import get_spark
 

@@ -37,9 +37,9 @@ def main():
         docs.count()
 
     anchor_env = os.environ.get("SPARK_GRAFT_ANCHOR_Z")
-    kw = {"anchor_z": int(anchor_env)} if anchor_env else {}
     metrics, tiles = pipeline.build_tiles(
-        spark, sf_dir, zooms=list(range(0, zmax + 1)), docs=docs, **kw)
+        spark, sf_dir, zooms=list(range(0, zmax + 1)), docs=docs,
+        anchor_z=int(anchor_env) if anchor_env else None)
     row = tiles.agg(F.count("*"), F.sum("tile_len")).first()
     print(f"n_tiles={row[0]} tile_bytes={row[1]}")
 
