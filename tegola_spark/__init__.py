@@ -9,7 +9,7 @@ a 100 TB web-corpus pipeline needs.
 Layout
 ------
 functions/   pure column-expression + NumPy kernels (tile grid, mercator,
-             cells, WKB codec, text functions) — no Spark required to test
+             cells, SoA geometry model, text functions) — no Spark required to test
 operators/   Spark operators (geometry pipeline, spatial join, kNN, MVT
              encode, dedup, similarity, multimodal plumbing)
 sources/     synthetic corpus + layer catalogs + testdata loaders

@@ -1,1 +1,1 @@
-"""Pure kernels: tile grid math, web-mercator, cell index, WKB, text."""
+"""Pure kernels: tile grid math, web-mercator, cell index, SoA geometry, text."""

@@ -35,18 +35,18 @@ SHINGLE_K = 5       # minhash shingle width, utf-8 bytes
 SIMHASH_BITS = 60   # portable simhash width: 15 hex digits of md5
 
 
-def _hash_params(num_perm: int):
+def _hash_params():
     rng = np.random.default_rng(_SEED)
-    a = rng.integers(1, MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
-    b = rng.integers(0, MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
+    a = rng.integers(1, MERSENNE, size=NUM_PERM, dtype=np.int64).astype(np.uint64)
+    b = rng.integers(0, MERSENNE, size=NUM_PERM, dtype=np.int64).astype(np.uint64)
     return a, b
 
 
 _POLY_P = np.uint64(1099511628211)  # FNV prime as the polynomial base
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Distinct k-byte shingle hashes: polynomial hash over utf-8 bytes,
+def _shingle_hashes(text: str) -> np.ndarray:
+    """Distinct SHINGLE_K-byte shingle hashes: polynomial hash over utf-8 bytes,
     fully vectorized (sliding windows via stride tricks x precomputed
     base powers, uint64 wraparound). The per-character Python loop this
     replaced was the corpus-scale bottleneck (16s for 5k docs)."""
@@ -54,8 +54,7 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
     n = len(raw)
     if n == 0:
         return np.array([np.uint64(0)], dtype=np.uint64)
-    if n < k:
-        k = n
+    k = min(SHINGLE_K, n)
     powers = np.empty(k, dtype=np.uint64)
     powers[k - 1] = 1
     with np.errstate(over="ignore"):  # uint64 wraparound is the hash
@@ -101,13 +100,13 @@ def minhash_signatures(df: DataFrame) -> DataFrame:
     # (round-6; no-op on a properly split table). This was the 12-22 s
     # cold first rep of minhash_pairs in BENCH_r05.
     df = spread_scan(df, "doc_id")
-    a, b = _hash_params(NUM_PERM)
+    a, b = _hash_params()
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts.fillna(""):
-            sh = _shingle_hashes(t, SHINGLE_K)
+            sh = _shingle_hashes(t)
             # universal hash: (a*x + b) mod p, min over shingles, vectorized
             vals = (sh[:, None] * a[None, :] + b[None, :]) % np.uint64(MERSENNE)
             out.append(vals.min(axis=0).astype(np.int64).tolist())

@@ -674,10 +674,9 @@ def encode_layer(name: str, features) -> bytes:
     Features whose geometry encodes to nothing are dropped
     (feature.go:83-85). Empty layers are still emitted
     (vendor/.../mvt/tile.go:42-63 encodes whatever layers exist).
-    Features are encoded one at a time; an all-string value dictionary
-    is emitted by encode_str_values_block (byte-identical to the
-    per-value loop). Pure lon/lat point layers with string tags skip
-    this function: encode_point_layer_arrays builds them from arrays.
+    Features and values are encoded one at a time. Pure lon/lat point
+    layers with string tags skip this function:
+    encode_point_layer_arrays builds them from arrays.
     """
     keys, kidx, vals, vidx = build_dictionaries(features)
     parts = [_len_delim(1, name.encode("utf-8"))]
@@ -695,11 +694,8 @@ def encode_layer(name: str, features) -> bytes:
                                                   gtype, geom_arr)))
     for k in keys:
         parts.append(_len_delim(3, k.encode("utf-8")))
-    if vals and all(isinstance(v, str) for v in vals):
-        parts.append(encode_str_values_block(vals))
-    else:
-        for v in vals:
-            parts.append(_len_delim(4, encode_value(v)))
+    for v in vals:
+        parts.append(_len_delim(4, encode_value(v)))
     parts.append(_tag(5, 0) + _varint(DEFAULT_EXTENT))
     parts.append(_tag(15, 0) + _varint(MVT_VERSION))
     return b"".join(parts)
@@ -735,22 +731,19 @@ def _layer_name_from_bytes(layer_bytes: bytes) -> str | None:
 
 def encode_tile(layers) -> bytes:
     """Tile message: repeated Layer = field 3. ``layers`` is a list of
-    (name, features) or pre-encoded layer bytes. MVT layer concatenation
-    is byte concatenation of the length-delimited field (S6 pushdown
-    concat `||` — provider/postgis/postgis.go:398-400).
+    encoded layer bodies (encode_layer / encode_point_layer_arrays).
+    MVT layer concatenation is byte concatenation of the
+    length-delimited field (S6 pushdown concat `||` —
+    provider/postgis/postgis.go:398-400).
 
     Duplicate layer names are rejected, matching Tile.AddLayers
     (vendor/.../encoding/mvt/tile.go:16-35)."""
     parts = []
     seen: set[str] = set()
-    for layer in layers:
-        if isinstance(layer, (bytes, bytearray)):
-            body = bytes(layer)
-            name = _layer_name_from_bytes(body)
-            parts.append(_len_delim(3, body))
-        else:
-            name, features = layer
-            parts.append(_len_delim(3, encode_layer(name, features)))
+    for body in layers:
+        body = bytes(body)
+        name = _layer_name_from_bytes(body)
+        parts.append(_len_delim(3, body))
         if name is not None:
             if name in seen:
                 raise DuplicateLayerName(

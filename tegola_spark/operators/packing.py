@@ -34,19 +34,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def prefix_sum(df: DataFrame, value_col: str, key_col: str) -> DataFrame:
-    """Exclusive prefix sum of ``value_col`` in ``key_col`` order —
-    ``token_offset`` = sum of values of all STRICTLY-smaller keys.  Keys
-    must be unique (they order the rows)."""
-    part = df.repartitionByRange(F.col(key_col))
+def prefix_sum(df: DataFrame) -> DataFrame:
+    """Exclusive prefix sum of ``n_tokens`` in ``doc_id`` order —
+    ``token_offset`` = sum of the tokens of all STRICTLY-smaller ids.
+    Ids must be unique (they order the rows)."""
+    part = df.repartitionByRange(F.col("doc_id"))
     part = part.withColumn("_pid", F.spark_partition_id())
-    w = (Window.partitionBy("_pid").orderBy(key_col)
+    w = (Window.partitionBy("_pid").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     local = part.withColumn("_local", F.coalesce(
-        F.sum(F.col(value_col).cast("long")).over(w), F.lit(0)))
+        F.sum(F.col("n_tokens").cast("long")).over(w), F.lit(0)))
     # one row per partition: the only driver-sized materialization
     totals = (local.groupBy("_pid")
-              .agg(F.sum(F.col(value_col).cast("long")).alias("_tot"))
+              .agg(F.sum(F.col("n_tokens").cast("long")).alias("_tot"))
               .collect())
     totals = sorted((r["_pid"], r["_tot"]) for r in totals)
     offsets, acc = {}, 0
@@ -68,7 +68,7 @@ def pack_bins(df: DataFrame, budget: int) -> DataFrame:
     stay in key order, a document whose tokens straddle a boundary
     belongs to the bin where it starts (training-side splitting is a
     reader concern)."""
-    out = prefix_sum(df, "n_tokens", "doc_id")
+    out = prefix_sum(df)
     b = int(budget)
     return (out.withColumn("bin_id", F.expr(f"token_offset DIV {b}"))
             .withColumn("bin_offset",

@@ -35,7 +35,7 @@ DSIR_BUCKETS = 8192  # hashed-unigram buckets of dsir_select
 SPLITS = {"train": 0.98, "valid": 0.01, "test": 0.01}
 
 
-def sample_bucket_col(id_col: Column, salt: str = "") -> Column:
+def sample_bucket_col(id_col: Column, salt: str) -> Column:
     """Deterministic bucket in [0, RESOLUTION): first 12 hex digits
     (48 bits) of md5(salt || id) mod RESOLUTION.  Portable: Spark and
     DuckDB produce byte-identical md5 over the same UTF-8 bytes (same

@@ -81,10 +81,12 @@ from ..sources import corpus, layers
 # (round-4; the round-3 design unioned every family onto one wide
 # schema, so the corpus paid 8 fixed UnsafeRow bytes per absent field —
 # layer/geom/srid + three all-NULL tag columns — on every row of the
-# dominant shuffle). POINT features (the corpus) cross as two plain
-# DOUBLE columns (lon, lat) with no geom column at all; polygon/debug
-# features carry WKB. Coordinates land in the encode kernel as
-# zero-copy Arrow->NumPy float64 views, bit-exact vs the WKB path.
+# dominant shuffle). Every feature crosses in one of two transports
+# (functions/wkb.py): a point (the corpus, the debug tile centers) as
+# two plain DOUBLE columns (lon, lat); a line or polygon (the layers,
+# roads, debug tile outlines) as ring-SoA columns. Coordinates land in
+# the encode kernel as Arrow->NumPy float64 arrays; no stream ships
+# encoded geometry.
 POINT_STREAM_COLS = ["z", "x", "y", "feature_id", "lon", "lat",
                      "tag_url", "tag_lang"]
 ENCODE_SCHEMA = (
@@ -231,8 +233,8 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
       whole layer from column arrays (mvt.encode_point_layer_arrays),
       with no per-feature Python objects. Every corpus point group
       takes it.
-    - generic route: everything else (WKB geometries, ring-SoA
-      polygons, lines, mixed groups, typed tags) — per feature:
+    - generic route: everything else (ring-SoA polygons and lines,
+      mixed groups, typed tags) — per feature:
       reproject, [simplify], quantize, clip, then mvt.encode_layer.
       Lon/lat rows enter it as Point geometries, and it encodes them to
       the same bytes as the array route (differentially tested)."""
@@ -279,7 +281,8 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
 def _decoded_iter(pdf: pd.DataFrame, lonlat: np.ndarray):
     """(feature_id, geometry, tags, srid) per row: lon/lat rows as
     Point geometries, ring-SoA rows (coords column) through
-    wkb.soa_to_geometry with no byte parsing, the rest from WKB."""
+    wkb.soa_to_geometry. A row that carries neither transport is an
+    error, not a silent drop."""
     if lonlat.any():
         pts = pdf[lonlat]
         for fid, lon, lat, tags, srid in zip(
@@ -288,62 +291,46 @@ def _decoded_iter(pdf: pd.DataFrame, lonlat: np.ndarray):
                 pts["srid"]):
             yield fid, ("Point", np.array([lon, lat])), tags, srid
     rest = pdf[~lonlat] if lonlat.any() else pdf
-    if len(rest) and "coords" in rest.columns:
-        ring_mask = rest["coords"].notna().to_numpy()
-    else:
-        ring_mask = np.zeros(len(rest), dtype=bool)
-    wkb_rows = rest[~ring_mask] if ring_mask.any() else rest
-    if len(wkb_rows):
-        for fid, gwkb, tags, srid in zip(
-                wkb_rows["feature_id"], wkb_rows["geom"],
-                _tag_dicts(wkb_rows), wkb_rows["srid"]):
-            yield fid, wkb.decode(bytes(gwkb)), tags, srid
-    if ring_mask.any():
-        ring_rows = rest[ring_mask]
-        plens = ring_rows["poly_lens"] if "poly_lens" in ring_rows.columns \
-            else [None] * len(ring_rows)
-        for fid, code, coords, rl, pl, tags, srid in zip(
-                ring_rows["feature_id"], ring_rows["gkind"],
-                ring_rows["coords"], ring_rows["ring_lens"], plens,
-                _tag_dicts(ring_rows), ring_rows["srid"]):
-            yield fid, wkb.soa_to_geometry(code, coords, rl, pl), tags, srid
+    if not len(rest):
+        return
+    if "coords" not in rest.columns or rest["coords"].isna().any():
+        raise ValueError("encode_bucket: a row carries neither lon/lat "
+                         "nor ring-SoA coords")
+    plens = rest["poly_lens"] if "poly_lens" in rest.columns \
+        else [None] * len(rest)
+    for fid, code, coords, rl, pl, tags, srid in zip(
+            rest["feature_id"], rest["gkind"], rest["coords"],
+            rest["ring_lens"], plens, _tag_dicts(rest), rest["srid"]):
+        yield fid, wkb.soa_to_geometry(code, coords, rl, pl), tags, srid
 
 
 def _generic_features(pdf, lonlat, ext, clip_region, z, simplify):
     """The generic route's per-feature chain. Returns the encode-ready
-    feature dicts sorted by id and the input feature count (rows plus
-    the extra members of flattened collections)."""
-    n_in = len(pdf)
+    feature dicts sorted by id and the input feature count."""
     feats = []
-    for fid, decoded, tags, srid in _decoded_iter(pdf, lonlat):
-        # GeometryCollection: empty -> feature skipped (atlas/map.go:232-236);
-        # non-empty -> one feature per member geometry, tags shared
-        # (mvt.NewFeatures flattening, mvt/feature.go:48-67)
-        members = wkb.flatten_collection(decoded)
-        n_in += max(0, len(members) - 1)  # empty collection counts as 1 drop
-        for g in members:
-            if srid != 3857:
-                # P8 ellipsoidal feature reprojection (atlas/map.go:241-248);
-                # srid 3857 passes through untouched (tile.go:143-156)
-                g = wkb.map_coords(g, _ellipsoidal)
-            # G1 simplify: parity default OFF (atlas/atlas.go:19-33); when
-            # enabled it runs in PROJECTED coords with the ZEpislon
-            # tolerance, gated z < simplification_maxzoom(10) and z != MaxZ
-            # (atlas/map.go:266-271) — exactly the reference order
-            if simplify and z < 10 and z != grid.MAX_Z:
-                g = geo.simplify_geometry(g, grid.zepsilon(z))
-                if g is None:
-                    continue
-            g = mvt.prepare_geo(g, ext)                  # P9 quantize
+    for fid, g, tags, srid in _decoded_iter(pdf, lonlat):
+        if srid != 3857:
+            # P8 ellipsoidal feature reprojection (atlas/map.go:241-248);
+            # srid 3857 passes through untouched (tile.go:143-156)
+            g = wkb.map_coords(g, _ellipsoidal)
+        # G1 simplify: parity default OFF (atlas/atlas.go:19-33); when
+        # enabled it runs in PROJECTED coords with the ZEpislon
+        # tolerance, gated z < simplification_maxzoom(10) and z != MaxZ
+        # (atlas/map.go:266-271) — exactly the reference order
+        if simplify and z < 10 and z != grid.MAX_Z:
+            g = geo.simplify_geometry(g, grid.zepsilon(z))
             if g is None:
                 continue
-            g = geo.clean_geometry(g, clip_region)  # G2/G3
-            if g is None:
-                continue
-            feats.append({"id": int(fid), "tags": tags, "geom": g})
+        g = mvt.prepare_geo(g, ext)                  # P9 quantize
+        if g is None:
+            continue
+        g = geo.clean_geometry(g, clip_region)  # G2/G3
+        if g is None:
+            continue
+        feats.append({"id": int(fid), "tags": tags, "geom": g})
     # O1 determinism: the row kinds were visited one after another
     feats.sort(key=lambda f: f["id"])
-    return feats, n_in
+    return feats, len(pdf)
 
 
 def point_features(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
@@ -351,10 +338,9 @@ def point_features(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     stream — the layer name never ships; encode_bucket attaches it).
 
     SoA transport: points travel as (lon, lat) double columns with no
-    geom/srid/layer columns at all — no WKB codec UDF touches the
-    corpus (the geocode UDF is the only Python stage before the encode
-    shuffle), and the dominant shuffle carries only this stream's own
-    live columns."""
+    srid/layer columns at all — the geocode UDF is the only Python
+    stage before the encode shuffle, and the dominant shuffle carries
+    only this stream's own live columns."""
     doc = corpus.documents(spark, sf_dir) if docs is None else docs
     pts = corpus.geocoded_points(doc)
 
@@ -375,8 +361,7 @@ def polygon_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ring/poly length arrays + the WKB type code), as the layers build
     them with column expressions: no codec UDF runs on the scan side
     and the encode kernel reconstructs the ring arrays without parsing
-    bytes. Arbitrary-geometry sources can ship a `geom` WKB column
-    instead; the kernel handles both."""
+    bytes."""
     both = layers.nation_layer(spark, sf_dir).unionByName(layers.region_layer(spark, sf_dir))
     return both.select("feature_id", "layer", "minx", "miny", "maxx", "maxy",
                        *POLY_SOA_COLS, F.col("name").alias("tag_name"))
@@ -385,50 +370,27 @@ def polygon_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def debug_features(spark: SparkSession, zooms) -> DataFrame:
     """S7 debug provider: per tile, the tile-outline polygon (tagged
     debug_buffer_outline) and the center point tagged "Z:z, X:x, Y:y"
-    (provider/debug/debug.go:36-91). Generated as a DataFrame over the
-    world tile list; geometry synthesized in one Arrow batch pass."""
-    rows = grid.tiles_for_bounds(-180, -85.0511, 180, 85.0511, zooms)
-    tiles = spark.createDataFrame(rows, "z int, x long, y long")
-
-    # debug features are emitted in 3857 directly (the provider builds
-    # them from t.Extent(); srid 3857 skips reprojection — debug.go:36-60)
-    @F.pandas_udf("binary")
-    def outline(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        out = []
-        for zz, xx, yy in zip(z, x, y):
-            minx, miny, maxx, maxy = grid.tile_extent_3857(int(zz), int(xx), int(yy))
-            # AsPolygon vertex order (bbox.go:33-42)
-            ring = np.array([[minx, miny], [maxx, miny], [maxx, maxy], [minx, maxy]])
-            out.append(wkb.encode(("Polygon", [ring])))
-        return pd.Series(out)
-
-    @F.pandas_udf("binary")
-    def center(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        out = []
-        for zz, xx, yy in zip(z, x, y):
-            minx, miny, maxx, maxy = grid.tile_extent_3857(int(zz), int(xx), int(yy))
-            out.append(wkb.encode(("Point", np.array([(minx + maxx) / 2.0,
-                                                      (miny + maxy) / 2.0]))))
-        return pd.Series(out)
-
-    tag = F.concat(F.lit("Z:"), F.col("z").cast("string"), F.lit(", X:"),
-                   F.col("x").cast("string"), F.lit(", Y:"), F.col("y").cast("string"))
-    none = F.lit(None).cast("string")
-    out_poly = tiles.select(
-        "z", "x", "y", F.lit("debug-tile-outline").alias("layer"),
-        F.lit(0).cast("long").alias("feature_id"),
-        outline("z", "x", "y").alias("geom"),
-        F.lit(3857).alias("srid"),
-        F.lit("debug_buffer_outline").alias("tag_type"),
-        none.alias("tag_zxy"))
-    out_ctr = tiles.select(
-        "z", "x", "y", F.lit("debug-tile-center").alias("layer"),
-        F.lit(0).cast("long").alias("feature_id"),
-        center("z", "x", "y").alias("geom"),
-        F.lit(3857).alias("srid"),
-        F.lit("debug_text").alias("tag_type"),
-        tag.alias("tag_zxy"))
-    return out_poly.unionByName(out_ctr)
+    (provider/debug/debug.go:36-91), built on the driver over the world
+    tile list in the two transports every stream uses: the outline as
+    ring-SoA, the center as a lon/lat row. Both are emitted in 3857
+    directly (the provider builds them from t.Extent(); srid 3857 skips
+    reprojection — debug.go:36-60)."""
+    rows = []
+    for z, x, y in grid.tiles_for_bounds(-180, -85.0511, 180, 85.0511, zooms):
+        minx, miny, maxx, maxy = (float(v) for v in
+                                  grid.tile_extent_3857(z, x, y))
+        # AsPolygon vertex order (bbox.go:33-42)
+        rows.append((z, x, y, "debug-tile-outline", 0, None, None,
+                     [minx, miny, maxx, miny, maxx, maxy, minx, maxy],
+                     [4], wkb.WKB_POLYGON, 3857, "debug_buffer_outline", None))
+        rows.append((z, x, y, "debug-tile-center", 0,
+                     (minx + maxx) / 2.0, (miny + maxy) / 2.0,
+                     None, None, None, 3857, "debug_text",
+                     f"Z:{z}, X:{x}, Y:{y}"))
+    return spark.createDataFrame(
+        rows, "z int, x long, y long, layer string, feature_id long, "
+        "lon double, lat double, coords array<double>, ring_lens array<int>, "
+        "gkind int, srid int, tag_type string, tag_zxy string")
 
 
 def _default_tag_col(k, v) -> str:

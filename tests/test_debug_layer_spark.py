@@ -73,3 +73,15 @@ def test_debug_tiles_golden(spark, sf_dir):
         h.update(b)
     assert {"tiles": len(rows), "bytes": sum(len(r[3]) for r in rows),
             "md5": h.hexdigest()} == SF001_DEBUG_Z2_GOLDEN
+
+
+def test_debug_build_runs_no_python_stage_before_encode(spark, sf_dir):
+    """The debug stream ships its outlines as ring-SoA and its centers
+    as lon/lat rows built on the driver: its plan holds the encode's
+    grouped map and no Python evaluation node."""
+    metrics, _ = pipeline.build_tiles(
+        spark, sf_dir, zooms=[0, 1], with_points=False, with_polygons=False,
+        with_debug=True)
+    plan = metrics._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan

@@ -3,11 +3,13 @@ encode_str_values_block) and the array route (encode_point_layer_arrays,
 taken by _encode_one for lon/lat groups with string tags) must be
 BYTE-IDENTICAL to the generic per-feature route for every shape —
 protobuf bytes are the product, not an approximation of it. The
-reference is always the generic route: mvt.encode_layer over Point
-geometries, or _encode_one over the same points fed as WKB geom."""
+reference is always the per-feature chain on geometry tuples:
+mvt.encode_layer over Point geometries, or encode_reference over the
+same rows read one at a time."""
 
 import time
 
+import encode_reference
 import numpy as np
 import pandas as pd
 import pytest
@@ -100,19 +102,10 @@ def _encode(pdf, z=0, x=0, y=0, layer="pages"):
     return bytes(row["layer_bytes"]), row["n_features"], row["n_dropped"]
 
 
-def _as_wkb(pdf):
-    """The all-WKB reference: every lon/lat row becomes a WKB Point and
-    every ring-SoA row a WKB geometry; the lon/lat and ring columns go."""
-    geom = list(pdf["geom"]) if "geom" in pdf.columns else [None] * len(pdf)
-    for i, (_, r) in enumerate(pdf.iterrows()):
-        if "lon" in pdf.columns and pd.notna(r["lon"]):
-            geom[i] = wkb.encode(("Point", np.array([r["lon"], r["lat"]])))
-        elif "coords" in pdf.columns and r["coords"] is not None:
-            geom[i] = wkb.encode(wkb.soa_to_geometry(
-                r["gkind"], r["coords"], r["ring_lens"], None))
-    drop = [c for c in ("lon", "lat", "coords", "ring_lens", "gkind")
-            if c in pdf.columns]
-    return pdf.drop(columns=drop).assign(geom=geom)
+def _reference(pdf, z=0, x=0, y=0, layer="pages"):
+    """The same rows through the per-feature reference encoder."""
+    return encode_reference.encode_group(
+        encode_reference.features_of(pdf), z, x, y, layer)
 
 
 def _tile_points(n, z, ax, ay, seed):
@@ -127,8 +120,8 @@ def _tile_points(n, z, ax, ay, seed):
 
 
 def test_point_layer_arrays_vs_dict_path():
-    """The array route against the same points fed as WKB geom through
-    the generic route — including a column (tag_name) whose first
+    """The array route against the same points through the per-feature
+    reference — including a column (tag_name) whose first
     appearance is AFTER another key's, exercising the key-order
     tiebreak, and points the buffered clip drops."""
     n = 5000
@@ -147,15 +140,18 @@ def test_point_layer_arrays_vs_dict_path():
         })
         arrays = _encode(pdf, z, ax, ay)
         assert 0 < arrays[1] < n           # the clip dropped some points
-        assert arrays == _encode(_as_wkb(pdf), z, ax, ay)
+        assert arrays == _reference(pdf, z, ax, ay)
 
 
 def test_mixed_group_matches_wkb_reference():
-    """One (z, x, y, layer) group holding lon/lat rows, a WKB point and
-    a ring-SoA polygon takes the generic route and encodes exactly as
-    the same rows all fed as WKB."""
+    """One (z, x, y, layer) group holding lon/lat rows, a ring-SoA line
+    and a ring-SoA polygon takes the generic route and encodes exactly
+    as the per-feature reference that takes the rows in id order (the
+    polygon and the line have the lowest ids, so a kernel that emitted
+    the kinds in the order it visits them would not match)."""
     lon, lat = _tile_points(50, 2, 1, 1, seed=3)
     n = len(lon)
+    line = np.array([[-80.0, 25.0], [-40.0, 30.0], [-20.0, 5.0]])
     ring = np.array([[-100.0, 10.0], [-60.0, 10.0], [-60.0, 40.0],
                      [-100.0, 40.0], [-100.0, 10.0]])
     pdf = pd.DataFrame({
@@ -163,25 +159,24 @@ def test_mixed_group_matches_wkb_reference():
         "srid": 4326,
         "lon": np.concatenate([lon, [np.nan, np.nan]]),
         "lat": np.concatenate([lat, [np.nan, np.nan]]),
-        "geom": [None] * n + [wkb.encode(("Point", np.array([-80.0, 25.0]))),
-                              None],
-        "coords": [None] * (n + 1) + [ring.ravel()],
-        "ring_lens": [None] * (n + 1) + [np.array([5])],
-        "gkind": [None] * (n + 1) + [wkb.WKB_POLYGON],
+        "coords": [None] * n + [line.ravel(), ring.ravel()],
+        "ring_lens": [None] * n + [np.array([3]), np.array([5])],
+        "gkind": [None] * n + [wkb.WKB_LINESTRING, wkb.WKB_POLYGON],
         "tag_url": [f"u{i}" for i in range(n + 2)],
     }).sort_values("feature_id", kind="mergesort")
     mixed = _encode(pdf, 2, 1, 1)
     assert mixed[1] == n + 2 - int(mixed[2])
-    assert mixed == _encode(_as_wkb(pdf), 2, 1, 1)
+    assert mixed == _reference(pdf, 2, 1, 1)
     layer = mvt.decode_tile(mixed[0])["pages"]
     assert {f["type"] for f in layer["features"]} == {
-        mvt.GEOM_POINT, mvt.GEOM_POLYGON}
+        mvt.GEOM_POINT, mvt.GEOM_LINESTRING, mvt.GEOM_POLYGON}
+    assert [f["id"] for f in layer["features"]][:2] == [0, 1]
 
 
 def test_typed_tags_lonlat_group_matches_wkb_reference():
     """A lon/lat group with __i/__f/__b tag columns takes the generic
-    route (typed value identity) and encodes exactly as the same points
-    fed as WKB."""
+    route (typed value identity) and encodes exactly as the per-feature
+    reference."""
     lon, lat = _tile_points(200, 1, 1, 0, seed=5)
     n = len(lon)
     pdf = pd.DataFrame({
@@ -194,7 +189,7 @@ def test_typed_tags_lonlat_group_matches_wkb_reference():
                                for i in range(n)], dtype=object),
     })
     typed = _encode(pdf, 1, 1, 0)
-    assert typed == _encode(_as_wkb(pdf), 1, 1, 0)
+    assert typed == _reference(pdf, 1, 1, 0)
     layer = mvt.decode_tile(typed[0])["pages"]
     assert {type(v) for v in layer["values"]} == {str, int, float, bool}
 
@@ -205,7 +200,7 @@ def test_bypass_falls_back_on_non_string_tags():
     pdf = pd.DataFrame({
         "z": 0, "x": 0, "y": 0, "layer": "pages",
         "feature_id": np.arange(5, dtype=np.int64),
-        "geom": None, "srid": 4326,
+        "srid": 4326,
         "lon": np.linspace(-10, 10, 5), "lat": np.linspace(-10, 10, 5),
         "tag_url": pd.array([f"u{i}" for i in range(5)], dtype=object),
         "tag_version": pd.array([7] * 5, dtype=object),
@@ -218,3 +213,19 @@ def test_bypass_falls_back_on_non_string_tags():
     assert tags["version"] == 7
     assert tags["url"] == "u0"
 
+
+
+def test_encode_bucket_rejects_row_without_transport():
+    """A row with neither lon/lat nor ring-SoA coords is an error, not
+    a feature dropped without a sign."""
+    base = {"z": [0, 0], "x": [0, 0], "y": [0, 0], "layer": ["l", "l"],
+            "feature_id": [1, 2], "tag_name": ["a", "b"]}
+    with pytest.raises(ValueError, match="neither"):
+        pipeline.encode_bucket(pd.DataFrame(base))
+    with pytest.raises(ValueError, match="neither"):
+        pipeline.encode_bucket(pd.DataFrame({
+            **base, "lon": [1.0, np.nan], "lat": [2.0, np.nan]}))
+    with pytest.raises(ValueError, match="neither"):
+        pipeline.encode_bucket(pd.DataFrame({
+            **base, "coords": [[0.0, 0.0, 1.0, 1.0], None],
+            "ring_lens": [[2], None], "gkind": [wkb.WKB_LINESTRING, None]}))

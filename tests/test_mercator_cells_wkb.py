@@ -1,7 +1,9 @@
-"""Golden tests: ellipsoidal web-mercator (P8), cell index, WKB codec (E9)."""
+"""Golden tests: ellipsoidal web-mercator (P8), cell index, the SoA
+geometry transport."""
 
 import grid_reference
 import numpy as np
+import pandas as pd
 import pytest
 import wkb_reference
 
@@ -42,11 +44,10 @@ def test_cell_pack_roundtrip():
     assert y == grid.lat2num(52.5, 12)
 
 
-# -- wkb ----------------------------------------------------------------------
+# -- geometry transport ---------------------------------------------------------
 
 GEOMS = [
     ("Point", np.array([1.5, -2.5])),
-    ("MultiPoint", np.array([[0.0, 0.0], [3.0, 4.0]])),
     ("LineString", np.array([[0.0, 0.0], [1.0, 1.0], [2.0, 0.5]])),
     ("MultiLineString", [np.array([[0.0, 0.0], [1.0, 1.0]]),
                          np.array([[5.0, 5.0], [6.0, 7.0], [8.0, 9.0]])]),
@@ -55,39 +56,54 @@ GEOMS = [
     ("MultiPolygon", [[np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 0.0]])],
                       [np.array([[10.0, 10.0], [14.0, 10.0], [14.0, 14.0], [10.0, 10.0]])]]),
 ]
+_GKIND = {"LineString": wkb.WKB_LINESTRING, "Polygon": wkb.WKB_POLYGON,
+          "MultiLineString": wkb.WKB_MULTILINESTRING,
+          "MultiPolygon": wkb.WKB_MULTIPOLYGON}
+
+
+def _transport_row(geom):
+    """A geometry as the columns of its transport: a Point as lon/lat,
+    any other kind as ring-SoA under its OGC WKB type code."""
+    gtype, data = geom
+    if gtype == "Point":
+        return {"lon": data[0], "lat": data[1]}
+    if gtype == "LineString":
+        rings, polys = [data], None
+    elif gtype == "MultiPolygon":
+        rings, polys = [r for p in data for r in p], [len(p) for p in data]
+    else:
+        rings, polys = data, None
+    return {"coords": np.concatenate(rings).ravel(),
+            "ring_lens": [len(r) for r in rings], "poly_lens": polys,
+            "gkind": _GKIND[gtype]}
 
 
 @pytest.mark.parametrize("geom", GEOMS, ids=[g[0] for g in GEOMS])
 def test_wkb_roundtrip(geom):
-    out = wkb.decode(wkb.encode(geom))
-    assert out[0] == geom[0]
+    """geometry -> its transport row -> the encode kernel's reader gives
+    the geometry back, vertex for vertex."""
+    from tegola_spark.plans import pipeline
+
+    pdf = pd.DataFrame([{"feature_id": 1, "srid": 3857,
+                         **_transport_row(geom)}])
+    lonlat = pdf["lon"].notna().to_numpy() if "lon" in pdf.columns \
+        else np.zeros(1, dtype=bool)
+    [(fid, out, tags, srid)] = list(pipeline._decoded_iter(pdf, lonlat))
+    assert (fid, out[0], tags, srid) == (1, geom[0], {}, 3857)
 
     def flat(g):
         t, d = g
         if t == "Point":
             return [np.asarray(d).reshape(1, 2)]
-        if t in ("MultiPoint", "LineString"):
+        if t == "LineString":
             return [np.asarray(d)]
         if t in ("Polygon", "MultiLineString"):
             return [np.asarray(a) for a in d]
         return [np.asarray(r) for rings in d for r in rings]
 
+    assert len(flat(geom)) == len(flat(out))
     for a, b in zip(flat(geom), flat(out)):
         np.testing.assert_array_equal(a, b)
-
-
-def test_wkb_known_point_bytes():
-    # OGC example: little-endian point (1, 2)
-    buf = wkb.encode(("Point", np.array([1.0, 2.0])))
-    assert buf == bytes.fromhex(
-        "0101000000000000000000f03f0000000000000040")
-
-
-def test_wkb_big_endian_decode():
-    buf = bytes.fromhex("00000000013ff00000000000004000000000000000")
-    t, d = wkb.decode(buf)
-    assert t == "Point"
-    np.testing.assert_array_equal(d, [1.0, 2.0])
 
 
 def test_bbox_and_map_coords():

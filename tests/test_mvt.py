@@ -8,7 +8,6 @@ from pathlib import Path
 
 import numpy as np
 import pytest
-import wkb_reference
 
 from tegola_spark.functions import grid
 from tegola_spark.operators import mvt
@@ -120,7 +119,8 @@ def test_golden_z233_full_layer_roundtrip():
     f1 = {"id": 0, "tags": {"type": "debug_buffer_outline", "foo": "bar"},
           "geom": prepared}
     f2 = {"id": 0, "tags": {"type": "debug_buffer_outline"}, "geom": prepared}
-    tile = mvt.encode_tile([("layer1", [f1]), ("layer2", [f2])])
+    tile = mvt.encode_tile([mvt.encode_layer("layer1", [f1]),
+                            mvt.encode_layer("layer2", [f2])])
     out = mvt.decode_tile(tile)
 
     assert set(out) == {"layer1", "layer2"}
@@ -142,7 +142,7 @@ def test_golden_z233_full_layer_roundtrip():
 
 def test_empty_layer_still_emitted():
     # atlas/map_test.go "empty_collection" case
-    tile = mvt.encode_tile([("empty_geom_collection", [])])
+    tile = mvt.encode_tile([mvt.encode_layer("empty_geom_collection", [])])
     out = mvt.decode_tile(tile)
     lyr = out["empty_geom_collection"]
     assert lyr["version"] == 2
@@ -191,7 +191,7 @@ def test_truncation_can_flip_winding_recheck():
 def test_value_variants_roundtrip():
     f = {"id": 7, "tags": {"s": "x", "b": True, "i": -5, "d": 2.5},
          "geom": ("Point", np.array([1.0, 1.0]))}
-    out = mvt.decode_tile(mvt.encode_tile([("l", [f])]))["l"]
+    out = mvt.decode_tile(mvt.encode_tile([mvt.encode_layer("l", [f])]))["l"]
     vals = dict(zip(out["keys"], [out["values"][i] for i in range(len(out["values"]))]))
     assert vals["s"] == "x"
     assert vals["b"] is True
@@ -204,7 +204,7 @@ def test_typed_value_identity():
     # (feature.go:360-573 type-sensitive maps)
     fs = [{"id": 1, "tags": {"a": 7, "b": 7.0, "c": "7"},
            "geom": ("Point", np.array([0.0, 0.0]))}]
-    out = mvt.decode_tile(mvt.encode_tile([("l", fs)]))["l"]
+    out = mvt.decode_tile(mvt.encode_tile([mvt.encode_layer("l", fs)]))["l"]
     assert len(out["values"]) == 3
 
 
@@ -234,42 +234,25 @@ def test_decode_real_world_tile_fixture():
 def test_encode_tile_rejects_duplicate_layer_names():
     # Tile.AddLayers errors on an already-present name
     # (vendor/.../encoding/mvt/tile.go:16-35)
-    import pytest as _pytest
     f = {"id": 1, "tags": {}, "geom": ("Point", np.array([1.0, 2.0]))}
-    with _pytest.raises(mvt.DuplicateLayerName):
-        mvt.encode_tile([("roads", [f]), ("roads", [f])])
-    # duplicate detection also sees through pre-encoded layer bytes
-    blob = mvt.encode_layer("water", [f])
-    with _pytest.raises(mvt.DuplicateLayerName):
-        mvt.encode_tile([blob, ("water", [f])])
-    # distinct names stay fine, mixed forms included
-    out = mvt.encode_tile([blob, ("roads", [f])])
+    roads = mvt.encode_layer("roads", [f])
+    with pytest.raises(mvt.DuplicateLayerName):
+        mvt.encode_tile([roads, roads])
+    # the name is read from each encoded body, whichever emitter built it
+    water = mvt.encode_layer("water", [f])
+    water_arrays = mvt.encode_point_layer_arrays(
+        "water", np.array([1], np.int64), np.zeros((1, 2), np.uint32), [])
+    with pytest.raises(mvt.DuplicateLayerName):
+        mvt.encode_tile([water, water_arrays])
+    # distinct names stay fine
+    out = mvt.encode_tile([water, roads])
     assert set(mvt.decode_tile(out).keys()) == {"water", "roads"}
-
-
-def test_wkb_geometry_collection_roundtrip():
-    from tegola_spark.functions import wkb
-    coll = ("GeometryCollection", [
-        ("Point", np.array([1.0, 2.0])),
-        ("Polygon", [np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 0.0]])]),
-        ("GeometryCollection", [("Point", np.array([5.0, 6.0]))]),
-    ])
-    out = wkb.decode(wkb.encode(coll))
-    assert out[0] == "GeometryCollection" and len(out[1]) == 3
-    assert out[1][0][0] == "Point" and out[1][2][1][0][0] == "Point"
-    # bbox unions members; flatten yields 3 leaf geometries
-    assert wkb_reference.bbox(coll) == (0.0, 0.0, 5.0, 6.0)
-    assert len(wkb.flatten_collection(coll)) == 3
-    assert wkb_reference.bbox(("GeometryCollection", [])) is None
-    # map_coords recurses into members
-    shifted = wkb.map_coords(coll, lambda a: a + 1.0)
-    assert shifted[1][0][1][0] == 2.0
 
 
 def test_uint64_value_variant():
     # layer.go:180-181: uint64 values beyond int64 emit uint_value
     f = {"id": 1, "tags": {"big": 2**63 + 5, "small": 42}, "geom": ("Point", np.array([1.0, 2.0]))}
-    out = mvt.decode_tile(mvt.encode_tile([("l", [f])]))["l"]
+    out = mvt.decode_tile(mvt.encode_tile([mvt.encode_layer("l", [f])]))["l"]
     vals = set(out["values"])
     assert 2**63 + 5 in vals       # decoded via the uint arm (field 5)
     assert 42 in vals

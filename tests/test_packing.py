@@ -15,9 +15,9 @@ def _expected(rows):
 
 def test_prefix_sum_matches_sequential(spark):
     rows = [(i, (i * 7) % 13 + 1) for i in range(500)]
-    df = spark.createDataFrame(rows, "doc_id long, n long")
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
     got = {r["doc_id"]: r["token_offset"]
-           for r in packing.prefix_sum(df, "n", "doc_id").collect()}
+           for r in packing.prefix_sum(df).collect()}
     assert got == _expected(rows)
 
 
@@ -25,10 +25,10 @@ def test_prefix_sum_partition_count_invariant(spark):
     rows = [(i, i % 29 + 1) for i in range(300)]
     want = _expected(rows)
     for nparts in (1, 3, 32):
-        df = spark.createDataFrame(rows, "doc_id long, n long") \
+        df = spark.createDataFrame(rows, "doc_id long, n_tokens long") \
             .repartition(nparts)
         got = {r["doc_id"]: r["token_offset"]
-               for r in packing.prefix_sum(df, "n", "doc_id").collect()}
+               for r in packing.prefix_sum(df).collect()}
         assert got == want, nparts
 
 

@@ -115,39 +115,6 @@ def test_tile_list():
     assert len(df_rows) == 16
 
 
-def test_geometry_collection_flattens_and_empty_skips():
-    """GeometryCollection features: empty -> skipped (atlas/map.go:232-236);
-    non-empty -> flattened into one feature per member with shared tags
-    (mvt.NewFeatures, mvt/feature.go:48-67)."""
-    import pandas as pd
-    from tegola_spark.functions import wkb
-
-    ext = grid.tile_extent_3857(0, 0, 0)
-    cx = (ext[0] + ext[2]) / 2
-    coll = ("GeometryCollection", [
-        ("Point", np.array([10.0, 10.0])),
-        ("LineString", np.array([[0.0, 0.0], [40.0, 20.0], [80.0, 0.0]])),
-    ])
-    empty = ("GeometryCollection", [])
-    pdf = pd.DataFrame({
-        "z": [0, 0], "x": [0, 0], "y": [0, 0],
-        "layer": ["l", "l"], "feature_id": [1, 2],
-        "geom": [wkb.encode(coll), wkb.encode(empty)],
-        "srid": [4326, 4326],
-        "tag_kind": ["coll", "empty"],
-    })
-    out = pipeline.encode_bucket(pdf)
-    assert len(out) == 1
-    row = out.iloc[0]
-    assert row["n_features"] == 2       # the two flattened members
-    assert row["n_dropped"] == 1        # the empty collection
-    decoded = mvt.decode_tile(bytes(row["layer_bytes"]))["l"]
-    types = sorted(f["type"] for f in decoded["features"])
-    assert types == [mvt.GEOM_POINT, mvt.GEOM_LINESTRING]
-    # both flattened features carry the same id and tags
-    assert all(f["id"] == 1 for f in decoded["features"])
-
-
 def test_feature_cap_enforced_and_metered(spark, sf_dir):
     """Pre-shuffle per-(tile, layer) cap: deterministic (rank by
     feature_id), capped rows never reach the encode, and the drop count
@@ -411,60 +378,60 @@ def test_typed_default_tags_through_spark(spark, sf_dir):
 
 
 def test_soa_to_geometry_matches_wkb_decode():
-    """Ring-SoA reconstruction is structurally identical to the WKB
-    decoder's tuples for every supported kind."""
+    """Ring-SoA reconstruction gives the expected geometry tuple, ring
+    for ring, for every kind a gkind code names."""
     from tegola_spark.functions import wkb
 
     ring1 = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 3.0], [0.0, 0.0]])
     ring2 = np.array([[1.0, 1.0], [2.0, 1.0], [1.5, 2.0], [1.0, 1.0]])
+    both = np.concatenate([ring1, ring2]).ravel()
     cases = [
-        (("Polygon", [ring1, ring2]),
-         (wkb.WKB_POLYGON,
-          np.concatenate([ring1, ring2]).ravel(), [4, 4], None)),
+        (("Polygon", [ring1, ring2]), (wkb.WKB_POLYGON, both, [4, 4], None)),
         (("MultiPolygon", [[ring1], [ring2]]),
-         (wkb.WKB_MULTIPOLYGON,
-          np.concatenate([ring1, ring2]).ravel(), [4, 4], [1, 1])),
-        (("LineString", ring1),
-         (wkb.WKB_LINESTRING, ring1.ravel(), [4], None)),
+         (wkb.WKB_MULTIPOLYGON, both, [4, 4], [1, 1])),
+        (("MultiPolygon", [[ring1, ring2]]),
+         (wkb.WKB_MULTIPOLYGON, both, [4, 4], [2])),
+        (("LineString", ring1), (wkb.WKB_LINESTRING, ring1.ravel(), [4], None)),
         (("MultiLineString", [ring1, ring2]),
-         (wkb.WKB_MULTILINESTRING,
-          np.concatenate([ring1, ring2]).ravel(), [4, 4], None)),
+         (wkb.WKB_MULTILINESTRING, both, [4, 4], None)),
     ]
     for want, (code, coords, rl, pl) in cases:
         got = wkb.soa_to_geometry(code, coords, rl, pl)
-        ref = wkb.decode(wkb.encode(want))
-        assert got[0] == ref[0]
-        gflat = got[1] if got[0] == "LineString" else got[1]
-        def _np(x):
-            import numpy as _n
-            return _n.asarray(x)
-        if got[0] == "LineString":
-            np.testing.assert_array_equal(_np(got[1]), _np(ref[1]))
-        elif got[0] == "MultiPolygon":
-            for gp, rp in zip(got[1], ref[1]):
-                for gr, rr in zip(gp, rp):
-                    np.testing.assert_array_equal(_np(gr), _np(rr))
+        assert got[0] == want[0]
+        if want[0] == "LineString":
+            pairs = [(got[1], want[1])]
+        elif want[0] == "MultiPolygon":
+            assert [len(p) for p in got[1]] == [len(p) for p in want[1]]
+            pairs = [(g, w) for gp, wp in zip(got[1], want[1])
+                     for g, w in zip(gp, wp)]
         else:
-            for gr, rr in zip(got[1], ref[1]):
-                np.testing.assert_array_equal(_np(gr), _np(rr))
+            assert len(got[1]) == len(want[1])
+            pairs = list(zip(got[1], want[1]))
+        for g, w in pairs:
+            assert g.dtype == np.float64
+            np.testing.assert_array_equal(g, w)
+    with pytest.raises(ValueError):
+        wkb.soa_to_geometry(1, [0.0, 0.0], [1])
 
 
 def test_ring_soa_encode_matches_wkb_transport():
     """A polygon group shipped as ring-SoA columns encodes to the same
-    layer bytes as the identical group shipped as WKB."""
+    layer bytes as the per-feature reference over the polygon's
+    geometry tuple."""
+    import encode_reference
     import pandas as pd
     from tegola_spark.functions import wkb
 
     ring = np.array([[-20.0, -10.0], [30.0, -10.0], [30.0, 25.0],
                      [-20.0, 25.0], [-20.0, -10.0]])
-    g = ("Polygon", [ring])
-    base = {"z": [1], "x": [0], "y": [0], "layer": ["l"],
-            "feature_id": [7], "tag_name": ["A"]}
-    via_wkb = pipeline.encode_bucket(pd.DataFrame(
-        {**base, "geom": [wkb.encode(g)]}))
     via_soa = pipeline.encode_bucket(pd.DataFrame(
-        {**base, "coords": [ring.ravel().tolist()], "ring_lens": [[5]],
-         "poly_lens": [[1]], "gkind": [wkb.WKB_POLYGON]}))
-    assert bytes(via_wkb.iloc[0]["layer_bytes"]) == \
-        bytes(via_soa.iloc[0]["layer_bytes"])
-    assert via_wkb.iloc[0]["n_features"] == via_soa.iloc[0]["n_features"]
+        {"z": [1], "x": [0], "y": [0], "layer": ["l"], "feature_id": [7],
+         "tag_name": ["A"], "coords": [ring.ravel().tolist()],
+         "ring_lens": [[5]], "poly_lens": [[1]],
+         "gkind": [wkb.WKB_POLYGON]}))
+    ref = encode_reference.encode_group(
+        [(7, ("Polygon", [ring]), {"name": "A"}, 4326)], 1, 0, 0, "l")
+    got = via_soa.iloc[0]
+    assert (bytes(got["layer_bytes"]), got["n_features"],
+            got["n_dropped"]) == ref
+    assert ref[1] == 1

@@ -4,12 +4,13 @@ replaced), so a later change can't silently break the fast path."""
 
 from __future__ import annotations
 
+import encode_reference
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tegola_spark.functions import cells, grid, wkb
+from tegola_spark.functions import cells, grid
 from tegola_spark.operators import spatial_join as sj
 from tegola_spark.plans import pipeline
 from tegola_spark.sources import corpus
@@ -128,7 +129,7 @@ def test_cap_still_binds_above_budget(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # a corpus-sized point group (the z0 straggler) takes the array route and
-# encodes exactly as the same points fed as WKB through the generic route
+# encodes exactly as the per-feature reference over the same points
 # ---------------------------------------------------------------------------
 
 def test_big_point_group_matches_wkb_reference():
@@ -145,10 +146,10 @@ def test_big_point_group_matches_wkb_reference():
     })
     # anchor_z=1 makes z0 a low level: the group is its own tile
     arrays = pipeline.encode_bucket(pdf.copy(), 1, [])
-    ref = pipeline.encode_bucket(
-        pdf.drop(columns=["lon", "lat"]).assign(geom=[
-            wkb.encode(("Point", np.array(p))) for p in zip(lon, lat)]),
-        1, [])
-    for col in ("layer_bytes", "n_features", "n_dropped"):
-        assert arrays[col].tolist() == ref[col].tolist()
+    ref = encode_reference.encode_group(
+        encode_reference.features_of(pdf), 0, 0, 0, "pages")
+    assert len(arrays) == 1
+    got = arrays.iloc[0]
+    assert (bytes(got["layer_bytes"]), got["n_features"],
+            got["n_dropped"]) == ref
     assert int(arrays["n_features"].iloc[0]) == n

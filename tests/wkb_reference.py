@@ -1,5 +1,5 @@
-"""Reference geometry-extent algebra the WKB and tile tests check decoded
-geometries by; no output path runs it."""
+"""Reference geometry-extent algebra the geometry and tile tests check
+geometry tuples by; no output path runs it."""
 
 from __future__ import annotations
 
@@ -9,12 +9,6 @@ import numpy as np
 def bbox(geom):
     """(minx, miny, maxx, maxy) of any geometry tuple (E8 extent algebra)."""
     gtype, data = geom
-    if gtype == "GeometryCollection":
-        boxes = [bbox(sub) for sub in data]
-        if not boxes:
-            return None
-        return (min(b[0] for b in boxes), min(b[1] for b in boxes),
-                max(b[2] for b in boxes), max(b[3] for b in boxes))
     if gtype == "Point":
         x, y = float(data[0]), float(data[1])
         return (x, y, x, y)
