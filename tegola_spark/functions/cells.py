@@ -19,6 +19,8 @@ reproduce it with plain arithmetic):
 
 from __future__ import annotations
 
+import math
+
 from . import grid
 
 RES_SHIFT = 52
@@ -38,12 +40,9 @@ except ImportError:  # pragma: no cover
 # Spark column expressions
 # ---------------------------------------------------------------------------
 
-def col_cell_from_lonlat(lon: "Column", lat: "Column", res: int) -> "Column":
-    """lon/lat -> cell id at ``res`` — plain arithmetic so the
-    expression stays in WholeStageCodegen AND is reproducible in the
-    DuckDB oracle: res*2^52 + x*2^26 + y."""
-    x = grid.col_lon2num(lon, res)
-    y = grid.col_lat2num(lat, res)
+def col_cell(res: "Column | int", x: "Column", y: "Column") -> "Column":
+    """Pack a cell's resolution and slippy x/y into its id:
+    res*2^52 + x*2^26 + y, in long arithmetic."""
     return (
         F.lit(res).cast("long") * F.lit(_RES_MULT).cast("long")
         + x * F.lit(_XY_MULT).cast("long")
@@ -51,12 +50,31 @@ def col_cell_from_lonlat(lon: "Column", lat: "Column", res: int) -> "Column":
     )
 
 
+def col_cell_parts(cell: "Column") -> "tuple[Column, Column, Column]":
+    """Unpack a cell id into its (res, x, y) long columns."""
+    return (F.shiftright(cell, RES_SHIFT),
+            F.shiftright(cell, XY_SHIFT) % F.lit(_XY_MULT),
+            cell % F.lit(_XY_MULT))
+
+
+def col_tile_lat(ty: "Column", n: "Column") -> "Column":
+    """Inverse slippy latitude (degrees) of the tile-space y coordinate
+    ``ty`` (a double: an edge at y, a centre at y + 0.5) on a grid of
+    ``n`` tiles per side: atan(sinh(pi * (1 - 2 * ty / n)))."""
+    inner = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * ty / n)
+    return (F.atan((F.exp(inner) - F.exp(-inner)) / F.lit(2.0))
+            * F.lit(180.0 / math.pi))
+
+
+def col_cell_from_lonlat(lon: "Column", lat: "Column", res: int) -> "Column":
+    """lon/lat -> cell id at ``res`` — plain arithmetic so the
+    expression stays in WholeStageCodegen AND is reproducible in the
+    DuckDB oracle."""
+    return col_cell(res, grid.col_lon2num(lon, res),
+                    grid.col_lat2num(lat, res))
+
+
 def col_cell_parent(cell: "Column", dres: int = 1) -> "Column":
-    res = (cell / F.lit(_RES_MULT)).cast("long")
-    x = F.shiftright(cell, XY_SHIFT) % F.lit(_XY_MULT)
-    y = cell % F.lit(_XY_MULT)
-    return (
-        (res - F.lit(dres)) * F.lit(_RES_MULT)
-        + F.shiftright(x, dres) * F.lit(_XY_MULT)
-        + F.shiftright(y, dres)
-    )
+    res, x, y = col_cell_parts(cell)
+    return col_cell(res - F.lit(dres), F.shiftright(x, dres),
+                    F.shiftright(y, dres))

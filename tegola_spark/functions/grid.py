@@ -135,11 +135,11 @@ def tile_extent_3857(z, x, y):
     )
 
 
-def zepsilon(z, tolerance=DEFAULT_TOLERANCE):
+def zepsilon(z):
     """T7: Douglas-Peucker tolerance for zoom z — tile.go:213-228."""
-    if z == MAX_Z or tolerance <= 0:
+    if z == MAX_Z:
         return 0.0
-    return tolerance / (math.exp2(float(z)) * DEFAULT_EXTENT)
+    return DEFAULT_TOLERANCE / (math.exp2(float(z)) * DEFAULT_EXTENT)
 
 
 def buffered_pixel_bounds():

@@ -16,7 +16,6 @@ The encode kernel turns a row of either form into a geometry tuple
 reference which drops/rejects them, SURVEY.md §1.2):
 
     ("Point",            np.ndarray (2,))
-    ("MultiPoint",       np.ndarray (n, 2))
     ("LineString",       np.ndarray (n, 2))
     ("MultiLineString",  [np.ndarray (n_i, 2), ...])
     ("Polygon",          [ring0, ring1, ...]   each np.ndarray (n_i, 2))
@@ -70,7 +69,7 @@ def map_coords(geom, fn):
     gtype, data = geom
     if gtype == "Point":
         return (gtype, fn(np.asarray(data, dtype=np.float64).reshape(1, 2)).reshape(2))
-    if gtype in ("MultiPoint", "LineString"):
+    if gtype == "LineString":
         return (gtype, fn(np.asarray(data, dtype=np.float64).reshape(-1, 2)))
     if gtype in ("Polygon", "MultiLineString"):
         return (gtype, [fn(np.asarray(a, dtype=np.float64).reshape(-1, 2)) for a in data])

@@ -34,8 +34,7 @@ def contamination_scan(docs: DataFrame, probes: DataFrame) -> DataFrame:
 
 
 def contamination_scan_shingled(docs: DataFrame, probes: DataFrame,
-                                k: int | None = None,
-                                prefilter: bool = True) -> DataFrame:
+                                k: int | None = None) -> DataFrame:
     """Same output contract as :func:`contamination_scan`, for probe
     sets too large to broadcast: an inverted k-gram equi-join.
 
@@ -48,14 +47,16 @@ def contamination_scan_shingled(docs: DataFrame, probes: DataFrame,
     re-scan, no broadcast of probe TEXT: both sides shuffle only on
     the gram key.  Positions are 1-based to match ``locate``.
 
-    ``prefilter=True`` (default) additionally broadcasts the DISTINCT
+    The exploded corpus grams are always prefiltered: the DISTINCT
     xxhash64 of the probe grams (8 bytes per distinct gram — small
     even when the probe texts themselves are too large to broadcast)
-    and left-semi joins the exploded corpus grams against it BEFORE
+    is broadcast and the grams are left-semi joined against it BEFORE
     the gram-key exchange, so non-candidate grams never cross the
     wire — the runtime-filter refinement BENCH.md's plan audit called
-    out, exact rather than bloom-approximate.  Output is identical
-    either way (differential-tested).
+    out, exact rather than bloom-approximate.  The prefilter drops only
+    grams no probe gram hashes to, so the output is that of the plain
+    gram join (tests/test_decontam.py keeps that join as the
+    differential reference).
     """
     if k is None:
         # model-sized driver read (one scalar), same posture as the
@@ -70,11 +71,10 @@ def contamination_scan_shingled(docs: DataFrame, probes: DataFrame,
     grams = (docs.select("doc_id", "text")
              .withColumn("pos", F.explode(positions))
              .withColumn("gram", F.expr(f"substring(text, pos, {k})")))
-    if prefilter:
-        gram_hashes = pg.select(F.xxhash64("gram").alias("_gh")).distinct()
-        grams = grams.join(
-            F.broadcast(gram_hashes),
-            F.xxhash64("gram") == F.col("_gh"), "left_semi")
+    gram_hashes = pg.select(F.xxhash64("gram").alias("_gh")).distinct()
+    grams = grams.join(
+        F.broadcast(gram_hashes),
+        F.xxhash64("gram") == F.col("_gh"), "left_semi")
     hits = (grams.join(pg, "gram")
             .where(F.expr("substring(text, pos, plen) = probe")))
     return (hits.groupBy("doc_id", "probe_id")

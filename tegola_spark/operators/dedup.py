@@ -26,12 +26,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 MERSENNE = (1 << 61) - 1
 _SEED = 0x5EED_7E60
 NUM_PERM = 64       # minhash signature length
 SHINGLE_K = 5       # minhash shingle width, utf-8 bytes
+LSH_BANDS = 8       # minhash LSH bands: NUM_PERM // LSH_BANDS rows each
+MAX_BUCKET = 4096   # LSH bucket cap of the all-pairs self-join
+SPAN_WORDS = 8      # span_dedup chunk width, whitespace words
 SIMHASH_BITS = 60   # portable simhash width: 15 hex digits of md5
 
 
@@ -115,29 +118,27 @@ def minhash_signatures(df: DataFrame) -> DataFrame:
     return df.select(F.col("doc_id").alias("id"), sig(F.col("text")).alias("signature"))
 
 
-def minhash_lsh_pairs(df: DataFrame, bands: int = 8, threshold: float = 0.8,
-                      max_bucket: int = 4096) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) of ``doc_id`` with
     estimated jaccard (agreement of ``NUM_PERM``-long signatures over
     ``SHINGLE_K``-byte shingles of ``text``) >= threshold.
 
     Band geometry: collision probability per band is jaccard^(NUM_PERM/
-    bands). Template-heavy web corpora have HIGH baseline jaccard
+    LSH_BANDS). Template-heavy web corpora have HIGH baseline jaccard
     between unrelated docs (~0.3 here), so shallow bands explode: at
     r=4 the candidate set hit 50M pairs on a 100k-doc corpus; at r=8
     it is ~1000x smaller while keeping >90% recall at jaccard >= 0.85.
-    Tune bands DOWN (deeper rows) for dirtier corpora."""
-    assert NUM_PERM % bands == 0
-    rows_per_band = NUM_PERM // bands
+    ``LSH_BANDS`` = 8 (r=8) is that geometry; every output runs it."""
+    rows_per_band = NUM_PERM // LSH_BANDS
     sigs = minhash_signatures(df)
     sigs = sigs.cache()
 
     band_cols = []
-    for bi in range(bands):
+    for bi in range(LSH_BANDS):
         sl = F.slice("signature", bi * rows_per_band + 1, rows_per_band)
         band_cols.append(F.struct(F.lit(bi).alias("band"), F.hash(sl).alias("bucket")))
     # IMPORTANT: the bucket join carries ONLY ids. Near-identical docs
-    # collide in EVERY band, so a pair can be produced `bands` times;
+    # collide in EVERY band, so a pair can be produced LSH_BANDS times;
     # deduplicating 16-byte id pairs before re-attaching the 0.5 KB
     # signatures cuts the shuffle ~60x (measured: 300s -> seconds on a
     # 20x-replicated corpus).
@@ -147,33 +148,28 @@ def minhash_lsh_pairs(df: DataFrame, bands: int = 8, threshold: float = 0.8,
     # mega-bucket guard: N identical docs collide in every band and a
     # single bucket of N ids is O(N^2) pairs — the one way this join
     # degenerates at corpus scale. Buckets are deterministically capped
-    # (lowest ids kept) for the all-pairs self-join; every CAPPED-OUT id
+    # at MAX_BUCKET ids (lowest kept) for the all-pairs self-join; every CAPPED-OUT id
     # still emits ONE candidate pair against the bucket's min id, so a
     # mega-bucket costs O(N) pairs instead of O(N^2) and no duplicate
     # silently escapes dedup connectivity (each survivor links to the
     # representative, which links to every kept id).
-    overflow_pairs = None
-    if max_bucket:
-        from pyspark.sql import Window as _W
-
-        wb = _W.partitionBy("band", "bucket").orderBy("id")
-        ranked = exploded.withColumn("_bk", F.row_number().over(wb))
-        overflow_pairs = (
-            ranked.withColumn(
-                "_min_id", F.min("id").over(_W.partitionBy("band", "bucket")))
-            .where(F.col("_bk") > max_bucket)
-            .select(F.col("_min_id").alias("id_a"), F.col("id").alias("id_b"))
-        )
-        exploded = ranked.where(F.col("_bk") <= max_bucket).drop("_bk")
+    wb = Window.partitionBy("band", "bucket").orderBy("id")
+    ranked = exploded.withColumn("_bk", F.row_number().over(wb))
+    overflow_pairs = (
+        ranked.withColumn(
+            "_min_id", F.min("id").over(Window.partitionBy("band", "bucket")))
+        .where(F.col("_bk") > MAX_BUCKET)
+        .select(F.col("_min_id").alias("id_a"), F.col("id").alias("id_b"))
+    )
+    exploded = ranked.where(F.col("_bk") <= MAX_BUCKET).drop("_bk")
 
     pair_ids = (
         exploded.alias("l").join(exploded.alias("r"), ["band", "bucket"])
         .where(F.col("l.id") < F.col("r.id"))
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
     )
-    if overflow_pairs is not None:
-        pair_ids = pair_ids.unionByName(overflow_pairs)
-    pair_ids = pair_ids.dropDuplicates(["id_a", "id_b"])
+    pair_ids = (pair_ids.unionByName(overflow_pairs)
+                .dropDuplicates(["id_a", "id_b"]))
     cand = (
         pair_ids
         .join(sigs.select(F.col("id").alias("id_a"),
@@ -275,11 +271,10 @@ def simhash_fingerprints_portable(df: DataFrame) -> DataFrame:
         "id", F.coalesce("simhash", F.lit(0)).cast("long").alias("simhash"))
 
 
-def span_dedup(df: DataFrame, span_words: int = 8,
-               max_df: int | None = None) -> DataFrame:
+def span_dedup(df: DataFrame, max_df: int | None = None) -> DataFrame:
     """Cross-document span-level dedup / boilerplate removal.
 
-    Splits each document into non-overlapping ``span_words``-word
+    Splits each document into non-overlapping ``SPAN_WORDS``-word
     chunks and removes duplicated chunks corpus-wide — the
     chunk-granularity form of exact-substring training-data dedup
     (Lee et al. 2022) and, in ``max_df`` mode, the CCNet/C4
@@ -304,14 +299,12 @@ def span_dedup(df: DataFrame, span_words: int = 8,
     dedup exchange itself carries ~40-byte rows regardless of span
     width; map-side partial aggregation applies in max_df mode.
     """
-    from pyspark.sql import Window
-
     words = F.split(F.col("text"), " ")
-    n_spans_c = F.ceil(F.size(words) / F.lit(float(span_words))).cast("int")
+    n_spans_c = F.ceil(F.size(words) / F.lit(float(SPAN_WORDS))).cast("int")
     spans_c = F.transform(
         F.sequence(F.lit(0), n_spans_c - 1),
         lambda i: F.array_join(
-            F.slice(words, i * span_words + 1, span_words), " "))
+            F.slice(words, i * SPAN_WORDS + 1, SPAN_WORDS), " "))
     base = df.select(F.col("doc_id").alias("id"), spans_c.alias("_spans"))
     thin = (base.select("id", F.posexplode("_spans").alias("pos", "_span"))
                 .select("id", "pos", F.md5("_span").alias("h")))

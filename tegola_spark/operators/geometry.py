@@ -196,9 +196,11 @@ def _contains_point(ext, pt) -> bool:
     return ext[0] <= pt[0] <= ext[2] and ext[1] <= pt[1] <= ext[3]
 
 
-def _intersect_infinite(l1, l2):
+def intersect_infinite(l1, l2):
     """maths.Intersect — maths/maths.go:160-235 (infinite lines, with
-    the reference's vertical/horizontal special cases)."""
+    the reference's vertical/horizontal special cases). Returns (x, y),
+    or None for parallel lines. The clip walk and make-valid's
+    splitPoints both call it."""
     (a0, a1) = l1
     (b0, b1) = l2
 
@@ -261,7 +263,7 @@ def _intersect_pts(ext, seg):
     the 4 extent edges, sorted by (x, y)."""
     pts = []
     for edge in _extent_edges(ext):
-        pt = _intersect_infinite(edge, seg)
+        pt = intersect_infinite(edge, seg)
         if pt is None:
             continue
         if not _in_between(edge, pt) or not _in_between(seg, pt):
@@ -409,14 +411,6 @@ def clean_geometry(geom, clip_region):
         return ("MultiLineString", parts) if parts else None
     if gtype == "Point":
         return geom if _contains_point(clip_region, data) else None
-    if gtype == "MultiPoint":
-        pts = np.asarray(data, dtype=np.float64)
-        keep = (
-            (pts[:, 0] >= clip_region[0]) & (pts[:, 0] <= clip_region[2])
-            & (pts[:, 1] >= clip_region[1]) & (pts[:, 1] <= clip_region[3])
-        )
-        pts = pts[keep]
-        return ("MultiPoint", pts) if len(pts) else None
     return geom
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 SCALE = 1_000_000          # micro-units per unit of rank mass
 DAMP_NUM, DAMP_DEN = 85, 100   # damping factor 0.85 as an exact rational
 LINK_SALT = "links-v1"
+N_SEEDS = 4                # trust seeds: the top English domains
 
 
 def _md5_48(col, salt: str):
@@ -195,8 +196,8 @@ def domain_pagerank(spark: SparkSession, docs: DataFrame,
                     .cast("long").alias("out_weight")))
 
 
-def top_en_seeds(docs: DataFrame, k: int = 4) -> DataFrame:
-    """Deterministic trust-seed rule for the corpus: the ``k`` domains
+def top_en_seeds(docs: DataFrame) -> DataFrame:
+    """Deterministic trust-seed rule for the corpus: the ``N_SEEDS`` domains
     with the most English documents (ties broken by name) — always
     non-empty at any corpus scale, unlike a majority-share cutoff
     (which selects nothing once per-domain language mixes regress to
@@ -211,7 +212,7 @@ def top_en_seeds(docs: DataFrame, k: int = 4) -> DataFrame:
                .alias("_en")))
     w = Window.orderBy(F.col("_en").desc(), F.col("source"))
     return (en.withColumn("_rnk", F.row_number().over(w))
-            .where(F.col("_rnk") <= k)
+            .where(F.col("_rnk") <= N_SEEDS)
             .select(F.concat(F.col("source"), F.lit(".example.com"))
                     .alias("domain")))
 

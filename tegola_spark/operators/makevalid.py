@@ -197,60 +197,6 @@ def round_ref(v):
     return t + ((v - t) > 0.5)
 
 
-def _slope_intercept(x0, y0, x1, y1):
-    """points.SlopeIntercept (maths/points/points.go:45-57): vertical
-    OR horizontal return m=0, b=y0, defined = (dx != 0)."""
-    dx = x1 - x0
-    dy = y1 - y0
-    if dx == 0 or dy == 0:
-        return 0.0, y0, dx != 0
-    m = dy / dx
-    return m, y0 - m * x0, True
-
-
-def intersect_ref(s, d):
-    """maths.Intersect (maths/maths.go:160-234) exact branch port.
-    s, d are ((x0,y0),(x1,y1)). Returns (x, y) or None (parallel)."""
-    (sx0, sy0), (sx1, sy1) = s
-    (dx0, dy0), (dx1, dy1) = d
-    s_vert = sx0 == sx1
-    d_vert = dx0 == dx1
-    if s_vert:
-        if d_vert:
-            return None
-        if sx0 == dx0:
-            return (sx0, dy0)
-        if sx0 == dx1:
-            return (sx0, dy1)
-    s_horz = sy0 == sy1
-    d_horz = dy0 == dy1
-    if s_horz:
-        if d_horz:
-            return None
-        if sy0 == dy0:
-            return (dx0, sy0)
-        if sy0 == dy1:
-            return (dx1, sy0)
-    m1, b1, sdef1 = _slope_intercept(sx0, sy0, sx1, sy1)
-    m2, b2, sdef2 = _slope_intercept(dx0, dy0, dx1, dy1)
-    if sdef1 == sdef2 and m1 == m2:
-        return None
-    if not sdef1:  # s vertical
-        x = sx0
-        return (x, b2) if m2 == 0 else (x, m2 * x + b2)
-    if not sdef2:  # d vertical
-        x = dx0
-        return (x, b1) if m1 == 0 else (x, m1 * x + b1)
-    if m1 == 0:
-        y = sy0
-        return ((y - b2) / m2, y)
-    if m2 == 0:
-        y = dy0
-        return ((y - b1) / m1, y)
-    x = (b2 - b1) / (m1 - m2)
-    return (x, m1 * x + b1)
-
-
 def _intersect_gate(segs: np.ndarray) -> list:
     """Pairs (i, j) i<j whose segments pass DoesIntersect
     (line_intersect.go:123-156, saddle method — the two cross-product
@@ -303,8 +249,9 @@ def _split_points(segs: np.ndarray) -> list:
         return lx <= p[0] <= gx and ly <= p[1] <= gy
 
     for i, j in _intersect_gate(segs):
-        pt = intersect_ref(((segs[i, 0], segs[i, 1]), (segs[i, 2], segs[i, 3])),
-                           ((segs[j, 0], segs[j, 1]), (segs[j, 2], segs[j, 3])))
+        pt = G.intersect_infinite(
+            ((segs[i, 0], segs[i, 1]), (segs[i, 2], segs[i, 3])),
+            ((segs[j, 0], segs[j, 1]), (segs[j, 2], segs[j, 3])))
         if pt is None:
             pt = (0.0, 0.0)  # Go zero-value Pt for parallel overlap
         rp = (float(round_ref(np.float64(pt[0]))),

@@ -91,12 +91,6 @@ def prepare_geo(geom, tile_extent):
     if gtype == "Point":
         return ("Point", pp(np.asarray(data).reshape(1, 2)).reshape(2))
 
-    if gtype == "MultiPoint":
-        pts = np.asarray(data, dtype=np.float64).reshape(-1, 2)
-        if len(pts) == 0:
-            return None
-        return ("MultiPoint", pp(pts))
-
     if gtype == "LineString":
         ls = _prepare_linestring(np.asarray(data), pp)
         return None if ls is None else ("LineString", ls)

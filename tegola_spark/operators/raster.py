@@ -26,9 +26,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import cells, wkb
 from . import spatial_join as sj
 
-_XY_MULT = 1 << cells.XY_SHIFT
-_RES_MULT = 1 << cells.RES_SHIFT
-
 
 def rasterize_points(points: DataFrame, res: int) -> DataFrame:
     """points (lon, lat) -> (cell, value) at ``res``; the value is the
@@ -44,14 +41,10 @@ def rasterize_polygons(polys: DataFrame, res: int, value_col: str = "feature_id"
     by max). Center-point sampling is the standard rasterization rule."""
     cover = sj.polygon_cover(sj.with_ring_edges(polys), res)
     # cell center in lon/lat (pure column exprs: inverse slippy)
-    cx = F.shiftright("cell", cells.XY_SHIFT) % F.lit(_XY_MULT)
-    cy = F.col("cell") % F.lit(_XY_MULT)
+    _, cx, cy = cells.col_cell_parts(F.col("cell"))
     n = float(1 << res)
     lon = (cx.cast("double") + 0.5) / F.lit(n) * 360.0 - 180.0
-    # tile2lat of (y + 0.5): lat = atan(sinh(pi*(1 - 2*(y+0.5)/n))) in deg
-    import math
-    inner = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * (cy.cast("double") + 0.5) / F.lit(n))
-    lat = F.atan((F.exp(inner) - F.exp(-inner)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
+    lat = cells.col_tile_lat(cy.cast("double") + 0.5, F.lit(n))
     cand = cover.withColumn("lon", lon).withColumn("lat", lat)
     hit = cand.where(sj.contains())
     return hit.groupBy("cell").agg(F.max(value_col).cast("double").alias("value"))
@@ -72,17 +65,13 @@ def resample(raster: DataFrame, from_res: int, to_res: int,
             fn("value").alias("value"))
     dres = to_res - from_res
     k = 1 << dres
-    cx = F.shiftright("cell", cells.XY_SHIFT) % F.lit(_XY_MULT)
-    cy = F.col("cell") % F.lit(_XY_MULT)
+    _, cx, cy = cells.col_cell_parts(F.col("cell"))
     dx = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("dx")
     out = raster.select("cell", "value", dx)
     out = out.select("cell", "value", "dx",
                      F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("dy"))
-    child = (
-        F.lit(to_res).cast("long") * F.lit(_RES_MULT)
-        + (F.shiftleft(cx, dres) + F.col("dx")) * F.lit(_XY_MULT)
-        + (F.shiftleft(cy, dres) + F.col("dy"))
-    )
+    child = cells.col_cell(to_res, F.shiftleft(cx, dres) + F.col("dx"),
+                           F.shiftleft(cy, dres) + F.col("dy"))
     val = (F.col("value") / F.lit(float(k * k))) if agg == "sum" else F.col("value")
     return out.select(child.alias("cell"), val.alias("value"))
 
@@ -92,17 +81,12 @@ def vectorize(raster: DataFrame) -> DataFrame:
     as envelope columns plus one 4-vertex Polygon ring in ring-SoA
     columns (vertex order SW, SE, NE, NW), suitable as a spatial-join
     right side or MVT layer input."""
-    cx = F.shiftright("cell", cells.XY_SHIFT) % F.lit(_XY_MULT)
-    cy = F.col("cell") % F.lit(_XY_MULT)
-    res_col = F.shiftright("cell", cells.RES_SHIFT)
+    res_col, cx, cy = cells.col_cell_parts(F.col("cell"))
     n = F.pow(F.lit(2.0), res_col.cast("double"))
-    import math
     lon0 = cx.cast("double") / n * 360.0 - 180.0
     lon1 = (cx.cast("double") + 1) / n * 360.0 - 180.0
-    inner0 = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * cy.cast("double") / n)
-    inner1 = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * (cy.cast("double") + 1) / n)
-    lat1c = F.atan((F.exp(inner0) - F.exp(-inner0)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
-    lat0c = F.atan((F.exp(inner1) - F.exp(-inner1)) / F.lit(2.0)) * F.lit(180.0 / math.pi)
+    lat1c = cells.col_tile_lat(cy.cast("double"), n)
+    lat0c = cells.col_tile_lat(cy.cast("double") + 1, n)
     quad = raster.select(
         F.col("cell").alias("feature_id"), "value",
         lon0.alias("minx"), lat0c.alias("miny"),

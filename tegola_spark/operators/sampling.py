@@ -33,6 +33,7 @@ RESOLUTION = 1_000_000
 DSIR_BUCKETS = 8192  # hashed-unigram buckets of dsir_select
 # split_and_shuffle's split fractions, in assignment order
 SPLITS = {"train": 0.98, "valid": 0.01, "test": 0.01}
+HOLDOUT_RATE = 0.1   # assign_split's holdout share
 
 
 def sample_bucket_col(id_col: Column, salt: str) -> Column:
@@ -70,10 +71,11 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
     return out.where(F.col("sample_bucket") < thr)
 
 
-def assign_split(df: DataFrame, holdout_rate: float = 0.1) -> DataFrame:
+def assign_split(df: DataFrame) -> DataFrame:
     """Deterministic train/holdout labeling via an independently
-    salted bucket (uncorrelated with any sampling salt)."""
-    thr = int(round(holdout_rate * RESOLUTION))
+    salted bucket (uncorrelated with any sampling salt): a
+    ``HOLDOUT_RATE`` share of rows is labeled holdout."""
+    thr = int(round(HOLDOUT_RATE * RESOLUTION))
     b = sample_bucket_col(F.col("doc_id"), "split-v1")
     return df.withColumn(
         "split", F.when(b < F.lit(thr), F.lit("holdout")).otherwise(F.lit("train")))

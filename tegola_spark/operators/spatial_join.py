@@ -77,9 +77,7 @@ def polygon_cover(polys: DataFrame, res: int) -> DataFrame:
         "_cx", F.explode(F.sequence(F.least(x0, x1), F.greatest(x0, x1))))
     out = out.withColumn(
         "_cy", F.explode(F.sequence(F.least(ya, yb), F.greatest(ya, yb))))
-    cell = (F.lit(res).cast("long") * F.lit(cells._RES_MULT).cast("long")
-            + F.col("_cx") * F.lit(cells._XY_MULT).cast("long")
-            + F.col("_cy"))
+    cell = cells.col_cell(res, F.col("_cx"), F.col("_cy"))
     return out.withColumn("cell", cell).drop("_cx", "_cy")
 
 

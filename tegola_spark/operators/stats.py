@@ -9,14 +9,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+QUANTILES = (0.5, 0.9, 0.99)   # exact_quantiles' quantile points
 
-def exact_quantiles(df: DataFrame, group_col: str, value_col: str,
-                    qs: tuple = (0.5, 0.9, 0.99)) -> DataFrame:
+
+def exact_quantiles(df: DataFrame, group_col: str,
+                    value_col: str) -> DataFrame:
     """Exact type-1 (lower) quantiles per group: the value at rank
-    ceil(q * n) in ascending order. Returns (group, q, n, value).
+    ceil(q * n) in ascending order, for each q in ``QUANTILES``.
+    Returns (group, q, n, value).
 
     Plan: ONE exchange sorts each group (window row_number + count);
-    the (group, q, target_rank) frame is groups x |qs| rows and
+    the (group, q, target_rank) frame is groups x |QUANTILES| rows and
     broadcasts, so selection is map-side — the driver never sees more
     than the quantile rows. Equal values make row_number order among
     ties arbitrary, but the k-th ORDER STATISTIC is unique, so the
@@ -30,7 +33,7 @@ def exact_quantiles(df: DataFrame, group_col: str, value_col: str,
         group_col, F.col(value_col).alias("value"),
         F.row_number().over(w).alias("_rn"),
         F.count("*").over(Window.partitionBy(group_col)).alias("n"))
-    qf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    qf = spark.createDataFrame([(float(q),) for q in QUANTILES], "q double")
     targets = (ranked.select(group_col, "n").distinct()
                .crossJoin(F.broadcast(qf))
                .withColumn("_rn", F.ceil(F.col("q") * F.col("n")).cast("int")))

@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 # asof_join's right-side payload; event_id also breaks timestamp ties
 _ASOF_PAYLOAD = ("event_id", "value")
+BUCKET_S = 21600               # interval_join's time cell: 6 h
+LEVELS = (60, 3600, 86400)     # time_rollup's levels: minute, hour, day;
+                               # each divides the next (the cascade re-buckets)
+WINDOW_S = 3600                # rolling_user_stats' trailing window
 
 
 def asof_join(left: DataFrame, right: DataFrame,
@@ -73,28 +77,28 @@ def asof_join(left: DataFrame, right: DataFrame,
         *[F.col("_m." + c).alias("r_" + c) for c in _ASOF_PAYLOAD])
 
 
-def interval_join(points: DataFrame, intervals: DataFrame,
-                  bucket_s: int = 21600) -> DataFrame:
+def interval_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Non-equi point-in-interval range join (``t_start <= ts < t_end``)
     without a key column — the join Spark cannot plan as anything but
     a nested loop on its own.
 
-    Scale plan: quantize the time axis into ``bucket_s``-second cells
+    Scale plan: quantize the time axis into ``BUCKET_S``-second cells
     (the 1-D analog of the spatial cover-cell join in
     spatial_join.py). Each interval explodes to the cells it touches
-    (ceil(len/bucket_s)+1 rows); each point maps to exactly ONE cell,
+    (ceil(len/BUCKET_S)+1 rows); each point maps to exactly ONE cell,
     so the equi-join on the cell key produces every candidate pair at
     most once — no dedup pass — and the residual timestamp filter
-    evaluates inside the join stage. Pick ``bucket_s`` near the median
-    interval length: the explode factor stays ~2 and hot cells are
-    bounded by time-locality, not corpus size. Truncation to epoch
-    seconds is monotone, so a point inside [start, end) always lands
+    evaluates inside the join stage. ``BUCKET_S`` is 6 h, the length
+    of the incident windows the ``interval_join`` query joins, so each
+    interval explodes to at most 2 cells and hot cells are bounded by
+    time-locality, not corpus size. Truncation to epoch seconds is
+    monotone, so a point inside [start, end) always lands
     in a cell the interval covers (cover is conservative; the residual
     is exact on full-precision timestamps).
     """
-    pb = F.floor(F.unix_timestamp("ts") / bucket_s).cast("long")
-    sb = F.floor(F.unix_timestamp("t_start") / bucket_s).cast("long")
-    eb = F.floor(F.unix_timestamp("t_end") / bucket_s).cast("long")
+    pb = F.floor(F.unix_timestamp("ts") / BUCKET_S).cast("long")
+    sb = F.floor(F.unix_timestamp("t_start") / BUCKET_S).cast("long")
+    eb = F.floor(F.unix_timestamp("t_end") / BUCKET_S).cast("long")
     p = points.withColumn("_cell", pb)
     iv = intervals.withColumn("_cell", F.explode(F.sequence(sb, eb)))
     return (p.join(iv, "_cell")
@@ -103,10 +107,10 @@ def interval_join(points: DataFrame, intervals: DataFrame,
              .drop("_cell"))
 
 
-def time_rollup(ev: DataFrame, levels: tuple = (60, 3600, 86400)) -> DataFrame:
+def time_rollup(ev: DataFrame) -> DataFrame:
     """Hypertable-style hierarchical time rollup (continuous-aggregate
-    cascade): the finest level aggregates raw events ONCE; every
-    coarser level re-aggregates the previous level's partials
+    cascade) over ``LEVELS``: the finest level aggregates raw events
+    ONCE; every coarser level re-aggregates the previous level's partials
     (sum-of-sums, min-of-mins, max-of-maxes, count-of-counts), so raw
     data is scanned and shuffled exactly once and each cascade step's
     exchange carries only the previous level's bucket count — at 100
@@ -116,19 +120,16 @@ def time_rollup(ev: DataFrame, levels: tuple = (60, 3600, 86400)) -> DataFrame:
 
     Returns all levels unioned, tagged by ``level_s``.
     """
-    for a, b in zip(levels, levels[1:]):
-        if b % a:
-            raise ValueError(f"levels must nest: {b} % {a} != 0")
     ep = F.unix_timestamp("ts")
-    cur = (ev.withColumn("bucket", F.floor(ep / levels[0]).cast("long"))
+    cur = (ev.withColumn("bucket", F.floor(ep / LEVELS[0]).cast("long"))
              .groupBy("bucket")
              .agg(F.count("*").alias("n_events"),
                   F.sum("value").alias("sum_value"),
                   F.min("value").alias("min_value"),
                   F.max("value").alias("max_value"))
-             .withColumn("level_s", F.lit(levels[0]).cast("long")))
+             .withColumn("level_s", F.lit(LEVELS[0]).cast("long")))
     out = cur
-    for prev, nxt in zip(levels, levels[1:]):
+    for prev, nxt in zip(LEVELS, LEVELS[1:]):
         fac = nxt // prev
         cur = (cur.groupBy(
                     F.floor(F.col("bucket") / fac).cast("long").alias("bucket"))
@@ -141,10 +142,10 @@ def time_rollup(ev: DataFrame, levels: tuple = (60, 3600, 86400)) -> DataFrame:
     return out
 
 
-def rolling_user_stats(ev: DataFrame, window_s: int = 3600) -> DataFrame:
+def rolling_user_stats(ev: DataFrame) -> DataFrame:
     """Trailing time-window aggregates per entity: at every event, the
     count and value-sum of that user's events in the preceding
-    ``window_s`` seconds (inclusive) — the rate-limit / burst-feature
+    ``WINDOW_S`` seconds (inclusive) — the rate-limit / burst-feature
     window every abuse and engagement pipeline computes.
 
     Uses a RANGE frame over the epoch-seconds key, NOT a row frame:
@@ -166,7 +167,7 @@ def rolling_user_stats(ev: DataFrame, window_s: int = 3600) -> DataFrame:
     base = ev.select(F.col("event_id"), F.col("user_id"),
                      ep.alias("ep"), vm.alias("vm"))
     w = (Window.partitionBy("user_id").orderBy("ep")
-         .rangeBetween(-(window_s - 1), 0))
+         .rangeBetween(-(WINDOW_S - 1), 0))
     return base.select(
         "event_id", "user_id", "ep",
         F.count("*").over(w).cast("long").alias("roll_n"),

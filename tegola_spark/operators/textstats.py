@@ -367,8 +367,7 @@ def quality_cut(df: DataFrame, q: float = 0.1) -> DataFrame:
             .select("doc_id", "avg_logprob_r6", "threshold_r6"))
 
 
-def inverted_index(df: DataFrame, min_df: int = 2,
-                   max_df: int | None = None) -> DataFrame:
+def inverted_index(df: DataFrame, min_df: int = 2) -> DataFrame:
     """Build term posting lists: for every term, its document
     frequency, total term frequency, and the sorted ``doc:tf`` posting
     list — the search-index artifact a retrieval/decontamination stack
@@ -381,10 +380,10 @@ def inverted_index(df: DataFrame, min_df: int = 2,
     string because postings are an opaque payload downstream (and a
     second engine replays it with ordered string_agg).
 
-    At 100 TB the long tail is fine (postings ~ df) but stop-term
-    lists are corpus-sized: ``max_df`` drops terms above a document-
-    frequency ceiling at the FIRST aggregation's output (standard
-    stop-list elision — real indexes shard those terms instead).
+    Every term at or above ``min_df`` is kept, stop terms included:
+    the index is exact (its oracle replays every posting), and at
+    100 TB a stop term's corpus-sized posting list is sharded by a
+    real index, not elided.
     """
     toks = df.select(
         F.col("doc_id"),
@@ -402,8 +401,6 @@ def inverted_index(df: DataFrame, min_df: int = 2,
                 F.sum("tf").alias("tf_total"),
                 posting.alias("postings"))
            .where(F.col("df") >= min_df))
-    if max_df is not None:
-        out = out.where(F.col("df") <= max_df)
     return out.select("term", F.col("df").cast("long").alias("df"),
                       F.col("tf_total").cast("long").alias("tf_total"),
                       "postings")

@@ -1,5 +1,7 @@
 """Benchmark decontamination (operators/decontam.py)."""
 
+from pyspark.sql import functions as F
+
 from tegola_spark.operators import decontam
 
 DOCS = [
@@ -54,14 +56,30 @@ def test_broadcast_plan(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
+def _unfiltered_shingled(docs, probes):
+    """The plain inverted k-gram join with no gram-hash prefilter: the
+    reference the prefiltered scan must reproduce."""
+    k = probes.agg(F.min(F.length("probe"))).collect()[0][0]
+    pg = probes.select("probe_id", "probe",
+                       F.substring("probe", 1, k).alias("gram"),
+                       F.length("probe").alias("plen"))
+    n_grams = F.length(F.col("text")) - F.lit(k) + 1
+    grams = (docs.select("doc_id", "text")
+             .withColumn("pos", F.explode(F.sequence(F.lit(1), n_grams)))
+             .withColumn("gram", F.expr(f"substring(text, pos, {k})")))
+    return (grams.join(pg, "gram")
+            .where(F.expr("substring(text, pos, plen) = probe"))
+            .groupBy("doc_id", "probe_id")
+            .agg(F.min("pos").cast("long").alias("first_pos")))
+
+
 def test_shingled_prefilter_differential(spark):
     docs, probes = _mk(spark)
     base = {(r["doc_id"], r["probe_id"]): r["first_pos"]
-            for r in decontam.contamination_scan_shingled(
-                docs, probes, prefilter=False).collect()}
+            for r in _unfiltered_shingled(docs, probes).collect()}
     pre = {(r["doc_id"], r["probe_id"]): r["first_pos"]
            for r in decontam.contamination_scan_shingled(
-               docs, probes, prefilter=True).collect()}
+               docs, probes).collect()}
     assert pre == base and len(base) == 4
 
 

@@ -193,6 +193,6 @@ def test_top_en_seeds_nonempty_and_bounded(spark, sf_path):
     from tegola_spark.sources import corpus
 
     docs = corpus.documents(spark, sf_path)
-    seeds = graph.top_en_seeds(docs, k=4).collect()
-    assert 1 <= len(seeds) <= 4
+    seeds = graph.top_en_seeds(docs).collect()
+    assert 1 <= len(seeds) <= graph.N_SEEDS
     assert all(r["domain"].endswith(".example.com") for r in seeds)

@@ -83,7 +83,6 @@ def test_zres_zepsilon():
     # tile.go:213-228: ZEpislon = 10/(2^z * 4096); 0 at MaxZ
     assert grid.zepsilon(4) == pytest.approx(10.0 / (16 * 4096))
     assert grid.zepsilon(22) == 0.0
-    assert grid.zepsilon(4, tolerance=0) == 0.0
 
 
 def test_buffered_pixel_bounds():

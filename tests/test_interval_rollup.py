@@ -3,10 +3,10 @@
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
-from tegola_spark.operators.temporal import interval_join, time_rollup
+from tegola_spark.operators.temporal import (BUCKET_S, LEVELS,
+                                             interval_join, time_rollup)
 
 
 def _t(h, m=0, s=0):
@@ -27,12 +27,16 @@ def test_interval_join_boundaries(spark):
 
 
 def test_interval_join_no_duplicate_pairs(spark):
-    # one point inside an interval spanning 5 cells with a tiny bucket:
-    # the pair must appear exactly once
-    points = spark.createDataFrame([(0, _t(2))], "pid long, ts timestamp")
+    # one point inside an interval spanning 5 cells: the pair must
+    # appear exactly once
+    start = _t(0)
+    end = start + dt.timedelta(seconds=4 * BUCKET_S + 1)
+    points = spark.createDataFrame(
+        [(0, start + dt.timedelta(seconds=2 * BUCKET_S + 7))],
+        "pid long, ts timestamp")
     intervals = spark.createDataFrame(
-        [(10, _t(0), _t(10))], "iid long, t_start timestamp, t_end timestamp")
-    out = interval_join(points, intervals, bucket_s=3600).collect()
+        [(10, start, end)], "iid long, t_start timestamp, t_end timestamp")
+    out = interval_join(points, intervals).collect()
     assert len(out) == 1
 
 
@@ -42,7 +46,7 @@ def test_time_rollup_cascade_matches_direct(spark, sf_dir):
               (r["n_events"], round(r["sum_value"], 6),
                r["min_value"], r["max_value"])
               for r in time_rollup(ev).collect()}
-    for level in (60, 3600, 86400):
+    for level in LEVELS:
         direct = (ev.groupBy(
                       F.floor(F.unix_timestamp("ts") / level)
                       .cast("long").alias("bucket"))
@@ -56,9 +60,3 @@ def test_time_rollup_cascade_matches_direct(spark, sf_dir):
             assert n == r["n"] and lo == r["lo"] and hi == r["hi"]
             assert s == round(r["s"], 6) or abs(s - r["s"]) < 1e-6
 
-
-def test_time_rollup_rejects_non_nesting_levels(spark):
-    ev = spark.createDataFrame([(0, _t(1), 1.0)],
-                               "event_id long, ts timestamp, value double")
-    with pytest.raises(ValueError):
-        time_rollup(ev, levels=(60, 90))

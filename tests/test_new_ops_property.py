@@ -34,9 +34,13 @@ def test_latest_snapshot_random_vs_reference(spark):
 
 def test_rolling_window_random_vs_reference(spark):
     rng = random.Random(7)
-    rows = [(i, rng.randrange(5), rng.randrange(0, 50), float(rng.randrange(-100, 100)) / 4)
+    W = temporal.WINDOW_S
+    # 50 tick times W/10 apart, each nudged by 0 or 1 s, so peers share
+    # a timestamp and pairs sit W-1, W and W+1 s apart
+    rows = [(i, rng.randrange(5),
+             rng.randrange(0, 50) * (W // 10) + rng.randrange(2),
+             float(rng.randrange(-100, 100)) / 4)
             for i in range(400)]
-    W = 10
     ref = {}
     for eid, u, ep, v in rows:
         peers = [(e2, u2, ep2, v2) for (e2, u2, ep2, v2) in rows
@@ -53,7 +57,7 @@ def test_rolling_window_random_vs_reference(spark):
         [(e, u, ts(ep), v) for e, u, ep, v in rows],
         "event_id long, user_id long, ts timestamp, value double")
     got = {r["event_id"]: (r["roll_n"], r["roll_sum_micro"])
-           for r in temporal.rolling_user_stats(df, window_s=W).collect()}
+           for r in temporal.rolling_user_stats(df).collect()}
     assert got == ref
 
 

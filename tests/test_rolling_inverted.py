@@ -61,13 +61,10 @@ def test_inverted_index_postings(spark):
     assert got["a"]["df"] == 2 and got["a"]["tf_total"] == 3
     assert got["b"]["postings"] == "2:2,3:1"
     assert got["d"]["df"] == 1
-    # min_df / max_df elision
+    # min_df elision
     only_common = {r["term"] for r in
                    textstats.inverted_index(docs, min_df=2).collect()}
     assert only_common == {"a", "b"}
-    no_stop = {r["term"] for r in
-               textstats.inverted_index(docs, min_df=1, max_df=1).collect()}
-    assert no_stop == {"c", "d"}
 
 
 def test_inverted_index_deterministic_under_repartition(spark):

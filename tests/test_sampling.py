@@ -40,12 +40,14 @@ def test_stratified_rates_and_determinism(spark):
 
 def test_split_independent_of_sample_salt(spark):
     df = spark.createDataFrame([(i,) for i in range(1000)], "doc_id long")
-    out = sampling.assign_split(df, holdout_rate=0.2).collect()
+    out = sampling.assign_split(df).collect()
     hold = {r["doc_id"] for r in out if r["split"] == "holdout"}
+    thr = round(sampling.HOLDOUT_RATE * sampling.RESOLUTION)
+    assert thr == 100000
     assert hold == {i for i in range(1000)
-                    if _py_bucket("split-v1", i) < 200000}
+                    if _py_bucket("split-v1", i) < thr}
     # different salt family => not the same subset as mix-v1 sampling
-    mix = {i for i in range(1000) if _py_bucket("mix-v1", i) < 200000}
+    mix = {i for i in range(1000) if _py_bucket("mix-v1", i) < thr}
     assert hold != mix
 
 

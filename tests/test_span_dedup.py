@@ -57,10 +57,13 @@ def test_max_df_mode_drops_everywhere(toy):
 
 
 def test_span_width_respected(spark):
+    chunk = " ".join(f"w{i}" for i in range(dedup.SPAN_WORDS))
     df = spark.createDataFrame(
-        [(0, "a b c a b c"), (1, "a b c")], "doc_id long, text string")
-    got = _rows(dedup.span_dedup(df, span_words=3))
-    assert got[0] == (2, 1, "a b c")
+        [(0, f"{chunk} {chunk} tail"), (1, chunk)],
+        "doc_id long, text string")
+    got = _rows(dedup.span_dedup(df))
+    # SPAN_WORDS + SPAN_WORDS + 1 words -> 3 chunks, the second a repeat
+    assert got[0] == (3, 2, f"{chunk} tail")
     assert got[1] == (1, 0, "")
 
 

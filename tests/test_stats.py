@@ -3,22 +3,26 @@ and tie behavior."""
 
 from pyspark.sql import functions as F
 
-from tegola_spark.operators.stats import exact_quantiles
+from tegola_spark.operators.stats import QUANTILES, exact_quantiles
 
 
-def _q(df, qs):
-    out = exact_quantiles(df, "g", "v", qs=qs).collect()
-    return {(r["g"], r["q"]): (r["n"], r["value"]) for r in out}
+def _q(df):
+    out = exact_quantiles(df, "g", "v").collect()
+    got = {(r["g"], r["q"]): (r["n"], r["value"]) for r in out}
+    # every group yields one row per quantile point
+    groups = {g for g, _ in got}
+    assert set(got) == {(g, q) for g in groups for q in QUANTILES}
+    return got
 
 
 def test_known_ranks(spark):
     # g=0: values 1..10 -> p50 = ceil(0.5*10)=rank 5 -> 5.0
     df = spark.createDataFrame(
         [(0, float(i)) for i in range(1, 11)], "g long, v double")
-    got = _q(df, (0.5, 0.9, 1.0))
+    got = _q(df)
     assert got[(0, 0.5)] == (10, 5.0)
     assert got[(0, 0.9)] == (10, 9.0)
-    assert got[(0, 1.0)] == (10, 10.0)
+    assert got[(0, 0.99)] == (10, 10.0)   # rank ceil(9.9) = 10
 
 
 def test_ties_give_unique_order_statistic(spark):
@@ -26,13 +30,13 @@ def test_ties_give_unique_order_statistic(spark):
     # values is arbitrary
     df = spark.createDataFrame(
         [(0, v) for v in [1.0, 2.0, 2.0, 2.0, 3.0]], "g long, v double")
-    got = _q(df, (0.5,))
+    got = _q(df)
     assert got[(0, 0.5)] == (5, 2.0)
 
 
 def test_singleton_group(spark):
     df = spark.createDataFrame([(0, 7.5)], "g long, v double")
-    got = _q(df, (0.5, 0.99))
+    got = _q(df)
     assert got[(0, 0.5)] == (1, 7.5)
     assert got[(0, 0.99)] == (1, 7.5)
 
@@ -41,7 +45,7 @@ def test_multiple_groups_independent(spark):
     df = spark.createDataFrame(
         [(0, float(i)) for i in range(1, 5)] +
         [(1, float(i * 100)) for i in range(1, 5)], "g long, v double")
-    got = _q(df, (0.5,))
+    got = _q(df)
     assert got[(0, 0.5)] == (4, 2.0)
     assert got[(1, 0.5)] == (4, 200.0)
 

@@ -52,30 +52,33 @@ def test_exact_dedup_finds_planted_dups(spark):
 
 
 def test_minhash_lsh_finds_near_dups(spark):
-    base = ("the quick brown fox jumps over the lazy dog " * 20).strip()
-    near = base.replace("lazy", "sleepy", 2)
-    far = ("completely different content about spark engines " * 20).strip()
+    # r=8 rows per band (dedup.LSH_BANDS) is built for jaccard >= 0.85:
+    # one word of 300 distinct ones changed keeps the pair well above it
+    base = " ".join(f"w{i}" for i in range(300))
+    near = base.replace(" w150 ", " x150 ")
+    far = " ".join(f"z{i}" for i in range(300))
     pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": [base, near, far]})
-    # bands=16 (r=4): right geometry for a tiny clean corpus at tau=0.5;
-    # the default bands=8 targets template-heavy corpora (see dedup.py)
     pairs = dedup.minhash_lsh_pairs(
-        spark.createDataFrame(pdf), threshold=0.5, bands=16).collect()
-    got = {(r["id_a"], r["id_b"]) for r in pairs}
-    assert (1, 2) in got
-    assert all(p in {(1, 2)} for p in got)
+        spark.createDataFrame(pdf), threshold=0.5).collect()
+    got = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in pairs}
+    assert set(got) == {(1, 2)}
+    assert got[(1, 2)] >= 0.85
 
 
-def test_minhash_capped_bucket_links_overflow_to_representative(spark):
-    # 12 identical docs with max_bucket=4 used to orphan ids past rank 4:
-    # the SAME lowest 4 ids survive every band's cap, so docs 5..12 got
-    # zero candidate pairs anywhere (ADVICE r2). Overflow ids must still
-    # link to the bucket representative (min id).
+def test_minhash_capped_bucket_links_overflow_to_representative(
+        spark, monkeypatch):
+    # 12 identical docs in buckets capped at 4 used to orphan ids past
+    # rank 4: the SAME lowest 4 ids survive every band's cap, so docs
+    # 5..12 got zero candidate pairs anywhere (ADVICE r2). Overflow ids
+    # must still link to the bucket representative (min id). The cap
+    # is MAX_BUCKET (4,096 ids); lowering the module constant reaches
+    # the capped path at test size.
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 4)
     n = 12
     txt = "identical template page content repeated for dedup " * 10
     pdf = pd.DataFrame({"doc_id": list(range(1, n + 1)), "text": [txt] * n})
     pairs = dedup.minhash_lsh_pairs(
-        spark.createDataFrame(pdf), threshold=0.9, bands=16,
-        max_bucket=4).collect()
+        spark.createDataFrame(pdf), threshold=0.9).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     linked = set()
     for a, b in got:
